@@ -968,11 +968,11 @@ def posexplode_token_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the first 3 positions of each document — the positional flatten
     the plain explode loses."""
     docs = _t(spark, sf_dir, "documents")
-    from flink_etl_spark.functions.hashing import tokens_expr
+    from flink_etl_spark.functions.hashing import tokens_sql
 
     return (
         docs.select(
-            "doc_id", F.posexplode(tokens_expr("text")).alias("pos", "token")
+            "doc_id", F.posexplode(F.expr(tokens_sql("text"))).alias("pos", "token")
         )
         .filter(F.col("pos") < 3)
         .groupBy("pos", "token")

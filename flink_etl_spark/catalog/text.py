@@ -512,10 +512,9 @@ def text_bpe_pretokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size("_t").alias("n_pretokens"),
         F.size(words).alias("n_word"),
         (F.size("_t") - F.size(words)).alias("n_punct"),
-        micro_floor_ratio(
-            F.aggregate(F.col("_t"), F.lit(0), lambda a, x: a + F.length(x)),
-            F.greatest(F.size("_t"), F.lit(1)),
-        ).alias("avg_pretoken_len"),
+        F.expr(micro_floor_ratio(
+            "aggregate(_t, 0, (a, x) -> a + length(x))", "greatest(size(_t), 1)"
+        )).alias("avg_pretoken_len"),
         F.lit(None).cast("long").alias("n_email"),
         F.lit(None).cast("long").alias("n_phone"),
         F.lit(None).cast("long").alias("n_ipv4"),
@@ -1050,13 +1049,13 @@ def text_top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
       vocabulary-sized joins). Bucket hash pinned to the portable
       char fold (production `hash_terms=True` buckets on xxhash64).
     """
-    from flink_etl_spark.functions.hashing import shingles_expr, tokens_expr
+    from flink_etl_spark.functions.hashing import shingles_sql, tokens_sql
     from flink_etl_spark.operators.prep import repetition_stats
 
     docs = _t(spark, sf_dir, "documents")
     bg = docs.select(
         "doc_id",
-        F.explode(shingles_expr(tokens_expr("text"), 2)).alias("bigram"),
+        F.explode(F.expr(shingles_sql(tokens_sql("text"), 2))).alias("bigram"),
     )
     corpus = (
         bg.groupBy("bigram")
@@ -1115,7 +1114,7 @@ def text_top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     xvocab = (
         docs.filter(F.col("doc_id") % 2 == 0)
-        .select(F.explode(tokens_expr("text")).alias("term"))
+        .select(F.explode(F.expr(tokens_sql("text"))).alias("term"))
         .groupBy("term")
         .agg(F.count("*").alias("tf"))
     )

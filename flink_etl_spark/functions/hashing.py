@@ -47,15 +47,50 @@ SIMHASH_COEFFS = MINHASH_COEFFS + [
 ]
 
 
-def tokens_expr(text: Column | str) -> Column:
-    """Whitespace tokenization — identical to `regexp_split_to_array(text, ' +')`."""
-    c = F.col(text) if isinstance(text, str) else text
-    return F.split(c, " +")
+def tokens_sql(text: str) -> str:
+    """Whitespace tokenization of the SQL expression `text` — identical
+    to `regexp_split_to_array(text, ' +')`. Wrap in `F.expr` where a
+    Column is needed; pass column names through `sql.ident`."""
+    return f"split({text}, ' +')"
 
 
-def shingles_expr(tokens: Column, k: int = 3) -> Column:
-    """Token k-shingles via DOUBLING shifted-slice zips. Empty when the
-    document has < k tokens.
+def _doubling_sql(arr: str, k: int, combine, empty_type: str) -> str:
+    """The k-wide sliding combine of `arr` by DOUBLING: power-of-two
+    runs first (runs[j][p] folds arr[p .. p+2^j-1]), then the binary
+    decomposition of k stitched widest run first. `combine(a, b, span)`
+    is the SQL text joining a left run with the `span`-wide run after
+    it. Empty array when `arr` has < k elements."""
+    runs = [arr]
+    span = 1
+    while span * 2 <= k:
+        prev = runs[-1]
+        runs.append(
+            f"zip_with({prev}, slice({prev}, {1 + span}, "
+            f"greatest(size({prev}) - {span}, 0)), "
+            f"(a, b) -> {combine('a', 'b', span)})"
+        )
+        span *= 2
+    width = f"size({arr}) - {k - 1}"
+    acc = None
+    off = 0
+    for j in range(len(runs) - 1, -1, -1):
+        if not (k >> j) & 1:
+            continue
+        part = f"slice({runs[j]}, {1 + off}, {width})"
+        acc = part if acc is None else (
+            f"zip_with({acc}, {part}, (a, b) -> {combine('a', 'b', 1 << j)})"
+        )
+        off += 1 << j
+    return (
+        f"CASE WHEN size({arr}) >= {k} THEN {acc} "
+        f"ELSE CAST(array() AS {empty_type}) END"
+    )
+
+
+def shingles_sql(tokens: str, k: int = 3) -> str:
+    """Token k-shingles of the array<string> SQL expression `tokens`,
+    via DOUBLING shifted-slice zips. Empty when the document has < k
+    tokens.
 
     Deliberately avoids per-index `element_at(tokens, i+j)` lambdas:
     CollapseProject re-inlines the tokens expression (e.g. a regex
@@ -70,41 +105,14 @@ def shingles_expr(tokens: Column, k: int = 3) -> Column:
     the analyzer's Resolution iteration cap near k~50 — exactly the
     Lee et al. substring-dedup anchor width — because every nested
     lambda layer costs another resolution pass."""
-    n = F.size(tokens)
-    width = n - F.lit(k - 1)
-
-    def _shift(col: Column, off: int) -> Column:
-        return F.slice(col, 1 + off, width) if off else F.slice(col, 1, width)
-
-    # power-of-two runs: runs[j][p] = tokens[p .. p+2^j-1] joined
-    runs = [tokens]
-    span = 1
-    while span * 2 <= k:
-        prev = runs[-1]
-        runs.append(
-            F.zip_with(
-                prev,
-                F.slice(prev, 1 + span, F.greatest(F.size(prev) - span, F.lit(0))),
-                lambda a, b: F.concat_ws(" ", a, b),
-            )
-        )
-        span *= 2
-    # combine binary decomposition of k, widest run first
-    acc = None
-    off = 0
-    for j in range(len(runs) - 1, -1, -1):
-        if not (k >> j) & 1:
-            continue
-        part = _shift(runs[j], off)
-        acc = part if acc is None else F.zip_with(
-            acc, part, lambda a, b: F.concat_ws(" ", a, b)
-        )
-        off += 1 << j
-    return F.when(n >= k, acc).otherwise(F.array().cast("array<string>"))
+    return _doubling_sql(
+        tokens, k, lambda a, b, span: f"concat_ws(' ', {a}, {b})",
+        "ARRAY<STRING>",
+    )
 
 
 def duckdb_shingles(tokens: str, k: int = 3) -> str:
-    """Oracle twin of `shingles_expr` (1-based list indexing in DuckDB)."""
+    """Oracle twin of `shingles_sql` (1-based list indexing in DuckDB)."""
     parts = ", ".join(f"{tokens}[i + {j}]" for j in range(k))
     return (
         f"CASE WHEN len({tokens}) >= {k} THEN "
@@ -121,15 +129,16 @@ def token_hashes_sql(tokens_col: str, p: int = MERSENNE_P) -> str:
     return f"transform({tokens_col}, t -> pmod(xxhash64(t), {p}))"
 
 
-def combine_gram_ids(token_hashes: Column, k: int, mult: int = 131,
-                     p: int = MERSENNE_P) -> Column:
-    """Combine an array of per-token hashes into k-gram term ids via the
-    polynomial fold (acc*mult + h) % p over shifted slices — a gram's id
-    from its k token hashes without materializing the gram string.
-    Empty array when the document has < k tokens. Slice/zip_with form
-    for the same CollapseProject reasons as `shingles_expr`.
+def gram_ids_sql(token_hashes: str, k: int, mult: int = 131,
+                 p: int = MERSENNE_P) -> str:
+    """Combine the array<bigint> SQL expression `token_hashes` of
+    per-token hashes into k-gram term ids via the polynomial fold
+    (acc*mult + h) % p over shifted slices — a gram's id from its k
+    token hashes without materializing the gram string. Empty array
+    when the document has < k tokens. Slice/zip_with form for the same
+    CollapseProject reasons as `shingles_sql`.
 
-    Built by DOUBLING like `shingles_expr` (the fold is mod-linear:
+    Built by DOUBLING like `shingles_sql` (the fold is mod-linear:
     fold_{L+M}[q] = (fold_L[q] * mult^M + fold_M[q+L]) % p), so k~50
     substring-dedup anchors need O(log k) zip_with nestings instead of
     k-1 — a sequential chain trips the analyzer's Resolution iteration
@@ -138,41 +147,11 @@ def combine_gram_ids(token_hashes: Column, k: int, mult: int = 131,
     and decontamination gram ids are unaffected. Intermediate products
     stay in range: operands < p < 2^31, so a*mult^L + b < 2^62 — no
     bigint overflow under ANSI."""
-    n = F.size(token_hashes)
-    width = n - F.lit(k - 1)
-
-    def _shift(col: Column, off: int) -> Column:
-        return F.slice(col, 1 + off, width) if off else F.slice(col, 1, width)
-
-    # power-of-two runs: runs[j][q] = fold of token_hashes[q .. q+2^j-1]
-    runs = [token_hashes]
-    span = 1
-    while span * 2 <= k:
-        prev = runs[-1]
-        m_span = pow(mult, span, p)
-        runs.append(
-            F.zip_with(
-                prev,
-                F.slice(prev, 1 + span, F.greatest(F.size(prev) - span, F.lit(0))),
-                lambda a, b: (a * F.lit(m_span) + b) % F.lit(p),
-            )
-        )
-        span *= 2
-    acc = None
-    off = 0
-    for j in range(len(runs) - 1, -1, -1):
-        if not (k >> j) & 1:
-            continue
-        part = _shift(runs[j], off)
-        if acc is None:
-            acc = part
-        else:
-            m_j = pow(mult, 1 << j, p)
-            acc = F.zip_with(
-                acc, part, lambda a, b: (a * F.lit(m_j) + b) % F.lit(p)
-            )
-        off += 1 << j
-    return F.when(n >= k, acc).otherwise(F.array().cast("array<bigint>"))
+    return _doubling_sql(
+        token_hashes, k,
+        lambda a, b, span: f"({a} * {pow(mult, span, p)} + {b}) % {p}",
+        "ARRAY<BIGINT>",
+    )
 
 
 def fold_gram_ids_sql(grams_col: str, mult: int = 131,

@@ -33,9 +33,10 @@ from flink_etl_spark.functions.hashing import (
     MINHASH_COEFFS,
     SIMHASH_COEFFS,
     char_fold_hash,
-    shingles_expr,
-    tokens_expr,
+    shingles_sql,
+    tokens_sql,
 )
+from flink_etl_spark.functions.sql import ident, lit
 
 
 def exact_dedup(
@@ -73,56 +74,31 @@ def exact_dedup(
     the filter becomes `count_if(where) >= 1` above the aggregate,
     which nothing can push below the Project. NULL `where_col` counts
     as false, exactly like `.filter()`."""
-    if where_col is not None:
-        pass_ = F.col(where_col).isNotNull() & F.col(where_col)
-        n_copies = F.count_if(pass_).alias("n_copies")
-        if not carry_cols:
-            out = df.groupBy(*content_cols).agg(
-                F.min(F.when(pass_, F.col(id_col))).alias("keep_id"),
-                n_copies,
-            )
-        else:
-            keeper = F.min(
-                F.when(
-                    pass_ & F.col(id_col).isNotNull(),
-                    F.struct(id_col, *carry_cols),
-                )
-            )
-            out = (
-                df.groupBy(*content_cols)
-                .agg(keeper.alias("_k"), n_copies)
-                .select(
-                    *content_cols,
-                    F.col(f"_k.{id_col}").alias("keep_id"),
-                    "n_copies",
-                    *[F.col(f"_k.{c}").alias(c) for c in carry_cols],
-                )
-            )
-        # groups with no passing row do not exist under filter-first
-        return out.filter(F.col("n_copies") >= 1)
-    if not carry_cols:
-        return df.groupBy(*content_cols).agg(
-            F.min(id_col).alias("keep_id"),
-            F.count("*").alias("n_copies"),
-        )
+    i = ident(id_col)
     # NULL-id rows are excluded from the keeper PICK (min skips the
-    # when's NULL, exactly as plain min(id) skips NULL ids — without
+    # CASE's NULL, exactly as plain min(id) skips NULL ids — without
     # the guard a NULL id sorts FIRST in struct ordering and a
     # nullable id column silently flips the keeper) but still count
     # in n_copies, matching the no-carry branch
-    keeper = F.min(
-        F.when(F.col(id_col).isNotNull(), F.struct(id_col, *carry_cols))
-    )
-    return (
-        df.groupBy(*content_cols)
-        .agg(keeper.alias("_k"), F.count("*").alias("n_copies"))
-        .select(
-            *content_cols,
-            F.col(f"_k.{id_col}").alias("keep_id"),
-            "n_copies",
-            *[F.col(f"_k.{c}").alias(c) for c in carry_cols],
+    pick = f"{i} IS NOT NULL"
+    n_copies = "count(1) AS n_copies"
+    if where_col is not None:
+        pass_ = f"({ident(where_col)} IS NOT NULL AND {ident(where_col)})"
+        pick = f"{pass_} AND {pick}"
+        n_copies = f"count_if({pass_}) AS n_copies"
+    grouped = df.groupBy(*content_cols)
+    if not carry_cols:
+        keep = f"min({i})" if where_col is None else f"min(CASE WHEN {pass_} THEN {i} END)"
+        out = grouped.agg(F.expr(f"{keep} AS keep_id"), F.expr(n_copies))
+    else:
+        carry = [ident(c) for c in carry_cols]
+        keeper = f"min(CASE WHEN {pick} THEN struct({', '.join([i, *carry])}) END) AS _k"
+        out = grouped.agg(F.expr(keeper), F.expr(n_copies)).selectExpr(
+            *map(ident, content_cols), f"_k.{i} AS keep_id", "n_copies",
+            *[f"_k.{c} AS {c}" for c in carry],
         )
-    )
+    # groups with no passing row do not exist under filter-first
+    return out if where_col is None else out.filter("n_copies >= 1")
 
 
 def shingle_sets(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
@@ -142,11 +118,11 @@ def shingle_sets(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
     expected colliding vocabulary pairs ~ |vocab|^2/2^65, i.e. ~3 at a
     10^10-shingle corpus — immaterial for near-dup semantics, but NOT
     oracle-portable, so gated entries keep the string default."""
-    toks = docs.select(F.col(id_col), tokens_expr(text_col).alias("_t"))
-    shingles = shingles_expr(F.col("_t"), k)
+    toks = docs.selectExpr(ident(id_col), f"{tokens_sql(ident(text_col))} AS _t")
+    shingles = shingles_sql("_t", k)
     if hash_terms:
-        shingles = F.transform(shingles, lambda s: F.xxhash64(s))
-    sh = toks.select(F.col(id_col), shingles.alias("shingles"))
+        shingles = f"transform({shingles}, s -> xxhash64(s))"
+    sh = toks.selectExpr(ident(id_col), f"{shingles} AS shingles")
     return sh.select(
         F.col(id_col), F.explode("shingles").alias("shingle")
     ).distinct()
@@ -163,9 +139,7 @@ def _jaccard_of(shared: DataFrame, sizes: DataFrame, threshold: float) -> DataFr
             "jaccard",
             # integer quotient on the 1e-6 floor grid — round() halves
             # resolve differently across engines (catalog/__init__ rule)
-            micro_floor_ratio(
-                F.col("shared"), F.col("na") + F.col("nb") - F.col("shared")
-            ),
+            F.expr(micro_floor_ratio("shared", "na + nb - shared")),
         )
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
@@ -310,51 +284,39 @@ def minhash_profile(
     if hash_fn not in ("charfold", "xxhash64"):
         raise ValueError(f"hash_fn must be 'charfold' or 'xxhash64', got {hash_fn!r}")
     from flink_etl_spark.functions.hashing import (
-        combine_gram_ids,
         fold_gram_ids_sql,
+        gram_ids_sql,
         token_hashes_sql,
     )
 
-    toks = docs.select(F.col(id_col), tokens_expr(text_col).alias("_t"))
+    i = ident(id_col)
+    toks = docs.selectExpr(i, f"{tokens_sql(ident(text_col))} AS _t")
     if hash_fn == "xxhash64":
         # hash tokens once, combine k consecutive hashes per shingle —
         # see the docstring (shared helpers in functions/hashing:
         # decontaminate builds its n-gram ids on the identical path)
-        th_df = toks.select(
-            F.col(id_col), F.expr(token_hashes_sql("_t")).alias("_th")
+        th_df = toks.selectExpr(i, f"{token_hashes_sql('_t')} AS _th")
+        shset_df = th_df.selectExpr(
+            i, f"array_distinct({gram_ids_sql('_th', k)}) AS shset"
         )
-        shset_df = th_df.select(
-            F.col(id_col),
-            F.array_distinct(combine_gram_ids(F.col("_th"), k)).alias("shset"),
-        )
-        tids_df = shset_df.select(
-            F.col(id_col), F.col("shset"), F.col("shset").alias("_tids")
-        )
+        tids_df = shset_df.selectExpr(i, "shset", "shset AS _tids")
     else:
-        shset_df = toks.select(
-            F.col(id_col),
-            F.array_distinct(shingles_expr(F.col("_t"), k)).alias("shset"),
+        shset_df = toks.selectExpr(
+            i, f"array_distinct({shingles_sql('_t', k)}) AS shset"
         )
         # split-based char fold, not substring-per-index — see
         # functions/hashing.char_fold_hash (identical values, ~13% faster)
-        tids_df = shset_df.select(
-            F.col(id_col), F.col("shset"),
-            F.expr(fold_gram_ids_sql("shset")).alias("_tids"),
+        tids_df = shset_df.selectExpr(
+            i, "shset", f"{fold_gram_ids_sql('shset')} AS _tids"
         )
-    mins = [
-        F.array_min(
-            F.transform(
-                F.col("_tids"),
-                lambda x: (x * F.lit(a) + F.lit(b)) % F.lit(MERSENNE_P),
-            )
-        ).alias(f"m{i}")
-        for i, (a, b) in enumerate(MINHASH_COEFFS[:n_hashes])
-    ]
-    return tids_df.select(
-        F.col(id_col),
-        F.col("shset"),
-        F.size("shset").alias("n_sh"),
-        *mins,
+    return tids_df.selectExpr(
+        i,
+        "shset",
+        "size(shset) AS n_sh",
+        *[
+            f"array_min(transform(_tids, x -> (x * {a} + {b}) % {MERSENNE_P})) AS m{j}"
+            for j, (a, b) in enumerate(MINHASH_COEFFS[:n_hashes])
+        ],
     )
 
 
@@ -390,25 +352,18 @@ def lsh_candidates(
     pipeline handles with exact dedup (the clique members are typically
     byte-identical) rather than pairwise Jaccard. Default None keeps
     the lossless behavior for oracle-exact gates."""
-    band_structs = []
-    for j in range(bands):
-        frags = [
-            F.concat_ws(
-                "=", F.lit(str(p)), F.col(f"m{p}").cast("string")
-            )
+    def band(j: int) -> str:
+        frags = ", ".join(
+            f"concat_ws('=', '{p}', CAST({ident(f'm{p}')} AS STRING))"
             for p in range(j * rows_per_band, (j + 1) * rows_per_band)
-        ]
-        band_structs.append(
-            F.struct(
-                F.lit(j).alias("band_id"), F.concat_ws(":", *frags).alias("band_key")
-            )
         )
-    banded = sigs.select(
-        F.col(id_col), *carry_cols, F.explode(F.array(*band_structs)).alias("b")
-    ).select(
-        id_col, *carry_cols,
-        F.col("b.band_id").alias("band_id"), F.col("b.band_key").alias("band_key"),
-    )
+        return f"struct({j} AS band_id, concat_ws(':', {frags}) AS band_key)"
+
+    i = ident(id_col)
+    carry = [ident(c) for c in carry_cols]
+    banded = sigs.selectExpr(
+        i, *carry, f"explode(array({', '.join(band(j) for j in range(bands))})) AS b",
+    ).selectExpr(i, *carry, "b.band_id AS band_id", "b.band_key AS band_key")
     if max_bucket is not None:
         oversized = (
             banded.groupBy("band_id", "band_key")
@@ -419,20 +374,18 @@ def lsh_candidates(
         banded = banded.join(
             F.broadcast(oversized), ["band_id", "band_key"], "left_anti"
         )
-    a = banded.alias("a")
-    b = banded.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+        banded.alias("a").join(
+            banded.alias("b"),
+            F.expr(
+                f"a.band_id = b.band_id AND a.band_key = b.band_key AND a.{i} < b.{i}"
+            ),
         )
-        .select(
-            F.col(f"a.{id_col}").alias("doc_a"),
-            F.col(f"b.{id_col}").alias("doc_b"),
-            *[F.col(f"a.{c}").alias(f"{c}_a") for c in carry_cols],
-            *[F.col(f"b.{c}").alias(f"{c}_b") for c in carry_cols],
+        .selectExpr(
+            f"a.{i} AS doc_a",
+            f"b.{i} AS doc_b",
+            *[f"a.{ident(c)} AS {ident(c + '_a')}" for c in carry_cols],
+            *[f"b.{ident(c)} AS {ident(c + '_b')}" for c in carry_cols],
         )
         .distinct()
     )
@@ -542,8 +495,6 @@ def minhash_near_dups(
         profile.drop("shset"), bands, n_hashes // bands, id_col,
         carry_cols=("n_sh",), max_bucket=max_bucket,
     )
-    sh_a = profile.select(F.col(id_col).alias("doc_a"), F.col("shset").alias("_sa"))
-    sh_b = profile.select(F.col(id_col).alias("doc_b"), F.col("shset").alias("_sb"))
     # NO broadcast hint on the candidate set: its size is corpus-
     # dependent and unbounded without max_bucket (a duplicate-heavy
     # corpus makes it quadratic in bucket occupancy), and a forced
@@ -551,19 +502,25 @@ def minhash_near_dups(
     # incremental variant also avoids. AQE broadcasts it at runtime
     # when it is actually small (measured FASTER than the hint at
     # sf0.1, identical pairs).
+    return _verify_candidates(cand, profile, id_col, threshold)
+
+
+def _verify_candidates(cand: DataFrame, profile: DataFrame, id_col: str,
+                       threshold: float) -> DataFrame:
+    """Exact Jaccard of the candidate pairs (doc_a, doc_b, n_sh_a,
+    n_sh_b) from the profile's shingle sets, thresholded: both sides
+    join the profile, shared = size(array_intersect)."""
+    i = ident(id_col)
+    sh_a = profile.selectExpr(f"{i} AS doc_a", "shset AS _sa")
+    sh_b = profile.selectExpr(f"{i} AS doc_b", "shset AS _sb")
+    jac = micro_floor_ratio("shared", "n_sh_a + n_sh_b - shared")
     return (
         cand
         .join(sh_a, "doc_a")
         .join(sh_b, "doc_b")
-        .withColumn("shared", F.size(F.array_intersect("_sa", "_sb")))
-        .withColumn(
-            "jaccard",
-            micro_floor_ratio(
-                F.col("shared"),
-                F.col("n_sh_a") + F.col("n_sh_b") - F.col("shared"),
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
+        .selectExpr("*", "size(array_intersect(_sa, _sb)) AS shared")
+        .selectExpr("*", f"{jac} AS jaccard")
+        .filter(f"jaccard >= {lit(threshold)}")
         .select("doc_a", "doc_b", "jaccard")
     )
 
@@ -614,8 +571,8 @@ def simhash_signatures(
             "c -> CAST(ascii(c) AS BIGINT)), CAST(0 AS BIGINT), "
             f"(acc, c) -> (acc * 131 + c) % {MERSENNE_P}))"
         )
-    tids_df = docs.select(
-        F.col(id_col), tokens_expr(text_col).alias("_t")
+    tids_df = docs.selectExpr(
+        ident(id_col), f"{tokens_sql(ident(text_col))} AS _t"
     ).select(F.col(id_col), F.expr(hash_sql).alias("_tids"))
     bit_votes = [
         F.aggregate(
@@ -1722,26 +1679,11 @@ def minhash_near_dups_incremental(
             "left_semi",
         )
     ).distinct()
-    sh_a = profile.select(F.col(id_col).alias("doc_a"), F.col("shset").alias("_sa"))
-    sh_b = profile.select(F.col(id_col).alias("doc_b"), F.col("shset").alias("_sb"))
-    return (
-        # no broadcast hint: a hot LSH bucket or an unexpectedly large
-        # batch makes the candidate set unbounded, and a forced broadcast
-        # would OOM the driver where a shuffle join succeeds. AQE still
-        # converts to broadcast at runtime when cand turns out small.
-        cand.join(sh_a, "doc_a")
-        .join(sh_b, "doc_b")
-        .withColumn("shared", F.size(F.array_intersect("_sa", "_sb")))
-        .withColumn(
-            "jaccard",
-            micro_floor_ratio(
-                F.col("shared"),
-                F.col("n_sh_a") + F.col("n_sh_b") - F.col("shared"),
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    # no broadcast hint: a hot LSH bucket or an unexpectedly large
+    # batch makes the candidate set unbounded, and a forced broadcast
+    # would OOM the driver where a shuffle join succeeds. AQE still
+    # converts to broadcast at runtime when cand turns out small.
+    return _verify_candidates(cand, profile, id_col, threshold)
 
 
 def edit_distance_pairs(

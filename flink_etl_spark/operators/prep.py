@@ -20,7 +20,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
-from flink_etl_spark.functions.hashing import shingles_expr, tokens_expr
+from flink_etl_spark.functions.hashing import shingles_sql, tokens_sql
+from flink_etl_spark.functions.sql import ident, lit
 from flink_etl_spark.operators.text import micro_floor_ratio
 
 # ---------------------------------------------------------------------------
@@ -72,14 +73,14 @@ def repetition_stats(
     base = docs.select(
         sid,
         F.length(F.col(text_col)).alias("_len"),
-        tokens_expr(text_col).alias("_t"),
+        F.expr(tokens_sql(ident(text_col))).alias("_t"),
     ).select(
         sid,
         F.col("_len"),
         F.size("_t").alias("n_tokens"),
         F.size(F.array_distinct("_t")).alias("n_distinct"),
-        F.array_sort(shingles_expr(F.col("_t"), 2)).alias("_g2"),
-        F.array_sort(shingles_expr(F.col("_t"), 3)).alias("_g3"),
+        F.array_sort(F.expr(shingles_sql("_t", 2))).alias("_g2"),
+        F.array_sort(F.expr(shingles_sql("_t", 3))).alias("_g3"),
     )
 
     def _starts(g: Column) -> Column:
@@ -137,27 +138,26 @@ def repetition_stats(
         ).alias("_dup3"),
     )
 
-    safe_len = F.greatest(F.col("_len"), F.lit(1))
+    safe_len = "greatest(_len, 1)"
     # integer quotients on the 1e-6 floor grid — round() halves resolve
     # differently across engines (catalog/__init__ determinism rule)
     return per_doc.select(
         sid,
         F.col("n_tokens"),
-        micro_floor_ratio(
-            F.col("n_tokens") - F.col("n_distinct"), F.col("n_tokens")
-        ).alias("dup_token_frac"),
+        F.expr(micro_floor_ratio("n_tokens - n_distinct", "n_tokens")).alias(
+            "dup_token_frac"
+        ),
         F.col("_top2.g").alias("top_bigram"),
         F.coalesce(F.col("_top2.c"), F.lit(0)).alias("top_bigram_count"),
         F.least(
             F.lit(1.0),
-            micro_floor_ratio(
-                F.coalesce(F.col("_top2.c") * F.length("_top2.g"), F.lit(0)),
-                safe_len,
-            ),
+            F.expr(micro_floor_ratio(
+                "coalesce(_top2.c * length(_top2.g), 0)", safe_len
+            )),
         ).alias("top_bigram_char_frac"),
         F.least(
             F.lit(1.0),
-            micro_floor_ratio(F.coalesce(F.col("_dup3"), F.lit(0)), safe_len),
+            F.expr(micro_floor_ratio("coalesce(_dup3, 0)", safe_len)),
         ).alias("dup_trigram_char_frac"),
     )
 
@@ -551,8 +551,8 @@ def decontaminate(
     corpus-scale (then it is a plain shuffle join and you likely wanted
     `jaccard_pairs`)."""
     from flink_etl_spark.functions.hashing import (
-        combine_gram_ids,
         fold_gram_ids_sql,
+        gram_ids_sql,
         token_hashes_sql,
     )
 
@@ -565,17 +565,17 @@ def decontaminate(
 
     def grams(df: DataFrame, i: str, t: str, outer: bool) -> DataFrame:
         exploder = F.explode_outer if outer else F.explode
-        toks = df.select(F.col(i), tokens_expr(t).alias("_t"))
+        toks = df.select(F.col(i), F.expr(tokens_sql(ident(t))).alias("_t"))
         if hash_fn == "xxhash64":
             ids_df = toks.select(
                 F.col(i), F.expr(token_hashes_sql("_t")).alias("_th")
             ).select(
                 F.col(i),
-                F.array_distinct(combine_gram_ids(F.col("_th"), n)).alias("_ga"),
+                F.array_distinct(F.expr(gram_ids_sql("_th", n))).alias("_ga"),
             )
         else:
             ids_df = toks.select(
-                F.col(i), shingles_expr(F.col("_t"), n).alias("_sh")
+                F.col(i), F.expr(shingles_sql("_t", n)).alias("_sh")
             ).select(
                 F.col(i),
                 F.array_distinct(F.expr(fold_gram_ids_sql("_sh"))).alias("_ga"),
@@ -748,7 +748,7 @@ def dsir_log_weights(
     map-side-combined aggregates; the scored feature stream joins the
     two count tables on the feature key and the 1-row totals
     broadcast. Empty text tokenizes to one empty-string token (the
-    package-wide `tokens_expr` convention, same as the LM scorers), so
+    package-wide `tokens_sql` convention, same as the LM scorers), so
     every document appears in the output.
 
     ``n_buckets=B`` switches to the PAPER's hashed feature space (Xie
@@ -772,8 +772,8 @@ def dsir_log_weights(
         return _dsir_log_weights_bucketed(
             docs, target_docs, id_col, text_col, hash_terms, n_buckets
         )
-    t = tokens_expr(text_col)
-    feats = F.concat(t, shingles_expr(t, 2))
+    t_sql = tokens_sql(ident(text_col))
+    feats = F.concat(F.expr(t_sql), F.expr(shingles_sql(t_sql, 2)))
 
     def feat_frame(d: DataFrame, with_id: bool) -> DataFrame:
         cols = [F.col(id_col)] if with_id else []
@@ -839,7 +839,7 @@ def dsir_log_weights(
             (F.col("logw_micro").cast("double") / F.col("n_feats")).alias(
                 "mean_lr_micro"
             ),
-            micro_floor_ratio(F.col("_n"), F.col("n_feats")).alias(
+            F.expr(micro_floor_ratio("_n", "n_feats")).alias(
                 "novel_target_frac"
             ),
         )
@@ -923,12 +923,12 @@ def _dsir_feats_frame(
     its own projection per the interpreted-HOF rule."""
     toks = d.select(
         *([F.col(id_col)] if keep_id else []),
-        tokens_expr(text_col).alias("_toks"),
+        F.expr(tokens_sql(ident(text_col))).alias("_toks"),
     )
     return toks.select(
         *([id_col] if keep_id else []),
         F.concat(
-            F.col("_toks"), shingles_expr(F.col("_toks"), 2)
+            F.col("_toks"), F.expr(shingles_sql("_toks", 2))
         ).alias("_feats"),
     )
 
@@ -1032,7 +1032,7 @@ def _dsir_score(
             (F.col("logw_micro").cast("double") / F.col("n_feats")).alias(
                 "mean_lr_micro"
             ),
-            micro_floor_ratio(F.col("_n"), F.col("n_feats")).alias(
+            F.expr(micro_floor_ratio("_n", "n_feats")).alias(
                 "novel_target_frac"
             ),
         )
@@ -1051,9 +1051,9 @@ def _bigram_hash_frame(d: DataFrame, text_col: str) -> DataFrame:
     WHICH features arrive (the measured order-drift blind spot), while
     an anti-join on exact 8-byte bigram hashes still does. Staged
     projection per the interpreted-HOF rule."""
-    toks = d.select(tokens_expr(text_col).alias("_toks"))
+    toks = d.select(F.expr(tokens_sql(ident(text_col))).alias("_toks"))
     return toks.select(
-        F.explode(shingles_expr(F.col("_toks"), 2)).alias("_s")
+        F.explode(F.expr(shingles_sql("_toks", 2))).alias("_s")
     ).select(F.xxhash64("_s").alias("_h"))
 
 
@@ -2101,7 +2101,7 @@ def span_dedup(
         if reserved == id_col:
             raise ValueError(f"output column {reserved!r} collides with id_col")
 
-    toks = tokens_expr(F.coalesce(F.col(text_col), F.lit("")))
+    toks = F.expr(tokens_sql(f"coalesce({ident(text_col)}, '')"))
     n = F.size(toks)
     k = F.lit(span_tokens)
     n_spans = (n + k - F.lit(1)).cast("long") / span_tokens
@@ -2319,9 +2319,9 @@ def _substring_anchors(
 ) -> DataFrame:
     """(id, _toks, _a): per-document token array + anchor-key array.
 
-    Anchor construction is DATAFRAME-STAGED doubling, one select per
-    power-of-two run level. The expression-level doubling fold
-    (functions/hashing.combine_gram_ids) is analyzer-safe at any k
+    Anchor construction is DATAFRAME-STAGED doubling, one projection
+    per power-of-two run level. The expression-level doubling fold
+    (functions/hashing.gram_ids_sql) is analyzer-safe at any k
     but references each run level TWICE inside the next — as a single
     expression tree that doubles evaluation work per level (measured
     ~40s for 5000 docs at k=50, single task). Materializing each
@@ -2329,96 +2329,80 @@ def _substring_anchors(
     keep the projection boundary (the minhash_profile staging
     argument), so every level evaluates once per row: O(log k)
     array passes total."""
-    toks = tokens_expr(F.coalesce(F.col(text_col), F.lit("")))
-    staged = docs.select(F.col(id_col), toks.alias("_toks"))
+    from flink_etl_spark.functions.hashing import MERSENNE_P
+
+    i = ident(id_col)
+    toks = tokens_sql(f"coalesce({ident(text_col)}, '')")
+    staged = docs.selectExpr(i, f"{toks} AS _toks")
 
     def _staged_runs(df: DataFrame, base: str, combine):
         """Power-of-two run columns: returns (df, [(span, col), ...])."""
         runs = [(1, base)]
         span = 1
         while span * 2 <= k:
-            prev = F.col(runs[-1][1])
+            prev = runs[-1][1]
             nxt = f"{base}_r{span * 2}"
-            df = df.withColumn(
-                nxt,
-                F.zip_with(
-                    prev,
-                    F.slice(
-                        prev, 1 + span,
-                        F.greatest(F.size(prev) - span, F.lit(0)),
-                    ),
-                    lambda a, b: combine(a, b, span),
-                ),
+            df = df.selectExpr(
+                "*",
+                f"zip_with({prev}, slice({prev}, {1 + span}, "
+                f"greatest(size({prev}) - {span}, 0)), "
+                f"(a, b) -> {combine('a', 'b', span)}) AS {nxt}",
             )
             runs.append((span * 2, nxt))
             span *= 2
         return df, runs
 
-    def _combine_bits(runs, combine) -> Column:
+    def _combine_bits(runs, combine, empty_type: str) -> str:
         """Stitch the binary decomposition of k from run COLUMNS (cheap
         refs — the final expression is linear in popcount(k))."""
-        n = F.size(F.col("_toks"))
-        width = F.greatest(n - F.lit(k - 1), F.lit(0))
+        width = f"greatest(size(_toks) - {k - 1}, 0)"
         acc = None
         off = 0
         for span, name in reversed(runs):
             if not k & span:
                 continue
-            part = F.slice(F.col(name), 1 + off, width)
-            acc = part if acc is None else F.zip_with(
-                acc, part, lambda a, b: combine(a, b, span)
+            part = f"slice({name}, {1 + off}, {width})"
+            acc = part if acc is None else (
+                f"zip_with({acc}, {part}, (a, b) -> {combine('a', 'b', span)})"
             )
             off += span
-        return F.when(n >= k, acc)
+        return (
+            f"CASE WHEN size(_toks) >= {k} THEN {acc} "
+            f"ELSE CAST(array() AS {empty_type}) END"
+        )
 
     if key == "digest":
-        concat = lambda a, b, span: F.concat_ws(" ", a, b)  # noqa: E731
+        concat = lambda a, b, span: f"concat_ws(' ', {a}, {b})"  # noqa: E731
         df, runs = _staged_runs(staged, "_toks", concat)
-        anchors = F.transform(
-            _combine_bits(runs, concat).otherwise(
-                F.array().cast("array<string>")
-            ),
-            lambda s: F.sha2(s, 256),
+        anchors = (
+            f"transform({_combine_bits(runs, concat, 'ARRAY<STRING>')}, "
+            "s -> sha2(s, 256))"
         )
     else:
         # two independent per-token xxhash64 streams (distinct salts),
         # each folded to a 31-bit gram id, packed into one bigint:
         # max value (p-1)*2^31 + (p-1) < 2^62 — no overflow under ANSI
-        from flink_etl_spark.functions.hashing import MERSENNE_P
+        def poly(a: str, b: str, span: int) -> str:
+            return f"({a} * {pow(131, span, MERSENNE_P)} + {b}) % {MERSENNE_P}"
 
-        def poly(a: Column, b: Column, span: int) -> Column:
-            return (a * F.lit(pow(131, span, MERSENNE_P)) + b) % F.lit(
-                MERSENNE_P
-            )
-
-        hashed = staged.select(
-            F.col(id_col),
+        hashed = staged.selectExpr(
+            i,
             "_toks",
-            F.transform(
-                F.col("_toks"),
-                lambda t: F.pmod(F.xxhash64(t), F.lit(MERSENNE_P)),
-            ).alias("_th1"),
-            F.transform(
-                F.col("_toks"),
-                lambda t: F.pmod(
-                    F.xxhash64(t, F.lit(0x9E3779B9)), F.lit(MERSENNE_P)
-                ),
-            ).alias("_th2"),
+            f"transform(_toks, t -> pmod(xxhash64(t), {MERSENNE_P})) AS _th1",
+            f"transform(_toks, t -> pmod(xxhash64(t, {lit(0x9E3779B9)}), "
+            f"{MERSENNE_P})) AS _th2",
         )
         df, runs1 = _staged_runs(hashed, "_th1", poly)
         df, runs2 = _staged_runs(df, "_th2", poly)
-        empty = F.array().cast("array<bigint>")
-        anchors = F.zip_with(
-            _combine_bits(runs1, poly).otherwise(empty),
-            _combine_bits(runs2, poly).otherwise(empty),
-            lambda a, b: a * F.lit(2_147_483_648) + b,
+        anchors = (
+            f"zip_with({_combine_bits(runs1, poly, 'ARRAY<BIGINT>')}, "
+            f"{_combine_bits(runs2, poly, 'ARRAY<BIGINT>')}, "
+            f"(a, b) -> a * {lit(2_147_483_648)} + b)"
         )
     if stride > 1:
         # grid index j <-> token position j*stride, order-preserving
-        anchors = F.filter(
-            anchors, lambda x, i: i % F.lit(stride) == F.lit(0)
-        )
-    return df.select(F.col(id_col), "_toks", anchors.alias("_a"))
+        anchors = f"filter({anchors}, (x, j) -> j % {stride} = 0)"
+    return df.selectExpr(i, "_toks", f"{anchors} AS _a")
 
 
 def _substring_narrow(
@@ -2426,58 +2410,47 @@ def _substring_narrow(
 ) -> DataFrame:
     """Explode anchors to the narrow (id, _pos, _k) triples that cross
     the exchange — every anchor (winnow=1) or the winnowing-selected
-    fingerprints (winnow>1)."""
+    fingerprints (winnow>1).
+
+    Winnowing (Schleimer et al. 2003) selects the RIGHTMOST minimum of
+    every window of w = least(winnow, size(_a)) consecutive anchors,
+    entirely row-local. The window minima come from a sparse table:
+    level j holds the minimum of each 2^j-wide run as a struct
+    (key, -pos) — struct order breaks key ties to the larger position —
+    built by one staged `zip_with(least)` projection per level, so a
+    window is answered by two overlapping power-of-two runs. That is
+    O(m log winnow) per document; probing each anchor's neighbourhood
+    is O(m * winnow). A document with fewer anchors than one window
+    keeps exactly its rightmost minimum."""
+    i = ident(id_col)
     if winnow == 1:
-        return with_anchors.select(
-            F.col(id_col), F.posexplode("_a").alias("_pos", "_k")
-        ).select(F.col(id_col), "_pos", "_k")
-    # winnowing selection, entirely row-local: p is selected iff
-    # its weak-left (>=) / strict-right (>) higher-hash runs span a
-    # full window, A + B + 1 >= min(winnow, n_anchors) — the
-    # min(...) unifies the short-document case (fewer anchors than
-    # one window: exactly the whole-array rightmost min survives).
-    # Runs are probed only winnow-1 steps out (O(winnow)/anchor);
-    # out-of-bounds probes count as violations, capping runs at
-    # the array edge.
-    a = F.col("_a")
-    m = F.size(a)
-    wl = winnow - 1
-
-    def _selected(p: Column) -> Column:
-        viol_l = F.filter(
-            F.sequence(F.lit(1), F.lit(wl)),
-            lambda d: (p - d < 0)
-            | (F.element_at(a, p - d + 1) < F.element_at(a, p + 1)),
-        )
-        run_l = F.when(F.size(viol_l) == 0, F.lit(wl)).otherwise(
-            F.array_min(viol_l) - 1
-        )
-        viol_r = F.filter(
-            F.sequence(F.lit(1), F.lit(wl)),
-            lambda d: (p + d > m - 1)
-            | (F.element_at(a, p + d + 1) <= F.element_at(a, p + 1)),
-        )
-        run_r = F.when(F.size(viol_r) == 0, F.lit(wl)).otherwise(
-            F.array_min(viol_r) - 1
-        )
-        return run_l + run_r + 1 >= F.least(F.lit(winnow), m)
-
-    sel = F.when(
-        m > 0, F.filter(F.sequence(F.lit(0), m - 1), _selected)
-    ).otherwise(F.array().cast("array<int>"))
-    sel_structs = F.transform(
-        sel,
-        lambda p: F.struct(
-            p.alias("_pos"), F.element_at(a, p + 1).alias("_k")
-        ),
+        return with_anchors.selectExpr(i, "posexplode(_a) AS (_pos, _k)")
+    df = with_anchors.selectExpr(
+        i, "_a", "transform(_a, (v, p) -> struct(v, -p AS p)) AS _run"
     )
-    return with_anchors.select(
-        F.col(id_col), F.explode(sel_structs).alias("_s")
-    ).select(
-        F.col(id_col),
-        F.col("_s._pos").alias("_pos"),
-        F.col("_s._k").alias("_k"),
+    span = 1
+    while span * 2 <= winnow:
+        n = f"greatest(size(_run) - {span}, 0)"
+        df = df.selectExpr(
+            i, "_a",
+            f"zip_with(slice(_run, 1, {n}), slice(_run, {1 + span}, {n}), "
+            "(x, y) -> least(x, y)) AS _run",
+        )
+        span *= 2
+    # the window starting at s is covered by the runs starting at s and
+    # at s + winnow - span; the argmin positions are non-decreasing in s
+    sel = (
+        f"CASE WHEN size(_a) >= {winnow} THEN array_distinct(transform("
+        f"sequence(0, size(_a) - {winnow}), s -> -least(element_at(_run, s + 1), "
+        f"element_at(_run, s + {winnow - span + 1})).p)) "
+        "WHEN size(_a) > 0 THEN "
+        "array(-array_min(transform(_a, (v, p) -> struct(v, -p AS p))).p) "
+        "ELSE CAST(array() AS ARRAY<INT>) END"
     )
+    return df.selectExpr(
+        i, f"explode(transform({sel}, p -> struct(p AS _pos, "
+        "element_at(_a, p + 1) AS _k))) AS _s",
+    ).selectExpr(i, "_s._pos AS _pos", "_s._k AS _k")
 
 
 def _gap_slice_rebuild(
@@ -2667,11 +2640,7 @@ def document_fingerprints(
         _substring_anchors(docs, min_tokens, 1, id_col, text_col, key),
         id_col,
         winnow,
-    ).select(
-        F.col(id_col),
-        F.col("_pos").alias("pos"),
-        F.col("_k").alias("fingerprint"),
-    )
+    ).selectExpr(ident(id_col), "_pos AS pos", "_k AS fingerprint")
 
 
 def fingerprint_candidates(
@@ -2735,12 +2704,13 @@ def fingerprint_candidates(
     # oracle gate pins persist_fingerprints=False (64-hex digest
     # fingerprints made the cache fill a net LOSS in a vanilla
     # session).
+    i = ident(id_col)
     fp = (
         document_fingerprints(
             docs, min_tokens=min_tokens, winnow=winnow, id_col=id_col,
             text_col=text_col, key=key,
         )
-        .select(F.col(id_col), "fingerprint")
+        .selectExpr(i, "fingerprint")
         .distinct()
     )
     if persist_fingerprints:
@@ -2755,19 +2725,12 @@ def fingerprint_candidates(
         fp = fp.join(F.broadcast(hot), "fingerprint", "left_anti")
     a, b = fp.alias("a"), fp.alias("b")
     pairs = (
-        a.join(
-            b,
-            (F.col("a.fingerprint") == F.col("b.fingerprint"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .groupBy(
-            F.col(f"a.{id_col}").alias("doc_a"),
-            F.col(f"b.{id_col}").alias("doc_b"),
-        )
-        .agg(F.count("*").alias("n_shared"))
+        a.join(b, F.expr(f"a.fingerprint = b.fingerprint AND a.{i} < b.{i}"))
+        .groupBy(F.expr(f"a.{i} AS doc_a"), F.expr(f"b.{i} AS doc_b"))
+        .agg(F.expr("count(1) AS n_shared"))
     )
     if min_shared > 1:
-        pairs = pairs.filter(F.col("n_shared") >= min_shared)
+        pairs = pairs.filter(f"n_shared >= {min_shared}")
     return pairs
 
 

@@ -226,23 +226,12 @@ def _local_frame(spark, rows, schema) -> DataFrame:
     float32 values widen to Python doubles losslessly and the
     double-literal -> float cast narrows back to the identical bits
     (round-trip law); the bit-for-bit pins cover it."""
-    import math
-
     from pyspark.sql import types as T
+
+    from flink_etl_spark.functions.sql import dbl_text, str_lit
 
     if not rows:
         return spark.createDataFrame([], schema)
-
-    def dbl_text(v: float) -> str:
-        # repr is the shortest round-trip decimal; Java parseDouble is
-        # correctly rounded, so CAST('<repr>' AS DOUBLE) is bit-exact.
-        # Non-finite values are out of the family's input contract but
-        # must not produce an unparseable literal.
-        if math.isnan(v):
-            return "CAST('NaN' AS DOUBLE)"
-        if math.isinf(v):
-            return f"CAST('{'-' if v < 0 else ''}Infinity' AS DOUBLE)"
-        return f"CAST('{v!r}' AS DOUBLE)"
 
     def lit_sql(v, dt) -> str:
         if v is None:
@@ -253,17 +242,16 @@ def _local_frame(spark, rows, schema) -> DataFrame:
             inner = ",".join(lit_sql(x, dt.elementType) for x in v)
             return f"array({inner})"
         if isinstance(dt, T.DoubleType):
-            return dbl_text(float(v))
+            return dbl_text(v)
         if isinstance(dt, T.FloatType):
             # collected float32 widened losslessly to double; the
             # double -> float narrowing restores the identical bits
-            return f"CAST({dbl_text(float(v))} AS FLOAT)"
+            return f"CAST({dbl_text(v)} AS FLOAT)"
         if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType,
                            T.LongType)):
             return f"CAST({int(v)} AS {dt.simpleString()})"
         if isinstance(dt, T.StringType):
-            esc = str(v).replace("\\", "\\\\").replace("'", "\\'")
-            return f"'{esc}'"
+            return str_lit(str(v))
         raise TypeError(
             f"_local_frame: unsupported literal type {dt.simpleString()}"
         )
@@ -271,7 +259,7 @@ def _local_frame(spark, rows, schema) -> DataFrame:
     structs = ",".join(
         "named_struct("
         + ",".join(
-            f"'{f.name}',{lit_sql(v, f.dataType)}"
+            f"{str_lit(f.name)},{lit_sql(v, f.dataType)}"
             for v, f in zip(r, schema.fields)
         )
         + ")"

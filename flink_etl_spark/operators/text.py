@@ -15,9 +15,10 @@ from flink_etl_spark.session import anchor
 
 from flink_etl_spark.functions.hashing import (
     MERSENNE_P,
-    shingles_expr,
-    tokens_expr,
+    shingles_sql,
+    tokens_sql,
 )
+from flink_etl_spark.functions.sql import dbl_lit, ident, str_lit
 
 #: tiny embedded stopword lists per language — heuristic scoring tables
 #: (public-knowledge closed-class words). Order of dict = tie-break order.
@@ -30,25 +31,28 @@ STOPWORDS: dict[str, tuple[str, ...]] = {
 }
 
 
-def _count_in(tokens: Column, words: tuple[str, ...]) -> Column:
-    arr = F.array(*[F.lit(w) for w in words])
-    return F.size(F.filter(tokens, lambda t: F.array_contains(arr, t)))
+def _count_in(tokens: str, words: tuple[str, ...]) -> str:
+    """SQL text: how many elements of the array<string> SQL expression
+    `tokens` are in `words`."""
+    arr = ", ".join(str_lit(w) for w in words)
+    return f"size(filter({tokens}, t -> array_contains(array({arr}), t)))"
 
 
-def micro_floor_ratio(num: Column, den: Column, scale: int = 1_000_000) -> Column:
-    """`floor(num*scale/den)/scale` with EXACT intermediates: num and
-    den are integer-valued, num*scale stays below 2^53 (integer-exact
-    in a double), and the single correctly-rounded IEEE division +
-    floor produce bit-identical results in every engine. This is the
+def micro_floor_ratio(num: str, den: str, scale: int = 1_000_000) -> str:
+    """SQL text for `floor(num*scale/den)/scale` with EXACT
+    intermediates: num and den (SQL expressions) are integer-valued,
+    num*scale stays below 2^53 (integer-exact in a double), and the
+    single correctly-rounded IEEE division + floor produce
+    bit-identical results in every engine. This is the
     cross-engine-safe way to emit a fixed-decimal quotient — round()
     is NOT: Spark (BigDecimal HALF_UP of the shortest repr) and DuckDB
     (fp multiply + std::round) resolve exact half-edges differently,
     and quotients like nd/n land on 6-decimal halves for whole
     families of n (e.g. n in {64, 320, 640}), flipping a value-hash
     on regenerated data. Truncation has no half-edge."""
+    s = dbl_lit(float(scale))
     return (
-        F.floor(num.cast("double") * F.lit(float(scale)) / den.cast("double"))
-        / F.lit(float(scale))
+        f"(floor(CAST({num} AS DOUBLE) * {s} / CAST({den} AS DOUBLE)) / {s})"
     )
 
 
@@ -61,20 +65,20 @@ def duckdb_micro_floor_ratio(num_sql: str, den_sql: str,
     )
 
 
-def quality_micro(n: Column, nd: Column, hits_en: Column) -> Column:
-    """The composite quality score on a 1e-6 grid:
+def quality_micro(n: str, nd: str, hits_en: str) -> str:
+    """SQL text for the composite quality score on a 1e-6 grid:
     0.4*min(1, n/100) + 0.3*nd/n + 0.3*min(1, 4*h/n)
     == (4*min(n,100)*n + 300*nd + 300*min(n, 4*h)) / (1000*n),
     emitted as floor(num*1000/n)/1e6 (see `micro_floor_ratio` for why
     floor-on-a-grid, never round). 6-dec-exact by construction, so
     `exact_decimal_avg(quality, 6)` remains valid downstream."""
-    nl = n.cast("long")
+    nl = f"CAST({n} AS BIGINT)"
     num = (
-        F.least(nl, F.lit(100).cast("long")) * 4 * nl
-        + F.lit(300).cast("long") * nd.cast("long")
-        + F.lit(300).cast("long") * F.least(nl, hits_en.cast("long") * 4)
+        f"least({nl}, CAST(100 AS BIGINT)) * 4 * {nl}"
+        f" + CAST(300 AS BIGINT) * CAST({nd} AS BIGINT)"
+        f" + CAST(300 AS BIGINT) * least({nl}, CAST({hits_en} AS BIGINT) * 4)"
     )
-    return micro_floor_ratio(num, nl, 1000) / F.lit(1000.0)
+    return f"({micro_floor_ratio(num, nl, 1000)} / {dbl_lit(1000.0)})"
 
 
 def duckdb_quality_micro(n_sql: str, nd_sql: str, h_sql: str) -> str:
@@ -86,25 +90,44 @@ def duckdb_quality_micro(n_sql: str, nd_sql: str, h_sql: str) -> str:
     return f"({duckdb_micro_floor_ratio(num, n_sql, 1000)} / 1000.0)"
 
 
-def token_stats(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Token counting + vocabulary-richness stats per document.
+#: per-token contribution and fold of the rolling document fingerprint
+#: over the staged token array `_t` (see `fingerprints`)
+_FINGERPRINT_SQL = (
+    "aggregate(transform(_t, t -> CAST(ascii(t) * 131 + length(t) AS BIGINT)), "
+    f"CAST(0 AS BIGINT), (acc, c) -> (acc * 31 + c) % {MERSENNE_P})"
+)
 
-    Tokens are projected once (`_t`) — inlining the split into every
-    stat expression re-runs the regex per use (see dedup.shingle_sets).
-    """
-    toks = F.col("_t")
-    return docs.select(F.col(id_col), tokens_expr(text_col).alias("_t")).select(
-        F.col(id_col),
-        F.size(toks).alias("n_tokens"),
-        F.size(F.array_distinct(toks)).alias("n_distinct"),
-        micro_floor_ratio(
-            F.size(F.array_distinct(toks)), F.size(toks)
-        ).alias("distinct_ratio"),
-        micro_floor_ratio(
-            F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t)),
-            F.size(toks),
-        ).alias("avg_token_len"),
+
+def _tokenized(docs: DataFrame, *cols: str, text_col: str) -> DataFrame:
+    """The staged tokenization projection: `cols` plus the token array
+    `_t` of `text_col`. Tokens are projected once — inlining the split
+    into every stat expression re-runs the regex per use (see
+    dedup.shingle_sets)."""
+    return docs.selectExpr(
+        *map(ident, cols), f"{tokens_sql(ident(text_col))} AS _t"
     )
+
+
+def token_stats(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+    """Token counting + vocabulary-richness stats per document."""
+    return _tokenized(docs, id_col, text_col=text_col).selectExpr(
+        ident(id_col),
+        "size(_t) AS n_tokens",
+        "size(array_distinct(_t)) AS n_distinct",
+        f"{micro_floor_ratio('size(array_distinct(_t))', 'size(_t)')} AS distinct_ratio",
+        f"{micro_floor_ratio('aggregate(_t, 0, (acc, t) -> acc + length(t))', 'size(_t)')}"
+        " AS avg_token_len",
+    )
+
+
+def _lang_guess() -> str:
+    """greatest-of-structs argmax over the per-language stopword hits
+    of the staged `_t` (ties break on the LARGEST language code)."""
+    packed = ", ".join(
+        f"struct({_count_in('_t', ws)} AS s, {str_lit(lang)} AS l)"
+        for lang, ws in STOPWORDS.items()
+    )
+    return f"greatest({packed}).l"
 
 
 def lang_scores(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -115,25 +138,24 @@ def lang_scores(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     lexicographically LARGEST language code — replicated exactly in the
     oracle. Heuristic n-gram language ID per the public fastText/CLD
     lineage, reduced to closed-class word hits."""
-    toks = F.col("_toks")
-    base = docs.select(
-        F.col(id_col), tokens_expr(text_col).alias("_toks")
-    ).select(
-        F.col(id_col),
-        F.col("_toks"),
-        *[
-            _count_in(toks, ws).alias(f"hits_{lang}")
-            for lang, ws in STOPWORDS.items()
-        ],
+    base = _tokenized(docs, id_col, text_col=text_col).selectExpr(
+        ident(id_col),
+        "_t",
+        *[f"{_count_in('_t', ws)} AS hits_{lang}" for lang, ws in STOPWORDS.items()],
     )
-    packed = [
-        F.struct(F.col(f"hits_{lang}").alias("s"), F.lit(lang).alias("l"))
-        for lang in STOPWORDS
-    ]
-    return base.select(
-        F.col(id_col),
-        *[F.col(f"hits_{lang}") for lang in STOPWORDS],
-        F.greatest(*packed).getField("l").alias("lang_guess"),
+    packed = ", ".join(
+        f"struct(hits_{lang} AS s, {str_lit(lang)} AS l)" for lang in STOPWORDS
+    )
+    return base.selectExpr(
+        ident(id_col),
+        *[f"hits_{lang}" for lang in STOPWORDS],
+        f"greatest({packed}).l AS lang_guess",
+    )
+
+
+def _quality_sql() -> str:
+    return quality_micro(
+        "size(_t)", "size(array_distinct(_t))", _count_in("_t", STOPWORDS["en"])
     )
 
 
@@ -147,21 +169,14 @@ def quality_scores(docs: DataFrame, id_col: str = "doc_id", text_col: str = "tex
       + 0.3*min(1, 4*stopword_ratio)
 
     plus a keep/flag verdict at 0.5."""
-    toks = F.col("_t")
-    en = STOPWORDS["en"]
-    n_tokens = F.size(toks)
-    score = quality_micro(n_tokens, F.size(F.array_distinct(toks)), _count_in(toks, en))
-    return docs.select(
-        F.col(id_col), F.col(chars_col), tokens_expr(text_col).alias("_t")
-    ).select(
-        F.col(id_col),
-        F.col(chars_col),
-        n_tokens.alias("n_tokens"),
-        micro_floor_ratio(_count_in(toks, en), n_tokens).alias("stopword_ratio"),
-        score.alias("quality"),
-        F.when(score >= 0.5, F.lit("keep")).otherwise(F.lit("flag")).alias(
-            "verdict"
-        ),
+    score = _quality_sql()
+    return _tokenized(docs, id_col, chars_col, text_col=text_col).selectExpr(
+        ident(id_col),
+        ident(chars_col),
+        "size(_t) AS n_tokens",
+        f"{micro_floor_ratio(_count_in('_t', STOPWORDS['en']), 'size(_t)')} AS stopword_ratio",
+        f"{score} AS quality",
+        f"CASE WHEN {score} >= {dbl_lit(0.5)} THEN 'keep' ELSE 'flag' END AS verdict",
     )
 
 
@@ -186,52 +201,23 @@ def doc_profile(
     unchanged (e.g. `("source",)`) — a consumer that needs them then
     never joins back to the corpus for metadata, keeping multi-stage
     pipelines at ONE corpus scan."""
-    toks = F.col("_t")
-    n_tokens = F.size(toks)
-    score = quality_micro(
-        n_tokens, F.size(F.array_distinct(toks)), _count_in(toks, STOPWORDS["en"])
-    )
-    packed = [
-        F.struct(_count_in(toks, ws).alias("s"), F.lit(lang).alias("l"))
-        for lang, ws in STOPWORDS.items()
-    ]
-    contribs = F.transform(
-        toks, lambda t: (F.ascii(t) * F.lit(131) + F.length(t)).cast("long")
-    )
-    fp = F.aggregate(
-        contribs,
-        F.lit(0).cast("long"),
-        lambda acc, c: (acc * F.lit(31) + c) % F.lit(MERSENNE_P),
-    )
-    extra = [F.col(c) for c in passthrough]
-    return docs.select(
-        F.col(id_col), F.col(text_col), F.col(chars_col),
-        *extra,
-        tokens_expr(text_col).alias("_t"),
-    ).select(
-        F.col(id_col),
-        F.col(text_col),
-        F.col(chars_col),
-        *extra,
-        n_tokens.alias("n_tokens"),
-        F.size(F.array_distinct(toks)).alias("n_distinct"),
-        micro_floor_ratio(
-            F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t)),
-            n_tokens,
-        ).alias("avg_token_len"),
-        micro_floor_ratio(F.size(F.array_distinct(toks)), n_tokens).alias(
-            "distinct_ratio"
-        ),
-        micro_floor_ratio(_count_in(toks, STOPWORDS["en"]), n_tokens).alias(
-            "stopword_ratio"
-        ),
-        *[_count_in(toks, ws).alias(f"hits_{lang}") for lang, ws in STOPWORDS.items()],
-        F.greatest(*packed).getField("l").alias("lang_guess"),
-        score.alias("quality"),
-        F.when(score >= 0.5, F.lit("keep")).otherwise(F.lit("flag")).alias(
-            "verdict"
-        ),
-        fp.alias("fingerprint"),
+    score = _quality_sql()
+    kept = [ident(c) for c in (id_col, text_col, chars_col, *passthrough)]
+    return _tokenized(
+        docs, id_col, text_col, chars_col, *passthrough, text_col=text_col
+    ).selectExpr(
+        *kept,
+        "size(_t) AS n_tokens",
+        "size(array_distinct(_t)) AS n_distinct",
+        f"{micro_floor_ratio('aggregate(_t, 0, (acc, t) -> acc + length(t))', 'size(_t)')}"
+        " AS avg_token_len",
+        f"{micro_floor_ratio('size(array_distinct(_t))', 'size(_t)')} AS distinct_ratio",
+        f"{micro_floor_ratio(_count_in('_t', STOPWORDS['en']), 'size(_t)')} AS stopword_ratio",
+        *[f"{_count_in('_t', ws)} AS hits_{lang}" for lang, ws in STOPWORDS.items()],
+        f"{_lang_guess()} AS lang_guess",
+        f"{score} AS quality",
+        f"CASE WHEN {score} >= {dbl_lit(0.5)} THEN 'keep' ELSE 'flag' END AS verdict",
+        f"{_FINGERPRINT_SQL} AS fingerprint",
     )
 
 
@@ -243,19 +229,12 @@ def fingerprints(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
     folded left-to-right over the token sequence — a polynomial rolling
     hash (Rabin-Karp family) computable in any engine with a sequential
     list fold; detects exact-content duplicates without shipping text."""
-    toks = tokens_expr(text_col)
     # two-step (map token -> contribution, then fold) so the fold lambda
     # is (long, long) -> long — replicable by engines whose list-fold
     # lacks an explicit init (DuckDB list_reduce seeds with element 0)
-    contribs = F.transform(
-        toks, lambda t: (F.ascii(t) * F.lit(131) + F.length(t)).cast("long")
+    return _tokenized(docs, id_col, text_col=text_col).selectExpr(
+        ident(id_col), f"{_FINGERPRINT_SQL} AS fingerprint"
     )
-    fp = F.aggregate(
-        contribs,
-        F.lit(0).cast("long"),
-        lambda acc, c: (acc * F.lit(31) + c) % F.lit(MERSENNE_P),
-    )
-    return docs.select(F.col(id_col), fp.alias("fingerprint"))
 
 
 #: 1:1 accent-folding table (Latin-1 supplement + Latin Extended-A
@@ -355,7 +334,7 @@ def tfidf_top_terms(
     vocabulary dictionary (terms stay strings end-to-end).
     Deterministic: scores rounded before ranking, ties break on term."""
     toks = docs.select(
-        F.col(id_col), F.explode(tokens_expr(text_col)).alias("term")
+        F.col(id_col), F.explode(F.expr(tokens_sql(ident(text_col)))).alias("term")
     )
     tf = toks.groupBy(id_col, "term").agg(F.count("*").alias("tf"))
     df_ = toks.select(id_col, "term").distinct().groupBy("term").agg(
@@ -411,14 +390,15 @@ def bigram_lm_scores(
     `hash_terms=True` production default — the gate pins strings) and
     V broadcasts as one row."""
     fit = fit_docs if fit_docs is not None else docs
-    t = tokens_expr(text_col)
+    t_sql = tokens_sql(ident(text_col))
+    t = F.expr(t_sql)
 
     def bg_frame(d: DataFrame, with_meta: bool) -> DataFrame:
         meta = (
             [F.col(id_col), F.size(t).alias("n_tokens")] if with_meta else []
         )
         f = d.select(
-            *meta, F.explode(shingles_expr(t, 2)).alias("_bgs")
+            *meta, F.explode(F.expr(shingles_sql(t_sql, 2))).alias("_bgs")
         ).withColumn("_w1s", F.substring_index("_bgs", " ", 1))
         keys = [
             (F.xxhash64("_bgs") if hash_terms else F.col("_bgs")).alias("_bg"),
@@ -464,7 +444,7 @@ def bigram_lm_scores(
             (F.col("_s").cast("double") / F.col("n_bigrams")).alias(
                 "mean_logp_micro"
             ),
-            micro_floor_ratio(F.col("_n"), F.col("n_bigrams")).alias(
+            F.expr(micro_floor_ratio("_n", "n_bigrams")).alias(
                 "novel_bigram_frac"
             ),
         )
@@ -516,7 +496,7 @@ def bm25_topk(
         F.xxhash64(F.col("_t")) if hash_terms else F.col("_t")
     ).alias("term")
     toks = docs.select(
-        F.col(id_col), F.explode(tokens_expr(text_col)).alias("_t")
+        F.col(id_col), F.explode(F.expr(tokens_sql(ident(text_col)))).alias("_t")
     ).select(id_col, term)
     tf = toks.groupBy(id_col, "term").agg(F.count("*").alias("tf"))
     dl = toks.groupBy(id_col).agg(F.count("*").alias("dl"))
@@ -529,7 +509,7 @@ def bm25_topk(
     qterms = (
         queries.select(
             F.col(query_id_col).alias("query_id"),
-            F.explode(tokens_expr(query_text_col)).alias("_t"),
+            F.explode(F.expr(tokens_sql(ident(query_text_col)))).alias("_t"),
         )
         .select("query_id", term)
         .distinct()
@@ -628,7 +608,7 @@ def unigram_lm_scores(
     if rare_tf_max < 0:
         raise ValueError(f"rare_tf_max must be >= 0, got {rare_tf_max}")
     toks = docs.select(
-        F.col(id_col), F.explode(tokens_expr(text_col)).alias("_tok")
+        F.col(id_col), F.explode(F.expr(tokens_sql(ident(text_col)))).alias("_tok")
     )
     key = (
         F.xxhash64(F.col("_tok")) if hash_terms else F.col("_tok")
@@ -670,10 +650,10 @@ def unigram_lm_scores(
     return per_doc.select(
         F.col(id_col),
         "n_tokens",
-        micro_floor_ratio(F.col("_sum_tf"), F.col("n_tokens")).alias(
+        F.expr(micro_floor_ratio("_sum_tf", "n_tokens")).alias(
             "mean_tf_micro"
         ),
-        micro_floor_ratio(F.col("_n_rare"), F.col("n_tokens")).alias(
+        F.expr(micro_floor_ratio("_n_rare", "n_tokens")).alias(
             "rare_frac_micro"
         ),
         mean_logp.alias("logprob_per_token"),

@@ -1004,7 +1004,7 @@ def test_substring_dedup_matches_duckdb(spark):
 
 
 def test_doubling_fold_matches_sequential_model(spark):
-    """combine_gram_ids / shingles_expr now build by doubling (O(log k)
+    """gram_ids_sql / shingles_sql build by doubling (O(log k)
     zip_with nestings); they must stay VALUE-IDENTICAL to the
     sequential polynomial fold / concat at every k — staged minhash
     profiles and decontamination gram ids depend on the exact values —
@@ -1014,8 +1014,8 @@ def test_doubling_fold_matches_sequential_model(spark):
 
     from flink_etl_spark.functions.hashing import (
         MERSENNE_P,
-        combine_gram_ids,
-        shingles_expr,
+        gram_ids_sql,
+        shingles_sql,
     )
 
     rng = random.Random(42)
@@ -1027,8 +1027,8 @@ def test_doubling_fold_matches_sequential_model(spark):
     dfh = df.select("id", th.alias("th"), F.col("toks"))
     for k in (1, 2, 3, 5, 20, 50, 100, 127):
         row = dfh.select(
-            combine_gram_ids(F.col("th"), k).alias("g"),
-            shingles_expr(F.col("toks"), k).alias("s"),
+            F.expr(gram_ids_sql("th", k)).alias("g"),
+            F.expr(shingles_sql("toks", k)).alias("s"),
             F.col("th"),
         ).collect()[0]
         want_g = []
@@ -1404,7 +1404,7 @@ def test_dsir_log_weights_hand_computed(spark):
     )
 
     def feats(text):
-        # empty text tokenizes to [''] — the package tokens_expr rule
+        # empty text tokenizes to [''] — the package tokens_sql rule
         toks = text.split() if text else [""]
         return toks + [f"{a} {b}" for a, b in zip(toks, toks[1:])]
 

@@ -279,7 +279,7 @@ def _py_span_dedup(rows, k):
     spans = {}
     for doc_id, text in sorted(rows):
         # the corpora strategy emits single-spaced text, so plain
-        # split(" ") mirrors tokens_expr's split(' +'); empty/NULL
+        # split(" ") mirrors tokens_sql's split(' +'); empty/NULL
         # text tokenizes to [''] exactly like Spark's split
         toks = text.split(" ") if text else [""]
         spans[doc_id] = [
