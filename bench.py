@@ -42,10 +42,8 @@ def _bench_minhash(spark, sf_dir):
     break round-over-round comparability."""
     from flink_etl_spark.operators.dedup import minhash_near_dups
 
-    # NO scan rescue here: under engine confs the profile persist's
-    # shuffle already parallelizes downstream, and the A/B is noise
-    # (1.71 vs 1.64 best-of-4); the staged variant measurably REGRESSES
-    # with it (32 tiny staged files). See docs/STATUS.md r6 A/B.
+    # no wrapper: minhash_near_dups spreads an under-split input itself
+    # (in-memory and staged arms alike)
     docs = load_table(spark, sf_dir, "documents")
     return minhash_near_dups(docs, threshold=0.8, n_hashes=16, bands=8)
 
@@ -154,15 +152,14 @@ def _bench_unigram_lm(spark, sf_dir):
 
 def _bench_fp_candidates(spark, sf_dir):
     """MOSS fingerprint pair census (r7): winnowing selection +
-    8-byte-key inverted-index self-join, max_df hot-set cap. Scan
-    rescue per the r6 A/B pattern (anchor+selection is scan-side
-    compute serialized by the single-row-group bench input; inert at
-    scale)."""
+    8-byte-key posting lists, max_df as a posting-list size cap. The
+    operator spreads the single-row-group bench input over every core
+    itself (inert at scale)."""
     from flink_etl_spark.operators.prep import fingerprint_candidates
-    from flink_etl_spark.sources.tables import rescue_scan_parallelism
 
-    docs = rescue_scan_parallelism(load_table(spark, sf_dir, "documents"))
-    return fingerprint_candidates(docs, min_tokens=50, winnow=8, max_df=64)
+    return fingerprint_candidates(
+        load_table(spark, sf_dir, "documents"), min_tokens=50, winnow=8, max_df=64
+    )
 
 
 def _bench_ivfpq(spark, sf_dir):

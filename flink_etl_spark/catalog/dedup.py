@@ -705,7 +705,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     fp = fingerprint_candidates(
         docs, min_tokens=_SUBSTR_K, winnow=_WINNOW_W, key="digest",
-        persist_fingerprints=False,
     ).select(
         F.lit("fp_candidates").alias("variant"),
         "doc_a",

@@ -429,14 +429,16 @@ def minhash_near_dups(
 
     Net plan: 4 corpus scans (the two self-join sides of banding and
     verification, all projection-only) and ONE real shuffle (the band
-    bucket join).
+    bucket join), plus a round-robin spread of (id, text) when the
+    input scan is under-split (see the note in the body).
 
     `staged_path` is the 100 TB pattern: materialize the profile to
     parquet ONCE and feed all four consumers from that columnar scan —
     exactly one tokenization pass over the corpus, column-pruned reads
     per consumer (banding never reads `shset`; verification reads only
     id + shset + n_sh), and the staged profile is reusable across runs
-    (incremental dedup against yesterday's corpus). Default (None)
+    (incremental dedup against yesterday's corpus; read through
+    `_staged_profile`, which drops empty shingle sets). Default (None)
     keeps the in-memory persist, which is faster at bench SF where the
     profile fits executor storage.
 
@@ -462,26 +464,30 @@ def minhash_near_dups(
             "self-join), and a non-divisor silently drops trailing "
             "hashes from the S-curve"
         )
-    # NOTE (r15, examined and deliberately left): the staged write
-    # inherits the corpus scan's task count, so a single-row-group
-    # bench input tokenizes and writes on one task (the r14 verdict's
-    # "staged single-writer" headroom guess). A write-side scan rescue
-    # (conditioned round-robin below the profile projection) was
-    # implemented and measured this round in interleaved fresh-JVM
-    # A/Bs vs the r14 tree: ratios 1.15 / 0.85 / 0.99 across three
-    # panels — pure host noise, NO cold-measured win (the added text
-    # exchange + 32-file fan-out costs what the parallel tokenization
-    # saves at this corpus size). Reverted per the r14 verdict's own
-    # decision rule ("make the rescue conditional on a cold-measured
-    # win"); at real scale the scan splits naturally and the question
-    # is moot.
-    prof_src = minhash_profile(docs, n_hashes, id_col, text_col, k, hash_fn).filter(
-        F.col("n_sh") > 0
-    )
+    # Spread an under-split input over every core before the profile
+    # (`rescue_scan_parallelism`, inert at scale). On 4 cores over the
+    # benchmark corpus (1.5k docs whose keepers are one row group;
+    # seed 1, 5 chains) the unspread profile ran in ONE task, 730 ms
+    # CPU, while the three other consumer jobs each sat ~760 ms blocked
+    # on its cache block. The `n_sh > 0` filter must stay ABOVE the
+    # persisted (or staged) profile: Catalyst pushes deterministic
+    # filters through a round-robin exchange, and there the filter
+    # tokenizes every row on the single map task before the spread
+    # tasks tokenize again. Measured per call over seed-5 keepers
+    # (median of 10, noop sink): unspread 1.20 s, spread with the
+    # filter below the cache 1.06 s, spread with it above 0.78 s. So a
+    # staged profile keeps its empty-set rows and `_staged_profile`
+    # filters them. The staged arm gains as well (it writes one file
+    # per core): bench.py's sf0.1 staged entry on 4 cores, median of 5
+    # calls in each of 5 fresh processes, 2.0 -> 1.3 s.
+    from flink_etl_spark.sources.tables import rescue_scan_parallelism
+
+    spread = rescue_scan_parallelism(docs.selectExpr(ident(id_col), ident(text_col)))
+    prof = minhash_profile(spread, n_hashes, id_col, text_col, k, hash_fn)
     if staged_path is not None:
-        prof_src.write.mode("overwrite").parquet(staged_path)
+        prof.write.mode("overwrite").parquet(staged_path)
         _write_profile_meta(docs.sparkSession, staged_path, hash_fn, k, n_hashes)
-        profile = docs.sparkSession.read.parquet(staged_path)
+        profile = _staged_profile(docs.sparkSession, staged_path)
     else:
         # ONE row per doc (set + sigs) — tiny relative to the corpus, so
         # persisting it collapses the four consumers to a single
@@ -490,7 +496,7 @@ def minhash_near_dups(
         # logical plan and lives until evicted; long-lived sessions
         # calling this repeatedly should spark.catalog.clearCache()
         # between corpora (bench.py does)
-        profile = prof_src.persist()
+        profile = prof.persist().filter(F.col("n_sh") > 0)
     cand = lsh_candidates(
         profile.drop("shset"), bands, n_hashes // bands, id_col,
         carry_cols=("n_sh",), max_bucket=max_bucket,
@@ -1488,6 +1494,15 @@ def _profile_meta(spark, staged_path: str):
     return json.loads(raw)
 
 
+def _staged_profile(spark, staged_path: str) -> DataFrame:
+    """A staged MinHash profile as its consumers read it. Staged files
+    hold `minhash_profile` rows as computed, empty shingle sets
+    (``n_sh = 0``) included: no writer filters, so no filter can be
+    pushed below `minhash_near_dups`' round-robin spread. Every reader
+    drops those rows here."""
+    return spark.read.parquet(staged_path).filter(F.col("n_sh") > 0)
+
+
 def _write_profile_meta(spark, staged_path: str, hash_fn: str, k: int,
                         n_hashes: int) -> None:
     import json
@@ -1589,9 +1604,8 @@ def minhash_stage_profile(
     from flink_etl_spark.operators.merge import snapshot_exists
 
     spark = docs.sparkSession
-    prof = minhash_profile(docs, n_hashes, id_col, text_col, k, hash_fn).filter(
-        F.col("n_sh") > 0
-    )
+    # unfiltered, as every staged profile is (see `_staged_profile`)
+    prof = minhash_profile(docs, n_hashes, id_col, text_col, k, hash_fn)
     if mode != "overwrite":
         has_meta = _check_profile_meta(spark, staged_path, hash_fn, k, n_hashes)
         if not has_meta and snapshot_exists(spark, staged_path):
@@ -1654,7 +1668,7 @@ def minhash_near_dups_incremental(
         )
     spark = new_docs.sparkSession
     has_meta = _check_profile_meta(spark, staged_path, hash_fn, k, n_hashes)
-    old = spark.read.parquet(staged_path)
+    old = _staged_profile(spark, staged_path)
     new = (
         minhash_profile(new_docs, n_hashes, id_col, text_col, k, hash_fn)
         .filter(F.col("n_sh") > 0)
@@ -1730,7 +1744,6 @@ def edit_distance_pairs(
         candidates = fingerprint_candidates(
             docs, min_tokens=min_tokens, winnow=winnow, id_col=id_col,
             text_col=text_col, key=key, max_df=max_df,
-            persist_fingerprints=False,
         )
     cand = candidates.select("doc_a", "doc_b")
     ta = docs.select(F.col(id_col).alias("doc_a"), F.col(text_col).alias("_ta"))

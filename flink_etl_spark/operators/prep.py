@@ -2652,7 +2652,6 @@ def fingerprint_candidates(
     key: str = "hash64",
     min_shared: int = 1,
     max_df: int | None = None,
-    persist_fingerprints: bool = True,
 ) -> DataFrame:
     """Candidate near-duplicate pairs from shared winnowing
     fingerprints — the MOSS methodology's second half (Schleimer et
@@ -2672,61 +2671,56 @@ def fingerprint_candidates(
     `duplicate_clusters`.
 
     Scale shape: fingerprints are row-local (~2/(winnow+1) anchor
-    density); the pair count is an inverted-index self-join keyed on
-    the 8-byte fingerprint (hash64), quadratic in each posting list —
-    identical skew exposure to `jaccard_pairs`, so the same standard
-    mitigation: ``max_df`` drops fingerprints present in more than
-    that many documents BEFORE the join (broadcast anti-join against
-    the hot set, which is small by construction). Boilerplate shared
-    by half the corpus is exactly what a candidate GENERATOR should
-    skip anyway — a fingerprint in a million documents identifies no
-    pair in particular. Default None keeps the exact census.
-
-    Cache lifecycle: ``persist_fingerprints=True`` caches the
-    fingerprint frame for the duration of the ACTION and leaves it
-    registered (the standard lazy-persist contract — Spark evicts LRU
-    under pressure, and unpersisting eagerly here would drop it
-    between the self-join's two consumers). A long-lived driver
-    calling this per batch should either pass
-    ``persist_fingerprints=False`` (the oracle-gate setting) or call
-    ``spark.catalog.clearCache()`` on its batch boundary, as the
-    streaming sinks in this package do."""
+    density), computed once per document over an input spread to
+    every core when it is under-split (`rescue_scan_parallelism`,
+    inert at scale). The census runs over an inverted index, two
+    shuffles and no cache: one posting list per fingerprint (the
+    sorted distinct ids holding it, keyed on the 8-byte fingerprint
+    for hash64), whose ordered pairs are streamed out one list member
+    at a time (no row holds more than one list), then one count per
+    pair. A list of n documents makes n*(n-1)/2 pairs — the same skew
+    exposure as `jaccard_pairs`, so the same standard mitigation:
+    ``max_df`` drops fingerprints present in more than that many
+    documents before any posting list is collected (a distinct-id
+    count per fingerprint in a sorted, spillable window that shares
+    the posting lists' shuffle). Boilerplate shared by half the
+    corpus is exactly what a candidate GENERATOR should skip anyway —
+    a fingerprint in a million documents identifies no pair in
+    particular. Default None keeps the exact census."""
     if min_shared < 1:
         raise ValueError(f"min_shared must be >= 1, got {min_shared}")
     if max_df is not None and max_df < 1:
         raise ValueError(f"max_df must be >= 1 or None, got {max_df}")
-    # the fingerprint frame feeds BOTH self-join sides (plus the hot
-    # set under max_df) — persisting it runs the anchor+selection
-    # pipeline, the dominant row-local cost, once instead of once per
-    # consumer (the minhash_profile precedent; ~2/(winnow+1) anchor
-    # density keeps the cached frame a small fraction of corpus
-    # bytes). Measured ~20% at sf0.1 with 8-byte hash64 keys; the
-    # oracle gate pins persist_fingerprints=False (64-hex digest
-    # fingerprints made the cache fill a net LOSS in a vanilla
-    # session).
+    from flink_etl_spark.sources.tables import rescue_scan_parallelism
+
     i = ident(id_col)
-    fp = (
-        document_fingerprints(
-            docs, min_tokens=min_tokens, winnow=winnow, id_col=id_col,
-            text_col=text_col, key=key,
-        )
-        .selectExpr(i, "fingerprint")
-        .distinct()
-    )
-    if persist_fingerprints:
-        fp = fp.persist()
+    spread = rescue_scan_parallelism(docs.selectExpr(i, ident(text_col)))
+    fp = document_fingerprints(
+        spread, min_tokens=min_tokens, winnow=winnow, id_col=id_col,
+        text_col=text_col, key=key,
+    ).selectExpr(i, "fingerprint")
     if max_df is not None:
-        hot = (
-            fp.groupBy("fingerprint")
-            .agg(F.count("*").alias("_df"))
-            .filter(F.col("_df") > max_df)
-            .select("fingerprint")
+        # drop hot fingerprints BEFORE collect_set builds their lists:
+        # the highest dense rank of the ids is the number of distinct
+        # documents (a NULL id counts as one, as in a distinct count),
+        # and the window sorts and spills where a list could not
+        fp = (
+            fp.selectExpr(
+                "*", f"dense_rank() OVER (PARTITION BY fingerprint ORDER BY {i}) AS _r"
+            )
+            .selectExpr(i, "fingerprint", "max(_r) OVER (PARTITION BY fingerprint) AS _df")
+            .filter(f"_df <= {lit(max_df)}")
         )
-        fp = fp.join(F.broadcast(hot), "fingerprint", "left_anti")
-    a, b = fp.alias("a"), fp.alias("b")
     pairs = (
-        a.join(b, F.expr(f"a.fingerprint = b.fingerprint AND a.{i} < b.{i}"))
-        .groupBy(F.expr(f"a.{i} AS doc_a"), F.expr(f"b.{i} AS doc_b"))
+        fp.groupBy("fingerprint")
+        .agg(F.expr(f"array_sort(collect_set({i})) AS _ids"))
+        # collect_set skips NULL ids; a list of one document makes no pair
+        .filter("size(_ids) >= 2")
+        # one row per list member, paired with the members after it:
+        # rows stay linear in the list while the n*(n-1)/2 pairs stream
+        .selectExpr("_ids", "posexplode(_ids) AS (_j, doc_a)")
+        .selectExpr("doc_a", "explode(slice(_ids, _j + 2, size(_ids) - _j - 1)) AS doc_b")
+        .groupBy("doc_a", "doc_b")
         .agg(F.expr("count(1) AS n_shared"))
     )
     if min_shared > 1:
@@ -2769,10 +2763,11 @@ def fingerprint_overlap(
     decontamination per Lee et al. 2022, with the benchmark index
     never shuffling.
 
-    Cache lifecycle: as in `fingerprint_candidates` — per-batch
-    callers pass ``persist_fingerprints=False`` or clearCache() on
-    their batch boundary; the persisted frames otherwise stay
-    registered for LRU eviction."""
+    Cache lifecycle: ``persist_fingerprints=True`` caches both
+    fingerprint frames for the ACTION and leaves them registered (the
+    standard lazy-persist contract — Spark evicts LRU under pressure);
+    per-batch callers pass ``persist_fingerprints=False`` or call
+    ``spark.catalog.clearCache()`` on their batch boundary."""
     if min_shared < 1:
         raise ValueError(f"min_shared must be >= 1, got {min_shared}")
     if max_df is not None and max_df < 1:

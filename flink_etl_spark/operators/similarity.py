@@ -18,6 +18,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
 from flink_etl_spark.functions.vectors import cosine, dot, norm, safe_cosine
+from flink_etl_spark.sources.tables import _plan_size_bytes
 
 
 def cosine_topk(
@@ -1482,22 +1483,6 @@ def _pq_codes_arrow(nv_frame: DataFrame, cb_vals, m: int,
 _PQ_ARROW_MIN_BYTES = 8 * 1024 * 1024
 
 
-def _plan_size_bytes(df: DataFrame) -> int | None:
-    """Catalyst's optimized-plan sizeInBytes estimate — file bytes for
-    parquet-backed frames, a row-width product for local relations —
-    or None when unavailable or when the planner fell back to its
-    'unknown' sentinel (defaultSizeInBytes ~ Long.MaxValue), so a
-    caller can distinguish 'small' from 'no idea'. Plan-only: never
-    runs a job."""
-    try:
-        est = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:
-        return None
-    return est if 0 <= est < (1 << 60) else None
-
-
 def _pq_codes_on(nv_frame: DataFrame, codebooks: DataFrame, m: int,
                  id_cols: list[str], engine: str = "expr",
                  size_hint_bytes: int | None = None) -> DataFrame:
@@ -2799,12 +2784,12 @@ def ivfpq_append_index(
     # staged append reads a day's parquet (GBs, where the expression
     # argmin interprets m*n_codes*d_sub lambda steps per row). The
     # plan-estimated input size routes each regime to its measured
-    # winner; an unknown estimate stays on the expression arm (safe
-    # default — identical rows either way by the engine pins).
-    _est = _plan_size_bytes(guarded)
+    # winner; an unknown estimate (None) is NOT "tiny" — it takes the
+    # batch-scale arm, as `_pq_codes_on` documents for None (identical
+    # rows either way by the engine pins).
     codes = _pq_codes_on(
         res, cbs, m, [id_col, "cell_id"], engine="auto",
-        size_hint_bytes=_est if _est is not None else 0,
+        size_hint_bytes=_plan_size_bytes(guarded),
     ).persist()
     fresh = None
     try:

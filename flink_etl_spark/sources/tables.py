@@ -14,6 +14,8 @@ truncation — matches what DuckDB / any micro-precision engine sees).
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+from py4j.protocol import Py4JError
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import LongType
 
@@ -51,6 +53,22 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def _plan_size_bytes(df: DataFrame) -> int | None:
+    """Catalyst's optimized-plan sizeInBytes estimate — file bytes for
+    parquet-backed frames, a row-width product for local relations —
+    or None when unavailable or when the planner fell back to its
+    'unknown' sentinel (defaultSizeInBytes ~ Long.MaxValue), so a
+    caller can distinguish 'small' from 'no idea'. Plan-only: never
+    runs a job."""
+    try:
+        est = int(
+            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        )
+    except Exception:
+        return None
+    return est if 0 <= est < (1 << 60) else None
+
+
 def rescue_scan_parallelism(
     df: DataFrame,
     target: int | None = None,
@@ -68,36 +86,43 @@ def rescue_scan_parallelism(
     * the scan plans fewer than half the target tasks (real corpora
       split into thousands of tasks by size; only small/single-split
       inputs qualify), and
-    * the input is under ``max_bytes`` (the exchange must be cheap; a
-      big under-split input is a storage-layout problem this helper
-      must not paper over with a corpus-wide shuffle).
+    * the input is under ``max_bytes`` by Catalyst's plan estimate
+      (the exchange must be cheap; a big under-split input is a
+      storage-layout problem this helper must not paper over with a
+      corpus-wide shuffle; an unknown estimate counts as big).
 
-    When to use: explicitly, on scan-COMPUTE-heavy operator inputs
-    (minhash/simhash profiles, span/substring digesting, repetition
-    stats, per-vector math). Measured at sf0.1/local[32]: -21% to -62%
-    end-to-end on those; measurably NEGATIVE on broadcast-join-bound
-    queries that branch one scan into a small fitted side (unigram-LM
-    +78% wall, decontaminate +86%) where the extra exchange outweighs
-    serial scanning — so this is NOT applied inside `load_table` or
-    any operator, and gated catalog plans stay exchange-minimal."""
+    An input whose plan already holds an exchange or a cached relation
+    (an adaptive plan) passes through untouched: its width is set by
+    that exchange, and sizing it would run its stages eagerly. The
+    decision is plan-only and costs a constant number of py4j calls
+    at any scale — the partition count first, the byte estimate only
+    for an under-split input.
+
+    When to apply it: where ONE scan feeds ONE heavy row-local
+    projection (minhash profiles, winnowing fingerprints, span or
+    substring digesting, per-vector math), with no branch that also
+    reads the raw scan (a broadcast-join-bound query that branches one
+    scan into a small fitted side measured +78% to +86% wall at
+    sf0.1/local[32] with the extra exchange) and no pushable predicate
+    above the exchange — Catalyst pushes deterministic filters through
+    a round-robin repartition, and a filter over the projection's
+    outputs then re-runs the whole projection on the under-split side.
+    `dedup.minhash_near_dups` and `prep.fingerprint_candidates` apply
+    it to their own inputs; `load_table` does not."""
     spark = df.sparkSession
     if target is None:
         target = spark.sparkContext.defaultParallelism
     try:
-        n_parts = df.rdd.getNumPartitions()
-        # Hadoop FileSystem sizing, not os.path.getsize: inputFiles()
-        # returns URIs of whatever scheme backs the table (hdfs://,
-        # s3a://, file:) and the helper must size them all — a
-        # local-only stat would silently disable the rescue off-laptop.
-        from flink_etl_spark.operators.merge import _hadoop_fs
-
-        size = 0
-        for uri in df.inputFiles():
-            fs, hpath = _hadoop_fs(spark, uri)
-            size += fs.getFileStatus(hpath).getLen()
-    except Exception:
+        plan = df._jdf.queryExecution().executedPlan()
+        if plan.nodeName() == "AdaptiveSparkPlan":
+            return df
+        n_parts = plan.execute().getNumPartitions()
+    except (Py4JError, PySparkException):  # e.g. a streaming plan
         return df
-    if n_parts >= max(2, target // 2) or size > max_bytes:
+    if n_parts >= max(2, target // 2):
+        return df
+    size = _plan_size_bytes(df)
+    if size is None or size > max_bytes:
         return df
     return df.repartition(target)
 

@@ -9,6 +9,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from flink_etl_spark.operators import dedup, multimodal, similarity, text
+from tests.conftest import SF_ORACLE, SF_SMOKE
 
 
 def _docs(spark):
@@ -503,6 +504,30 @@ def test_minhash_incremental_matches_full_run(spark, tmp_path):
     expected = {p for p in full if p[0] in new_ids or p[1] in new_ids}
     assert inc == expected
     assert len(inc) > 0
+
+
+def test_staged_profiles_keep_empty_sets_and_one_reader_drops_them(spark, tmp_path):
+    """Both staged-profile writers (`minhash_near_dups(staged_path=)`
+    and `minhash_stage_profile`) store the profile rows as computed,
+    empty shingle sets included; `_staged_profile`, the one reader,
+    drops them, so either staged copy gives the same pairs."""
+    docs = _docs(spark).unionByName(
+        spark.createDataFrame([(4, ""), (5, "two words")], ["doc_id", "text"])
+    )
+    by_near_dups, by_stage = str(tmp_path / "a"), str(tmp_path / "b")
+    staged_pairs = dedup.minhash_near_dups(docs, threshold=0.5, staged_path=by_near_dups)
+    assert sorted(staged_pairs.collect()) == sorted(
+        dedup.minhash_near_dups(docs, threshold=0.5).collect()
+    )
+    dedup.minhash_stage_profile(docs, by_stage, mode="overwrite")
+    batch = spark.createDataFrame([(9, _docs(spark).first().text)], ["doc_id", "text"])
+    inc = []
+    for path in (by_near_dups, by_stage):
+        assert spark.read.parquet(path).filter("n_sh = 0").count() == 2
+        assert dedup._staged_profile(spark, path).count() == 4
+        inc.append(sorted(dedup.minhash_near_dups_incremental(batch, path, threshold=0.5).collect()))
+    assert inc[0] == inc[1] and inc[0]
+    spark.catalog.clearCache()
 
 
 def test_ivf_staged_index_partition_layout_and_equality(spark, tmp_path):
@@ -1548,6 +1573,18 @@ def test_rescue_scan_parallelism_gates(spark):
     # already-parallel input is never re-shuffled
     wide = docs.repartition(target)
     assert rescue_scan_parallelism(wide) is wide
+
+
+def test_rescue_scan_parallelism_passes_streaming_through(spark):
+    """A streaming frame has no batch plan to size (PySpark raises its
+    own AnalysisException there, not a py4j error): it passes through
+    unchanged."""
+    from flink_etl_spark.sources.tables import rescue_scan_parallelism
+
+    path = f"{SF_ORACLE}/documents.parquet"
+    stream = spark.readStream.schema(spark.read.parquet(path).schema).parquet(path)
+    assert stream.isStreaming
+    assert rescue_scan_parallelism(stream) is stream
 
 
 # ---------------------------------------------------------------------------
@@ -4656,3 +4693,41 @@ def test_pq_codes_auto_size_hint_routes_engine(spark, monkeypatch):
     # the plan-size helper: parquet/local frames give a real estimate
     est = S._plan_size_bytes(nv)
     assert est is None or est > 0
+
+
+def test_ivfpq_append_unknown_size_is_not_routed_as_tiny(spark, tmp_path, monkeypatch):
+    """An append batch whose plan has no size estimate must reach the
+    encode router as unknown (None: the batch-scale arm), not as a
+    0-byte "tiny" batch pinned to the expression arm; a known small
+    estimate still routes to the expression arm."""
+    from flink_etl_spark.operators import similarity as S
+    from flink_etl_spark.sources.tables import load_table
+
+    embs = load_table(spark, SF_SMOKE, "embeddings")
+    idx = str(tmp_path / "idx")
+    S.ivfpq_build_index(embs.filter("vec_id < 250"), idx, n_cells=4, m=8, n_codes=16)
+
+    hints, arrow = [], []
+    route, encode = S._pq_codes_on, S._pq_codes_arrow
+
+    def spy_route(*a, **kw):
+        hints.append(kw.get("size_hint_bytes"))
+        return route(*a, **kw)
+
+    def spy_arrow(*a, **kw):
+        arrow.append(1)
+        return encode(*a, **kw)
+
+    monkeypatch.setattr(S, "_pq_codes_on", spy_route)
+    monkeypatch.setattr(S, "_pq_codes_arrow", spy_arrow)
+    assert S.ivfpq_append_index(spark, embs.filter("vec_id BETWEEN 250 AND 259"), idx) == 10
+    assert hints[-1] is not None and hints[-1] < S._PQ_ARROW_MIN_BYTES and not arrow
+
+    monkeypatch.setattr(S, "_plan_size_bytes", lambda df: None)
+    assert S.ivfpq_append_index(spark, embs.filter("vec_id BETWEEN 260 AND 269"), idx) == 10
+    assert hints[-1] is None
+    try:
+        import numpy, pandas, pyarrow  # noqa: F401, E401
+    except ImportError:
+        return
+    assert arrow  # the batch-scale arm

@@ -148,6 +148,68 @@ def test_minhash_profile_is_projection_only(spark):
     assert "Exchange" not in plan
 
 
+def _round_robin_subtrees(plan: str) -> list[list[str]]:
+    """The node lines under each `Exchange RoundRobinPartitioning` of a
+    plan tree string (a node's depth is the column its name starts at,
+    after the `:`, `+-` and `|` tree drawing)."""
+    lines = plan.splitlines()
+    col = lambda line: len(line) - len(line.lstrip(" :+-|"))  # noqa: E731
+    out = []
+    for n, line in enumerate(lines):
+        if "Exchange RoundRobinPartitioning" not in line:
+            continue
+        sub = []
+        for below in lines[n + 1:]:
+            if col(below) <= col(line):
+                break
+            sub.append(below.lstrip(" :+-|"))
+        out.append(sub)
+    return out
+
+
+def _assert_spread_is_scan_only(plan: str) -> None:
+    subtrees = _round_robin_subtrees(plan)
+    assert subtrees, "the under-split input was not spread"
+    for sub in subtrees:
+        for node in sub:
+            name = node.split(" [")[0].lstrip("*(0123456789) ")
+            assert name in ("FileScan parquet", "Project", "ColumnarToRow"), node
+            assert not any(f in node for f in ("split(", "xxhash64(", "sha2(")), node
+
+
+def test_spread_inputs_hold_no_pushed_predicates(spark, tmp_path, monkeypatch):
+    """`minhash_near_dups` (in-memory and staged) and
+    `fingerprint_candidates` spread a single-split input round-robin;
+    below that exchange there is only the scan and column projections.
+    A Filter or a tokenizing expression there means a predicate over
+    the profile was pushed through the exchange and re-tokenizes every
+    row on the single map task."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from flink_etl_spark.operators.dedup import minhash_near_dups
+    from flink_etl_spark.operators.prep import fingerprint_candidates
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    assert docs.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism
+    _assert_spread_is_scan_only(_executed(minhash_near_dups(docs)))
+    _assert_spread_is_scan_only(_executed(fingerprint_candidates(docs)))
+    _assert_spread_is_scan_only(_executed(fingerprint_candidates(docs, key="digest", max_df=3)))
+
+    written = []
+    save = DataFrameWriter.parquet
+
+    def capture(self, path, *a, **kw):
+        written.append(self._df)
+        return save(self, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", capture)
+    minhash_near_dups(docs, staged_path=str(tmp_path / "profile"))
+    monkeypatch.undo()
+    assert len(written) == 1
+    _assert_spread_is_scan_only(written[0]._jdf.queryExecution().executedPlan().toString())
+    spark.catalog.clearCache()
+
+
 def test_pipeline_dedup_shuffle_carries_digest_not_text(spark):
     """The composite pipeline's exact-dedup exchange must hash on the
     sha2 digest — a 64-byte key — and must NOT carry the text column:

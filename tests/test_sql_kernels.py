@@ -140,6 +140,79 @@ def test_document_fingerprints_match_window_union_model(spark, k, w):
     assert got == want
 
 
+def _census(fps: list[tuple[int, object]], max_df, min_shared: int) -> set:
+    """MOSS pair census from the definition: one posting list (set of
+    documents) per fingerprint, lists longer than max_df skipped, every
+    ordered pair of a list counted once per shared fingerprint."""
+    posting: dict[object, set] = {}
+    for doc_id, fp in fps:
+        posting.setdefault(fp, set()).add(doc_id)
+    counts: dict[tuple[int, int], int] = {}
+    for ids in posting.values():
+        if max_df is not None and len(ids) > max_df:
+            continue
+        ordered = sorted(ids)
+        for x, a in enumerate(ordered):
+            for b in ordered[x + 1:]:
+                counts[(a, b)] = counts.get((a, b), 0) + 1
+    return {(a, b, n) for (a, b), n in counts.items() if n >= min_shared}
+
+
+@pytest.mark.parametrize("key", ["hash64", "digest"])
+def test_fingerprint_candidates_match_posting_list_model(spark, key):
+    clique = " ".join(f"c{j % 7}" for j in range(40))
+    passage = " ".join(f"s{j}" for j in range(12))
+    rows = _winnow_corpus() + [
+        (20, clique), (21, clique), (22, clique),  # identical-document clique
+        (23, f"lead {passage} tail"), (24, f"{passage} other words"),
+        (25, f"x {clique} y"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    k, w = 4, 2
+    fps = [
+        (r.doc_id, r.fingerprint)
+        for r in prep.document_fingerprints(docs, min_tokens=k, winnow=w, key=key).collect()
+    ]
+    for max_df in (None, 2, 3):
+        for min_shared in (1, 2):
+            want = _census(fps, max_df, min_shared)
+            got = {
+                (r.doc_a, r.doc_b, r.n_shared)
+                for r in prep.fingerprint_candidates(
+                    docs, min_tokens=k, winnow=w, key=key, max_df=max_df,
+                    min_shared=min_shared,
+                ).collect()
+            }
+            assert got == want, (max_df, min_shared)
+            assert want  # the census is not vacuous
+    # the clique pairs with itself unless max_df prunes its lists
+    assert {(20, 21), (20, 22), (21, 22)} <= {p[:2] for p in _census(fps, None, 1)}
+
+
+def test_fingerprint_candidates_stream_a_long_posting_list(spark):
+    """2,000 identical one-fingerprint documents make ONE posting list.
+    The exact census (max_df=None) streams its n*(n-1)/2 pairs one list
+    member at a time instead of building them as one array value, and
+    max_df drops the hot fingerprint before its list is collected."""
+    n = 2000
+    docs = spark.createDataFrame([(j, "a b c d e") for j in range(n)], "doc_id long, text string")
+    census = prep.fingerprint_candidates(docs, min_tokens=5, winnow=1)
+    got = census.agg(
+        F.count("*"), F.min("n_shared"), F.max("n_shared"),
+        F.min(F.col("doc_b") - F.col("doc_a")), F.sum(F.col("doc_b") - F.col("doc_a")),
+    ).first()
+    # every ordered pair once: sum over a < b of (b - a) is n(n^2-1)/6
+    assert tuple(got) == (n * (n - 1) // 2, 1, 1, 1, n * (n * n - 1) // 6)
+    plan = census._jdf.queryExecution().executedPlan().toString()
+    assert "posexplode(_ids" in plan and "flatten(" not in plan
+
+    capped = prep.fingerprint_candidates(docs, min_tokens=5, winnow=1, max_df=n - 1)
+    assert capped.count() == 0
+    plan = capped._jdf.queryExecution().executedPlan().toString()
+    # the distinct-document cut sits below (prints after) the collect
+    assert plan.index("partial_collect_set(") < plan.index("_df#")
+
+
 # ---------------------------------------------------------------------------
 # construction cost and conf independence of the corpus chain
 # ---------------------------------------------------------------------------
@@ -184,9 +257,9 @@ def _chain(spark):
         "near_dups_charfold": lambda: dedup.minhash_near_dups(
             kept, threshold=0.5, hash_fn="charfold"),
         "fingerprints": lambda: prep.fingerprint_candidates(
-            kept, min_tokens=8, winnow=4, persist_fingerprints=False),
+            kept, min_tokens=8, winnow=4),
         "fingerprints_digest": lambda: prep.fingerprint_candidates(
-            kept, min_tokens=8, winnow=3, key="digest", persist_fingerprints=False),
+            kept, min_tokens=8, winnow=3, key="digest"),
     }
 
 
