@@ -431,6 +431,8 @@ def main() -> None:
     # one-time worker fork for the two entries with Arrow stages (run
     # 1 forks, run 2 is warm), so removal costs reported timings
     # nothing and returns the harness to the r13 methodology.
+    catalog["agg_pricing_summary"](spark, sf_dir).write.format("noop").mode(
+        "overwrite").save()
 
     # best of two runs per query: the second run re-executes the full
     # plan (noop sink, nothing cached) but sheds scheduler/JIT jitter,

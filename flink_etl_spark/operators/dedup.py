@@ -37,6 +37,7 @@ from flink_etl_spark.functions.hashing import (
     tokens_sql,
 )
 from flink_etl_spark.functions.sql import ident, lit
+from flink_etl_spark.staged import PROFILE_META
 
 
 def exact_dedup(
@@ -486,7 +487,9 @@ def minhash_near_dups(
     prof = minhash_profile(spread, n_hashes, id_col, text_col, k, hash_fn)
     if staged_path is not None:
         prof.write.mode("overwrite").parquet(staged_path)
-        _write_profile_meta(docs.sparkSession, staged_path, hash_fn, k, n_hashes)
+        PROFILE_META.write(
+            docs.sparkSession, staged_path, _profile_params(hash_fn, k, n_hashes)
+        )
         profile = _staged_profile(docs.sparkSession, staged_path)
     else:
         # ONE row per doc (set + sigs) — tiny relative to the corpus, so
@@ -1468,32 +1471,6 @@ def semantic_decontaminate(
     )
 
 
-#: staged-profile format version; 2 = token-combined xxhash64 term-ids
-#: (profiles staged by the shingle-STRING-hash v1 have a different
-#: shset type and must be rebuilt)
-_PROFILE_META_VERSION = 2
-
-
-def _profile_meta(spark, staged_path: str):
-    """Read `<staged_path>/_PROFILE_META.json` (None when absent —
-    legacy profiles staged before meta existed)."""
-    import json
-
-    from flink_etl_spark.operators.merge import _hadoop_fs
-
-    fs, p = _hadoop_fs(spark, f"{staged_path}/_PROFILE_META.json")
-    if not fs.exists(p):
-        return None
-    stream = fs.open(p)
-    try:
-        raw = spark._jvm.org.apache.commons.io.IOUtils.toString(
-            stream, "UTF-8"
-        )
-    finally:
-        stream.close()
-    return json.loads(raw)
-
-
 def _staged_profile(spark, staged_path: str) -> DataFrame:
     """A staged MinHash profile as its consumers read it. Staged files
     hold `minhash_profile` rows as computed, empty shingle sets
@@ -1503,36 +1480,27 @@ def _staged_profile(spark, staged_path: str) -> DataFrame:
     return spark.read.parquet(staged_path).filter(F.col("n_sh") > 0)
 
 
-def _write_profile_meta(spark, staged_path: str, hash_fn: str, k: int,
-                        n_hashes: int) -> None:
-    import json
-
-    from flink_etl_spark.operators.merge import _hadoop_fs
-
-    fs, p = _hadoop_fs(spark, f"{staged_path}/_PROFILE_META.json")
-    out = fs.create(p, True)
-    try:
-        payload = json.dumps({
-            "version": _PROFILE_META_VERSION,
-            "hash_fn": hash_fn, "k": k, "n_hashes": n_hashes,
-        }).encode()
-        out.write(bytearray(payload))
-    finally:
-        out.close()
-
-
-def _check_profile_shset_type(old: DataFrame, expected_dtype: str,
-                              staged_path: str) -> None:
-    """Schema guard for META-LESS (legacy) staged profiles: the shset
-    element type must match what the caller's parameters produce.
-    Without this, `unionByName` silently WIDENS array<bigint> against a
-    v1 array<string> profile (Spark promotes the element type instead
-    of erroring), the two sides' band keys never collide, and every
+def _check_staged_profile(spark, staged_path: str, hash_fn: str, k: int,
+                          n_hashes: int, expected_dtype: str) -> None:
+    """Raise when the profile staged at `staged_path` was built with
+    other parameters than the caller's: against its `PROFILE_META`
+    sidecar, or — for a META-LESS (legacy) profile — by the shset
+    element type the caller's parameters produce. Without the latter,
+    `unionByName` silently WIDENS array<bigint> against a v1
+    array<string> profile (Spark promotes the element type instead of
+    erroring), the two sides' band keys never collide, and every
     old-new pair vanishes. A same-typed legacy mismatch (e.g. a v1
     string-hashed xxhash64 profile vs a charfold caller, both
     array<string>) is undetectable without meta — re-stage legacy
     profiles to get the full sidecar protection."""
-    got = dict(old.dtypes).get("shset")
+    from flink_etl_spark.operators.merge import snapshot_exists
+
+    params = _profile_params(hash_fn, k, n_hashes)
+    if PROFILE_META.check(spark, staged_path, params) or not snapshot_exists(
+        spark, staged_path
+    ):
+        return
+    got = dict(spark.read.parquet(staged_path).dtypes).get("shset")
     if got != expected_dtype:
         raise ValueError(
             f"staged minhash profile at {staged_path} has shset type "
@@ -1543,36 +1511,9 @@ def _check_profile_shset_type(old: DataFrame, expected_dtype: str,
         )
 
 
-def _check_profile_meta(spark, staged_path: str, hash_fn: str, k: int,
-                        n_hashes: int) -> bool:
-    """Raise if the staged profile's meta disagrees with the caller's
-    parameters. The failure this prevents is SILENT: e.g. a `k`
-    mismatch keeps the schema identical while every band key differs,
-    so old-new pairs simply vanish. Absent meta (legacy profile)
-    returns False so callers can fall back to the schema-level check
-    (`_check_profile_shset_type`)."""
-    meta = _profile_meta(spark, staged_path)
-    if meta is None:
-        return False
-    want = {"version": _PROFILE_META_VERSION, "hash_fn": hash_fn,
-            "k": k, "n_hashes": n_hashes}
-    mismatched = {
-        key: (meta.get(key), val) for key, val in want.items()
-        if meta.get(key) != val
-    }
-    if mismatched:
-        detail = ", ".join(
-            f"{key}: staged={got!r} caller={exp!r}"
-            for key, (got, exp) in mismatched.items()
-        )
-        raise ValueError(
-            f"staged minhash profile at {staged_path} is incompatible "
-            f"with this call ({detail}); band keys from mismatched "
-            "profiles never match, silently losing pairs — rebuild the "
-            "profile (minhash_stage_profile mode='overwrite') or match "
-            "the staged parameters"
-        )
-    return True
+def _profile_params(hash_fn: str, k: int, n_hashes: int) -> dict:
+    """The staged-profile sidecar's parameters (`PROFILE_META`)."""
+    return {"hash_fn": hash_fn, "k": k, "n_hashes": n_hashes}
 
 
 def minhash_stage_profile(
@@ -1601,21 +1542,16 @@ def minhash_stage_profile(
     and re-stamps the meta. Appending to a META-LESS (legacy) profile
     falls back to the shset-type schema check, so an append can never
     mix parquet schemas in one directory and then stamp it v2."""
-    from flink_etl_spark.operators.merge import snapshot_exists
-
     spark = docs.sparkSession
     # unfiltered, as every staged profile is (see `_staged_profile`)
     prof = minhash_profile(docs, n_hashes, id_col, text_col, k, hash_fn)
     if mode != "overwrite":
-        has_meta = _check_profile_meta(spark, staged_path, hash_fn, k, n_hashes)
-        if not has_meta and snapshot_exists(spark, staged_path):
-            _check_profile_shset_type(
-                spark.read.parquet(staged_path),
-                dict(prof.dtypes)["shset"],
-                staged_path,
-            )
+        _check_staged_profile(
+            spark, staged_path, hash_fn, k, n_hashes,
+            dict(prof.dtypes)["shset"],
+        )
     prof.write.mode(mode).parquet(staged_path)
-    _write_profile_meta(spark, staged_path, hash_fn, k, n_hashes)
+    PROFILE_META.write(spark, staged_path, _profile_params(hash_fn, k, n_hashes))
 
 
 def minhash_near_dups_incremental(
@@ -1667,15 +1603,14 @@ def minhash_near_dups_incremental(
             "hashes from the S-curve"
         )
     spark = new_docs.sparkSession
-    has_meta = _check_profile_meta(spark, staged_path, hash_fn, k, n_hashes)
-    old = _staged_profile(spark, staged_path)
-    new = (
-        minhash_profile(new_docs, n_hashes, id_col, text_col, k, hash_fn)
-        .filter(F.col("n_sh") > 0)
-        .persist()
+    new = minhash_profile(
+        new_docs, n_hashes, id_col, text_col, k, hash_fn
+    ).filter(F.col("n_sh") > 0)
+    _check_staged_profile(
+        spark, staged_path, hash_fn, k, n_hashes, dict(new.dtypes)["shset"]
     )
-    if not has_meta:
-        _check_profile_shset_type(old, dict(new.dtypes)["shset"], staged_path)
+    old = _staged_profile(spark, staged_path)
+    new = new.persist()
     profile = old.unionByName(new)
     cand = lsh_candidates(
         profile.drop("shset"), bands, n_hashes // bands, id_col,

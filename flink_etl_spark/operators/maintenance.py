@@ -29,7 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-from flink_etl_spark.operators.merge import _hadoop_fs, overwrite_snapshot
+from flink_etl_spark.operators.merge import overwrite_snapshot
+from flink_etl_spark.staged import _hadoop_fs
 
 
 def refuse_streaming_sink_log(spark: SparkSession, table_path: str) -> None:

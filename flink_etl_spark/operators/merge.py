@@ -38,6 +38,8 @@ from collections.abc import Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 
+from flink_etl_spark.staged import _hadoop_fs, _staging_path
+
 
 def resolve_recency(
     df: DataFrame,
@@ -324,22 +326,6 @@ def insert_overwrite_partitions(df: DataFrame, table: str) -> None:
         df.write.mode("overwrite").insertInto(table)
 
 
-def _staging_path(path: str) -> str:
-    """Staging location for `path`: `<parent>/_staging/<basename>`. The
-    `_staging` path COMPONENT is what makes it invisible: Spark's file
-    listing drops a name starting with `_` only when it contains no `=`
-    (`shouldFilterOutPathName` — partition dirs like `dt=x` must survive),
-    so a flat sibling `_staging__dt=x` would still be discovered and
-    raise CONFLICTING_PARTITION_COLUMN_NAMES, while anything under a
-    plain `_staging/` dir is pruned at that component and concurrent
-    table-root readers never double-count a partition mid-swap. A bare
-    `<path>__staging` suffix is worse still — it parses as a real
-    partition (dt='x__staging')."""
-    p = path.rstrip("/")
-    parent, _, base = p.rpartition("/")
-    return f"{parent}/_staging/{base}" if parent else f"_staging/{base}"
-
-
 def overwrite_snapshot(df: DataFrame, path: str, fmt: str = "parquet") -> None:
     """Replace the snapshot at `path` with `df`, staging first so the
     plan can READ the current snapshot while computing its replacement —
@@ -393,15 +379,6 @@ def promote_snapshot(spark: SparkSession, path: str) -> None:
         fs.delete(target, True)
     if not fs.rename(src, target):
         raise IOError(f"snapshot swap failed: rename {staging} -> {path}")
-
-
-def _hadoop_fs(spark: SparkSession, path: str):
-    """(FileSystem, Path) for any URI the Hadoop conf can resolve —
-    the scheme-agnostic seam for every exists/delete/rename below."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, hpath
 
 
 def snapshot_exists(spark: SparkSession, path: str) -> bool:

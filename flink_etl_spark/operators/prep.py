@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame, Window
 from flink_etl_spark.functions.hashing import shingles_sql, tokens_sql
 from flink_etl_spark.functions.sql import ident, lit
 from flink_etl_spark.operators.text import micro_floor_ratio
+from flink_etl_spark.staged import DSIR_META, NB_META, SUBSTR_META
 
 # ---------------------------------------------------------------------------
 # repetition statistics (Gopher-style)
@@ -1039,10 +1040,6 @@ def _dsir_score(
     )
 
 
-#: staged-fit format version (`_DSIR_META.json`)
-_DSIR_META_VERSION = 1
-
-
 def _bigram_hash_frame(d: DataFrame, text_col: str) -> DataFrame:
     """(_h): xxhash64 of each bigram-shingle OCCURRENCE of a corpus —
     the exact-identity side channel the bucket histograms cannot
@@ -1088,28 +1085,43 @@ def dsir_stage_fit(
     sidecar (or a half-written fit). A staged fit is a cheap derived
     artifact with no replay contract — after any crashed stage, just
     re-run `dsir_stage_fit` (idempotent overwrite) before scoring."""
-    from flink_etl_spark.operators.similarity import _write_json_sidecar
-
     _dsir_validate_buckets(n_buckets)
     bsql = _dsir_bucket_sql(hash_terms, n_buckets)
     per_bucket = _dsir_per_bucket(
         raw_docs, target_docs, text_col, bsql, n_buckets
     )
+    _stage_bucketed_fit(
+        DSIR_META, per_bucket, raw_docs, text_col, fit_path,
+        {"n_buckets": n_buckets, "hash_terms": hash_terms},
+    )
+
+
+def _stage_bucketed_fit(
+    kind, per_bucket: DataFrame, corpus: DataFrame, text_col: str,
+    fit_path: str, params: dict,
+) -> None:
+    """Write a bucketed fit (DSIR, NB): the per-bucket counts, the
+    corpus's distinct bigram hashes (vocabulary-sized by Heaps' law:
+    the drift monitor's order-sensitive companion signal — see
+    staged_fit_drift_check's bigram_novel_frac), then the sidecar."""
     per_bucket.write.mode("overwrite").parquet(f"{fit_path}/counts")
-    # distinct bigram hashes of the raw corpus (vocabulary-sized by
-    # Heaps' law): the drift monitor's order-sensitive companion
-    # signal — see staged_fit_drift_check's bigram_novel_frac
-    _bigram_hash_frame(raw_docs, text_col).distinct().write.mode(
+    _bigram_hash_frame(corpus, text_col).distinct().write.mode(
         "overwrite"
     ).parquet(f"{fit_path}/bigrams")
-    _write_json_sidecar(
-        raw_docs.sparkSession, f"{fit_path}/_DSIR_META.json",
-        {
-            "version": _DSIR_META_VERSION,
-            "n_buckets": n_buckets,
-            "hash_terms": hash_terms,
-            "bigrams": True,
-        },
+    kind.write(corpus.sparkSession, fit_path, {**params, "bigrams": True})
+
+
+def _staged_bucketed_fit(kind, spark, fit_path: str):
+    """(sidecar, bucket-hash SQL builder, packed counts) of a fit staged
+    by `_stage_bucketed_fit`; raises when its sidecar is absent or of
+    another format version."""
+    meta = kind.require(spark, fit_path)
+    n_buckets = int(meta["n_buckets"])
+    counts = spark.read.parquet(f"{fit_path}/counts")
+    return (
+        meta,
+        _dsir_bucket_sql(bool(meta["hash_terms"]), n_buckets),
+        _dsir_pack(counts, n_buckets),
     )
 
 
@@ -1125,24 +1137,9 @@ def dsir_log_weights_staged(
     shape (the <= B-row counts read, packed into one broadcast row,
     folded row-locally), with n_buckets and the bucket hash derived
     from the sidecar. Feed the result to `dsir_select_n` as usual."""
-    from flink_etl_spark.operators.similarity import _read_json_sidecar
-
-    spark = docs.sparkSession
-    meta = _read_json_sidecar(spark, f"{fit_path}/_DSIR_META.json")
-    if meta is None:
-        raise ValueError(
-            f"no _DSIR_META.json at {fit_path} — not a staged DSIR fit; "
-            "run dsir_stage_fit first"
-        )
-    if meta.get("version") != _DSIR_META_VERSION:
-        raise ValueError(
-            f"staged DSIR fit at {fit_path} has format version "
-            f"{meta.get('version')!r}, this reader expects "
-            f"{_DSIR_META_VERSION} — re-stage the fit"
-        )
-    bsql = _dsir_bucket_sql(bool(meta["hash_terms"]), int(meta["n_buckets"]))
-    counts = spark.read.parquet(f"{fit_path}/counts")
-    packed = _dsir_pack(counts, int(meta["n_buckets"]))
+    _, bsql, packed = _staged_bucketed_fit(
+        DSIR_META, docs.sparkSession, fit_path
+    )
     return _dsir_score(docs, packed, bsql, id_col, text_col)
 
 
@@ -1538,10 +1535,6 @@ def nb_classifier_scores_multi(
     )
 
 
-#: staged NB-classifier fit format version (`_NB_META.json`)
-_NB_META_VERSION = 1
-
-
 def nb_stage_fit(
     labeled_docs: DataFrame,
     fit_path: str,
@@ -1561,8 +1554,6 @@ def nb_stage_fit(
     n_buckets, hash_terms, d_pos, d_neg} (the class DOC counts the
     prior needs). Same label validation as `nb_classifier_scores`
     (null labels raise, both classes must be non-empty)."""
-    from flink_etl_spark.operators.similarity import _write_json_sidecar
-
     _dsir_validate_buckets(n_buckets)
     lbl = F.col(label_col)
     d_pos, d_neg = _nb_validate_labels(labeled_docs, label_col)
@@ -1571,20 +1562,10 @@ def nb_stage_fit(
         labeled_docs.filter(~lbl), labeled_docs.filter(lbl),
         text_col, bsql, n_buckets,
     )
-    per_bucket.write.mode("overwrite").parquet(f"{fit_path}/counts")
-    _bigram_hash_frame(labeled_docs, text_col).distinct().write.mode(
-        "overwrite"
-    ).parquet(f"{fit_path}/bigrams")
-    _write_json_sidecar(
-        labeled_docs.sparkSession, f"{fit_path}/_NB_META.json",
-        {
-            "version": _NB_META_VERSION,
-            "n_buckets": n_buckets,
-            "hash_terms": hash_terms,
-            "d_pos": d_pos,
-            "d_neg": d_neg,
-            "bigrams": True,
-        },
+    _stage_bucketed_fit(
+        NB_META, per_bucket, labeled_docs, text_col, fit_path,
+        {"n_buckets": n_buckets, "hash_terms": hash_terms,
+         "d_pos": d_pos, "d_neg": d_neg},
     )
 
 
@@ -1602,25 +1583,10 @@ def nb_classifier_scores_staged(
     sidecar's integer doc counts with the same ln expression the
     inline arm uses (JVM ln on both paths — no recorded float crosses
     the boundary)."""
-    from flink_etl_spark.operators.similarity import _read_json_sidecar
-
-    spark = docs.sparkSession
-    meta = _read_json_sidecar(spark, f"{fit_path}/_NB_META.json")
-    if meta is None:
-        raise ValueError(
-            f"no _NB_META.json at {fit_path} — not a staged NB fit; run "
-            "nb_stage_fit first"
-        )
-    if meta.get("version") != _NB_META_VERSION:
-        raise ValueError(
-            f"staged NB fit at {fit_path} has format version "
-            f"{meta.get('version')!r}, this reader expects "
-            f"{_NB_META_VERSION} — re-stage the fit"
-        )
-    n_buckets = int(meta["n_buckets"])
-    bsql = _dsir_bucket_sql(bool(meta["hash_terms"]), n_buckets)
-    counts = spark.read.parquet(f"{fit_path}/counts")
-    packed = _dsir_pack(counts, n_buckets).withColumn(
+    meta, bsql, packed = _staged_bucketed_fit(
+        NB_META, docs.sparkSession, fit_path
+    )
+    packed = packed.withColumn(
         "_prior", _nb_prior_expr(int(meta["d_pos"]), int(meta["d_neg"]))
     )
     return _nb_score(docs, packed, bsql, id_col, text_col)
@@ -1678,39 +1644,30 @@ def staged_fit_drift_check(
     the signal. Warns and sets `drift_detected` above either
     threshold; `refit_recommended` mirrors the ANN monitors' dict
     contract."""
-    from flink_etl_spark.operators.similarity import _read_json_sidecar
-
     spark = batch.sparkSession
     meta = None
-    for sidecar in ("_DSIR_META.json", "_NB_META.json"):
-        meta = _read_json_sidecar(spark, f"{fit_path}/{sidecar}")
+    for kind in (DSIR_META, NB_META):
+        meta = kind.read(spark, fit_path)
         if meta is not None:
-            kind = sidecar
             break
     if meta is None:
         raise ValueError(
-            f"no staged-fit sidecar at {fit_path} (expected _DSIR_META.json "
-            "or _NB_META.json)"
+            f"no staged-fit sidecar at {fit_path} (expected "
+            f"{DSIR_META.name} or {NB_META.name})"
         )
     # version-validate like the scorers do: a format bump that changes
     # the counts layout or bucket hashing must refuse here too — the
     # component whose JOB is to say "re-stage the fit" must never
     # compute TV against a misread counts frame and report healthy
-    expect = (
-        _DSIR_META_VERSION if kind == "_DSIR_META.json" else _NB_META_VERSION
+    kind.check_version(
+        meta, fit_path, reads="drift check expects", label="staged fit"
     )
-    if meta.get("version") != expect:
-        raise ValueError(
-            f"staged fit at {fit_path} has format version "
-            f"{meta.get('version')!r}, this drift check expects {expect} — "
-            "re-stage the fit"
-        )
     n_buckets = int(meta["n_buckets"])
     bsql = _dsir_bucket_sql(bool(meta["hash_terms"]), n_buckets)
     counts = spark.read.parquet(f"{fit_path}/counts")
     # DSIR: q = the raw corpus (_cq). NB: the pooled labeled corpus.
     fit_count = (
-        F.col("_cq") if kind == "_DSIR_META.json"
+        F.col("_cq") if kind is DSIR_META
         else F.col("_ct") + F.col("_cq")
     )
     bcounts = (
@@ -1785,7 +1742,7 @@ def staged_fit_drift_check(
     )
     drift = tv > warn_above or bigram_drift
     out = {
-        "kind": "dsir" if kind == "_DSIR_META.json" else "nb",
+        "kind": "dsir" if kind is DSIR_META else "nb",
         "tv": tv,
         "novel_frac": novel_frac,
         "bigram_novel_frac": bigram_novel_frac,
@@ -2424,7 +2381,14 @@ def _substring_narrow(
     keeps exactly its rightmost minimum."""
     i = ident(id_col)
     if winnow == 1:
-        return with_anchors.selectExpr(i, "posexplode(_a) AS (_pos, _k)")
+        # explode over an expression, not `posexplode(_a)`: a generator
+        # over a bare attribute lets InferFiltersFromGenerate (on in any
+        # session not built by `get_spark`) add `size(_a) > 0` and push
+        # it below the projection, recomputing the anchor kernel in the
+        # scan
+        return with_anchors.selectExpr(
+            i, "explode(transform(_a, (k, p) -> struct(p AS _pos, k AS _k))) AS _s"
+        ).selectExpr(i, "_s._pos AS _pos", "_s._k AS _k")
     df = with_anchors.selectExpr(
         i, "_a", "transform(_a, (v, p) -> struct(v, -p AS p)) AS _run"
     )
@@ -2541,66 +2505,6 @@ def _substring_rebuild(
         F.size("_kept").cast("long").alias("n_tokens_kept"),
         F.concat_ws(" ", "_kept").alias(out_col),
     )
-
-
-#: sidecar schema version for staged substring-anchor indexes
-_SUBSTR_META_VERSION = 1
-
-
-def _substr_meta_io(spark, staged_path: str):
-    from flink_etl_spark.operators.merge import _hadoop_fs
-
-    return _hadoop_fs(spark, f"{staged_path}/_SUBSTR_META.json")
-
-
-def _write_substr_meta(spark, staged_path: str, params: dict) -> None:
-    import json
-
-    fs, p = _substr_meta_io(spark, staged_path)
-    out = fs.create(p, True)
-    try:
-        out.write(bytearray(json.dumps(
-            {"version": _SUBSTR_META_VERSION, **params}).encode()))
-    finally:
-        out.close()
-
-
-def _check_substr_meta(spark, staged_path: str, params: dict) -> bool:
-    """Raise when the staged anchor index's parameters disagree with
-    the caller's — mismatched key mode / anchor width / winnow produce
-    disjoint key spaces, so every index hit would SILENTLY vanish.
-    Returns False when no sidecar exists (index not yet staged)."""
-    import json
-
-    fs, p = _substr_meta_io(spark, staged_path)
-    if not fs.exists(p):
-        return False
-    stream = fs.open(p)
-    try:
-        raw = spark._jvm.org.apache.commons.io.IOUtils.toString(
-            stream, "UTF-8"
-        )
-    finally:
-        stream.close()
-    meta = json.loads(raw)
-    want = {"version": _SUBSTR_META_VERSION, **params}
-    mismatched = {
-        key: (meta.get(key), val) for key, val in want.items()
-        if meta.get(key) != val
-    }
-    if mismatched:
-        detail = ", ".join(
-            f"{key}: staged={got!r} caller={exp!r}"
-            for key, (got, exp) in mismatched.items()
-        )
-        raise ValueError(
-            f"staged substring index at {staged_path} is incompatible "
-            f"with this call ({detail}); anchor keys from mismatched "
-            "parameters never match, silently losing all index hits — "
-            "rebuild the index (substring_stage_index mode='overwrite') "
-            "or match the staged parameters"
-        )
-    return True
 
 
 def document_fingerprints(
@@ -2849,13 +2753,13 @@ def substring_stage_index(
     spark = docs.sparkSession
     params = {"key": key, "min_tokens": min_tokens, "winnow": winnow}
     if mode != "overwrite":
-        _check_substr_meta(spark, staged_path, params)
+        SUBSTR_META.check(spark, staged_path, params)
     keys = _substring_narrow(
         _substring_anchors(docs, min_tokens, 1, id_col, text_col, key),
         id_col, winnow,
     ).select(F.col("_k").alias("anchor_key")).distinct()
     keys.write.mode(mode).parquet(staged_path)
-    _write_substr_meta(spark, staged_path, params)
+    SUBSTR_META.write(spark, staged_path, params)
 
 
 def substring_dedup_incremental(
@@ -2910,7 +2814,7 @@ def substring_dedup_incremental(
     if key not in ("hash64", "digest"):
         raise ValueError(f"key must be 'hash64' or 'digest', got {key!r}")
     spark = new_docs.sparkSession
-    _check_substr_meta(
+    SUBSTR_META.check(
         spark, staged_path,
         {"key": key, "min_tokens": min_tokens, "winnow": winnow},
     )

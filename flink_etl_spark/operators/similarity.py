@@ -19,6 +19,14 @@ from pyspark.sql import DataFrame, Window
 
 from flink_etl_spark.functions.vectors import cosine, dot, norm, safe_cosine
 from flink_etl_spark.sources.tables import _plan_size_bytes
+from flink_etl_spark.staged import (
+    IVFPQ_META,
+    PQ_META,
+    TARGET_FILE_BYTES,
+    _materialize_with_retry,
+    append_unstaged,
+    require_new_path,
+)
 
 
 def cosine_topk(
@@ -273,6 +281,14 @@ def _local_frame(spark, rows, schema) -> DataFrame:
     return spark.sql("VALUES (1)").selectExpr(f"inline(array({structs}))")
 
 
+#: ceiling on rows x dim of a driver-local seed frame: `_seed_head`
+#: collects the vectors and `_local_frame` renders them as ONE SQL
+#: literal (~40 characters per value), and `ivf_auto_cells` can ask for
+#: 65,536 cells. Above it the anchored corpus derivation runs instead
+#: (row-identical by the local-vs-distributed pins).
+_LOCAL_SEED_MAX_VALUES = 1 << 18
+
+
 def _seed_head(embs: DataFrame, n: int, id_col: str, vec_col: str):
     """The n smallest-id (id, vector, norm) rows, collected — ONE
     corpus TakeOrdered pass. Both deterministic seed picks of the IVF
@@ -284,15 +300,26 @@ def _seed_head(embs: DataFrame, n: int, id_col: str, vec_col: str):
     vectors. One shared head fetch therefore replaces what were two
     eagerly-anchored full corpus passes (guide §2.4 / §5; the r14
     verdict's anchor-job floor). Assumes the family's documented
-    unique-non-NULL-id contract (ADVICE r14)."""
-    return (
+    unique-non-NULL-id contract (ADVICE r14).
+
+    None when n x dim passes `_LOCAL_SEED_MAX_VALUES`: the collect
+    nulls every vector over the ceiling, so the driver never holds
+    more than it (plus n ids and norms), and the caller takes the
+    anchored derivation."""
+    fits = F.size(vec_col).cast("long") * F.lit(n) <= F.lit(
+        _LOCAL_SEED_MAX_VALUES
+    )
+    head = (
         embs.select(
-            F.col(id_col), F.col(vec_col), norm(vec_col).alias("_hn")
+            F.col(id_col),
+            F.when(fits, F.col(vec_col)).alias(vec_col),
+            norm(vec_col).alias("_hn"),
         )
         .orderBy(id_col)
         .limit(n)
         .collect()
     )
+    return None if any(r[1] is None for r in head) else head
 
 
 def ivf_centroids_local(
@@ -313,12 +340,18 @@ def ivf_centroids_local(
     ran an eager localCheckpoint job per construction and left a
     corpus-lineage frame that every consumer's broadcast re-walked;
     this frame is a 1-task local scan. Pinned bit-for-bit in
-    tests/test_extensions.py::test_ivf_centroids_local_matches_distributed."""
+    tests/test_extensions.py::test_ivf_centroids_local_matches_distributed.
+    Above the `_LOCAL_SEED_MAX_VALUES` ceiling it returns the anchored
+    distributed derivation instead."""
     from pyspark.sql import types as T
 
     spark = embs.sparkSession
     if head is None:
         head = _seed_head(embs, n_cells, id_col, vec_col)
+    if head is None:
+        from flink_etl_spark.session import anchor
+
+        return anchor(ivf_centroids(embs, n_cells, id_col, vec_col))
     vec_f = embs.schema[vec_col]
     schema = T.StructType(
         [
@@ -329,6 +362,20 @@ def ivf_centroids_local(
     )
     rows = [(i, r[1], r[2]) for i, r in enumerate(head[:n_cells])]
     return _local_frame(spark, rows, schema)
+
+
+def _ivf_quantizer(
+    corpus: DataFrame, n_cells: int, id_col: str, vec_col: str,
+    refine_iters: int,
+) -> DataFrame:
+    """The coarse quantizer as a materialized frame, never a lazy corpus
+    plan: the driver-local seed pick (`ivf_centroids_local`; anchored
+    past its ceiling), or the anchored Lloyd-refined derivation."""
+    if refine_iters == 0:
+        return ivf_centroids_local(corpus, n_cells, id_col, vec_col)
+    from flink_etl_spark.session import anchor
+
+    return anchor(ivf_centroids(corpus, n_cells, id_col, vec_col, refine_iters))
 
 
 def _round6_twin(x: float) -> float:
@@ -849,20 +896,9 @@ def ivf_topk(
     centroid scan); explicit integers stay the deterministic oracle
     override."""
     from flink_etl_spark.operators.knobs import ivf_auto_cells, resolve_knob
-    from flink_etl_spark.session import anchor
 
     n_cells = resolve_knob(n_cells, ivf_auto_cells, corpus, n_vecs)
-    # seed quantizer: ONE TakeOrdered collect into a driver-local
-    # frame (r15 — replaces the eagerly-anchored corpus plan whose
-    # localCheckpoint job was pure construction overhead; row-identical
-    # by the ivf_centroids_local pin). Refined quantizers still run
-    # the distributed Lloyd passes and keep the anchor.
-    if refine_iters == 0:
-        cents = ivf_centroids_local(corpus, n_cells, id_col, vec_col)
-    else:
-        cents = anchor(
-            ivf_centroids(corpus, n_cells, id_col, vec_col, refine_iters)
-        )
+    cents = _ivf_quantizer(corpus, n_cells, id_col, vec_col, refine_iters)
     c = ivf_assign(corpus, cents, 1, id_col, vec_col).select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("cv"),
@@ -1093,20 +1129,9 @@ def ivf_build_index(
     from flink_etl_spark.operators.knobs import ivf_auto_cells, resolve_knob
 
     n_cells = resolve_knob(n_cells, ivf_auto_cells, corpus, n_vecs)
-    # seed quantizer as a driver-local frame (r15, same treatment as
-    # ivf_topk): the lazy corpus-derived table was consumed TWICE here
-    # (the centroids write + the assignment broadcast), i.e. two full
-    # corpus TakeOrdered passes at scale; the local frame costs one
-    # head collect, and both consumers read driver-local rows.
-    # Row-identical by the ivf_centroids_local pin.
-    if refine_iters == 0:
-        cents = ivf_centroids_local(corpus, n_cells, id_col, vec_col)
-    else:
-        from flink_etl_spark.session import anchor
-
-        cents = anchor(
-            ivf_centroids(corpus, n_cells, id_col, vec_col, refine_iters)
-        )
+    # consumed TWICE (the centroids write + the assignment broadcast):
+    # a lazy corpus-derived table would be two corpus passes at scale
+    cents = _ivf_quantizer(corpus, n_cells, id_col, vec_col, refine_iters)
     cents.write.mode("overwrite").parquet(f"{index_path}/centroids")
     # centroid_sim rides along (free at build time): the incremental
     # SemDeDup consumer (dedup.semdedup_incremental) needs each staged
@@ -1750,7 +1775,7 @@ def pq_drift_check(
     callers — same contract as `ann_drift_check` (read once at
     attach; a rebuild is a new path + re-attach, so never stale)."""
     if meta is None:
-        meta = _pq_index_meta(spark, index_path)
+        meta = PQ_META.require(spark, index_path)
     guarded = _dim_guarded(batch, vec_col, int(meta["dim"]), "drift check")
     cbs = (
         codebooks
@@ -2050,8 +2075,7 @@ def pq_build_index(
         # bounded early-stop probe, never a full count
         if base.limit(1024).count() < 1024:
             base, eff = embs, 1.0
-    _write_json_sidecar(spark, f"{index_path}/_PQ_META.json", {
-        "version": _PQ_META_VERSION,
+    PQ_META.write(spark, index_path, {
         "m": m, "n_codes": n_codes, "dim": dim_row["d"],
         # drift-monitor baseline: the build corpus's own mean ADC
         # reconstruction error under the just-derived codebooks, read
@@ -2064,22 +2088,6 @@ def pq_build_index(
         "baseline_sample": baseline_sample,
         "baseline_sample_effective": eff,
     })
-
-
-def _pq_index_meta(spark, index_path: str) -> dict:
-    meta = _read_json_sidecar(spark, f"{index_path}/_PQ_META.json")
-    if meta is None:
-        raise ValueError(
-            f"no _PQ_META.json at {index_path} — not a PQ index staged "
-            "by pq_build_index"
-        )
-    if meta.get("version") != _PQ_META_VERSION:
-        raise ValueError(
-            f"PQ index at {index_path} has format version "
-            f"{meta.get('version')!r}, this build reads "
-            f"{_PQ_META_VERSION} — rebuild the index"
-        )
-    return meta
 
 
 def pq_append_index(
@@ -2096,28 +2104,24 @@ def pq_append_index(
     (m bytes + id per vector, a small fraction of corpus bytes).
     Returns the number of vectors appended. Ids must be globally
     unique across the corpus and every batch."""
-    meta = _pq_index_meta(spark, index_path)
+    meta = PQ_META.require(spark, index_path)
     m, dim = int(meta["m"]), int(meta["dim"])
     guarded = _dim_guarded(new_embs, vec_col, dim, "PQ append: batch")
     cbs = spark.read.parquet(f"{index_path}/codebooks")
     codes = pq_encode(guarded, cbs, m=m, id_col=id_col, vec_col=vec_col)
     staged_ids = spark.read.parquet(f"{index_path}/codes").select(id_col)
-    fresh = codes.join(staged_ids, id_col, "left_anti").persist()
-    try:
-        n = fresh.count()
-        if n:
-            # bound the append's file count by the batch's BYTES (m
-            # one-byte codes + an 8-byte id per row at ~128 MB/file),
-            # not by the join's task count — otherwise every append
-            # drops ~shuffle-partition-count small files into codes/
-            rows_per_file = max(1, (128 << 20) // (m + 8))
-            nfiles = max(1, -(-n // rows_per_file))
-            fresh.repartition(nfiles).write.mode("append").parquet(
-                f"{index_path}/codes"
-            )
-        return n
-    finally:
-        fresh.unpersist()
+
+    def write(fresh: DataFrame, n: int) -> None:
+        # bound the append's file count by the batch's BYTES (m
+        # one-byte codes + an 8-byte id per row at ~128 MB/file), not
+        # by the join's task count — otherwise every append drops
+        # ~shuffle-partition-count small files into codes/
+        rows_per_file = max(1, TARGET_FILE_BYTES // (m + 8))
+        fresh.repartition(-(-n // rows_per_file)).write.mode(
+            "append"
+        ).parquet(f"{index_path}/codes")
+
+    return append_unstaged(codes, staged_ids, id_col, write)
 
 
 def _allowed_semi(codes: DataFrame, allowed: DataFrame | None,
@@ -2133,47 +2137,6 @@ def _allowed_semi(codes: DataFrame, allowed: DataFrame | None,
     return codes.join(
         allowed.select(F.col(id_col)).distinct(), id_col, "left_semi"
     )
-
-
-def _is_missing_file_error(exc: Exception) -> bool:
-    """True iff the failure is the compaction window's loud read race:
-    a file listed when the plan was built was deleted before the scan
-    opened it (Spark error class FAILED_READ_FILE wrapping a
-    FileNotFoundException). Anything else is a real error — never
-    retried."""
-    s = str(exc)
-    return "FAILED_READ_FILE" in s or "FileNotFoundException" in s
-
-
-def _materialize_with_retry(build, retries: int, _on_built=None):
-    """Execute `build()` (a plan factory over a staged on-disk index)
-    eagerly, re-planning on the missing-file race `compact_ann_index`
-    documents: a reader that listed files before the swap's delete
-    step opens a deleted original and fails LOUDLY with
-    FAILED_READ_FILE. The file set is stable once the swap completes,
-    so one re-plan from a fresh listing suffices; `retries` bounds it.
-
-    Materialization is `localCheckpoint(eager=True)` — a top-k search
-    result is bounded (n_queries x k rows) by construction, and the
-    checkpoint both forces execution (so the retry actually catches
-    the race here, not in the caller's action) and pins the result
-    against further index mutation.
-
-    `_on_built` is a TEST SEAM: called after each attempt's plan is
-    built (file listing taken) and before it executes, with the
-    attempt number — tests use it to complete a compaction swap inside
-    exactly that window."""
-    attempt = 0
-    while True:
-        df = build()
-        if _on_built is not None:
-            _on_built(attempt)
-        try:
-            return df.localCheckpoint(eager=True)
-        except Exception as exc:  # re-plan only on the documented race
-            if attempt >= retries or not _is_missing_file_error(exc):
-                raise
-            attempt += 1
 
 
 def pq_rebuild_index(
@@ -2198,24 +2161,14 @@ def pq_rebuild_index(
     passing 0 warns. Always a NEW path (cut searches over, then delete
     the old dir — an in-place rebuild would race readers and break the
     append replay contract mid-write)."""
-    meta = _read_json_sidecar(spark, f"{old_path}/_PQ_META.json")
-    if meta is None:
-        raise ValueError(
-            f"no _PQ_META.json at {old_path} — not a PQ index; use "
-            "pq_build_index for a first build"
-        )
-    if meta.get("version") != _PQ_META_VERSION:
-        raise ValueError(
-            f"PQ index at {old_path} has format version "
-            f"{meta.get('version')!r}, this build writes "
-            f"{_PQ_META_VERSION} — parameters cannot be trusted; pass "
-            "them to pq_build_index explicitly"
-        )
-    if old_path.rstrip("/") == new_path.rstrip("/"):
-        raise ValueError(
-            "rebuild must target a NEW path (searches keep reading the "
-            "old index until cutover; an in-place rebuild races them)"
-        )
+    meta = PQ_META.require(
+        spark, old_path,
+        absent="not a PQ index; use pq_build_index for a first build",
+        advice="parameters cannot be trusted; pass them to pq_build_index "
+        "explicitly",
+        reads="build writes",
+    )
+    require_new_path(old_path, new_path)
     if refine_iters == 0:
         import warnings
 
@@ -2268,7 +2221,7 @@ def pq_search_index(
     never retry. Default 0 keeps the plan lazy."""
     if rerank < 1:
         raise ValueError(f"rerank must be >= 1, got {rerank}")
-    meta = _pq_index_meta(spark, index_path)
+    meta = PQ_META.require(spark, index_path)
     m = int(meta["m"])
     guarded = _dim_guarded(queries, vec_col, int(meta["dim"]), "PQ: query")
 
@@ -2329,17 +2282,19 @@ def _ivfpq_parts(
     local job; the one-shot `ivfpq_topk` plan keeps 2 corpus scans /
     0 corpus exchanges (plans/r15/ann_ivfpq_topk_{before,after}.txt).
     Row-identical by the `test_ivfpq_parts_fused_matches_anchored`
-    pin. Refined/overridden quantizers keep the anchored corpus
+    pin. Refined/overridden quantizers, and heads over the
+    `_LOCAL_SEED_MAX_VALUES` ceiling, keep the anchored corpus
     derivation (`cents=` passes the hot-cell-split table)."""
     from flink_etl_spark.functions.vectors import l2_normalize
     from flink_etl_spark.session import anchor
 
     spark = embs.sparkSession
-    seeds = None
+    seeds = head = None
     if cents is None and cell_refine_iters == 0:
+        head = _seed_head(embs, max(n_cells, n_codes), id_col, vec_col)
+    if head is not None:
         from pyspark.sql import types as T
 
-        head = _seed_head(embs, max(n_cells, n_codes), id_col, vec_col)
         cents = ivf_centroids_local(embs, n_cells, id_col, vec_col, head=head)
         # the head is already in id order (the _pq_seeds relabel
         # order — unique-id contract as everywhere), so the seed
@@ -2504,50 +2459,6 @@ def ivfpq_topk(
     )
 
 
-#: staged IVF-PQ index format version (bump when the on-disk layout
-#: or the encode recipe changes incompatibly)
-_IVFPQ_META_VERSION = 1
-
-#: staged flat-PQ index format version
-_PQ_META_VERSION = 1
-
-
-def _read_json_sidecar(spark, path: str):
-    """Read a JSON sidecar at `path` (None when absent) — Hadoop-FS
-    portable, the `_PROFILE_META.json` pattern."""
-    import json
-
-    from flink_etl_spark.operators.merge import _hadoop_fs
-
-    fs, p = _hadoop_fs(spark, path)
-    if not fs.exists(p):
-        return None
-    stream = fs.open(p)
-    try:
-        raw = spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    return json.loads(raw)
-
-
-def _write_json_sidecar(spark, path: str, payload: dict) -> None:
-    import json
-
-    from flink_etl_spark.operators.merge import _hadoop_fs
-
-    fs, p = _hadoop_fs(spark, path)
-    out = fs.create(p, True)
-    try:
-        out.write(bytearray(json.dumps(payload).encode()))
-    finally:
-        out.close()
-
-
-def _ivfpq_meta(spark, index_path: str):
-    """Read `<index_path>/_IVFPQ_META.json` (None when absent)."""
-    return _read_json_sidecar(spark, f"{index_path}/_IVFPQ_META.json")
-
-
 def ann_index_kind(spark, index_path: str) -> str:
     """Resolve a staged ANN index's kind ("ivfpq" | "pq") from its own
     meta sidecar — an IVF-PQ dir carries _IVFPQ_META.json, a flat-PQ
@@ -2555,34 +2466,21 @@ def ann_index_kind(spark, index_path: str) -> str:
     with NEITHER is not a staged index; both raise rather than letting
     a caller silently pick a branch (the CLI and the maintenance ops
     share this resolution)."""
-    has_ivfpq = _ivfpq_meta(spark, index_path) is not None
-    has_pq = (
-        _read_json_sidecar(spark, f"{index_path}/_PQ_META.json") is not None
-    )
+    has_ivfpq = IVFPQ_META.read(spark, index_path) is not None
+    has_pq = PQ_META.read(spark, index_path) is not None
+    ivfpq, pq = IVFPQ_META.name, PQ_META.name
     if has_ivfpq and has_pq:
         raise ValueError(
-            f"{index_path} carries BOTH _IVFPQ_META.json and _PQ_META.json "
-            "— a mixed or corrupted index dir; rebuild it (or delete the "
-            "stale sidecar) first"
+            f"{index_path} carries BOTH {ivfpq} and {pq} — a mixed or "
+            "corrupted index dir; rebuild it (or delete the stale "
+            "sidecar) first"
         )
     if not has_ivfpq and not has_pq:
         raise ValueError(
-            f"{index_path} has neither _IVFPQ_META.json nor _PQ_META.json "
-            "— not a staged ANN index; build one first"
+            f"{index_path} has neither {ivfpq} nor {pq} — not a staged "
+            "ANN index; build one first"
         )
     return "ivfpq" if has_ivfpq else "pq"
-
-
-def _write_ivfpq_meta(spark, index_path: str, n_cells: int, m: int,
-                      n_codes: int, dim: int,
-                      extra: dict | None = None) -> None:
-    payload = {
-        "version": _IVFPQ_META_VERSION,
-        "n_cells": n_cells, "m": m, "n_codes": n_codes, "dim": dim,
-    }
-    if extra:
-        payload.update(extra)
-    _write_json_sidecar(spark, f"{index_path}/_IVFPQ_META.json", payload)
 
 
 def _dim_guarded(df: DataFrame, vec_col: str, dim: int, what: str) -> DataFrame:
@@ -2700,13 +2598,12 @@ def ivfpq_build_index(
     # without ground truth (tools/drift_probe.py derives the rebuild
     # rule from its decay curve)
     baseline_sim = mean_centroid_sim(embs, staged_cents, id_col, vec_col)
-    _write_ivfpq_meta(
-        spark, index_path, resolved_cells, m, n_codes, dim_row["d"],
-        extra={
-            "max_cell_frac_observed": observed,
-            "mean_centroid_sim": baseline_sim,
-        },
-    )
+    IVFPQ_META.write(spark, index_path, {
+        "n_cells": resolved_cells, "m": m, "n_codes": n_codes,
+        "dim": dim_row["d"],
+        "max_cell_frac_observed": observed,
+        "mean_centroid_sim": baseline_sim,
+    })
     if observed > warn_cell_frac:
         import warnings
 
@@ -2751,18 +2648,11 @@ def ivfpq_append_index(
     replayed batch appends nothing. Duplicate (id, codes) rows would
     otherwise break search's pair-uniqueness argument and surface the
     same neighbor twice in a top-k."""
-    meta = _ivfpq_meta(spark, index_path)
-    if meta is None:
-        raise ValueError(
-            f"no _IVFPQ_META.json at {index_path} — not an IVF-PQ index "
-            "staged by ivfpq_build_index; build before appending"
-        )
-    if meta.get("version") != _IVFPQ_META_VERSION:
-        raise ValueError(
-            f"IVF-PQ index at {index_path} has format version "
-            f"{meta.get('version')!r}, this build reads "
-            f"{_IVFPQ_META_VERSION} — rebuild the index"
-        )
+    meta = IVFPQ_META.require(
+        spark, index_path,
+        absent="not an IVF-PQ index staged by ivfpq_build_index; build "
+        "before appending",
+    )
     from flink_etl_spark.functions.vectors import l2_normalize
 
     m, dim = int(meta["m"]), int(meta["dim"])
@@ -2791,13 +2681,13 @@ def ivfpq_append_index(
         res, cbs, m, [id_col, "cell_id"], engine="auto",
         size_hint_bytes=_plan_size_bytes(guarded),
     ).persist()
-    fresh = None
     try:
         # replay convergence: drop ids already staged in the touched
         # cells (bounded fetch: <= n_cells ints, static partition prune)
         touched = [
             r["cell_id"] for r in codes.select("cell_id").distinct().collect()
         ]
+        staged_ids = None
         if touched:
             staged_ids = (
                 spark.read.option("basePath", f"{index_path}/cells")
@@ -2806,16 +2696,8 @@ def ivfpq_append_index(
                 .filter(F.col("cell_id").isin(touched))
                 .select(id_col)
             )
-            fresh = codes.join(staged_ids, id_col, "left_anti")
-        else:
-            fresh = codes
-        # persist + count BEFORE the append write: the anti-join scans
-        # the very `cells/` directory the write appends into — the
-        # count materializes the result once so the write never
-        # re-reads a path it is mutating (the pq_append_index pattern)
-        fresh = fresh.persist()
-        n = fresh.count()
-        if n:
+
+        def write(fresh: DataFrame, n: int) -> None:
             # repartition BY cell_id before the write: without it every
             # shuffle task holding rows of a cell emits its own file
             # into that cell's partition (~tasks x cells files per
@@ -2826,10 +2708,9 @@ def ivfpq_append_index(
             fresh.repartition("cell_id").write.mode("append").partitionBy(
                 "cell_id"
             ).parquet(f"{index_path}/cells")
-        return n
+
+        return append_unstaged(codes, staged_ids, id_col, write)
     finally:
-        if fresh is not None:
-            fresh.unpersist()
         codes.unpersist()
 
 
@@ -2888,11 +2769,7 @@ def ann_drift_check(
     the baseline field existed return ratio 1.0 with a baseline of
     None (re-record by rebuilding)."""
     if meta is None:
-        meta = _ivfpq_meta(spark, index_path)
-    if meta is None:
-        raise ValueError(
-            f"no _IVFPQ_META.json at {index_path} — not an IVF-PQ index"
-        )
+        meta = IVFPQ_META.require(spark, index_path)
     guarded = _dim_guarded(batch, vec_col, int(meta["dim"]), "drift check")
     cents = (
         centroids
@@ -3002,24 +2879,15 @@ def ivfpq_rebuild_index(
     to the rebuilt corpus), `cell_refine_iters`, `max_cell_frac`
     (hot-cell splitting; a drift-accreted dense mode is exactly the
     skew case)."""
-    meta = _ivfpq_meta(spark, old_path)
-    if meta is None:
-        raise ValueError(
-            f"no _IVFPQ_META.json at {old_path} — not an IVF-PQ index; "
-            "use ivfpq_build_index for a first build"
-        )
-    if meta.get("version") != _IVFPQ_META_VERSION:
-        raise ValueError(
-            f"IVF-PQ index at {old_path} has format version "
-            f"{meta.get('version')!r}, this build writes "
-            f"{_IVFPQ_META_VERSION} — parameters cannot be trusted; "
-            "pass them to ivfpq_build_index explicitly"
-        )
-    if old_path.rstrip("/") == new_path.rstrip("/"):
-        raise ValueError(
-            "rebuild must target a NEW path (searches keep reading the "
-            "old index until cutover; an in-place rebuild races them)"
-        )
+    meta = IVFPQ_META.require(
+        spark, old_path,
+        absent="not an IVF-PQ index; use ivfpq_build_index for a first "
+        "build",
+        advice="parameters cannot be trusted; pass them to "
+        "ivfpq_build_index explicitly",
+        reads="build writes",
+    )
+    require_new_path(old_path, new_path)
     if cell_refine_iters == 0:
         import warnings
 
@@ -3083,19 +2951,11 @@ def ivfpq_search_index(
 
     if rerank < 1:
         raise ValueError(f"rerank must be >= 1, got {rerank}")
-    meta = _ivfpq_meta(spark, index_path)
-    if meta is None:
-        raise ValueError(
-            f"no _IVFPQ_META.json at {index_path} — not an IVF-PQ index "
-            "staged by ivfpq_build_index (or a pre-sidecar build); "
-            "rebuild the index"
-        )
-    if meta.get("version") != _IVFPQ_META_VERSION:
-        raise ValueError(
-            f"IVF-PQ index at {index_path} has format version "
-            f"{meta.get('version')!r}, this build reads "
-            f"{_IVFPQ_META_VERSION} — rebuild the index"
-        )
+    meta = IVFPQ_META.require(
+        spark, index_path,
+        absent="not an IVF-PQ index staged by ivfpq_build_index (or a "
+        "pre-sidecar build); rebuild the index",
+    )
     if m is not None and m != meta["m"]:
         raise ValueError(
             f"caller m={m} disagrees with the staged index's m={meta['m']} "

@@ -1437,10 +1437,6 @@ _BPE_APPLY_ANCHOR_EVERY = 2
 #: of failing the driver (`bpe_encode(broadcast_vocab=...)`)
 _BPE_BROADCAST_MAX_VOCAB = 4_000_000
 
-#: staged BPE tokenizer artifact format version (`_BPE_META.json`)
-_BPE_META_VERSION = 1
-
-
 def bpe_stage_fit(
     docs: DataFrame,
     fit_path: str,
@@ -1461,17 +1457,16 @@ def bpe_stage_fit(
     pretoken_re, n_fitted} so a reader can refuse a mismatched or
     truncated artifact. `n_fitted` may be < n_merges when the corpus
     ran out of pairs (the fit's documented early stop)."""
-    from flink_etl_spark.operators.similarity import _write_json_sidecar
+    from flink_etl_spark.staged import BPE_META
 
     merges = bpe_fit(
         docs, n_merges, text_col=text_col, vocab_partitions=vocab_partitions,
         batch_merges=batch_merges, batch_verify=batch_verify,
     )
     merges.write.mode("overwrite").parquet(f"{fit_path}/merges")
-    _write_json_sidecar(
-        docs.sparkSession, f"{fit_path}/_BPE_META.json",
+    BPE_META.write(
+        docs.sparkSession, fit_path,
         {
-            "version": _BPE_META_VERSION,
             "n_merges": n_merges,
             "pretoken_re": BPE_PRETOKEN_RE,
             "n_fitted": merges.count(),
@@ -1501,21 +1496,10 @@ def bpe_encode_staged(
     inline (zero-shuffle) while the merge table fits the parser-bound
     cap, the chunk-staged vocab plan past it — so a caller never hits
     the inline cap by loading a production-sized artifact."""
-    from flink_etl_spark.operators.similarity import _read_json_sidecar
+    from flink_etl_spark.staged import BPE_META
 
     spark = docs.sparkSession
-    meta = _read_json_sidecar(spark, f"{fit_path}/_BPE_META.json")
-    if meta is None:
-        raise ValueError(
-            f"no _BPE_META.json at {fit_path} — not a staged BPE fit; "
-            "run bpe_stage_fit first"
-        )
-    if meta.get("version") != _BPE_META_VERSION:
-        raise ValueError(
-            f"staged BPE fit at {fit_path} has format version "
-            f"{meta.get('version')!r}, this reader expects "
-            f"{_BPE_META_VERSION} — re-stage the fit"
-        )
+    meta = BPE_META.require(spark, fit_path)
     if meta.get("pretoken_re") != BPE_PRETOKEN_RE:
         raise ValueError(
             f"staged BPE fit at {fit_path} was fitted with pre-tokenizer "

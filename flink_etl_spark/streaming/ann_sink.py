@@ -45,11 +45,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from flink_etl_spark.operators.similarity import (
-    _ivfpq_meta,
-    _pq_index_meta,
     ann_index_kind,
     ivfpq_append_index,
     pq_append_index,
+)
+from flink_etl_spark.staged import (
+    COMPACT_PLAN,
+    IVFPQ_META,
+    PQ_META,
+    _hadoop_fs,
+    _staging_path,
+    check_compact_every,
+    files_for_bytes,
+    foreach_batch_sink,
+    subdir_names,
 )
 
 
@@ -57,25 +66,10 @@ def _ann_data_dirs(spark: SparkSession, index_path: str) -> list[str]:
     """The append-accreting data directories of a staged ANN index:
     every `cells/cell_id=N/` for IVF-PQ, the flat `codes/` for PQ.
     Driver-side FS listing, never a data scan."""
-    from flink_etl_spark.operators.merge import _hadoop_fs
-
     if ann_index_kind(spark, index_path) == "pq":
         return [f"{index_path}/codes"]
-    fs, root = _hadoop_fs(spark, f"{index_path}/cells")
-    dirs = []
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("cell_id="):
-            dirs.append(f"{index_path}/cells/{name}")
-    return sorted(dirs)
-
-
-#: roll-forward manifest for the additive compaction swap — written
-#: INSIDE the staging dir (underscore name: invisible to Spark's file
-#: listing) AFTER the staged rewrite is signature-verified, deleted
-#: with the staging dir as the swap's last step; its presence marks a
-#: swap in flight that `recover_ann_index` completes
-_PLAN_NAME = "_COMPACT_PLAN.json"
+    cells = f"{index_path}/cells"
+    return [f"{cells}/{n}" for n in subdir_names(spark, cells, "cell_id=")]
 
 
 def _data_file_names(fs, dirpath) -> list[str]:
@@ -107,8 +101,6 @@ def _complete_additive_swap(
     yet) so probes can run a real search inside the window —
     `tools/ann_soak.py` phase 3 exercises it on every swapped
     directory."""
-    from flink_etl_spark.operators.merge import _hadoop_fs, _staging_path
-
     # Disjointness is a hard precondition: the loop below skips a move
     # when the destination exists and then unconditionally deletes every
     # `originals` name — a staged name colliding with an original would
@@ -171,17 +163,11 @@ def _recover_dir(spark: SparkSession, d: str) -> int:
     carrying a `_COMPACT_PLAN.json`) rolls FORWARD; anything else
     (stale plan-less staging, or the pre-r10 delete+rename layout's
     missing-target crash) goes through `recover_snapshot`'s rules."""
-    from flink_etl_spark.operators.merge import (
-        _hadoop_fs,
-        _staging_path,
-        recover_snapshot,
-    )
-
-    from flink_etl_spark.operators.similarity import _read_json_sidecar
+    from flink_etl_spark.operators.merge import recover_snapshot
 
     fs, sp = _hadoop_fs(spark, _staging_path(d))
     if fs.exists(sp):
-        plan = _read_json_sidecar(spark, f"{_staging_path(d)}/{_PLAN_NAME}")
+        plan = COMPACT_PLAN.read(spark, _staging_path(d))
         if plan is not None:
             _complete_additive_swap(spark, d, plan)
             return 1
@@ -201,21 +187,11 @@ def recover_ann_index(spark: SparkSession, index_path: str) -> int:
     crashes (whose window DID silently hide the mid-swap directory)
     heal through `recover_snapshot`. Returns the number of directories
     recovered."""
-    from flink_etl_spark.operators.merge import _hadoop_fs
-
     kind = ann_index_kind(spark, index_path)
     if kind == "pq":
         return _recover_dir(spark, f"{index_path}/codes")
-    recovered = 0
-    fs, staging_root = _hadoop_fs(spark, f"{index_path}/cells/_staging")
-    if fs.exists(staging_root):
-        for st in fs.listStatus(staging_root):
-            name = st.getPath().getName()
-            if name.startswith("cell_id="):
-                recovered += _recover_dir(
-                    spark, f"{index_path}/cells/{name}"
-                )
-    return recovered
+    staged = subdir_names(spark, f"{index_path}/cells/_staging", "cell_id=")
+    return sum(_recover_dir(spark, f"{index_path}/cells/{n}") for n in staged)
 
 
 def _dir_signature(df: DataFrame) -> tuple:
@@ -290,12 +266,7 @@ def compact_ann_index(
     steady-state cost is proportional to the cells touched since the
     last compaction, not the index."""
     from flink_etl_spark.operators.maintenance import partition_file_count
-    from flink_etl_spark.operators.merge import (
-        _hadoop_fs,
-        _staging_path,
-        stage_snapshot,
-    )
-    from flink_etl_spark.operators.similarity import _write_json_sidecar
+    from flink_etl_spark.operators.merge import stage_snapshot
 
     if target_files is not None and target_files < 1:
         raise ValueError(f"target_files must be >= 1, got {target_files}")
@@ -305,8 +276,7 @@ def compact_ann_index(
         before_files = partition_file_count(spark, d)
         if target_files is None:
             fs, hp = _hadoop_fs(spark, d)
-            nbytes = fs.getContentSummary(hp).getLength()
-            tgt = max(1, -(-nbytes // (128 << 20)))
+            tgt = files_for_bytes(fs.getContentSummary(hp).getLength())
         else:
             tgt = target_files
         if before_files <= tgt:
@@ -341,10 +311,9 @@ def compact_ann_index(
                 f"names colliding with the originals ({sorted(clash)[:3]}"
                 "...) — refusing the additive swap; staged copy deleted"
             )
-        _write_json_sidecar(
-            spark,
-            f"{_staging_path(d)}/{_PLAN_NAME}",
-            {"version": 1, "originals": originals, "staged": staged_names},
+        COMPACT_PLAN.write(
+            spark, _staging_path(d),
+            {"originals": originals, "staged": staged_names},
         )
         _complete_additive_swap(
             spark, d, {"originals": originals, "staged": staged_names},
@@ -403,10 +372,7 @@ def start_continuous_ann_index(
     `pq_rebuild_index` and re-attach."""
     if kind not in ("ivfpq", "pq"):
         raise ValueError(f"kind must be 'ivfpq' or 'pq', got {kind!r}")
-    if compact_every is not None and compact_every < 1:
-        raise ValueError(
-            f"compact_every must be >= 1 or None, got {compact_every}"
-        )
+    check_compact_every(compact_every)
     if drift_check_every is not None and drift_check_every < 1:
         raise ValueError(
             f"drift_check_every must be >= 1 or None, got "
@@ -416,14 +382,16 @@ def start_continuous_ann_index(
     # fail fast: a missing/incompatible index raises HERE, not inside
     # the first micro-batch (where it would poison the checkpoint)
     if kind == "ivfpq":
-        if _ivfpq_meta(spark, index_path) is None:
+        meta = IVFPQ_META.read(spark, index_path)
+        if meta is None:
             raise ValueError(
                 f"no IVF-PQ index at {index_path} — run ivfpq_build_index "
                 "over a bootstrap corpus before attaching the stream"
             )
+        IVFPQ_META.check_version(meta, index_path)
         append = ivfpq_append_index
     else:
-        _pq_index_meta(spark, index_path)  # raises when absent/drifted
+        meta = PQ_META.require(spark, index_path)  # raises when absent/drifted
         append = pq_append_index
     # a crash inside a prior compaction's delete+rename window leaves
     # one directory missing with its staged replacement next to it —
@@ -440,20 +408,15 @@ def start_continuous_ann_index(
     # copy re-localized per check is cheap and session-correct inside
     # foreachBatch (the batch session can be a clone of the attach
     # session).
-    drift_meta = drift_rows = drift_schema = None
+    drift_rows = drift_schema = None
     if drift_check_every:
-        if kind == "ivfpq":
-            drift_meta = _ivfpq_meta(spark, index_path)
-            ref = spark.read.parquet(f"{index_path}/centroids")
-        else:
-            drift_meta = _pq_index_meta(spark, index_path)
-            ref = spark.read.parquet(f"{index_path}/codebooks")
+        ref = spark.read.parquet(
+            f"{index_path}/{'centroids' if kind == 'ivfpq' else 'codebooks'}"
+        )
         drift_schema = ref.schema
         drift_rows = ref.collect()
 
-    def _step(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
+    def step(batch: DataFrame, batch_id: int) -> None:
         if drift_check_every and batch_id % drift_check_every == 0:
             from flink_etl_spark.operators.similarity import (
                 ann_drift_check,
@@ -467,25 +430,19 @@ def start_continuous_ann_index(
                 ann_drift_check(
                     batch.sparkSession, index_path, batch,
                     id_col=id_col, vec_col=vec_col,
-                    meta=drift_meta, centroids=ref,
+                    meta=meta, centroids=ref,
                 )
             else:
                 pq_drift_check(
                     batch.sparkSession, index_path, batch, vec_col=vec_col,
-                    meta=drift_meta, codebooks=ref,
+                    meta=meta, codebooks=ref,
                 )
         append(
             batch.sparkSession, batch, index_path,
             id_col=id_col, vec_col=vec_col,
         )
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            compact_ann_index(batch.sparkSession, index_path)
 
-    writer = (
-        embs.writeStream.foreachBatch(_step)
-        .option("checkpointLocation", checkpoint_location)
-        .outputMode("append")
+    return foreach_batch_sink(
+        embs, step, checkpoint_location, available_now, compact_every,
+        lambda spark, batch_id: compact_ann_index(spark, index_path),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -31,43 +31,23 @@ batch stage — here it rides the ingest stream itself.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
-from flink_etl_spark.operators.prep import (
-    _check_substr_meta,
-    _substring_scrub,
-    _write_substr_meta,
+from flink_etl_spark.operators.prep import _substring_scrub
+from flink_etl_spark.staged import (
+    SUBSTR_META,
+    batch_dir,
+    check_compact_every,
+    compact_batch_index,
+    foreach_batch_sink,
+    index_so_far,
 )
 
-
-def _index_so_far(
-    spark: SparkSession, index_path: str, batch_id: int, key: str
-) -> DataFrame:
-    """The anchor-key index visible to batch `batch_id`: every
-    partition with a strictly smaller id. Partition pruning keeps the
-    current batch's own directory (a possible earlier attempt of this
-    very batch) out of the scan — the replay-safety core. Before any
-    batch has staged keys the read fails schema inference; that IS the
-    empty index."""
-    from pyspark.errors import AnalysisException
-
-    key_type = "string" if key == "digest" else "bigint"
-    try:
-        # the engine session disables partition-column type inference
-        # (RUNTIME_CONFS: dt= partitions are strings), so batch_id
-        # arrives as a STRING — the explicit bigint cast is load-
-        # bearing: a lexicographic "10" < "9" comparison would corrupt
-        # the pruning from batch 10 on
-        return (
-            spark.read.option("basePath", index_path)
-            .parquet(index_path)
-            .filter(F.col("batch_id").cast("bigint") < F.lit(batch_id))
-            .select("anchor_key")
-        )
-    except AnalysisException:
-        # path absent / only the meta sidecar present: nothing staged
-        return spark.createDataFrame([], f"anchor_key {key_type}")
+#: fold the anchor-key index's ``batch_id < horizon`` partitions into one
+#: (`staged.compact_batch_index` — replay, crash-safety and sizing
+#: contracts there)
+compact_dedup_index = compact_batch_index
 
 
 def dedup_batch_step(
@@ -95,10 +75,13 @@ def dedup_batch_step(
 
     spark = batch.sparkSession
     params = {"key": key, "min_tokens": min_tokens, "winnow": winnow}
-    if not _check_substr_meta(spark, index_path, params):  # raises on drift
-        _write_substr_meta(spark, index_path, params)
+    if not SUBSTR_META.check(spark, index_path, params):  # raises on drift
+        SUBSTR_META.write(spark, index_path, params)
 
-    index = _index_so_far(spark, index_path, batch_id, key)
+    index = index_so_far(
+        spark, index_path, batch_id, "anchor_key",
+        "string" if key == "digest" else "bigint",
+    )
     with_anchors = _substring_anchors(
         batch, min_tokens, 1, id_col, text_col, key
     )
@@ -106,116 +89,13 @@ def dedup_batch_step(
         with_anchors, index, min_tokens, winnow, id_col, out_col,
         broadcast_batch,
     )
-    deduped.write.mode("overwrite").parquet(
-        f"{output_path}/batch_id={batch_id}"
-    )
+    deduped.write.mode("overwrite").parquet(batch_dir(output_path, batch_id))
     keys = (
         _substring_narrow(with_anchors, id_col, winnow)
         .select(F.col("_k").alias("anchor_key"))
         .distinct()
     )
-    keys.write.mode("overwrite").parquet(f"{index_path}/batch_id={batch_id}")
-
-
-def _list_index_partitions(spark: SparkSession, index_path: str) -> list[int]:
-    """Sorted batch ids of the `batch_id=N` partition directories
-    currently present under the index root (Hadoop-FS portable)."""
-    from flink_etl_spark.operators.merge import _hadoop_fs
-
-    fs, root = _hadoop_fs(spark, index_path)
-    if not fs.exists(root):
-        return []
-    ids = []
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("batch_id="):
-            try:
-                ids.append(int(name.split("=", 1)[1]))
-            except ValueError:
-                continue
-    return sorted(ids)
-
-
-def compact_dedup_index(
-    spark: SparkSession,
-    index_path: str,
-    horizon: int | None = None,
-    target_files: int | None = None,
-) -> int:
-    """Fold every index partition with ``batch_id < horizon`` into ONE
-    consolidated partition — the maintenance op that keeps the
-    continuous-dedup index from accreting a directory per micro-batch
-    forever (at a batch per minute, a quarter's run is ~130k
-    directories, and `_index_so_far` lists all of them every batch: a
-    driver-metadata scale-killer plus the classic small-files
-    problem). Returns the number of partition directories folded
-    (0 = nothing to do).
-
-    REPLAY INVARIANT (why this is safe): a scrub of batch M reads
-    partitions ``batch_id < M``. The consolidated partition gets a
-    FRESH NEGATIVE id ``c = min(-1, min_present - 1)`` — always
-    ``< M`` for every real batch, and never a directory a replay
-    excludes-by-equality — and holds exactly the distinct keys of the
-    folded batches, all ``< horizon``. So for every batch
-    ``M >= horizon``, {partitions < M} spans the identical key set
-    before and after compaction. foreachBatch can only replay the
-    LATEST committed batch, hence the default
-    ``horizon = max present id``: the one replayable batch still sees
-    exactly the index state its first run saw. Pass a lower horizon
-    only to keep more history unfolded; NEVER pass one above a batch
-    that may still replay.
-
-    Crash safety, step by step: (1) the consolidated write targets a
-    never-before-used directory — a crash mid-write leaves ignorable
-    `_temporary` junk or a partial key subset that merely DUPLICATES
-    still-present originals (every lookup is a semi-join; duplicate
-    keys are harmless); (2) originals are deleted only after the
-    write commits — a crash mid-delete leaves harmless duplicates;
-    (3) a rerun folds the leftovers (including the previous
-    consolidated partition, ids strictly decrease) and converges.
-
-    ``target_files``: file count for the consolidated partition;
-    default sizes it from the folded input bytes at ~128 MB/file
-    (a distinct at default shuffle parallelism would re-create the
-    small-files problem this op exists to fix).
-
-    Run between micro-batches (or while the stream is down): a scrub
-    that listed a folded directory right before its deletion can hit
-    a FileNotFound and retry — the invariant holds on retry, but the
-    wasted work is avoidable."""
-    parts = _list_index_partitions(spark, index_path)
-    if not parts:
-        return 0
-    if horizon is None:
-        horizon = parts[-1]
-    folded = [p for p in parts if p < horizon]
-    if len(folded) < 2:
-        return 0
-
-    from flink_etl_spark.operators.merge import _hadoop_fs
-
-    if target_files is None:
-        total = 0
-        for p in folded:
-            fs, hp = _hadoop_fs(spark, f"{index_path}/batch_id={p}")
-            total += fs.getContentSummary(hp).getLength()
-        target_files = max(1, -(-total // (128 << 20)))
-
-    consolidated = min(-1, folded[0] - 1)
-    (
-        spark.read.option("basePath", index_path)
-        .parquet(index_path)
-        .filter(F.col("batch_id").cast("bigint") < F.lit(horizon))
-        .select("anchor_key")
-        .distinct()
-        .coalesce(target_files)
-        .write.mode("overwrite")
-        .parquet(f"{index_path}/batch_id={consolidated}")
-    )
-    for p in folded:
-        fs, hp = _hadoop_fs(spark, f"{index_path}/batch_id={p}")
-        fs.delete(hp, True)
-    return len(folded)
+    keys.write.mode("overwrite").parquet(batch_dir(index_path, batch_id))
 
 
 def start_continuous_dedup(
@@ -248,10 +128,7 @@ def start_continuous_dedup(
     serialized, the horizon preserves the replay invariant, and a
     replayed batch re-runs the compaction as a no-op (fewer than two
     foldable directories remain)."""
-    if compact_every is not None and compact_every < 1:
-        raise ValueError(
-            f"compact_every must be >= 1 or None, got {compact_every}"
-        )
+    check_compact_every(compact_every)
     if min_tokens < 1:
         raise ValueError(f"min_tokens must be >= 1, got {min_tokens}")
     if not (1 <= winnow <= min_tokens):
@@ -262,23 +139,15 @@ def start_continuous_dedup(
     if key not in ("hash64", "digest"):
         raise ValueError(f"key must be 'hash64' or 'digest', got {key!r}")
 
-    def _step(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
+    def step(batch: DataFrame, batch_id: int) -> None:
         dedup_batch_step(
             batch, batch_id, index_path, output_path, min_tokens, winnow,
             id_col, text_col, key, out_col, broadcast_batch,
         )
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            compact_dedup_index(
-                batch.sparkSession, index_path, horizon=batch_id
-            )
 
-    writer = (
-        docs.writeStream.foreachBatch(_step)
-        .option("checkpointLocation", checkpoint_location)
-        .outputMode("append")
+    return foreach_batch_sink(
+        docs, step, checkpoint_location, available_now, compact_every,
+        lambda spark, batch_id: compact_dedup_index(
+            spark, index_path, horizon=batch_id
+        ),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

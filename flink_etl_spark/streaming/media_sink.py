@@ -53,83 +53,25 @@ this closes the media family's lifecycle gap (r13 verdict №5).
 
 from __future__ import annotations
 
-import json
-
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
-_MEDIA_META_VERSION = 1
+from flink_etl_spark.staged import (
+    MEDIA_META,
+    batch_dir,
+    check_compact_every,
+    compact_batch_index,
+    foreach_batch_sink,
+    index_so_far,
+)
+
 _SIG_BITS = {"ahash": 64, "dhash": 63, "dcthash": 63}
 
-
-def _media_meta_io(spark: SparkSession, index_path: str):
-    from flink_etl_spark.operators.merge import _hadoop_fs
-
-    return _hadoop_fs(spark, f"{index_path}/_MEDIA_META.json")
-
-
-def _write_media_meta(spark: SparkSession, index_path: str, params: dict) -> None:
-    fs, p = _media_meta_io(spark, index_path)
-    out = fs.create(p, True)
-    try:
-        out.write(bytearray(json.dumps(
-            {"version": _MEDIA_META_VERSION, **params}).encode()))
-    finally:
-        out.close()
-
-
-def _check_media_meta(spark: SparkSession, index_path: str, params: dict) -> bool:
-    """Raise when the staged signature index disagrees with the
-    caller's (hash_col, max_hamming): signatures from a different hash
-    never match, so every cross-batch hit would SILENTLY vanish — the
-    same foot-gun `_PROFILE_META.json` closes for MinHash. Returns
-    False when no sidecar exists yet."""
-    fs, p = _media_meta_io(spark, index_path)
-    if not fs.exists(p):
-        return False
-    stream = fs.open(p)
-    try:
-        raw = spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    meta = json.loads(raw)
-    want = {"version": _MEDIA_META_VERSION, **params}
-    mismatched = {
-        k: (meta.get(k), v) for k, v in want.items() if meta.get(k) != v
-    }
-    if mismatched:
-        detail = ", ".join(
-            f"{k}: staged={got!r} caller={exp!r}"
-            for k, (got, exp) in mismatched.items()
-        )
-        raise ValueError(
-            f"staged media signature index at {index_path} is "
-            f"incompatible with this call ({detail}); signatures from "
-            "mismatched parameters never match, silently losing every "
-            "cross-batch hit — use a fresh index path or match the "
-            "staged parameters"
-        )
-    return True
-
-
-def _sig_index_so_far(
-    spark: SparkSession, index_path: str, batch_id: int
-) -> DataFrame:
-    """Signatures visible to batch `batch_id`: every partition with a
-    strictly smaller id (replay safety — see `dedup_sink._index_so_far`
-    for the casting and pruning notes, replicated here)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return (
-            spark.read.option("basePath", index_path)
-            .parquet(index_path)
-            .filter(F.col("batch_id").cast("bigint") < F.lit(batch_id))
-            .select("sig")
-        )
-    except AnalysisException:
-        return spark.createDataFrame([], "sig bigint")
+#: fold the signature index's ``batch_id < horizon`` partitions into one
+#: (`staged.compact_batch_index` — replay, crash-safety and sizing
+#: contracts there)
+compact_media_index = compact_batch_index
 
 
 def _band_semi_join(
@@ -197,8 +139,9 @@ def media_batch_step(
             f"hash_col must be one of {sorted(_SIG_BITS)}, got {hash_col!r}"
         )
     params = {"hash_col": hash_col, "max_hamming": max_hamming}
-    if not _check_media_meta(spark, index_path, params):
-        _write_media_meta(spark, index_path, params)
+    # signatures from a different hash never match: a mismatch raises
+    if not MEDIA_META.check(spark, index_path, params):
+        MEDIA_META.write(spark, index_path, params)
     bits = _SIG_BITS[hash_col]
 
     # within-batch: collapse-first clustering, keep min-id reps.
@@ -221,14 +164,14 @@ def media_batch_step(
     rep_sigs = all_sigs.join(
         reps.withColumnsRenamed({id_col: "media_id"}), "media_id"
     )
-    index = _sig_index_so_far(spark, index_path, batch_id)
+    index = index_so_far(spark, index_path, batch_id, "sig", "bigint")
     hits = _band_semi_join(rep_sigs, index, bits, max_hamming, n_chunks)
     kept = rep_sigs.join(hits, "media_id", "left_anti")
     (
         batch.withColumnsRenamed({id_col: "media_id"})
         .join(kept.select("media_id"), "media_id")
         .write.mode("overwrite")
-        .parquet(f"{output_path}/batch_id={batch_id}")
+        .parquet(batch_dir(output_path, batch_id))
     )
     # stage ALL of the batch's distinct signatures — kept AND dropped:
     # a dropped near-dup's signature still denotes seen content, and
@@ -238,55 +181,8 @@ def media_batch_step(
     # semantics one hop better than kept-only staging. Index growth is
     # 8 bytes per distinct signature either way.
     all_sigs.select("sig").distinct().write.mode("overwrite").parquet(
-        f"{index_path}/batch_id={batch_id}"
+        batch_dir(index_path, batch_id)
     )
-
-
-def compact_media_index(
-    spark: SparkSession,
-    index_path: str,
-    horizon: int | None = None,
-    target_files: int | None = None,
-) -> int:
-    """Fold every signature-index partition with ``batch_id < horizon``
-    into ONE consolidated partition — `dedup_sink.compact_dedup_index`
-    for the media index, same replay invariant (consolidated partition
-    gets a fresh NEGATIVE id, always visible to every real batch; the
-    key set spanned by {partitions < M} is unchanged for all M >=
-    horizon), same crash-safety steps (write new dir, then delete
-    originals; duplicates are harmless to a semi-join)."""
-    from flink_etl_spark.operators.merge import _hadoop_fs
-    from flink_etl_spark.streaming.dedup_sink import _list_index_partitions
-
-    parts = _list_index_partitions(spark, index_path)
-    if not parts:
-        return 0
-    if horizon is None:
-        horizon = parts[-1]
-    folded = [p for p in parts if p < horizon]
-    if len(folded) < 2:
-        return 0
-    if target_files is None:
-        total = 0
-        for p in folded:
-            fs, hp = _hadoop_fs(spark, f"{index_path}/batch_id={p}")
-            total += fs.getContentSummary(hp).getLength()
-        target_files = max(1, -(-total // (128 << 20)))
-    consolidated = min(-1, folded[0] - 1)
-    (
-        spark.read.option("basePath", index_path)
-        .parquet(index_path)
-        .filter(F.col("batch_id").cast("bigint") < F.lit(horizon))
-        .select("sig")
-        .distinct()
-        .coalesce(target_files)
-        .write.mode("overwrite")
-        .parquet(f"{index_path}/batch_id={consolidated}")
-    )
-    for p in folded:
-        fs, hp = _hadoop_fs(spark, f"{index_path}/batch_id={p}")
-        fs.delete(hp, True)
-    return len(folded)
 
 
 def start_continuous_media_dedup(
@@ -309,32 +205,21 @@ def start_continuous_media_dedup(
     ``<index_path>/batch_id=N``. ``compact_every=N`` folds the index
     inside the sink every N-th batch, exactly like
     `start_continuous_dedup`."""
-    if compact_every is not None and compact_every < 1:
-        raise ValueError(
-            f"compact_every must be >= 1 or None, got {compact_every}"
-        )
+    check_compact_every(compact_every)
     if hash_col not in _SIG_BITS:
         raise ValueError(
             f"hash_col must be one of {sorted(_SIG_BITS)}, got {hash_col!r}"
         )
 
-    def _step(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
+    def step(batch: DataFrame, batch_id: int) -> None:
         media_batch_step(
             batch, batch_id, index_path, output_path, max_hamming,
             hash_col, id_col, payload_col, n_chunks,
         )
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            compact_media_index(
-                batch.sparkSession, index_path, horizon=batch_id
-            )
 
-    writer = (
-        media.writeStream.foreachBatch(_step)
-        .option("checkpointLocation", checkpoint_location)
-        .outputMode("append")
+    return foreach_batch_sink(
+        media, step, checkpoint_location, available_now, compact_every,
+        lambda spark, batch_id: compact_media_index(
+            spark, index_path, horizon=batch_id
+        ),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

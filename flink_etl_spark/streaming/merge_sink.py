@@ -42,6 +42,7 @@ from flink_etl_spark.operators.merge import (
     snapshot_exists,
     stage_snapshot,
 )
+from flink_etl_spark.staged import foreach_batch_sink, subdir_names
 
 #: chars that never need Hive path escaping — the ISO date alphabet the
 #: rollup's internally derived to_date() partition values live in
@@ -158,20 +159,13 @@ def start_continuous_merge(
     yields the same snapshot), so replays converge."""
 
     def _merge(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
         merge_batch_into_snapshot(
             batch.sparkSession, batch, snapshot_path, keys, order_by
         )
 
-    writer = (
-        changes.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_location)
-        .outputMode("append")
+    return foreach_batch_sink(
+        changes, _merge, checkpoint_location, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_continuous_rollup(
@@ -263,8 +257,6 @@ def start_continuous_rollup(
         agg = agg.withColumn(partition_col, F.to_date("bucket_start"))
 
     def _upsert(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
         spark = batch.sparkSession
         if partition_col is None:
             recover_snapshot(rollup_path, spark)
@@ -306,17 +298,10 @@ def start_continuous_rollup(
         # with every partition staged the root read below cannot even
         # infer a schema. The root-level recover heals a crashed
         # full-snapshot fallback swap the same way.
-        from flink_etl_spark.operators.merge import _hadoop_fs
-
         recover_snapshot(rollup_path, spark)
-        staging_root = f"{rollup_path.rstrip('/')}/_staging"
-        fs, hstag = _hadoop_fs(spark, staging_root)
-        if fs.exists(hstag):
-            for st in fs.listStatus(hstag):
-                recover_snapshot(
-                    f"{rollup_path.rstrip('/')}/{st.getPath().getName()}",
-                    spark,
-                )
+        root = rollup_path.rstrip("/")
+        for name in subdir_names(spark, f"{root}/_staging", ""):
+            recover_snapshot(f"{root}/{name}", spark)
         if len(touched_vals) > max_touched_partitions:
             # pathological batch (years-deep backfill): ONE partitioned
             # full-snapshot rewrite through a root-level staged swap —
@@ -386,11 +371,4 @@ def start_continuous_rollup(
         finally:
             merged.unpersist()
 
-    writer = (
-        agg.writeStream.foreachBatch(_upsert)
-        .option("checkpointLocation", checkpoint_location)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return foreach_batch_sink(agg, _upsert, checkpoint_location, available_now)

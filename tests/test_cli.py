@@ -83,7 +83,7 @@ def test_cli_merge_day_self_recovers_crashed_snapshot(spark, tmp_path):
     import shutil
 
     from flink_etl_spark.operators.canal import with_dt
-    from flink_etl_spark.operators.merge import _staging_path
+    from flink_etl_spark.staged import _staging_path
 
     snap_path = str(tmp_path / "snap")
     spark.createDataFrame(
@@ -188,10 +188,8 @@ def test_cli_dedup_compact_folds_index(spark, tmp_path):
     """The dedup-compact subcommand folds pre-horizon index partitions
     through the same library op the streaming tests pin."""
     from flink_etl_spark.__main__ import main
-    from flink_etl_spark.streaming.dedup_sink import (
-        _list_index_partitions,
-        dedup_batch_step,
-    )
+    from flink_etl_spark.staged import _list_index_partitions
+    from flink_etl_spark.streaming.dedup_sink import dedup_batch_step
 
     idx, out = str(tmp_path / "idx"), str(tmp_path / "out")
     for bid, text in enumerate(
@@ -206,6 +204,41 @@ def test_cli_dedup_compact_folds_index(spark, tmp_path):
     rc = main(["dedup-compact", "--index", idx])
     assert rc == 0
     assert _list_index_partitions(spark, idx) == [-1, 2]
+
+
+def test_cli_ann_round_trip(spark, tmp_path):
+    """Default-set case of the lifecycle below: ann-build -> ann-append
+    (and its replay) -> ann-compact -> ann-search on a small IVF-PQ
+    index returns the library search's rows."""
+    from flink_etl_spark.operators import similarity
+    from flink_etl_spark.sources.tables import load_table
+
+    embs = load_table(spark, "/root/testdata/sf0.001", "embeddings")
+    boot, batch = tmp_path / "boot", tmp_path / "batch"
+    embs.filter("vec_id < 120").write.parquet(str(boot))
+    embs.filter("vec_id >= 120 AND vec_id < 160").write.parquet(str(batch))
+    idx = str(tmp_path / "idx")
+    assert main([
+        "ann-build", "--path", str(boot), "--index", idx,
+        "--kind", "ivfpq", "--m", "8", "--n-codes", "8", "--n-cells", "2",
+    ]) == 0
+    for _ in range(2):  # the replayed append converges
+        assert main(["ann-append", "--path", str(batch), "--index", idx]) == 0
+    assert main(["ann-compact", "--index", idx, "--target-files", "1"]) == 0
+    qdir, out = tmp_path / "q", tmp_path / "res"
+    queries = embs.filter("vec_id < 4")
+    queries.write.parquet(str(qdir))
+    assert main([
+        "ann-search", "--queries", str(qdir), "--index", idx,
+        "--out", str(out), "--k", "3", "--nprobe", "2",
+    ]) == 0
+    got = sorted(map(tuple, spark.read.parquet(str(out)).collect()))
+    want = sorted(map(tuple, similarity.ivfpq_search_index(
+        spark, idx, queries, k=3, nprobe=2
+    ).collect()))
+    assert got == want and len(got) == 12
+    cells = spark.read.parquet(f"{idx}/cells")
+    assert cells.count() == cells.select("vec_id").distinct().count() == 160
 
 
 @pytest.mark.slow
@@ -263,11 +296,9 @@ def test_cli_ann_kind_ambiguity_raises(spark, tmp_path):
     the r8 advisory fix."""
     import pytest
 
-    from flink_etl_spark.operators.similarity import (
-        _write_json_sidecar,
-        ivfpq_build_index,
-    )
+    from flink_etl_spark.operators.similarity import ivfpq_build_index
     from flink_etl_spark.sources.tables import load_table
+    from flink_etl_spark.staged import _write_json_sidecar
 
     embs = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     idx = str(tmp_path / "mixed")
@@ -376,13 +407,10 @@ def test_cli_ann_drift_dispatches_and_exit_codes(spark, tmp_path):
     # exit 3 = monitor OFF (un-checkable baseline), distinct from both
     # healthy (0) and rebuild (2) so a scheduler branching on exit
     # codes never reads "couldn't check" as "healthy" (ADVICE r10)
-    from flink_etl_spark.operators.similarity import (
-        _ivfpq_meta,
-        _write_json_sidecar,
-    )
+    from flink_etl_spark.staged import IVFPQ_META, _write_json_sidecar
 
     idx = str(tmp_path / "idx_ivfpq")
-    meta = _ivfpq_meta(spark, idx)
+    meta = IVFPQ_META.read(spark, idx)
     _write_json_sidecar(
         spark, f"{idx}/_IVFPQ_META.json",
         {**meta, "mean_centroid_sim": 0.0},

@@ -738,6 +738,8 @@ def test_staged_profile_meta_enforces_consistency(spark, tmp_path):
     schema, disjoint band keys, zero old-new pairs)."""
     import pytest as _pytest
 
+    from flink_etl_spark.staged import PROFILE_META
+
     staged = str(tmp_path / "prof")
     corpus = _docs(spark)
     dedup.minhash_stage_profile(corpus, staged, mode="overwrite")
@@ -753,7 +755,7 @@ def test_staged_profile_meta_enforces_consistency(spark, tmp_path):
     assert dedup.minhash_near_dups_incremental(corpus, staged).count() >= 0
     staged2 = str(tmp_path / "prof2")
     dedup.minhash_near_dups(corpus, threshold=0.5, staged_path=staged2)
-    assert dedup._profile_meta(spark, staged2)["hash_fn"] == "xxhash64"
+    assert PROFILE_META.read(spark, staged2)["hash_fn"] == "xxhash64"
 
     # legacy profile without meta: accepted (schema checks still apply)
     legacy = str(tmp_path / "legacy")
@@ -768,6 +770,8 @@ def test_staged_profile_legacy_schema_mismatch_raises(spark, tmp_path):
     vanish. Overwrite-mode re-staging with new params is allowed and
     re-stamps the meta."""
     import pytest as _pytest
+
+    from flink_etl_spark.staged import PROFILE_META
 
     legacy = str(tmp_path / "legacy_cf")
     corpus = _docs(spark)
@@ -784,7 +788,7 @@ def test_staged_profile_legacy_schema_mismatch_raises(spark, tmp_path):
     dedup.minhash_stage_profile(
         corpus, staged, mode="overwrite", hash_fn="charfold"
     )
-    assert dedup._profile_meta(spark, staged)["hash_fn"] == "charfold"
+    assert PROFILE_META.read(spark, staged)["hash_fn"] == "charfold"
 
 
 def test_minhash_token_combine_matches_python_reference(spark):
@@ -1729,7 +1733,7 @@ def test_ivfpq_staged_equals_oneshot_and_sidecar(spark, tmp_path):
     (build/search round-trips through parquet + partition pruning);
     the build writes an _IVFPQ_META.json sidecar and search derives m
     from it. Two one-shot invocations agree (determinism)."""
-    from flink_etl_spark.operators.similarity import _ivfpq_meta
+    from flink_etl_spark.staged import IVFPQ_META
     from flink_etl_spark.sources.tables import load_table
 
     embs = load_table(spark, "/root/testdata/sf0.001", "embeddings")
@@ -1744,7 +1748,7 @@ def test_ivfpq_staged_equals_oneshot_and_sidecar(spark, tmp_path):
 
     idx = str(tmp_path / "ivfpq")
     similarity.ivfpq_build_index(embs, idx, n_cells=4, m=8, n_codes=16)
-    meta = _ivfpq_meta(spark, idx)
+    meta = IVFPQ_META.read(spark, idx)
     assert 0 < meta.pop("max_cell_frac_observed") <= 1  # r9 census field
     assert -1 <= meta.pop("mean_centroid_sim") <= 1  # r9 drift baseline
     assert meta == {"version": 1, "n_cells": 4, "m": 8, "n_codes": 16,
@@ -1852,7 +1856,7 @@ def test_ivfpq_auto_cells_knob(spark, tmp_path):
     time: the one-shot result equals the explicit-integer run and the
     sidecar records the RESOLVED count (searches stay knob-free)."""
     from flink_etl_spark.operators.knobs import ivf_auto_cells
-    from flink_etl_spark.operators.similarity import _ivfpq_meta
+    from flink_etl_spark.staged import IVFPQ_META
     from flink_etl_spark.sources.tables import load_table
 
     embs = load_table(spark, "/root/testdata/sf0.001", "embeddings")
@@ -1867,7 +1871,7 @@ def test_ivfpq_auto_cells_knob(spark, tmp_path):
     assert auto == explicit
     idx = str(tmp_path / "auto_idx")
     similarity.ivfpq_build_index(embs, idx, n_cells="auto", m=8, n_codes=16)
-    assert _ivfpq_meta(spark, idx)["n_cells"] == expect
+    assert IVFPQ_META.read(spark, idx)["n_cells"] == expect
 
 
 def test_ivfpq_append_index_equivalence_and_replay(spark, tmp_path):
@@ -2280,7 +2284,7 @@ def test_ivfpq_cell_skew_census_warning_and_split(spark, tmp_path):
 
     import pytest
 
-    from flink_etl_spark.operators.similarity import _ivfpq_meta
+    from flink_etl_spark.staged import IVFPQ_META
 
     dim = 16
     rows = []
@@ -2304,7 +2308,7 @@ def test_ivfpq_cell_skew_census_warning_and_split(spark, tmp_path):
     idx = str(tmp_path / "skewed")
     with pytest.warns(UserWarning, match="one cell holds"):
         similarity.ivfpq_build_index(embs, idx, n_cells=4, m=8, n_codes=16)
-    meta = _ivfpq_meta(spark, idx)
+    meta = IVFPQ_META.read(spark, idx)
     assert meta["max_cell_frac_observed"] > 0.5
     assert meta["n_cells"] == 4
 
@@ -2315,7 +2319,7 @@ def test_ivfpq_cell_skew_census_warning_and_split(spark, tmp_path):
             embs, idx2, n_cells=4, m=8, n_codes=16,
             max_cell_frac=0.25, warn_cell_frac=0.4,
         )
-    meta2 = _ivfpq_meta(spark, idx2)
+    meta2 = IVFPQ_META.read(spark, idx2)
     assert meta2["max_cell_frac_observed"] <= 0.4
     assert meta2["max_cell_frac_observed"] < meta["max_cell_frac_observed"]
     assert meta2["n_cells"] > 4  # sidecar records the RESOLVED count
@@ -2368,7 +2372,7 @@ def test_ivfpq_cell_skew_census_warning_and_split(spark, tmp_path):
             embs, idx4, n_cells=4, m=8, n_codes=16,
             max_cell_frac=0.25, warn_cell_frac=0.4, census_sample=0.5,
         )
-    meta4 = _ivfpq_meta(spark, idx4)
+    meta4 = IVFPQ_META.read(spark, idx4)
     assert meta4["max_cell_frac_observed"] <= 0.4
     idx5 = str(tmp_path / "split_sampled2")
     similarity.ivfpq_build_index(
@@ -2395,7 +2399,7 @@ def test_ivfpq_rebuild_index_equals_fresh_build(spark, tmp_path):
     / sidecar-less rebuilds raise."""
     import pytest
 
-    from flink_etl_spark.operators.similarity import _ivfpq_meta
+    from flink_etl_spark.staged import IVFPQ_META
     from flink_etl_spark.sources.tables import load_table
 
     embs = load_table(spark, "/root/testdata/sf0.001", "embeddings")
@@ -2419,7 +2423,7 @@ def test_ivfpq_rebuild_index_equals_fresh_build(spark, tmp_path):
         for r in spark.read.parquet(f"{p}/cells").collect()
     )
     assert read(new) == read(fresh)
-    assert _ivfpq_meta(spark, new) == _ivfpq_meta(spark, fresh)
+    assert IVFPQ_META.read(spark, new) == IVFPQ_META.read(spark, fresh)
 
     qs = embs.filter("vec_id < 4")
     assert sorted(map(tuple, similarity.ivfpq_search_index(
@@ -2496,12 +2500,9 @@ def test_ann_drift_check_flags_drifted_batches(spark, tmp_path):
     # truthiness-swallowed (never warns) and a NEGATIVE baseline
     # INVERTS the ratio so worse batches read as better — both must
     # warn monitor-off and never recommend a rebuild off bad math
-    from flink_etl_spark.operators.similarity import (
-        _ivfpq_meta,
-        _write_json_sidecar,
-    )
+    from flink_etl_spark.staged import IVFPQ_META, _write_json_sidecar
 
-    meta = _ivfpq_meta(spark, idx)
+    meta = IVFPQ_META.read(spark, idx)
     for bad_baseline in (0.0, -0.4):
         _write_json_sidecar(
             spark, f"{idx}/_IVFPQ_META.json",
@@ -2526,11 +2527,10 @@ def test_pq_drift_check_reconstruction_error_signal(spark, tmp_path):
     import pytest
 
     from flink_etl_spark.operators.similarity import (
-        _pq_index_meta,
-        _write_json_sidecar,
         pq_drift_check,
         pq_recon_error,
     )
+    from flink_etl_spark.staged import PQ_META, _write_json_sidecar
 
     rng = random.Random(11)
     dim = 16
@@ -2547,7 +2547,7 @@ def test_pq_drift_check_reconstruction_error_signal(spark, tmp_path):
     )
     idx = str(tmp_path / "pq")
     similarity.pq_build_index(base, idx, m=8, n_codes=16)
-    meta = _pq_index_meta(spark, idx)
+    meta = PQ_META.require(spark, idx)
     assert meta["mean_recon_err"] > 0
 
     same = spark.createDataFrame(
@@ -2610,11 +2610,11 @@ def test_pq_build_baseline_sample_bounds_the_second_pass(spark, tmp_path):
     import random
 
     from flink_etl_spark.operators.similarity import (
-        _pq_index_meta,
         pq_build_index,
         pq_rebuild_index,
         pq_recon_error,
     )
+    from flink_etl_spark.staged import PQ_META
 
     rng = random.Random(7)
     dim = 8
@@ -2626,7 +2626,7 @@ def test_pq_build_baseline_sample_bounds_the_second_pass(spark, tmp_path):
     )
     idx = str(tmp_path / "big")
     pq_build_index(big, idx, m=4, n_codes=16)
-    meta = _pq_index_meta(spark, idx)
+    meta = PQ_META.require(spark, idx)
     assert meta["baseline_sample"] == 0.05
     assert meta["baseline_sample_effective"] == 0.05  # 25k * 5% >= 1024
     exact = pq_recon_error(
@@ -2639,13 +2639,13 @@ def test_pq_build_baseline_sample_bounds_the_second_pass(spark, tmp_path):
     # rebuild reuses the requested rate from the sidecar
     new = str(tmp_path / "rebuilt")
     pq_rebuild_index(spark, idx, new, big)
-    assert _pq_index_meta(spark, new)["baseline_sample"] == 0.05
+    assert PQ_META.require(spark, new)["baseline_sample"] == 0.05
 
     # small corpus: the sample would hold < 1024 vectors -> full pass
     small = big.filter("vec_id < 500")
     idx2 = str(tmp_path / "small")
     pq_build_index(small, idx2, m=4, n_codes=16)
-    meta2 = _pq_index_meta(spark, idx2)
+    meta2 = PQ_META.require(spark, idx2)
     assert meta2["baseline_sample"] == 0.05
     assert meta2["baseline_sample_effective"] == 1.0
     assert meta2["mean_recon_err"] == pq_recon_error(
@@ -3624,6 +3624,29 @@ def test_bpe_fit_vocab_partitions_can_increase(spark):
     assert got == _ref_bpe_fit(texts, 6)
 
 
+def test_bpe_fit_auto_batch_arm_equals_sequential(spark):
+    """Default-set case of the equivalence below: the arm
+    `batch_merges="auto"` switches to (B = `_BPE_AUTO_BATCH`, fused
+    verify) returns the sequential merge table, counts included, on the
+    tie / overlapping-merge corpus — the B-invariance the switch relies
+    on to never change results."""
+    from flink_etl_spark.operators import text
+
+    texts = ["low lower lowest low low", "aaaa aaa banana bandana",
+             "the the the them theme", "ab ab abc abcd, abcd!"]
+    docs = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)], ["doc_id", "text"]
+    )
+    got = [
+        (r["rank"], r["left"], r["right"], r["pair_count"])
+        for r in text.bpe_fit(
+            docs, 12, vocab_partitions=1,
+            batch_merges=text._BPE_AUTO_BATCH, batch_verify="fused",
+        ).orderBy("rank").collect()
+    ]
+    assert got == _ref_bpe_fit(texts, 12)
+
+
 @pytest.mark.slow
 def test_bpe_fit_batched_equals_sequential(spark):
     """batch_merges is EXACT by construction (`_bpe_truncate_batch`):
@@ -4342,6 +4365,43 @@ def test_ivfpq_parts_fused_matches_anchored(spark):
     got = rows(ivfpq_topk(embs, queries, k=3, n_cells=n_cells,
                           nprobe=2, m=m, n_codes=n_codes))
     assert len(got) > 0
+
+
+def test_local_seed_frame_ceiling_takes_anchored_path(spark, monkeypatch):
+    """Past `_LOCAL_SEED_MAX_VALUES` (head rows x dim) the seed
+    quantizer and the IVF-PQ parts take the anchored corpus derivation
+    — no driver-collected literal frame — with rows identical to the
+    local-frame path. At the ceiling exactly the local frame stays."""
+    from flink_etl_spark.operators import similarity as S
+
+    embs = spark.createDataFrame(
+        [(i, [float((i * 7 + j) % 5) - 1.5 for j in range(8)])
+         for i in range(40)],
+        "vec_id bigint, embedding array<float>",
+    )
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    # ivf_centroids_local: 4 rows x 8 dims; _ivfpq_parts: 8-row head
+    local_cents = S.ivf_centroids_local(embs, 4)
+    local_parts = S._ivfpq_parts(embs, 4, 4, 8, "vec_id", "embedding", 0)
+    assert "inline(" in plan(local_cents)
+    monkeypatch.setattr(S, "_LOCAL_SEED_MAX_VALUES", 4 * 8)
+    assert "inline(" in plan(S.ivf_centroids_local(embs, 4))
+    parts = S._ivfpq_parts(embs, 4, 4, 8, "vec_id", "embedding", 0)
+    for df in (parts[0], parts[2]):  # centroids, codebooks
+        assert "inline(" not in plan(df)
+        assert "ExistingRDD" in plan(df)
+    for got, want in zip(parts, local_parts):
+        assert rows(got) == rows(want)
+    monkeypatch.setattr(S, "_LOCAL_SEED_MAX_VALUES", 4 * 8 - 1)
+    cents = S.ivf_centroids_local(embs, 4)
+    assert "inline(" not in plan(cents) and "ExistingRDD" in plan(cents)
+    assert rows(cents) == rows(local_cents)
 
 
 def test_phash_arrow_engine_matches_expr(spark):

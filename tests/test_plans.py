@@ -210,6 +210,42 @@ def test_spread_inputs_hold_no_pushed_predicates(spark, tmp_path, monkeypatch):
     spark.catalog.clearCache()
 
 
+def test_fingerprints_winnow1_plan_ignores_generate_filter_inference(spark):
+    """`document_fingerprints(winnow=1)` plans the same whether or not
+    the session excludes InferFiltersFromGenerate (only `get_spark`
+    does): below the Generate there is no Filter and no scan
+    DataFilter, either of which would recompute the whole anchor
+    kernel before the projection computes it again. Rows equal the
+    engine session's."""
+    import re
+
+    from flink_etl_spark.operators.prep import document_fingerprints
+
+    conf = "spark.sql.optimizer.excludedRules"
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    for key in ("hash64", "digest"):
+        want = sorted(map(tuple, document_fingerprints(
+            docs, min_tokens=13, winnow=1, key=key
+        ).collect()))
+        saved = spark.conf.get(conf, None)
+        spark.conf.unset(conf)
+        try:
+            fps = document_fingerprints(docs, min_tokens=13, winnow=1, key=key)
+            plan = _executed(fps)
+            got = sorted(map(tuple, fps.collect()))
+        finally:
+            if saved is not None:
+                spark.conf.set(conf, saved)
+        below = plan.split(" Generate ", 1)[1].splitlines()[1:]
+        assert not [
+            line for line in below
+            if re.match(r"[\s+:|-]*(\*\(\d+\) )?Filter ", line)
+        ], (key, plan)
+        scans = [line for line in below if "FileScan" in line]
+        assert scans and all("DataFilters: []" in line for line in scans), key
+        assert got == want, key
+
+
 def test_pipeline_dedup_shuffle_carries_digest_not_text(spark):
     """The composite pipeline's exact-dedup exchange must hash on the
     sha2 digest — a 64-byte key — and must NOT carry the text column:

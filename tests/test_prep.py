@@ -1639,7 +1639,7 @@ def test_dsir_staged_fit_equals_in_memory_and_validates(spark, tmp_path):
 
     with pytest.raises(ValueError, match="no _DSIR_META"):
         dsir_log_weights_staged(raw, str(tmp_path / "nope"))
-    from flink_etl_spark.operators.similarity import _write_json_sidecar
+    from flink_etl_spark.staged import _write_json_sidecar
 
     _write_json_sidecar(
         spark, f"{fit}/_DSIR_META.json",

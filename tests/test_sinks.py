@@ -159,7 +159,8 @@ def test_recover_snapshot_promotes_staging(spark, tmp_path):
     recovery must promote staging instead of losing the snapshot."""
     import shutil
 
-    from flink_etl_spark.operators.merge import _staging_path, recover_snapshot
+    from flink_etl_spark.operators.merge import recover_snapshot
+    from flink_etl_spark.staged import _staging_path
 
     path = str(tmp_path / "snap2")
     spark.createDataFrame([(1, "a")], "id long, v string").write.parquet(path)
@@ -176,7 +177,8 @@ def test_recover_snapshot_cleans_stale_staging(spark, tmp_path):
     a later crash would promote the wrong, older copy) and return False."""
     import os
 
-    from flink_etl_spark.operators.merge import _staging_path, recover_snapshot
+    from flink_etl_spark.operators.merge import recover_snapshot
+    from flink_etl_spark.staged import _staging_path
 
     path = str(tmp_path / "snap3")
     spark.createDataFrame([(1, "new")], "id long, v string").write.parquet(path)
@@ -225,7 +227,7 @@ def test_compact_partition_staging_invisible_to_table_readers(spark, tmp_path):
     `_staging__dt=x` sibling would NOT be skipped — the `_`-prefix rule
     exempts names containing `=` — and a `dt=x__staging` sibling would
     be read as partition dt='x__staging'.)"""
-    from flink_etl_spark.operators.merge import _staging_path
+    from flink_etl_spark.staged import _staging_path
 
     table = str(tmp_path / "tbl2")
     df = spark.createDataFrame(

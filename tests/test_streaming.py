@@ -322,8 +322,8 @@ def test_compact_dedup_index_preserves_scrub_and_replay(spark, tmp_path):
     the compacted index, the in-flight (max) batch replays
     idempotently after compaction, and a second compaction folds the
     previous consolidated partition too."""
+    from flink_etl_spark.staged import _list_index_partitions
     from flink_etl_spark.streaming.dedup_sink import (
-        _list_index_partitions,
         compact_dedup_index,
         dedup_batch_step,
     )
@@ -409,8 +409,8 @@ def test_compact_dedup_index_preserves_scrub_and_replay(spark, tmp_path):
 def test_compact_dedup_index_noop_cases(spark, tmp_path):
     """No partitions, a single partition, or an explicit horizon that
     folds fewer than two directories must all be no-ops."""
+    from flink_etl_spark.staged import _list_index_partitions
     from flink_etl_spark.streaming.dedup_sink import (
-        _list_index_partitions,
         compact_dedup_index,
         dedup_batch_step,
     )
@@ -437,8 +437,8 @@ def test_continuous_dedup_inline_compaction_matches_uncompacted(
     import os
     import time as _time
 
+    from flink_etl_spark.staged import _list_index_partitions
     from flink_etl_spark.streaming.dedup_sink import (
-        _list_index_partitions,
         start_continuous_dedup,
     )
 
@@ -774,12 +774,9 @@ def test_recover_ann_index_heals_crash_window(spark, tmp_path):
     silently MISS the cell. recover_ann_index promotes the staged
     copy; stale staging next to an intact target is swept instead."""
     from flink_etl_spark.operators import similarity
-    from flink_etl_spark.operators.merge import (
-        _hadoop_fs,
-        _staging_path,
-        stage_snapshot,
-    )
+    from flink_etl_spark.operators.merge import stage_snapshot
     from flink_etl_spark.sources.tables import load_table
+    from flink_etl_spark.staged import _hadoop_fs, _staging_path
     from flink_etl_spark.streaming.ann_sink import (
         _ann_data_dirs,
         recover_ann_index,
@@ -823,16 +820,14 @@ def _mid_swap(spark, d, n_moves=None):
     """Drive the additive swap to a chosen crash point: stage a 1-file
     rewrite of `d`, write the roll-forward plan, then move `n_moves`
     staged files into the live dir (None = all). Returns the plan."""
-    from flink_etl_spark.operators.merge import (
+    from flink_etl_spark.operators.merge import stage_snapshot
+    from flink_etl_spark.staged import (
+        COMPACT_PLAN,
         _hadoop_fs,
         _staging_path,
-        stage_snapshot,
+        _write_json_sidecar,
     )
-    from flink_etl_spark.operators.similarity import _write_json_sidecar
-    from flink_etl_spark.streaming.ann_sink import (
-        _PLAN_NAME,
-        _data_file_names,
-    )
+    from flink_etl_spark.streaming.ann_sink import _data_file_names
 
     df = spark.read.parquet(d)
     stage_snapshot(df.repartition(1), d)
@@ -843,7 +838,7 @@ def _mid_swap(spark, d, n_moves=None):
         "originals": _data_file_names(fs, dp),
         "staged": _data_file_names(fs, sp),
     }
-    _write_json_sidecar(spark, f"{_staging_path(d)}/{_PLAN_NAME}", plan)
+    _write_json_sidecar(spark, f"{_staging_path(d)}/{COMPACT_PLAN.name}", plan)
     Path = spark._jvm.org.apache.hadoop.fs.Path
     for name in plan["staged"][:n_moves]:
         assert fs.rename(
@@ -919,10 +914,9 @@ def test_recover_ann_index_rolls_additive_swap_forward(spark, tmp_path):
 
     from flink_etl_spark.operators import similarity
     from flink_etl_spark.operators.maintenance import partition_file_count
-    from flink_etl_spark.operators.merge import _hadoop_fs, _staging_path
     from flink_etl_spark.sources.tables import load_table
+    from flink_etl_spark.staged import _hadoop_fs, _staging_path
     from flink_etl_spark.streaming.ann_sink import (
-        _PLAN_NAME,
         _ann_data_dirs,
         recover_ann_index,
     )
@@ -972,11 +966,13 @@ def test_additive_swap_refuses_colliding_plan(spark, tmp_path):
     import pytest
 
     from flink_etl_spark.operators import similarity
-    from flink_etl_spark.operators.merge import _staging_path
-    from flink_etl_spark.operators.similarity import _write_json_sidecar
     from flink_etl_spark.sources.tables import load_table
+    from flink_etl_spark.staged import (
+        COMPACT_PLAN,
+        _staging_path,
+        _write_json_sidecar,
+    )
     from flink_etl_spark.streaming.ann_sink import (
-        _PLAN_NAME,
         _ann_data_dirs,
         recover_ann_index,
     )
@@ -997,7 +993,7 @@ def test_additive_swap_refuses_colliding_plan(spark, tmp_path):
         "staged": plan["staged"] + [plan["originals"][0]],
     }
     _write_json_sidecar(
-        spark, f"{_staging_path(victim)}/{_PLAN_NAME}", forged
+        spark, f"{_staging_path(victim)}/{COMPACT_PLAN.name}", forged
     )
     with pytest.raises(ValueError, match="both staged and original"):
         recover_ann_index(spark, idx)
@@ -1007,7 +1003,7 @@ def test_additive_swap_refuses_colliding_plan(spark, tmp_path):
 def _delete_originals(spark, d, plan):
     """Complete the additive swap's DELETE step by hand — the window a
     reader whose listing predates it fails loudly inside."""
-    from flink_etl_spark.operators.merge import _hadoop_fs
+    from flink_etl_spark.staged import _hadoop_fs
 
     fs, _ = _hadoop_fs(spark, d)
     Path = spark._jvm.org.apache.hadoop.fs.Path
@@ -1173,10 +1169,8 @@ def test_pq_rebuild_index_and_sink_drift_cadence(spark, tmp_path):
     import pytest
 
     from flink_etl_spark.operators import similarity
-    from flink_etl_spark.operators.similarity import (
-        _read_json_sidecar,
-        pq_rebuild_index,
-    )
+    from flink_etl_spark.operators.similarity import pq_rebuild_index
+    from flink_etl_spark.staged import _read_json_sidecar
     from flink_etl_spark.streaming.ann_sink import (
         start_continuous_ann_index,
     )
@@ -1667,9 +1661,8 @@ def test_compact_media_index_preserves_scrub(spark, tmp_path):
     visible signature set: the scrub of batch N sees the identical
     distinct signatures before and after compaction, and the folded
     directories are replaced by one negative-id partition."""
-    from flink_etl_spark.streaming.dedup_sink import _list_index_partitions
+    from flink_etl_spark.staged import _list_index_partitions, index_so_far
     from flink_etl_spark.streaming.media_sink import (
-        _sig_index_so_far,
         compact_media_index,
         media_batch_step,
     )
@@ -1684,13 +1677,13 @@ def test_compact_media_index_preserves_scrub(spark, tmp_path):
             i, idx, out,
         )
     before = {
-        r.sig for r in _sig_index_so_far(spark, idx, 3).collect()
+        r.sig for r in index_so_far(spark, idx, 3, "sig", "bigint").collect()
     }
     folded = compact_media_index(spark, idx, horizon=2)
     assert folded == 2
     assert _list_index_partitions(spark, idx) == [-1, 2]
     after = {
-        r.sig for r in _sig_index_so_far(spark, idx, 3).collect()
+        r.sig for r in index_so_far(spark, idx, 3, "sig", "bigint").collect()
     }
     assert before == after
     # compaction twice more is a no-op (single foldable dir)

@@ -35,6 +35,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import pyspark.sql.functions as F  # noqa: E402
 
 from flink_etl_spark.session import get_spark  # noqa: E402
+from flink_etl_spark.staged import IVFPQ_META  # noqa: E402
 from flink_etl_spark.operators import similarity as S  # noqa: E402
 from flink_etl_spark.sources.tables import load_table  # noqa: E402
 
@@ -66,7 +67,7 @@ def main() -> None:
         S.ivfpq_build_index(embs, idx, n_cells="auto", m=M, n_codes=N_CODES,
                             n_vecs=n)
         build = time.perf_counter() - t0
-        meta = S._ivfpq_meta(spark, idx)
+        meta = IVFPQ_META.read(spark, idx)
         best = float("inf")
         for _ in range(3):
             spark.catalog.clearCache()

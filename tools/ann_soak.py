@@ -73,7 +73,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from flink_etl_spark.operators.maintenance import partition_file_count  # noqa: E402
-from flink_etl_spark.operators.merge import _hadoop_fs, stage_snapshot  # noqa: E402
+from flink_etl_spark.operators.merge import stage_snapshot  # noqa: E402
+from flink_etl_spark.staged import _hadoop_fs  # noqa: E402
 from flink_etl_spark.operators.similarity import (  # noqa: E402
     ivfpq_append_index,
     ivfpq_build_index,

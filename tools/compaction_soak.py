@@ -38,8 +38,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from flink_etl_spark.session import get_spark  # noqa: E402
+from flink_etl_spark.staged import _list_index_partitions  # noqa: E402
 from flink_etl_spark.streaming.dedup_sink import (  # noqa: E402
-    _list_index_partitions,
     compact_dedup_index,
     dedup_batch_step,
 )

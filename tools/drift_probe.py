@@ -56,7 +56,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import pyspark.sql.functions as F  # noqa: E402
 
 from flink_etl_spark.operators.similarity import (  # noqa: E402
-    _pq_index_meta,
     cosine_topk,
     ivf_assign,
     ivfpq_append_index,
@@ -70,6 +69,7 @@ from flink_etl_spark.operators.similarity import (  # noqa: E402
     pq_search_index,
 )
 from flink_etl_spark.session import get_spark  # noqa: E402
+from flink_etl_spark.staged import PQ_META  # noqa: E402
 
 DIM = 16
 N_BASE = 10_000
@@ -258,7 +258,7 @@ def flat_main() -> None:
     t0 = time.perf_counter()
     pq_build_index(base, base_idx, m=8, n_codes=32)
     build_s = round(time.perf_counter() - t0, 1)
-    baseline_err = _pq_index_meta(spark, base_idx)["mean_recon_err"]
+    baseline_err = PQ_META.require(spark, base_idx)["mean_recon_err"]
 
     out = {
         "kind": "pq_flat",

@@ -47,12 +47,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import pyspark.sql.functions as F  # noqa: E402
 
 from flink_etl_spark.operators.similarity import (  # noqa: E402
-    _ivfpq_meta,
     cosine_topk,
     ivfpq_build_index,
     ivfpq_search_index,
 )
 from flink_etl_spark.session import get_spark  # noqa: E402
+from flink_etl_spark.staged import IVFPQ_META  # noqa: E402
 
 DIM = 16
 K = 5
@@ -147,7 +147,7 @@ def main() -> None:
                 embs, idx, n_cells=cells, m=8, n_codes=32, **kwargs
             )
         build_s = time.perf_counter() - t0
-        meta = _ivfpq_meta(spark, idx)
+        meta = IVFPQ_META.read(spark, idx)
         size_of = {
             r["cell_id"]: r["n"]
             for r in spark.read.parquet(f"{idx}/cells")
