@@ -29,10 +29,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from flink_etl_spark.session import get_spark  # noqa: E402
 from flink_etl_spark import queries as Q  # noqa: E402
-from flink_etl_spark.sources.tables import (  # noqa: E402
-    load_table,
-    rescue_scan_parallelism,
-)
+from flink_etl_spark.sources.tables import load_table  # noqa: E402
 
 
 def _bench_minhash(spark, sf_dir):
@@ -73,11 +70,7 @@ def _bench_ivf(spark, sf_dir):
 
     from flink_etl_spark.operators.similarity import ivf_topk
 
-    # scan rescue (r14): with the zero-shuffle ivf_assign the corpus
-    # side no longer has ANY exchange, so the single-row-group bench
-    # scan would run the whole assignment+scoring on one task; the
-    # rescue is inert at scale (no-op past 256MB input)
-    embs = rescue_scan_parallelism(load_table(spark, sf_dir, "embeddings"))
+    embs = load_table(spark, sf_dir, "embeddings")
     return ivf_topk(embs, embs.filter(F.expr("vec_id < 32")), k=5, n_cells=8, nprobe=2)
 
 
@@ -86,9 +79,7 @@ def _bench_repetition(spark, sf_dir):
     operator; tracked from r4 on (not in comparable_11)."""
     from flink_etl_spark.operators.prep import repetition_stats
 
-    return repetition_stats(
-        rescue_scan_parallelism(load_table(spark, sf_dir, "documents"))
-    )
+    return repetition_stats(load_table(spark, sf_dir, "documents"))
 
 
 def _bench_decontam(spark, sf_dir):
@@ -113,7 +104,7 @@ def _bench_semdedup(spark, sf_dir):
     comparable_11)."""
     from flink_etl_spark.operators.dedup import semdedup
 
-    embs = rescue_scan_parallelism(load_table(spark, sf_dir, "embeddings"))
+    embs = load_table(spark, sf_dir, "embeddings")
     return semdedup(embs, threshold=0.35, n_cells="auto", quantizer="auto")
 
 
@@ -124,20 +115,20 @@ def _bench_span_dedup(spark, sf_dir):
     from flink_etl_spark.operators.prep import span_dedup
 
     return span_dedup(
-        rescue_scan_parallelism(load_table(spark, sf_dir, "documents")),
-        span_tokens=20, scope="global")
+        load_table(spark, sf_dir, "documents"), span_tokens=20, scope="global"
+    )
 
 
 def _bench_substring_dedup(spark, sf_dir):
     """Lee et al. 2022 offset-robust exact substring dedup (r6 prep
     family): stride-1 50-token anchors on packed-fold 8-byte keys,
     min-struct first occurrence, coverage rebuild — benched on the
-    EXACT arm (winnow sampling only gets cheaper). Scan-compute heavy
-    single branch -> rescue applies; tracked from r6 on (not in
-    comparable_11)."""
+    EXACT arm (winnow sampling only gets cheaper). The operator spreads
+    the single-row-group bench input over every core itself (inert at
+    scale); tracked from r6 on (not in comparable_11)."""
     from flink_etl_spark.operators.prep import substring_dedup
 
-    docs = rescue_scan_parallelism(load_table(spark, sf_dir, "documents"))
+    docs = load_table(spark, sf_dir, "documents")
     return substring_dedup(docs, min_tokens=50, key="hash64")
 
 
@@ -172,9 +163,7 @@ def _bench_ivfpq(spark, sf_dir):
 
     from flink_etl_spark.operators.similarity import ivfpq_topk
 
-    # scan rescue (r14): same argument as _bench_ivf — the PQ encode
-    # fold is the dominant per-row cost and otherwise runs one-task
-    embs = rescue_scan_parallelism(load_table(spark, sf_dir, "embeddings"))
+    embs = load_table(spark, sf_dir, "embeddings")
     return ivfpq_topk(
         embs, embs.filter(F.expr("vec_id < 32")),
         k=5, n_cells=8, nprobe=2, m=8, n_codes=16,
@@ -217,7 +206,8 @@ def _bench_dsir_bucketed(spark, sf_dir):
     production arm at 100 TB — per-bucket log ratios pack into one
     broadcast row and per-doc scoring is a zero-shuffle row-local
     fold, vs the exact-id arm's corpus-token-scale feature-key joins
-    (tools/dsir_probe.py: 1.6x faster at 10x, exp 0.11 vs 0.33).
+    (dsir_probe [retired; in git history]: 1.6x faster at 10x, exp
+    0.11 vs 0.33).
     Tracked from r10 on (not in comparable_11)."""
     import pyspark.sql.functions as F
 
@@ -316,32 +306,18 @@ def _bench_phash_pairs(spark, sf_dir):
     """Perceptual-hash media near-dup pairs (r12): aHash every payload
     (pure-JVM 64-span byte pooling, zero shuffle) and run the banded
     Hamming pigeonhole join at max_hamming=8 — the multimodal column's
-    entry into the dedup family. Scan rescue (r14): the hash
-    projection is zero-exchange, so the single-row-group bench scan
-    serialized ~80% of the entry onto one task (measured 5.9 -> 1.1 s
-    with the rescue; inert at scale). Tracked from r12 on (not in
-    comparable_11)."""
+    entry into the dedup family. The hash projection is zero-exchange,
+    so the operator spreads the single-row-group bench input over every
+    core itself (measured 5.9 -> 1.1 s in r14; inert at scale). Tracked
+    from r12 on (not in comparable_11)."""
     from flink_etl_spark.operators.multimodal import (
         make_media_table,
         media_phash_near_dups,
     )
 
-    docs = rescue_scan_parallelism(load_table(spark, sf_dir, "documents"))
+    docs = load_table(spark, sf_dir, "documents")
     media = make_media_table(docs).select("media_id", "payload")
     return media_phash_near_dups(media, max_hamming=8)
-
-
-def _bench_canal_ingest(spark, sf_dir):
-    """The canal_ingest_flatten gate chain with a scan-parallelism
-    rescue on the events scan (r14): the whole envelope->parse->
-    explode->flatten chain is one zero-exchange codegen span, so the
-    single-row-group bench scan ran the JSON round-trip on ONE task
-    (measured 2.9 -> 2.0 s rescued; inert at scale). Same operators,
-    same result — the catalog gate the driver verifies is unchanged."""
-    from flink_etl_spark.catalog.cdc import canal_ingest_flatten
-
-    events = rescue_scan_parallelism(load_table(spark, sf_dir, "events"))
-    return canal_ingest_flatten(spark, sf_dir, events=events)
 
 
 def _bench_doc_profile(spark, sf_dir):
@@ -366,7 +342,7 @@ def _bench_doc_profile(spark, sf_dir):
 #: variants that would skew comparability with earlier rounds.
 HEADLINE = [
     "cdc_merge_day",
-    ("canal_ingest_flatten", _bench_canal_ingest),
+    "canal_ingest_flatten",
     "agg_pricing_summary",
     "join_multiway_region_revenue",
     "asof_join_purchase_click",

@@ -204,11 +204,11 @@ def canal_ingest_flatten(
     'null' token. The oracle computes the same result directly from
     events, verifying the round-trip.
 
-    `events` (r14) lets a caller substitute its own events frame (the
-    bench passes a scan-parallelism-rescued one — the whole chain is a
-    single zero-exchange codegen span, so the single-row-group bench
-    scan otherwise serializes the JSON round-trip onto one task);
-    results are identical, the driver gate path is unchanged."""
+    `events` lets a caller substitute its own events frame; results
+    are identical. The chain is one zero-exchange codegen span and is
+    not spread over the cores (`rescue_scan_parallelism`): its DDL
+    filters sit above any spread and Catalyst pushes them below it,
+    onto the single scan task."""
     if events is None:
         events = _t(spark, sf_dir, "events")
     raw = events.select(

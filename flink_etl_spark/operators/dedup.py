@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 
 from flink_etl_spark.operators.text import micro_floor_ratio
 from flink_etl_spark.session import anchor
+from flink_etl_spark.sources.tables import _spread_anchored, rescue_scan_parallelism
 from flink_etl_spark.functions.hashing import (
     MERSENNE_P,
     MINHASH_COEFFS,
@@ -481,8 +482,6 @@ def minhash_near_dups(
     # filters them. The staged arm gains as well (it writes one file
     # per core): bench.py's sf0.1 staged entry on 4 cores, median of 5
     # calls in each of 5 fresh processes, 2.0 -> 1.3 s.
-    from flink_etl_spark.sources.tables import rescue_scan_parallelism
-
     spread = rescue_scan_parallelism(docs.selectExpr(ident(id_col), ident(text_col)))
     prof = minhash_profile(spread, n_hashes, id_col, text_col, k, hash_fn)
     if staged_path is not None:
@@ -687,7 +686,6 @@ def _star_components(
     edges: DataFrame,
     max_iters: int,
     on_nonconverged: str,
-    _stats: dict | None = None,
 ) -> DataFrame:
     """Connected components by large-star/small-star alternation
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
@@ -719,9 +717,7 @@ def _star_components(
     edges = anchor(edges)
     n_edges = edges.count()
     converged = False
-    rounds = 0
     for _ in range(max_iters):
-        rounds += 1
         # large-star over the symmetric adjacency: m(u) = min(Γ(u), u)
         sym = edges.union(
             edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
@@ -772,8 +768,6 @@ def _star_components(
         if same:
             converged = True
             break
-    if _stats is not None:
-        _stats.update({"rounds": rounds, "converged": converged})
     if not converged:
         _signal_nonconverged(
             "duplicate_clusters(algorithm='star')", max_iters, on_nonconverged
@@ -801,7 +795,6 @@ def duplicate_clusters(
     max_iters: int = 20,
     algorithm: str = "propagation",
     on_nonconverged: str = "raise",
-    _stats: dict | None = None,
 ) -> DataFrame:
     """Connected components over near-dup pairs: every document in a
     pair gets the MINIMUM reachable doc id as its cluster_id — the
@@ -838,10 +831,6 @@ def duplicate_clusters(
     `setCheckpointDir`) — the anchors then use reliable
     `checkpoint()`, which survives executor loss; localCheckpoint
     blocks die with their executor. The loop structure is unchanged.
-
-    ``_stats`` is a PROBE SEAM: pass a dict to receive
-    {"rounds", "converged"} — `tools/cluster_probe.py` uses it to
-    measure the round-count gap between the arms.
     """
     if algorithm not in ("propagation", "star"):
         raise ValueError(
@@ -867,9 +856,7 @@ def duplicate_clusters(
             .filter(F.col("a") != F.col("b"))
             .distinct()
         )
-        labels = _star_components(
-            canon, max_iters, on_nonconverged, _stats=_stats
-        )
+        labels = _star_components(canon, max_iters, on_nonconverged)
         # left join: isolated nodes (self-pair inputs) label themselves
         return nodes.join(labels, "node", "left").select(
             F.col("node").alias("doc_id"),
@@ -889,9 +876,7 @@ def duplicate_clusters(
     # across iterations (asserted in tests/test_extensions.py).
     labels = anchor(labels)
     converged = False
-    rounds = 0
     for _ in range(max_iters):
-        rounds += 1
         neighbor_min = (
             edges.join(labels, edges.b == labels.node)
             .groupBy("a")
@@ -922,8 +907,6 @@ def duplicate_clusters(
             converged = True
             break
     edges.unpersist()
-    if _stats is not None:
-        _stats.update({"rounds": rounds, "converged": converged})
     if not converged:
         _signal_nonconverged(
             "duplicate_clusters(algorithm='propagation')",
@@ -2243,6 +2226,9 @@ def semdedup_pairs(
         if n_vecs is None:
             n_vecs = embs.count()
         quantizer = semdedup_auto_quantizer(n_vecs)
+    # spread an under-split input before the per-vector assignment
+    # math; the centroids and the assignment then read one exchange
+    embs = _spread_anchored(embs.select(id_col, vec_col))
     # persisted for the same reason as the minhash profile: the
     # assignment (windows + the centroid sweep) feeds BOTH sides of
     # the within-cell self-join, and Spark does not reuse the exchange

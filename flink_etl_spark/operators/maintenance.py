@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 from flink_etl_spark.operators.merge import overwrite_snapshot
-from flink_etl_spark.staged import _hadoop_fs
+from flink_etl_spark.staged import _data_file_names, _hadoop_fs
 
 
 def refuse_streaming_sink_log(spark: SparkSession, table_path: str) -> None:
@@ -56,12 +56,7 @@ def partition_file_count(spark: SparkSession, path: str) -> int:
     fs, hpath = _hadoop_fs(spark, path)
     if not fs.exists(hpath):
         return 0
-    return sum(
-        1
-        for st in fs.listStatus(hpath)
-        if not st.isDirectory()
-        and not st.getPath().getName().startswith((".", "_"))
-    )
+    return len(_data_file_names(fs, hpath))
 
 
 def compact_partition(

@@ -20,6 +20,7 @@ from collections.abc import Iterator
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from flink_etl_spark.session import anchor
+from flink_etl_spark.sources.tables import rescue_scan_parallelism
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -733,7 +734,7 @@ def media_phash_near_dups(
     shuffle uncapped at max_hamming=8.
 
     DEPLOYMENT RULE (r13 — the r12 rule corrected by MEASURED recall,
-    `tools/tail_probe.py --query media_phash_recall`, table in
+    `tail_probe --query media_phash_recall` [retired; in git history], table in
     docs/SCALING.md): `max_bucket` is a SKEW skimmer, valid ONLY
     while the corpus is small relative to the banding's capacity,
     n << max_bucket * 2^(bits div (max_hamming+1)). At max_hamming=8
@@ -781,9 +782,10 @@ def media_phash_near_dups(
         raise ValueError(
             f"hash_col must be 'ahash', 'dhash' or 'dcthash', got {hash_col!r}"
         )
+    spread = rescue_scan_parallelism(media.select(id_col, payload_col))
     sigs = anchor(
         media_perceptual_hashes(
-            media, id_col, payload_col, include_dct=(hash_col == "dcthash")
+            spread, id_col, payload_col, include_dct=(hash_col == "dcthash")
         )
     )
     bits = 64 if hash_col == "ahash" else 63
@@ -804,7 +806,6 @@ def media_phash_dup_clusters(
     max_iters: int = 20,
     n_chunks: int | None = None,
     auto_chunks: bool = True,
-    _stats: dict | None = None,
 ) -> DataFrame:
     """Media near-dup CLUSTERS at corpus scale — the r13 recall
     ladder's recommendation made an operator. The pair join above is
@@ -885,7 +886,6 @@ def media_phash_dup_clusters(
     sig_pairs = hamming_banded_pairs(
         dsig, bits, max_hamming, id_col="_sig_id", sig_col="_sig",
         max_bucket=max_bucket, n_chunks=n_chunks, auto_chunks=auto_chunks,
-        _stats=_stats,
     )
     sig_pairs = anchor(sig_pairs)
     comp = duplicate_clusters(

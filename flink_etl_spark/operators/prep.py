@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame, Window
 from flink_etl_spark.functions.hashing import shingles_sql, tokens_sql
 from flink_etl_spark.functions.sql import ident, lit
 from flink_etl_spark.operators.text import micro_floor_ratio
+from flink_etl_spark.sources.tables import _spread_anchored, rescue_scan_parallelism
 from flink_etl_spark.staged import DSIR_META, NB_META, SUBSTR_META
 
 # ---------------------------------------------------------------------------
@@ -63,13 +64,23 @@ def repetition_stats(
     bigram and a conditional fold for duplicated-trigram chars. The
     former explode + double groupBy shape pushed every gram string
     through two exchanges; this is ~30% faster at sf0.1 and carries
-    ZERO bytes over the network at any scale. Each intermediate array
+    ZERO bytes over the network at scale (a small under-split input is
+    first spread over every core, and the stats are then anchored,
+    `sources.tables._spread_anchored`). Each intermediate array
     is materialized as its own projected column — interpreted
     higher-order functions have no common-subexpression elimination,
     so a reused inline subtree re-evaluates per REFERENCE (measured:
     the inlined form was >100x slower; SPARK-36718 keeps these
     multi-referenced non-cheap aliases from re-collapsing).
     """
+    return _spread_anchored(
+        docs.select(id_col, text_col),
+        lambda d: _repetition_stats(d, id_col, text_col),
+    )
+
+
+def _repetition_stats(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """`repetition_stats` over its (id, text) projection."""
     sid = F.col(id_col)
     base = docs.select(
         sid,
@@ -2005,7 +2016,9 @@ def span_dedup(
     ``scope``:
 
     * ``"within_doc"`` — drop spans repeated inside the SAME document
-      only. Entirely row-local (zero shuffles): first-occurrence is an
+      only. Entirely row-local (zero shuffles at scale; a small
+      under-split input is first spread over every core and its spans
+      anchored, as in both scopes): first-occurrence is an
       index-filter over the span array. O(spans^2) per row with tiny
       constants — fine through ~1k spans/doc; beyond that use global,
       which subsumes it.
@@ -2067,7 +2080,10 @@ def span_dedup(
         F.sequence(F.lit(0), n_spans - 1),
         lambda i: F.concat_ws(" ", F.slice(toks, i * k + 1, span_tokens)),
     )
-    staged = docs.select(F.col(id_col), spans_arr.alias("_spans"))
+    staged = _spread_anchored(
+        docs.select(id_col, text_col),
+        lambda d: d.select(F.col(id_col), spans_arr.alias("_spans")),
+    )
 
     if scope == "within_doc":
         kept = F.filter(
@@ -2238,8 +2254,9 @@ def substring_dedup(
         if reserved == id_col:
             raise ValueError(f"output column {reserved!r} collides with id_col")
 
-    with_anchors = _substring_anchors(
-        docs, min_tokens, stride, id_col, text_col, key
+    with_anchors = _spread_anchored(
+        docs.selectExpr(ident(id_col), ident(text_col)),
+        lambda d: _substring_anchors(d, min_tokens, stride, id_col, text_col, key),
     )
     return _substring_dedup_from_anchors(
         with_anchors, min_tokens, stride, winnow, id_col, out_col
@@ -2595,8 +2612,6 @@ def fingerprint_candidates(
         raise ValueError(f"min_shared must be >= 1, got {min_shared}")
     if max_df is not None and max_df < 1:
         raise ValueError(f"max_df must be >= 1 or None, got {max_df}")
-    from flink_etl_spark.sources.tables import rescue_scan_parallelism
-
     i = ident(id_col)
     spread = rescue_scan_parallelism(docs.selectExpr(i, ident(text_col)))
     fp = document_fingerprints(

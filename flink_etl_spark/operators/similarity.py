@@ -18,7 +18,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
 from flink_etl_spark.functions.vectors import cosine, dot, norm, safe_cosine
-from flink_etl_spark.sources.tables import _plan_size_bytes
+from flink_etl_spark.sources.tables import _plan_size_bytes, _spread_anchored
 from flink_etl_spark.staged import (
     IVFPQ_META,
     PQ_META,
@@ -617,8 +617,8 @@ def split_hot_cells(
     make skew WORSE before it gets better: when a dense mode is
     smeared across several moderately-hot cells, the first round's
     sub-centroids sit INSIDE the mode and attract the whole cluster
-    away from the old cells — tools/skew_probe.py measured a 0.16
-    max-cell-fraction corpus going to 0.43 after one round, then to
+    away from the old cells — skew_probe [retired; in git history]
+    measured a 0.16 max-cell-fraction corpus going to 0.43 after one round, then to
     under the cap on the next. Each round costs one assignment scan;
     the loop stops as soon as no cell exceeds the cap, and the builder
     re-censuses afterwards and warns if residual skew survived
@@ -644,8 +644,8 @@ def split_hot_cells(
     Sub-seeds then come from the sampled slice's members (hash-ordered
     within the sample), so the split is deterministic for a fixed
     (corpus, s) but yields different — equally valid — sub-centroids
-    than the full census. Measured: tools/skew_probe.py --sample
-    (same hot set found, same final skew bound, census scans read
+    than the full census. Measured: `skew_probe --sample` [retired; in
+    git history] (same hot set found, same final skew bound, census scans read
     1/s fewer rows; docs/SCALING.md "IVF cell skew"). An over-small
     sample on a tiny corpus can census 0 rows — the loop then exits
     without splitting; size s to keep >= ~100 sampled members per
@@ -1703,8 +1703,8 @@ def pq_recon_error(
     needing NO ground truth and no centroids (flat PQ has none) —
     frozen codebooks reconstruct a drifted batch worse, so the error
     RISES monotonically as the distribution leaves the build-time
-    corpus (decay curve: `tools/drift_probe.py --flat`, table in
-    docs/SCALING.md). Zero shuffle: the packed codebook broadcasts as
+    corpus (decay curve: `drift_probe --flat` [retired; in git
+    history], table in docs/SCALING.md). Zero shuffle: the packed codebook broadcasts as
     one row, the per-subspace min-distance is a row-local array_min,
     and one avg aggregates the batch. Returns 0.0 for an empty frame
     (and legitimately ~0.0 when every vector was a codebook seed)."""
@@ -1762,8 +1762,8 @@ def pq_drift_check(
     "rebuild_recommended"}`` and warns when the ratio EXCEEDS
     ``rebuild_above`` (errors rise under drift — the inverse sense of
     the IVF-PQ similarity ratio). The default 2.0 comes from the
-    measured curve (`tools/drift_probe.py --flat`): recall is flat
-    until the error roughly doubles and sags beyond it.
+    measured curve (`drift_probe --flat` [retired; in git history]):
+    recall is flat until the error roughly doubles and sags beyond it.
 
     A baseline that is missing (pre-r10 index), zero (every build
     vector was a seed — nothing to reconstruct imperfectly), or
@@ -2176,7 +2176,7 @@ def pq_rebuild_index(
             "pq_rebuild_index(refine_iters=0): a rebuild without Lloyd "
             "refinement cannot move codewords toward a drift-accreted "
             "mode (seeds are the smallest ids — the same measured "
-            "finding as the IVF-PQ rebuild, tools/drift_probe.py); keep "
+            "finding as the IVF-PQ rebuild, docs/SCALING.md); keep "
             "the default unless this is a layout-only rebuild",
             UserWarning,
             stacklevel=2,
@@ -2449,6 +2449,8 @@ def ivfpq_topk(
 
     if rerank < 1:
         raise ValueError(f"rerank must be >= 1, got {rerank}")
+    # the cells, codebooks, codes and rerank all read one spread corpus
+    corpus = _spread_anchored(corpus.select(id_col, vec_col))
     n_cells = resolve_knob(n_cells, ivf_auto_cells, corpus, n_vecs)
     cents, cents_n, cbs, codes = _ivfpq_parts(
         corpus, n_cells, m, n_codes, id_col, vec_col, cell_refine_iters
@@ -2552,7 +2554,7 @@ def ivfpq_build_index(
     `census_sample=` too (hash-sampled census rounds — see
     `split_hot_cells`; the splitting scans otherwise cost up to
     max_rounds FULL corpus passes before the build starts). Measured
-    on a half-in-one-cluster corpus in `tools/skew_probe.py`
+    on a half-in-one-cluster corpus in `skew_probe` [retired; in git history]
     (docs/SCALING.md)."""
     from flink_etl_spark.operators.knobs import ivf_auto_cells, resolve_knob
 
@@ -2595,8 +2597,8 @@ def ivfpq_build_index(
     # baseline drift signal (one broadcast assignment scan): the mean
     # cosine of the BUILD corpus to its assigned centroids, recorded so
     # ann_drift_check can compare every appended batch against it
-    # without ground truth (tools/drift_probe.py derives the rebuild
-    # rule from its decay curve)
+    # without ground truth (drift_probe [retired; in git history] derived
+    # the rebuild rule from its decay curve)
     baseline_sim = mean_centroid_sim(embs, staged_cents, id_col, vec_col)
     IVFPQ_META.write(spark, index_path, {
         "n_cells": resolved_cells, "m": m, "n_codes": n_codes,
@@ -2724,8 +2726,8 @@ def mean_centroid_sim(
     the production-monitorable quantizer-fit signal: one broadcast
     assignment over the frame, NO ground truth needed, and it decays
     monotonically as the distribution leaves the centroids (measured
-    0.912 -> 0.610 over 0..16 sigma of drift, `tools/drift_probe.py`;
-    raw recall is non-monotone and needs ground truth). Returns 0.0
+    0.912 -> 0.610 over 0..16 sigma of drift, `drift_probe` [retired;
+    in git history]; raw recall is non-monotone and needs ground truth). Returns 0.0
     for an empty frame."""
     row = (
         ivf_assign(embs, cents, 1, id_col, vec_col, keep_sim=True)
@@ -2835,8 +2837,8 @@ def ivfpq_rebuild_index(
     census_sample: float = 1.0,
 ) -> None:
     """Periodic rebuild of a staged IVF-PQ index — the operational
-    answer to quantizer drift (`tools/drift_probe.py` measures the
-    decay; DEPLOYMENT.md carries the trigger rule): a frozen-quantizer
+    answer to quantizer drift (`drift_probe` [retired; in git history]
+    measured the decay; DEPLOYMENT.md carries the trigger rule): a frozen-quantizer
     index appended from a moving distribution keeps routing new
     vectors through stale centroids, and ONLY a rebuild re-derives
     them.
@@ -2845,7 +2847,7 @@ def ivfpq_rebuild_index(
     the drift probe PROVED the bare rebuild useless against the very
     drift that triggers this call: id-ordered seed picks never land in
     a late-arriving mode, so refine=0 left recall@5 at 0.30 while
-    refine=3 recovered 1.00 (`tools/drift_probe.py`, curve in
+    refine=3 recovered 1.00 (`drift_probe` [retired; in git history], curve in
     docs/SCALING.md "Quantizer drift"). Passing 0 explicitly is
     allowed (it reproduces a frozen-seed build exactly — useful for
     layout-only rebuilds) but warns, so the operator answering an
@@ -2895,7 +2897,7 @@ def ivfpq_rebuild_index(
             "ivfpq_rebuild_index(cell_refine_iters=0): a rebuild without "
             "Lloyd refinement does NOT recover from quantizer drift "
             "(measured: recall@5 stays at its drifted floor while "
-            "refine>=2 recovers fully — tools/drift_probe.py); keep the "
+            "refine>=2 recovers fully — docs/SCALING.md); keep the "
             "default unless this is a layout-only rebuild",
             UserWarning,
             stacklevel=2,

@@ -958,8 +958,8 @@ def _bpe_ub_truncate(accepted: list, get_bounds) -> list:
 #: batch_verify="fused" for the remainder when the median exceeds the
 #: measured fused-B=16 break-even — L* ~ 0.65 s/action from the
 #: four-arm interleaved R=1024 crossover table (docs/SCALING.md
-#: "Batched BPE"; `tools/bpe_probe.py fit --latency` validated the
-#: arithmetic end to end at R=256/300 ms). 0.7 s is the documented
+#: "Batched BPE"; `bpe_probe fit --latency` [retired; in git history]
+#: validated the arithmetic end to end at R=256/300 ms). 0.7 s is the documented
 #: "extreme driver-to-cluster latency" line, ABOVE the 200-500 ms
 #: stage-cycle band of a busy cluster — so local/normal clusters
 #: stay on the classical B=1 loop and only WAN-notebook/queued-
@@ -1035,7 +1035,7 @@ def bpe_fit(
     is exactly ONE round-trip and the full rounds cut (751 vs 1024,
     27%) is real round-trips. DEPLOYMENT RULE (r14, corrected twice
     by measurement — docs/SCALING.md "Batched BPE",
-    `tools/bpe_probe.py fit [--latency MS] [--fused]`): **the
+    `bpe_probe fit [--latency MS] [--fused]` [retired; in git history]): **the
     classical B=1 loop is the default and the right choice on any
     normal cluster.** Count driver ACTIONS, not rounds: batching's
     verify work costs more compute than the actions it saves unless

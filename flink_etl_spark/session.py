@@ -80,19 +80,11 @@ def get_spark(
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    # the runtime re-apply exists for session REUSE (getOrCreate handed
-    # back an existing session whose confs drifted) — it must not undo
-    # the caller's explicit extra_conf, so overridden keys are excluded
-    # and extra_conf is re-asserted last
-    apply_runtime_confs(spark, exclude=set(extra_conf or ()))
-    if extra_conf:
-        for k, v in extra_conf.items():
-            try:
-                spark.conf.set(k, v)
-            except Exception:
-                pass  # static conf on a reused session: builder had it
-    return spark
+    # getOrCreate applies every builder option: a new session takes them
+    # at creation, a reused one takes the runtime ones through
+    # applyModifiableSettings (static keys only log a warning), and
+    # extra_conf was added last, so it wins over RUNTIME_CONFS
+    return builder.getOrCreate()
 
 
 def apply_runtime_confs(
@@ -103,8 +95,8 @@ def apply_runtime_confs(
     Every conf in RUNTIME_CONFS is runtime-settable in Spark 4.x; the
     try/except guards against future immutability or locked-down
     sessions — the engine then degrades gracefully instead of failing.
-    `exclude` skips keys the caller explicitly overrode (get_spark's
-    extra_conf must win over the engine defaults).
+    `exclude` skips the named keys; no caller in the package passes it
+    since `get_spark` lets `getOrCreate` apply its builder options.
     """
     for k, v in RUNTIME_CONFS.items():
         if exclude and k in exclude:

@@ -19,7 +19,7 @@ from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import LongType
 
-from flink_etl_spark.session import apply_runtime_confs
+from flink_etl_spark.session import anchor, apply_runtime_confs
 
 CANONICAL_TABLES = (
     "region",
@@ -91,9 +91,10 @@ def rescue_scan_parallelism(
       storage-layout problem this helper must not paper over with a
       corpus-wide shuffle; an unknown estimate counts as big).
 
-    An input whose plan already holds an exchange or a cached relation
-    (an adaptive plan) passes through untouched: its width is set by
-    that exchange, and sizing it would run its stages eagerly. The
+    An input whose plan already holds an exchange (an adaptive plan)
+    or a cached relation passes through untouched: its width is set by
+    that exchange or by the cache, and sizing an adaptive plan would
+    run its stages eagerly. The
     decision is plan-only and costs a constant number of py4j calls
     at any scale — the partition count first, the byte estimate only
     for an under-split input.
@@ -107,14 +108,25 @@ def rescue_scan_parallelism(
     above the exchange — Catalyst pushes deterministic filters through
     a round-robin repartition, and a filter over the projection's
     outputs then re-runs the whole projection on the under-split side.
-    `dedup.minhash_near_dups` and `prep.fingerprint_candidates` apply
-    it to their own inputs; `load_table` does not."""
+    An operator whose output a caller may filter, or whose plan reads
+    the spread rows twice, goes through `_spread_anchored` instead.
+    `dedup.minhash_near_dups`, `prep.fingerprint_candidates` and
+    `multimodal.media_phash_near_dups` apply it to their own inputs,
+    and `_spread_anchored` serves `prep`'s `repetition_stats`,
+    `span_dedup` and `substring_dedup`, `dedup.semdedup_pairs` (so
+    `semdedup`) and `similarity.ivfpq_topk`. `load_table` does not, and
+    neither does `ivf_topk` (no measured gain) or the
+    `canal_ingest_flatten` gate (its DDL filters would be pushed below
+    the exchange)."""
     spark = df.sparkSession
     if target is None:
         target = spark.sparkContext.defaultParallelism
     try:
-        plan = df._jdf.queryExecution().executedPlan()
-        if plan.nodeName() == "AdaptiveSparkPlan":
+        # a fresh projection: a frame executed before its .cache() call
+        # keeps its pre-cache plan, and would not show the cached relation
+        plan = df.select("*")._jdf.queryExecution().executedPlan()
+        if (plan.nodeName() == "AdaptiveSparkPlan"
+                or "InMemoryTableScan" in plan.toString()):
             return df
         n_parts = plan.execute().getNumPartitions()
     except (Py4JError, PySparkException):  # e.g. a streaming plan
@@ -125,6 +137,19 @@ def rescue_scan_parallelism(
     if size is None or size > max_bytes:
         return df
     return df.repartition(target)
+
+
+def _spread_anchored(df: DataFrame, build=None) -> DataFrame:
+    """`build(rescue_scan_parallelism(df))`, anchored when the input was
+    spread (`build` defaults to the identity). The anchor ends the plan
+    at the spread rows: a caller's filter on the output cannot be pushed
+    through the round-robin exchange onto the single scan task, and
+    every branch that reads the result reads one exchange. An input
+    that is not spread returns `build(df)` unanchored, so large and
+    streaming inputs keep a lazy plan."""
+    spread = rescue_scan_parallelism(df)
+    out = spread if build is None else build(spread)
+    return out if spread is df else anchor(out)
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names=CANONICAL_TABLES) -> dict[str, DataFrame]:

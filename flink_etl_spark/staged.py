@@ -16,6 +16,7 @@ code path serves file:, hdfs:, s3a:, ...
 from __future__ import annotations
 
 import json
+from collections.abc import Sequence
 from dataclasses import dataclass
 
 import pyspark.sql.functions as F
@@ -50,6 +51,91 @@ def _staging_path(path: str) -> str:
     return f"{parent}/_staging/{base}" if parent else f"_staging/{base}"
 
 
+def stage_snapshot(
+    df: DataFrame,
+    path: str,
+    fmt: str = "parquet",
+    partition_by: Sequence[str] | None = None,
+) -> None:
+    """Phase 1 of the staged swap: materialize `df` to `path`'s staging
+    sibling WITHOUT touching the final directory. Callers replacing
+    SEVERAL directories whose replacement plans all read the same
+    parent (the partitioned rollup sink) must stage ALL of them before
+    promoting ANY: a promote deletes final files that the next staged
+    write's lazy plan still scans (FAILED_READ_FILE.FILE_NOT_EXIST).
+
+    `partition_by` stages a Hive-partitioned layout (`col=value/`
+    subdirs) — the rollup sink's full-snapshot fallback swaps a whole
+    partitioned table root in one staged rename."""
+    w = df.write.mode("overwrite").format(fmt)
+    if partition_by:
+        w = w.partitionBy(*partition_by)
+    w.save(_staging_path(path))
+
+
+def promote_snapshot(spark: SparkSession, path: str) -> None:
+    """Phase 2 of the staged swap: delete the final directory and
+    rename the staged copy into place. The delete+rename window is the
+    crash exposure `recover_snapshot` heals."""
+    staging = _staging_path(path)
+    fs, target = _hadoop_fs(spark, path)
+    _, src = _hadoop_fs(spark, staging)
+    if fs.exists(target):
+        fs.delete(target, True)
+    if not fs.rename(src, target):
+        raise IOError(f"snapshot swap failed: rename {staging} -> {path}")
+
+
+def snapshot_exists(spark: SparkSession, path: str) -> bool:
+    """Hadoop-FS existence check (NOT os.path.exists — wrong answer the
+    moment the default FS is not the driver's local disk)."""
+    fs, hpath = _hadoop_fs(spark, path)
+    return bool(fs.exists(hpath))
+
+
+def recover_snapshot(path: str, spark: SparkSession | None = None) -> bool:
+    """Crash recovery for `overwrite_snapshot`'s delete+rename window:
+    if the target is missing but a complete staging directory exists
+    (the process died between delete and rename), promote the staging
+    copy. Callers that READ the snapshot before merging (foreachBatch
+    sinks) must call this first, or a replayed batch would see an empty
+    snapshot and silently drop every key not in that batch.
+
+    When the target is INTACT but a stale staging dir survives (crash
+    after the staging write, before the delete+rename), the stale copy
+    is deleted — left in place it would silently win the next recovery
+    and roll the snapshot back to the crashed run's output.
+
+    Also probes the pre-r3 LEGACY staging layout `<path>__staging`
+    (replaced by `<parent>/_staging/<base>` — see `_staging_path`), so a
+    deployment that crashed mid-swap under the old layout still
+    self-recovers, and the stale legacy dir — which parses as a bogus
+    partition and breaks partition discovery — is always cleaned up.
+    The current layout wins when both exist (it is the newer write).
+
+    Returns True when a recovery was performed."""
+    spark = spark or SparkSession.getActiveSession()
+    if spark is None:
+        raise RuntimeError("recover_snapshot needs an active SparkSession")
+    fs, target = _hadoop_fs(spark, path)
+    _, staging = _hadoop_fs(spark, _staging_path(path))
+    _, legacy = _hadoop_fs(spark, path.rstrip("/") + "__staging")
+    recovered = False
+    if not fs.exists(target) and fs.exists(staging):
+        if not fs.rename(staging, target):
+            raise IOError(f"snapshot recovery failed: rename to {path}")
+        recovered = True
+    if not fs.exists(target) and fs.exists(legacy):
+        if not fs.rename(legacy, target):
+            raise IOError(f"snapshot recovery failed: rename legacy to {path}")
+        recovered = True
+    if fs.exists(target):
+        for stale in (staging, legacy):
+            if fs.exists(stale):
+                fs.delete(stale, True)  # stale: target survived the crash
+    return recovered
+
+
 def subdir_names(spark: SparkSession, root: str, prefix: str) -> list[str]:
     """Sorted names of the directories under `root` that start with
     `prefix` ([] when `root` is absent) — a driver-side listing, never
@@ -61,6 +147,17 @@ def subdir_names(spark: SparkSession, root: str, prefix: str) -> list[str]:
         st.getPath().getName()
         for st in fs.listStatus(p)
         if st.isDirectory() and st.getPath().getName().startswith(prefix)
+    )
+
+
+def _data_file_names(fs, dirpath) -> list[str]:
+    """Sorted data-file names directly under a directory: subdirectories
+    and hidden or commit files (leading `.` or `_`) are not data."""
+    return sorted(
+        st.getPath().getName()
+        for st in fs.listStatus(dirpath)
+        if not st.isDirectory()
+        and not st.getPath().getName().startswith((".", "_"))
     )
 
 

@@ -23,8 +23,8 @@ quantizer incremental in this package: if the embedding distribution
 moves away from the build-time centroids/codebooks, recall decays —
 rebuild the index periodically (the searches themselves need no
 knowledge of the cadence; parameters travel in the meta sidecar).
-`tools/drift_probe.py` measures the decay curve; docs/DEPLOYMENT.md
-carries the rebuild rule of thumb derived from it.
+`drift_probe` [retired; in git history] measures the decay curve;
+docs/DEPLOYMENT.md carries the rebuild rule of thumb derived from it.
 
 File accretion is handled in-module: every append writes one parquet
 file set per touched partition, so `compact_ann_index` (signature-
@@ -53,6 +53,7 @@ from flink_etl_spark.staged import (
     COMPACT_PLAN,
     IVFPQ_META,
     PQ_META,
+    _data_file_names,
     _hadoop_fs,
     _staging_path,
     check_compact_every,
@@ -70,17 +71,6 @@ def _ann_data_dirs(spark: SparkSession, index_path: str) -> list[str]:
         return [f"{index_path}/codes"]
     cells = f"{index_path}/cells"
     return [f"{cells}/{n}" for n in subdir_names(spark, cells, "cell_id=")]
-
-
-def _data_file_names(fs, dirpath) -> list[str]:
-    """Sorted data-file names directly under a directory (hidden/commit
-    files excluded — the `partition_file_count` convention)."""
-    return sorted(
-        st.getPath().getName()
-        for st in fs.listStatus(dirpath)
-        if not st.isDirectory()
-        and not st.getPath().getName().startswith((".", "_"))
-    )
 
 
 def _complete_additive_swap(

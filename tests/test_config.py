@@ -56,6 +56,28 @@ def test_get_spark_extra_conf_overrides_runtime_confs(spark):
         spark.conf.set(key, prev)
 
 
+def test_get_spark_reuse_takes_static_extra_conf_and_runtime_confs(spark):
+    """On a running session, a static key in extra_conf must not raise
+    (getOrCreate only warns about it), and every RUNTIME_CONFS value
+    holds again even after a caller drifted one."""
+    from flink_etl_spark.session import RUNTIME_CONFS, get_spark
+
+    drift = "spark.sql.sources.partitionColumnTypeInference.enabled"
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set(drift, "true")
+    try:
+        s = get_spark(
+            shuffle_partitions=int(parts),
+            extra_conf={"spark.sql.warehouse.dir": "/nonexistent/warehouse"},
+        )
+        assert s is spark
+        for k, v in RUNTIME_CONFS.items():
+            assert s.conf.get(k) == v, k
+        assert s.conf.get("spark.sql.warehouse.dir") != "/nonexistent/warehouse"
+    finally:
+        spark.conf.set(drift, RUNTIME_CONFS[drift])
+
+
 def test_dynamic_partition_overwrite_restores_on_error(spark):
     """The shared conf pin must restore the caller's mode even when the
     enclosed write raises — a leaked 'dynamic' would change later

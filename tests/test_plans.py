@@ -10,6 +10,7 @@ scale factors."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from flink_etl_spark import queries as Q
 
@@ -208,6 +209,147 @@ def test_spread_inputs_hold_no_pushed_predicates(spark, tmp_path, monkeypatch):
     assert len(written) == 1
     _assert_spread_is_scan_only(written[0]._jdf.queryExecution().executedPlan().toString())
     spark.catalog.clearCache()
+
+
+#: operators that spread their own under-split input over every core
+SPREADING_OPERATORS = (
+    "repetition_stats", "span_dedup", "substring_dedup", "semdedup",
+    "ivfpq_topk", "media_phash_near_dups",
+)
+
+#: expressions that must never run below a round-robin spread
+_HEAVY = ("split(", "xxhash64(", "sha2(", "aggregate(", "zip_with(",
+          "transform(", "from_json(", "to_json(")
+
+
+def _spread_cases() -> dict:
+    """operator -> (table, call) for `SPREADING_OPERATORS`."""
+    from flink_etl_spark.operators import multimodal
+    from flink_etl_spark.operators.dedup import semdedup
+    from flink_etl_spark.operators.prep import (
+        repetition_stats,
+        span_dedup,
+        substring_dedup,
+    )
+    from flink_etl_spark.operators.similarity import ivfpq_topk
+
+    def ivfpq(t):
+        queries = t.sparkSession.read.parquet(f"{SF}/embeddings.parquet")
+        return ivfpq_topk(t, queries.filter("vec_id < 8"), k=3, n_cells=4,
+                          nprobe=2, m=8, n_codes=16)
+
+    return {
+        "repetition_stats": ("documents", repetition_stats),
+        "span_dedup": ("documents", lambda t: span_dedup(t, span_tokens=20)),
+        "substring_dedup": ("documents", lambda t: substring_dedup(t, min_tokens=13)),
+        "semdedup": ("embeddings", lambda t: semdedup(t, n_cells=4)),
+        "ivfpq_topk": ("embeddings", ivfpq),
+        "media_phash_near_dups": ("documents", lambda t: multimodal.media_phash_near_dups(
+            multimodal.make_media_table(t).select("media_id", "payload"),
+            max_hamming=12,
+        )),
+    }
+
+
+def _capture_anchors(monkeypatch) -> list:
+    """Record every frame the spreading operators anchor (the spread rows
+    of `sources.tables._spread_anchored`, the signature frame of
+    `media_phash_near_dups`) before anchoring it."""
+    from flink_etl_spark.operators import multimodal
+    from flink_etl_spark.sources import tables
+
+    anchored = []
+    for module in (tables, multimodal):
+        def capture(df, eager=True, real=module.anchor):
+            anchored.append(df)
+            return real(df, eager)
+
+        monkeypatch.setattr(module, "anchor", capture)
+    return anchored
+
+
+def _assert_one_spread_below_heavy_work(plan: str) -> None:
+    """One round-robin exchange, reading the scan through column
+    projections only: no filter and no tokenizing, hashing, vector or
+    JSON expression below it. Only the adaptive plan's final plan is
+    read: its initial plan repeats the exchange."""
+    subtrees = _round_robin_subtrees(plan.split("== Initial Plan ==")[0])
+    assert len(subtrees) == 1, plan
+    for node in subtrees[0]:
+        name = node.split(" [")[0].lstrip("*(0123456789) ")
+        assert name in ("FileScan parquet", "Project", "ColumnarToRow"), node
+        assert not any(f in node for f in _HEAVY), node
+
+
+@pytest.mark.parametrize("operator", SPREADING_OPERATORS)
+def test_operator_spreads_only_a_single_split_input(
+    spark, tmp_path, monkeypatch, operator
+):
+    """Each operator that spreads its own input plans one round-robin
+    exchange for a single-file input, below its heavy projection, and
+    none for a multi-split or a cached input (also one executed before
+    its `.cache()` call). Rows are identical all four ways."""
+    from flink_etl_spark.sources.tables import load_table
+
+    table, call = _spread_cases()[operator]
+    anchored = _capture_anchors(monkeypatch)
+
+    def run(t):
+        anchored.clear()
+        out = call(t)
+        plan = _executed(anchored[0] if anchored else out)
+        return plan, sorted(map(tuple, out.collect()))
+
+    single = load_table(spark, SF, table)
+    assert single.rdd.getNumPartitions() == 1
+    target = spark.sparkContext.defaultParallelism
+    single.repartition(target).write.parquet(str(tmp_path / f"{table}.parquet"))
+    multi = load_table(spark, str(tmp_path), table)
+    assert multi.rdd.getNumPartitions() >= max(2, target // 2)
+    plan, rows = run(single)
+    _assert_one_spread_below_heavy_work(plan)
+    assert rows
+    executed = load_table(spark, SF, table)
+    executed.write.format("noop").mode("overwrite").save()
+    # cached last: the cache serves every later scan of the same plan
+    for other in (multi, load_table(spark, SF, table).cache(), executed.cache()):
+        other_plan, other_rows = run(other)
+        assert "RoundRobinPartitioning" not in other_plan, other_plan
+        assert other_rows == rows
+    spark.catalog.clearCache()
+
+
+@pytest.mark.parametrize("operator, keep", [
+    ("repetition_stats", "dup_token_frac > 0.05"),
+    ("span_dedup_within_doc", "n_spans_kept > 3"),
+    ("span_dedup", "length(dedup_text) > 200"),
+    ("substring_dedup", "n_tokens_kept < n_tokens"),
+])
+def test_filtered_output_keeps_heavy_work_above_the_spread(spark, operator, keep):
+    """A caller's filter on a spreading operator's output is not pushed
+    through the round-robin exchange: no tokenizing or hashing runs
+    below it on the single scan task."""
+    from flink_etl_spark.operators.prep import (
+        repetition_stats,
+        span_dedup,
+        substring_dedup,
+    )
+    from flink_etl_spark.sources.tables import load_table
+
+    call = {
+        "repetition_stats": repetition_stats,
+        "span_dedup_within_doc": lambda t: span_dedup(
+            t, span_tokens=5, scope="within_doc"),
+        "span_dedup": lambda t: span_dedup(t, span_tokens=20),
+        "substring_dedup": lambda t: substring_dedup(t, min_tokens=13),
+    }[operator]
+    single = load_table(spark, SF, "documents")
+    assert single.rdd.getNumPartitions() == 1
+    out = call(single).filter(keep)
+    for sub in _round_robin_subtrees(_executed(out)):
+        for node in sub:
+            assert not any(f in node for f in _HEAVY), node
+    assert out.count() > 0
 
 
 def test_fingerprints_winnow1_plan_ignores_generate_filter_inference(spark):

@@ -299,3 +299,53 @@ def test_staged_guards_raise_their_messages(spark, tmp_path):
         media_batch_step, batch, 0, str(media), str(tmp_path / "out"),
         max_hamming=4,
     )
+
+
+def test_snapshot_swap_and_data_file_listing(spark, tmp_path):
+    """The snapshot swap and the data-file listing live in staged.py,
+    and `merge` re-exports the same functions: stage to
+    `<parent>/_staging/<base>`, promote by delete+rename, heal a crash
+    between the two, and count only visible files as data."""
+    from flink_etl_spark.operators import maintenance, merge
+    from flink_etl_spark.streaming import ann_sink
+
+    for name in ("stage_snapshot", "promote_snapshot", "snapshot_exists",
+                 "recover_snapshot"):
+        assert getattr(merge, name) is getattr(S, name)
+    assert ann_sink._data_file_names is S._data_file_names
+
+    snap = str(tmp_path / "snap")
+    staging = tmp_path / "_staging" / "snap"
+    assert S._staging_path(snap) == str(staging)
+    assert not S.snapshot_exists(spark, snap)
+    assert maintenance.partition_file_count(spark, snap) == 0
+
+    S.stage_snapshot(spark.range(6).repartition(3), snap)
+    assert staging.is_dir() and not S.snapshot_exists(spark, snap)
+    S.promote_snapshot(spark, snap)
+    assert S.snapshot_exists(spark, snap) and not staging.exists()
+    assert sorted(r.id for r in spark.read.parquet(snap).collect()) == list(range(6))
+
+    fs, hpath = S._hadoop_fs(spark, snap)
+    names = S._data_file_names(fs, hpath)
+    assert names == sorted(names) and len(names) == 3
+    assert all(n.startswith("part-") for n in names)
+    (tmp_path / "snap" / "sub").mkdir()
+    assert maintenance.partition_file_count(spark, snap) == len(names)
+
+    # crash after the delete, before the rename: recovery promotes
+    S.stage_snapshot(spark.range(2), snap)
+    fs.delete(hpath, True)
+    assert S.recover_snapshot(snap, spark) is True
+    assert spark.read.parquet(snap).count() == 2
+    # crash before the delete: the intact target wins, the stale stage goes
+    S.stage_snapshot(spark.range(9), snap)
+    assert S.recover_snapshot(snap, spark) is False
+    assert not staging.exists() and spark.read.parquet(snap).count() == 2
+    # the pre-staging-dir layout `<path>__staging` still heals
+    legacy = str(tmp_path / "snap__staging")
+    spark.range(4).write.parquet(legacy)
+    fs.delete(hpath, True)
+    assert S.recover_snapshot(snap, spark) is True
+    assert spark.read.parquet(snap).count() == 4
+    assert not (tmp_path / "snap__staging").exists()

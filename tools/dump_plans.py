@@ -216,8 +216,8 @@ COMMENTARY: dict[str, str] = {
         "never joins (no SortMergeJoin, no doc_id- or feature-keyed "
         "exchange; plan-pinned). The only corpus-sized work is the "
         "scan itself. This is the 100 TB production arm "
-        "(tools/dsir_probe.py: 1.6x faster at 10x, exponent 0.11 vs "
-        "0.33, Spearman 0.984 weight agreement vs exact ids)."
+        "(dsir_probe [retired; in git history]: 1.6x faster at 10x, "
+        "exponent 0.11 vs 0.33, Spearman 0.984 weight agreement vs exact ids)."
     ),
     "semantic_decontam": (
         "Embedding-space benchmark decontamination (r11): the corpus "
@@ -228,8 +228,8 @@ COMMENTARY: dict[str, str] = {
         "corpus path has ZERO exchanges (every Exchange in this tree "
         "is a benchmark-side plane/probe/flag aggregation; "
         "plan-pinned, and measured byte-exact flat across a 30x "
-        "corpus step in tools/decontam_probe.py). The benchmark is "
-        "the bounded side by definition — eval suites do not grow "
+        "corpus step in decontam_probe [retired; in git history]). "
+        "The benchmark is the bounded side by definition — eval suites do not grow "
         "with the crawl."
     ),
     "nb_classifier": (

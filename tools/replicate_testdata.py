@@ -1,9 +1,9 @@
 """Build an N-x replica of a testdata sf directory with CONSISTENT key
 offsets — the scale-probe corpus generator.
 
-Unlike tools/stress_probe.py (which deliberately clones documents into
-exact duplicate cliques — an adversarial near-dup workload), this
-replica models "N times MORE data of the same shape":
+Unlike the stress_probe [retired; in git history], which deliberately
+cloned documents into exact duplicate cliques (an adversarial near-dup
+workload), this replica models "N times MORE data of the same shape":
 
 * fact tables replicate with per-copy key offsets that preserve join
   relationships (lineitem.l_orderkey tracks orders.o_orderkey,
