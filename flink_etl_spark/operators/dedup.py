@@ -429,10 +429,16 @@ def minhash_near_dups(
       when they are small (no forced hint: candidate volume is
       corpus-dependent and a pinned broadcast cannot be demoted)
 
-    Net plan: 4 corpus scans (the two self-join sides of banding and
-    verification, all projection-only) and ONE real shuffle (the band
-    bucket join), plus a round-robin spread of (id, text) when the
-    input scan is under-split (see the note in the body).
+    Net plan: the profile is cut from the lineage by a lazy anchor
+    (`session.anchor(eager=False)`), so the two band self-join sides
+    and both verification sides read ONE `Scan ExistingRDD` leaf
+    instead of four copies of the profile plan. Analysis, planning and
+    AQE re-optimization pay for the profile once; the only real
+    shuffle above the leaf is the band bucket join. The first job that
+    consumes the leaf computes the profile (with the round-robin spread
+    of (id, text) when the input scan is under-split, see the note in
+    the body) and keeps its blocks; every later job reads them. A call
+    runs 5 Spark jobs on the single-split sf0.01 documents.
 
     `staged_path` is the 100 TB pattern: materialize the profile to
     parquet ONCE and feed all four consumers from that columnar scan —
@@ -441,7 +447,7 @@ def minhash_near_dups(
     id + shset + n_sh), and the staged profile is reusable across runs
     (incremental dedup against yesterday's corpus; read through
     `_staged_profile`, which drops empty shingle sets). Default (None)
-    keeps the in-memory persist, which is faster at bench SF where the
+    keeps the in-memory anchor, which is faster at bench SF where the
     profile fits executor storage.
 
     `bands` accepts "auto" — threshold-derived banding via
@@ -472,16 +478,17 @@ def minhash_near_dups(
     # seed 1, 5 chains) the unspread profile ran in ONE task, 730 ms
     # CPU, while the three other consumer jobs each sat ~760 ms blocked
     # on its cache block. The `n_sh > 0` filter must stay ABOVE the
-    # persisted (or staged) profile: Catalyst pushes deterministic
+    # anchored (or staged) profile: Catalyst pushes deterministic
     # filters through a round-robin exchange, and there the filter
     # tokenizes every row on the single map task before the spread
     # tasks tokenize again. Measured per call over seed-5 keepers
-    # (median of 10, noop sink): unspread 1.20 s, spread with the
-    # filter below the cache 1.06 s, spread with it above 0.78 s. So a
-    # staged profile keeps its empty-set rows and `_staged_profile`
-    # filters them. The staged arm gains as well (it writes one file
-    # per core): bench.py's sf0.1 staged entry on 4 cores, median of 5
-    # calls in each of 5 fresh processes, 2.0 -> 1.3 s.
+    # (median of 10, noop sink, profile then persisted): unspread
+    # 1.20 s, spread with the filter below the cache 1.06 s, spread
+    # with it above 0.78 s. So a staged profile keeps its empty-set
+    # rows and `_staged_profile` filters them. The staged arm gains as
+    # well (it writes one file per core): bench.py's sf0.1 staged entry
+    # on 4 cores, median of 5 calls in each of 5 fresh processes,
+    # 2.0 -> 1.3 s.
     spread = rescue_scan_parallelism(docs.selectExpr(ident(id_col), ident(text_col)))
     prof = minhash_profile(spread, n_hashes, id_col, text_col, k, hash_fn)
     if staged_path is not None:
@@ -492,13 +499,15 @@ def minhash_near_dups(
         profile = _staged_profile(docs.sparkSession, staged_path)
     else:
         # ONE row per doc (set + sigs) — tiny relative to the corpus, so
-        # persisting it collapses the four consumers to a single
+        # keeping it collapses the four consumers to a single
         # tokenization pass (unlike exploded postings, where caching
-        # measured slower than recompute). The cache is keyed on the
-        # logical plan and lives until evicted; long-lived sessions
-        # calling this repeatedly should spark.catalog.clearCache()
-        # between corpora (bench.py does)
-        profile = prof.persist().filter(F.col("n_sh") > 0)
+        # measured slower than recompute). A lazy anchor, not a
+        # persist: a persisted frame keeps the whole profile plan
+        # (tokenize, hash, n_hashes lambdas) in all four consumers'
+        # logical plans, so analysis, cache matching, planning and AQE
+        # pay for it four times (10 jobs a call on the sf0.01
+        # documents against the anchored leaf's 5).
+        profile = anchor(prof, eager=False).filter(F.col("n_sh") > 0)
     cand = lsh_candidates(
         profile.drop("shset"), bands, n_hashes // bands, id_col,
         carry_cols=("n_sh",), max_bucket=max_bucket,
@@ -1563,13 +1572,16 @@ def minhash_near_dups_incremental(
     profile is column-pruned per consumer exactly as in
     `minhash_near_dups(staged_path=...)`.
 
-    The new-batch profile is persisted (it feeds the union, the id
-    probes, and both verification sides); the cache is keyed on the
-    logical plan and lives until evicted — sessions calling this daily
-    should `spark.catalog.clearCache()` between batches, same contract
-    as `minhash_near_dups`. `bands="auto"` / `max_bucket` as in
-    `minhash_near_dups`. `hash_fn`/`k`/`n_hashes` MUST match what the
-    staged profile was built with (`minhash_stage_profile`) — band
+    The new-batch profile is cut from the lineage by a lazy anchor
+    (`session.anchor(eager=False)`): the union, the id probes and both
+    verification sides read one `Scan ExistingRDD` leaf, computed by
+    the first job that consumes it, instead of re-planning the
+    tokenize-and-hash plan in each. A call runs 8 Spark jobs on a
+    one-fifth sf0.01 batch against the other four fifths; the leaf's
+    blocks live as long as the returned frame does. `bands="auto"` /
+    `max_bucket` as in `minhash_near_dups`. `hash_fn`/`k`/`n_hashes`
+    MUST match what the staged profile was built with
+    (`minhash_stage_profile`) — band
     keys from different hashes never match, silently losing old-new
     pairs — and that is ENFORCED against the profile's
     `_PROFILE_META.json` sidecar (a mismatch raises)."""
@@ -1593,7 +1605,7 @@ def minhash_near_dups_incremental(
         spark, staged_path, hash_fn, k, n_hashes, dict(new.dtypes)["shset"]
     )
     old = _staged_profile(spark, staged_path)
-    new = new.persist()
+    new = anchor(new, eager=False)
     profile = old.unionByName(new)
     cand = lsh_candidates(
         profile.drop("shset"), bands, n_hashes // bands, id_col,

@@ -87,20 +87,14 @@ def get_spark(
     return builder.getOrCreate()
 
 
-def apply_runtime_confs(
-    spark: SparkSession, exclude: set[str] | None = None
-) -> SparkSession:
+def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     """Best-effort apply engine confs to an externally-built session.
 
     Every conf in RUNTIME_CONFS is runtime-settable in Spark 4.x; the
     try/except guards against future immutability or locked-down
     sessions — the engine then degrades gracefully instead of failing.
-    `exclude` skips the named keys; no caller in the package passes it
-    since `get_spark` lets `getOrCreate` apply its builder options.
     """
     for k, v in RUNTIME_CONFS.items():
-        if exclude and k in exclude:
-            continue
         try:
             spark.conf.set(k, v)
         except Exception:
@@ -130,7 +124,18 @@ def anchor(df, eager: bool = True):
     executor loss at the price of one HDFS round-trip per anchor.
     If the conf is set without a checkpoint dir, raises loudly
     (Spark's own error names the fix) rather than silently degrading
-    the fault-tolerance the caller asked for."""
+    the fault-tolerance the caller asked for.
+
+    ``eager=False`` cuts the lineage without computing the frame: the
+    returned frame plans as one ``Scan ExistingRDD`` leaf, and the
+    first job that consumes it computes the blocks and keeps them for
+    every later job (`minhash_near_dups` reads its profile this way
+    from four branches). Only an exchange inside the anchored plan
+    runs at once: the adaptive plan runs its map stage when the anchor
+    is built. A lost executor still fails the job, as with an eager
+    local anchor, unless the reliable conf is set; under it the leaf
+    is computed by the first job and computed AGAIN when Spark saves
+    it to the checkpoint directory after that job."""
     spark = df.sparkSession
     try:
         reliable = (

@@ -9,6 +9,8 @@ scale factors."""
 
 from __future__ import annotations
 
+import uuid
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -184,17 +186,37 @@ def test_spread_inputs_hold_no_pushed_predicates(spark, tmp_path, monkeypatch):
     below that exchange there is only the scan and column projections.
     A Filter or a tokenizing expression there means a predicate over
     the profile was pushed through the exchange and re-tokenizes every
-    row on the single map task."""
+    row on the single map task. The in-memory profile is anchored, so
+    its spread runs in the plan of the frame handed to `anchor`, also
+    when the caller filters the output."""
     from pyspark.sql.readwriter import DataFrameWriter
 
-    from flink_etl_spark.operators.dedup import minhash_near_dups
+    from flink_etl_spark.operators import dedup
     from flink_etl_spark.operators.prep import fingerprint_candidates
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     assert docs.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism
-    _assert_spread_is_scan_only(_executed(minhash_near_dups(docs)))
     _assert_spread_is_scan_only(_executed(fingerprint_candidates(docs)))
     _assert_spread_is_scan_only(_executed(fingerprint_candidates(docs, key="digest", max_df=3)))
+
+    anchored = []
+
+    def capture_anchor(df, eager=True, real=dedup.anchor):
+        anchored.append(df)
+        return real(df, eager)
+
+    monkeypatch.setattr(dedup, "anchor", capture_anchor)
+    for call in (lambda: dedup.minhash_near_dups(docs),
+                 lambda: dedup.minhash_near_dups(docs).filter("jaccard >= 0.9")):
+        anchored.clear()
+        plan = _executed(call())
+        assert len(anchored) == 1
+        _assert_spread_is_scan_only(
+            anchored[0]._jdf.queryExecution().executedPlan().toString())
+        for sub in _round_robin_subtrees(plan):
+            for node in sub:
+                assert not any(f in node for f in _HEAVY), node
+    monkeypatch.undo()
 
     written = []
     save = DataFrameWriter.parquet
@@ -204,11 +226,51 @@ def test_spread_inputs_hold_no_pushed_predicates(spark, tmp_path, monkeypatch):
         return save(self, path, *a, **kw)
 
     monkeypatch.setattr(DataFrameWriter, "parquet", capture)
-    minhash_near_dups(docs, staged_path=str(tmp_path / "profile"))
+    dedup.minhash_near_dups(docs, staged_path=str(tmp_path / "profile"))
     monkeypatch.undo()
     assert len(written) == 1
     _assert_spread_is_scan_only(written[0]._jdf.queryExecution().executedPlan().toString())
     spark.catalog.clearCache()
+
+
+def _jobs_per_call(spark, call) -> int:
+    """Spark jobs run by building `call()` and a noop write of its
+    output, counted under a job group of their own."""
+    sc = spark.sparkContext
+    group = f"jobs-per-call-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        call().write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("arm, most", [
+    ("xxhash64", 5), ("charfold", 5), ("incremental", 8),
+])
+def test_minhash_near_dups_jobs_per_call(spark, tmp_path, arm, most):
+    """MinHash-LSH plans its four profile consumers against one anchored
+    leaf: a call over the single-split sf0.01 documents runs at most 5
+    jobs (10 with a persisted profile), and an incremental call with a
+    one-fifth batch against the staged other four fifths at most 8
+    (18 with a persisted batch profile). The counts repeat exactly."""
+    from flink_etl_spark.operators import dedup
+
+    spark.catalog.clearCache()
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    if arm == "incremental":
+        staged = str(tmp_path / "profile")
+        dedup.minhash_stage_profile(docs.filter("doc_id % 5 != 0"), staged)
+        batch = docs.filter("doc_id % 5 = 0")
+        call = lambda: dedup.minhash_near_dups_incremental(batch, staged)  # noqa: E731
+    else:
+        call = lambda: dedup.minhash_near_dups(docs, hash_fn=arm)  # noqa: E731
+    counts = [_jobs_per_call(spark, call) for _ in range(2)]
+    assert counts[0] == counts[1], counts
+    assert counts[0] <= most, counts
 
 
 #: operators that spread their own under-split input over every core

@@ -78,8 +78,14 @@ COMMENTARY: dict[str, str] = {
         "signatures as array expressions — no posting explode, no "
         "groupBy); set sizes ride through the band self-join so no "
         "re-aggregation joins exist, and the one real shuffle is the "
-        "band bucket join. Term hash defaults to native xxhash64 (one "
-        "JVM call per shingle). At true corpus scale pass staged_path= "
+        "band bucket join. The profile is a lazy anchor: the two band "
+        "self-join sides and both verification sides read ONE Scan "
+        "ExistingRDD leaf, so the sketch (and the round-robin spread "
+        "of an under-split input) is planned and run once, by the "
+        "first job that consumes it, and appears in no tree below; "
+        "hence no parquet scan here. Term hash defaults to native "
+        "xxhash64 (one JVM call per shingle). At true corpus scale "
+        "pass staged_path= "
         "to materialize the profile parquet once (the gate's "
         "incremental variant and the bench's _staged entry run that "
         "mode). Candidate verification touches candidates only, never "
