@@ -3,8 +3,11 @@
 Language ID (stopword n-gram heuristic), quality scoring, token
 counting, and document fingerprinting over the `documents` table
 (extension surface, SURVEY.md §2.12). All pure column expressions —
-tokenization, lambda higher-order functions, and integer hashing stay
-inside whole-stage codegen; nothing drops to Python.
+nothing drops to Python. Tokenization and integer hashing compile in
+whole-stage codegen; the lambda higher-order functions (`transform`,
+`filter`, `zip_with`, `aggregate`) do not: Spark 4.1 implements them as
+`CodegenFallback`, which keeps a projection holding one out of
+whole-stage codegen, and evaluates the lambdas interpreted.
 """
 
 from __future__ import annotations
@@ -194,8 +197,17 @@ def doc_profile(
     This is the operator a 100 TB prep pipeline actually runs: the
     individual operators above exist as composable units, but chaining
     them joins N single-signal scans; at corpus scale tokenization IS
-    the cost, so all signals must come off one tokenization. Everything
-    stays in whole-stage codegen (higher-order functions, no Python).
+    the cost, so all signals must come off one tokenization. No
+    Python runs, but not everything compiles: the tokenizing
+    projection is whole-stage codegen, while the signal projection
+    holds Spark 4.1's higher-order functions (`ArrayTransform`,
+    `ArrayFilter`, `ArrayAggregate`, `ZipWith`), which are
+    `CodegenFallback`. That keeps the signal projection out of
+    whole-stage codegen (a `Project` without `*` in docs/PLANS.md) and
+    evaluates every lambda interpreted. They, not the tokenizer, are
+    most of the stage's CPU (a JFR profile of the perfbench corpus
+    chain put `ArrayFilter.eval` at 68% of the keepers' profile
+    stage).
 
     `passthrough` names extra input columns to carry into the output
     unchanged (e.g. `("source",)`) — a consumer that needs them then
@@ -753,7 +765,7 @@ def _bpe_pair_counts(words: DataFrame) -> DataFrame:
 def _bpe_quads(words: DataFrame) -> DataFrame:
     """(prev, l, r, nxt, cnt) rows — every adjacent symbol pair of
     every word with its two outer neighbors (NULL at the word edges),
-    weighted by word count. The scan both verify paths bound batch
+    weighted by word count. The scan batched rounds bound their
     merges from."""
     return (
         words.select(_bpe_syms(F.col("seq")).alias("_s"), "cnt")
@@ -817,14 +829,10 @@ def _bpe_neighbor_summary(quads: DataFrame, key: list) -> DataFrame:
 def _bpe_topk_with_bounds(
     words: DataFrame, pair_counts: DataFrame, want: int
 ) -> list:
-    """Fused batched-round candidate fetch (r14): the top-``want``
-    pair ranking AND each candidate's neighbor bounds in ONE Spark
-    action — one driver round-trip per round, where the lazy path
-    (`_bpe_truncate_batch`) issues a SECOND vocabulary-sized job on
-    every round whose prefix survives past one member (measured
-    verify_jobs=240 of 751 rounds at R=1024/B=16, clawing back 240 of
-    the 273 round-trips batching exists to save; the fused plan keeps
-    the full cut, 751 actions vs 1024).
+    """Batched-round candidate fetch: the top-``want`` pair ranking AND
+    each candidate's neighbor bounds (`_bpe_truncate_batch`) in ONE
+    Spark action, so a batched round is exactly one driver round-trip
+    (751 actions vs B=1's 1024 at R=1024/B=16).
 
     Plan shape: sort-limit the pair counts, broadcast that ≤B-row
     frame into the quad scan, left-join the bounds back onto the
@@ -846,120 +854,78 @@ def _bpe_topk_with_bounds(
     )
 
 
-def _bpe_truncate_batch(
-    words: DataFrame,
-    accepted: list,
-    known_products: set | None = None,
-    stats: dict | None = None,
-) -> list:
-    """Exactness guard for a tentative merge batch (see
-    `bpe_fit(batch_merges=...)`): sequential BPE re-ranks after every
-    merge, and the only pairs whose rank can RISE past a later batch
-    member are (a) pairs containing a batch merge's NEW symbol and
-    (b) pre-existing pairs that UNIFY with them when the merged string
-    collides with an existing symbol. Both are bounded from the
-    CURRENT table with two vocabulary-sized aggregates:
+def _bpe_truncate_batch(rows: list, products: set) -> tuple[list, str | None]:
+    """Exactness guard for one batched round (see
+    `bpe_fit(batch_merges=...)`): the longest prefix of the ranking
+    ``rows`` (`_bpe_topk_with_bounds`' output: l, r, c, max_grp,
+    max_side) that the one-merge-per-round loop would also take, in
+    order. Pure driver-side — no Spark. ``products`` is every merged
+    string the fit has minted so far. Three cuts, in order:
 
-    * max_grp(M_j): max count over the neighbor-pair groups
-      (prev, M_j) / (M_j, next) the occurrences of merge j's pattern
-      would create, grouped by the CURRENT neighbor names
-      (overlapping occurrences overcount — fine, upper bound);
-    * max_side(M_j): the larger of the two SIDE TOTALS (all left-
-      neighbor mass, all right-neighbor mass) — renames by earlier
-      batch merges can only re-label positions within a side, so no
-      post-rename group can exceed its side's total;
-    * slack_j = sum of earlier batch counts — the rename-mass bound
-      that applies to the name-grouped max_grp.
+    * PREFIX: stop at the first candidate whose symbols touch an
+      earlier member's symbols or merged string, or whose merged
+      string repeats an earlier one (a merge changes the counts of
+      the pairs it touches). Prefix, not skip-and-continue: a
+      skipped conflicting pair keeps a REDUCED count that could still
+      outrank later members, which no bound from the current table
+      can exclude.
+    * COLLISION: the created-pair bound below assumes every merge
+      mints a NEW symbol. A member whose merged string equals an
+      existing symbol unifies its created pairs with pre-existing
+      ones, so it survives only as the batch's LAST element, where
+      there is no later member for its unification mass to outrank.
+    * UPPER BOUND: sequential BPE re-ranks after every merge, and the
+      only pairs whose rank can RISE past a later member are those
+      containing an earlier member's new symbol. With max_grp(M_j) the
+      largest neighbor-pair group merge j's occurrences would create
+      (grouped by CURRENT neighbor names; overlapping occurrences
+      overcount — fine, upper bound), max_side(M_j) the larger of its
+      two side totals (renames by earlier members only re-label
+      positions within a side) and slack_j the summed counts of
+      earlier members (the rename mass), every such pair is bounded
+      by UB_j = min(max_grp + slack, max_side). Member i survives only
+      while its count STRICTLY exceeds every earlier UB_j — ties lose.
 
-    Any pair whose rank can rise past batch position j is therefore
-    bounded by UB_j = min(max_grp + slack, max_side). Batch member i
-    survives only when its count STRICTLY exceeds every earlier
-    member's UB_j — then no created/boosted pair can outrank it at
-    its sequential position (ties lose to the strict inequality), so
-    the truncated batch equals the one-merge-per-round sequence
-    EXACTLY.
-
-    COLLISION RULE (r14, hardened per ADVICE): the created-pair bound
-    above assumes every batch merge mints a NEW symbol — when a
-    merged string M_i instead equals an EXISTING symbol
-    (`known_products`), merge i's created pairs UNIFY with
-    pre-existing pairs, and a single unified pair could in principle
-    accumulate mass from TWO different batch members, which no
-    per-member max covers. The r13 code bounded this case with an
-    extra vocabulary scan (`ex_max`: the max count of any current
-    pair containing M_i); that bound's soundness for MULTIPLE
-    colliding rounds was argued but not airtight. Collisions are rare
-    (the merged string must reproduce an earlier merge's product), so
-    the batch is now simply TRUNCATED at the first colliding member —
-    it may survive only as the batch's LAST element, where there is
-    no later member for its unification mass to outrank. Every member
-    the UB rule actually protects is then collision-free by
-    construction, the proof needs no ex_max term, and the extra
-    vocabulary scan is gone. ``known_products=None`` (unknown
-    vocabulary) conservatively treats EVERY member as potentially
-    colliding, i.e. batches degrade to size 1."""
-    spark = words.sparkSession
-    # collision truncation FIRST (see docstring): keep members up to
-    # and INCLUDING the first whose merged string is an existing
-    # symbol — nothing after it remains for its unification mass to
-    # threaten, and everything before it mints new symbols only
-    for i, row in enumerate(accepted):
+    Returns (survivors, the rule that made the last cut — "prefix",
+    or "ub" for the collision and upper-bound cuts — or None when the
+    whole ranking survives)."""
+    if len(rows) < 2:
+        # a lone candidate is the round's exact argmax
+        return list(rows), None
+    accepted = [rows[0]]
+    taken = {rows[0]["l"], rows[0]["r"]}
+    merged = {rows[0]["l"] + rows[0]["r"]}
+    for row in rows[1:]:
         m = row["l"] + row["r"]
-        if known_products is None or m in known_products:
-            accepted = accepted[: i + 1]
+        if {row["l"], row["r"]} & taken or {row["l"], row["r"], m} & merged:
             break
-    if len(accepted) == 1:
-        return list(accepted)
-    # past this point one vocabulary-sized Spark job runs — on a real
-    # cluster that is one EXTRA driver round-trip on top of the
-    # round's pair-count job, so the deployment arithmetic must count
-    # JOBS, not rounds (stats["verify_jobs"]; see bpe_fit's rule)
-    if stats is not None:
-        stats["verify_jobs"] = stats.get("verify_jobs", 0) + 1
-    acc_rows = [(r["l"], r["r"], r["l"] + r["r"]) for r in accepted]
-    acc_df = F.broadcast(
-        spark.createDataFrame(acc_rows, "l string, r string, m string")
-    )
-    quads = _bpe_quads(words).join(acc_df, ["l", "r"])
-    summary = _bpe_neighbor_summary(quads, ["m"])
-    news = {
-        r["m"]: (int(r["max_grp"]), int(r["max_side"]))
-        for r in summary.collect()
-    }
-    return _bpe_ub_truncate(
-        accepted, lambda row: news.get(row["l"] + row["r"], (0, 0))
-    )
-
-
-def _bpe_ub_truncate(accepted: list, get_bounds) -> list:
-    """The driver-side upper-bound acceptance loop shared by the lazy
-    (`_bpe_truncate_batch`) and fused (`_bpe_topk_with_bounds`) verify
-    paths: member i survives only while its count STRICTLY exceeds the
-    running bound folded from every earlier member's
-    min(max_grp + slack, max_side). ``get_bounds(row)`` returns that
-    member's (max_grp, max_side) pair — (0, 0) when the scan saw no
-    occurrence of its pattern."""
+        accepted.append(row)
+        taken |= {row["l"], row["r"]}
+        merged.add(m)
+    cut = "prefix" if len(accepted) < len(rows) else None
     out = []
     ub = 0
     slack = 0
-    for i, row in enumerate(accepted):
-        if i > 0 and not row["c"] > ub:
+    for row in accepted:
+        if out and not row["c"] > ub:
             break
         out.append(row)
-        max_grp, max_side = get_bounds(row)
-        ub = max(ub, min(max_grp + slack, max_side))
+        if row["l"] + row["r"] in products:
+            break
+        ub = max(ub, min(int(row["max_grp"] or 0) + slack,
+                         int(row["max_side"] or 0)))
         slack += int(row["c"])
-    return out
+    return out, ("ub" if len(out) < len(accepted) else cut)
 
 
 #: `bpe_fit(batch_merges="auto")` probe: the first N classical rounds
 #: are timed (each is exactly ONE driver action, so the round wall IS
-#: the per-action cost), and the loop switches to batch_merges=16 +
-#: batch_verify="fused" for the remainder when the median exceeds the
-#: measured fused-B=16 break-even — L* ~ 0.65 s/action from the
-#: four-arm interleaved R=1024 crossover table (docs/SCALING.md
-#: "Batched BPE"; `bpe_probe fit --latency` [retired; in git history]
-#: validated the arithmetic end to end at R=256/300 ms). 0.7 s is the documented
+#: the per-action cost), and the loop switches to batch_merges=16 for
+#: the remainder when the median exceeds the measured B=16 break-even
+#: — L* ~ 0.65 s/action from the interleaved R=1024 crossover table
+#: (docs/SCALING.md "Batched BPE"; `bpe_probe fit --latency`
+#: [retired; in git history] validated the arithmetic end to end at
+#: R=256/300 ms). 0.7 s is the documented
 #: "extreme driver-to-cluster latency" line, ABOVE the 200-500 ms
 #: stage-cycle band of a busy cluster — so local/normal clusters
 #: stay on the classical B=1 loop and only WAN-notebook/queued-
@@ -977,7 +943,6 @@ def bpe_fit(
     text_col: str = "text",
     vocab_partitions: int | None = None,
     batch_merges: int | str = 1,
-    batch_verify: str = "lazy",
     stats: dict | None = None,
 ) -> DataFrame:
     """Distributed BPE tokenizer vocabulary training (Sennrich,
@@ -1010,65 +975,44 @@ def bpe_fit(
     should pin 1 while a 100 TB fit leaves it None (inherit the
     token-aggregate's parallelism).
 
-    ``batch_merges=B`` (r13) attacks the one scale cost cluster size
-    cannot reduce — R strictly-sequential driver rounds (~32k
-    round-trips for a production vocabulary): each round collects the
-    top-B candidates, keeps the maximal PREFIX whose symbol sets are
-    pairwise disjoint (and touch no symbol a batch member creates —
-    those counts shift mid-batch), verifies with one extra
-    vocabulary-sized aggregate that no pair a batch member CREATES
-    can outrank a later member (`_bpe_truncate_batch` — the guard
-    that makes the result EXACTLY the B=1 sequence, not an
-    approximation), and applies the survivors as one chained replace.
-    Rounds shrink by the average surviving batch size; B=1 is the
-    classical loop, byte-identical output for any B by construction
-    (and property-tested).
+    ``batch_merges=B`` attacks the one scale cost cluster size cannot
+    reduce — R strictly-sequential driver rounds (~32k round-trips
+    for a production vocabulary). Each round fetches the top-B
+    candidates together with their neighbor bounds in one action
+    (`_bpe_topk_with_bounds`), keeps the prefix the exactness guard
+    admits (`_bpe_truncate_batch` — the result is EXACTLY the B=1
+    sequence, not an approximation) and applies the survivors as one
+    chained replace. Rounds shrink by the average surviving batch
+    size; B=1 is the classical loop, byte-identical output for any B
+    (property-tested). DEPLOYMENT RULE (docs/SCALING.md "Batched
+    BPE"): **the classical B=1 loop is the default and the right
+    choice on any normal cluster.** Count driver ACTIONS, not rounds:
+    the bound scan costs more compute than the actions it saves
+    unless one action costs more than the measured B=16 break-even,
+    ~0.65 s — above the documented 200-500 ms stage-cycle band. Use
+    batch_merges=16 (or "auto") only for extreme driver-to-cluster
+    latency (WAN notebook drivers, schedulers queued at >= 0.7
+    s/action).
 
-    ``batch_verify`` picks where the verify aggregates run. "lazy"
-    (default) fires the scan as a SECOND Spark action only on rounds
-    whose prefix survives past one member — but those rounds are
-    common (measured 240 of 751 at R=1024/B=16), so the lazy path's
-    real driver round-trips are rounds + verify_jobs = 991 of B=1's
-    1024. "fused" (r14) computes the bounds IN THE SAME ACTION as
-    the top-B argmax (`_bpe_topk_with_bounds`: sort-limit ->
-    broadcast into the quad scan -> left-join back), so every round
-    is exactly ONE round-trip and the full rounds cut (751 vs 1024,
-    27%) is real round-trips. DEPLOYMENT RULE (r14, corrected twice
-    by measurement — docs/SCALING.md "Batched BPE",
-    `bpe_probe fit [--latency MS] [--fused]` [retired; in git history]): **the
-    classical B=1 loop is the default and the right choice on any
-    normal cluster.** Count driver ACTIONS, not rounds: batching's
-    verify work costs more compute than the actions it saves unless
-    one action costs more than the measured break-even — ~0.65 s for
-    fused B=16, ~5 s for lazy B=16 (four-arm same-session interleave,
-    R=1024) — above the documented 200-500 ms stage-cycle band. Use
-    batch_merges=16 + batch_verify="fused" only for extreme
-    driver-to-cluster latency (WAN notebook drivers, schedulers
-    queued at >= 0.7 s/action).
-
-    ``batch_merges="auto"`` (r15) implements that rule as a measured
-    in-loop decision instead of a footnote: the first
-    `_BPE_AUTO_PROBE_ROUNDS` rounds run classical (each exactly one
-    driver action, so the round wall IS the per-action cost); if
-    their median exceeds `_BPE_AUTO_LATENCY_SEC` (0.7 s — the
-    crossover table above) the remainder runs batch_merges=16 +
-    batch_verify="fused" (overriding `batch_verify`, and AQE is
-    restored for the fused rounds' exchange reuse); otherwise the
-    loop stays classical. Output is byte-identical either way (the
-    B-invariance property), so the probe can only change round
-    structure, never the merge table. The decision lands in
-    ``stats``: {"auto_probe_sec", "auto_batch_merges",
+    ``batch_merges="auto"`` implements that rule as a measured in-loop
+    decision: the first `_BPE_AUTO_PROBE_ROUNDS` rounds run classical
+    (each exactly one driver action, so the round wall IS the
+    per-action cost); if their median exceeds `_BPE_AUTO_LATENCY_SEC`
+    the remainder runs batch_merges=16, otherwise the loop stays
+    classical. Output is byte-identical either way, so the probe can
+    only change round structure, never the merge table. The decision
+    lands in ``stats``: {"auto_probe_sec", "auto_batch_merges",
     "auto_switch_round" (None = stayed classical)}.
 
-    The fit loop also pins AQE off for
-    classical/lazy rounds (measured 3.2x at the vocab_partitions=1
-    gate/test shape: 13.9 -> 4.4 s; fused keeps AQE — its 3-reference
-    round plan needs the exchange reuse, 333 vs 618 s at R=1024).
+    The fit loop pins AQE off for classical rounds (measured 3.2x at
+    the vocab_partitions=1 gate/test shape: 13.9 -> 4.4 s); batched
+    rounds keep AQE — their 3-reference round plan needs the exchange
+    reuse (333 vs 618 s at R=1024).
 
     ``stats`` (optional dict) receives {"rounds", "n_merges",
-    "prefix_stops", "ub_stops", "verify_jobs"} — rounds plus
-    verify_jobs is the driver-action count the batching exists to
-    cut, and the stops say which acceptance rule limited batch size.
+    "prefix_stops", "ub_stops"} — rounds is the driver-action count
+    the batching exists to cut, and the stops count the rounds whose
+    batch a rule last cut.
 
     Reference parity: no tokenizer surface in the reference
     (jiamx/flink-etl); extends SURVEY.md §2.12's text family with the
@@ -1086,10 +1030,6 @@ def bpe_fit(
             f"batch_merges must be 'auto' or in [1, 1024], got "
             f"{batch_merges!r}"
         )
-    if batch_verify not in ("lazy", "fused"):
-        raise ValueError(
-            f"batch_verify must be 'lazy' or 'fused', got {batch_verify!r}"
-        )
     spark = docs.sparkSession
     words = bpe_word_counts(docs, text_col)
     if vocab_partitions is not None:
@@ -1106,36 +1046,33 @@ def bpe_fit(
     merges: list[tuple[int, str, str, int]] = []
     products: set[str] = set()
     rounds = 0
-    prefix_stops = 0
-    ub_stops = 0
-    loop_stats: dict = {}
+    stops = {"prefix": 0, "ub": 0}
     applied_since_anchor = 0
-    # Pin AQE OFF for the merge loop (r14, measured): adaptive
-    # execution re-plans after every exchange, turning each round's
-    # ONE logical action into 2-6 scheduler jobs (B=1 at tiny vocab:
-    # 27 jobs/42 stages with AQE vs 13/15 without; loop wall 13.9 ->
-    # 4.4 s) — and a vocabulary-sized loop has nothing for AQE to
-    # adapt: no skew, no partition growth, sizes known after round 1.
-    # The CORPUS-sized word-count aggregate above already ran (the
+    # Pin AQE OFF for the classical merge loop (r14, measured):
+    # adaptive execution re-plans after every exchange, turning each
+    # round's ONE logical action into 2-6 scheduler jobs (B=1 at tiny
+    # vocab: 27 jobs/42 stages with AQE vs 13/15 without; loop wall
+    # 13.9 -> 4.4 s) — and a vocabulary-sized loop has nothing for AQE
+    # to adapt: no skew, no partition growth, sizes known after round
+    # 1. The CORPUS-sized word-count aggregate above already ran (the
     # anchor is eager) under the session's AQE, where adaptivity
     # belongs. Snapshot/restore mirrors _drain_to_memory's pattern.
-    # EXCEPT the fused verify path: its per-round plan references the
-    # pair-count aggregate three times, and AQE's exchange REUSE is
-    # what keeps that one computation — without it the fused round
-    # recomputes the aggregate per reference (same-session R=1024:
-    # fused 617.9 s AQE-off vs 333.1 s AQE-on, while B=1 is
-    # band-neutral at this depth and 3.2x FASTER pinned off at the
-    # gate/test shape vocab_partitions=1).
+    # EXCEPT batched rounds: their plan references the pair-count
+    # aggregate three times, and AQE's exchange REUSE is what keeps
+    # that one computation — without it the round recomputes the
+    # aggregate per reference (same-session R=1024, B=16: 617.9 s
+    # AQE-off vs 333.1 s AQE-on, while B=1 is band-neutral at this
+    # depth and 3.2x FASTER pinned off at the gate/test shape
+    # vocab_partitions=1).
     _aqe_key = "spark.sql.adaptive.enabled"
     _prev_aqe = spark.conf.get(_aqe_key)
     # auto starts classical (B=1): the probe rounds must measure the
     # per-action cost on the arm the decision defaults to
     b_cur: int = 1 if auto_batch else batch_merges
-    verify_cur = "lazy" if auto_batch else batch_verify
     probe_walls: list[float] = []
     auto_switch_round: int | None = None
     auto_probe_sec: float | None = None
-    if verify_cur != "fused":
+    if b_cur == 1:
         spark.conf.set(_aqe_key, "false")
     try:
         import time as _time
@@ -1145,7 +1082,7 @@ def bpe_fit(
             _t0 = _time.monotonic() if auto_batch else None
             pair_counts = _bpe_pair_counts(words)
             want = min(b_cur, n_merges - len(merges))
-            if verify_cur == "fused" and want > 1:
+            if want > 1:
                 top = _bpe_topk_with_bounds(words, pair_counts, want)
             else:
                 top = (
@@ -1154,59 +1091,9 @@ def bpe_fit(
                 )
             if not top:
                 break
-            accepted = [top[0]]
-            if len(top) > 1:
-                # maximal PREFIX of the ranking whose merges cannot touch
-                # each other's counts: symbol sets pairwise disjoint, no
-                # symbol equal to a batch-created or batch-duplicated
-                # merged string (prefix, not skip-and-continue: a skipped
-                # conflicting pair keeps a REDUCED count that could still
-                # outrank later members, which no bound from the current
-                # table can exclude)
-                taken = {top[0]["l"], top[0]["r"]}
-                merged_strs = {top[0]["l"] + top[0]["r"]}
-                for cand in top[1:]:
-                    cm = cand["l"] + cand["r"]
-                    if (
-                        cand["l"] in taken
-                        or cand["r"] in taken
-                        or cand["l"] in merged_strs
-                        or cand["r"] in merged_strs
-                        or cm in merged_strs
-                    ):
-                        break
-                    accepted.append(cand)
-                    taken |= {cand["l"], cand["r"]}
-                    merged_strs.add(cm)
-                if len(accepted) < len(top):
-                    prefix_stops += 1
-                if len(accepted) > 1:
-                    before = len(accepted)
-                    if verify_cur == "fused":
-                        # bounds were fetched with the ranking; only the
-                        # driver-side truncation rules remain. Collision
-                        # rule first (identical to the lazy path): the
-                        # first member whose merged string is an existing
-                        # symbol survives only as the batch's LAST element
-                        for i, row in enumerate(accepted):
-                            if row["l"] + row["r"] in products:
-                                accepted = accepted[: i + 1]
-                                break
-                        if len(accepted) > 1:
-                            accepted = _bpe_ub_truncate(
-                                accepted,
-                                lambda row: (
-                                    int(row["max_grp"] or 0),
-                                    int(row["max_side"] or 0),
-                                ),
-                            )
-                    else:
-                        accepted = _bpe_truncate_batch(
-                            words, accepted, known_products=products,
-                            stats=loop_stats,
-                        )
-                    if len(accepted) < before:
-                        ub_stops += 1
+            accepted, cut = _bpe_truncate_batch(top, products)
+            if cut is not None:
+                stops[cut] += 1
             col = F.col("seq")
             for row in accepted:
                 l, r, c = row["l"], row["r"], row["c"]
@@ -1237,15 +1124,14 @@ def bpe_fit(
                 probe_walls.append(_time.monotonic() - _t0)
                 if len(probe_walls) >= _BPE_AUTO_PROBE_ROUNDS:
                     # decide ONCE: median probe wall vs the measured
-                    # fused-B=16 break-even (module constants above)
+                    # B=16 break-even (module constants above)
                     auto_probe_sec = sorted(probe_walls)[
                         len(probe_walls) // 2
                     ]
                     if auto_probe_sec >= _BPE_AUTO_LATENCY_SEC:
                         b_cur = _BPE_AUTO_BATCH
-                        verify_cur = "fused"
                         auto_switch_round = rounds
-                        # fused rounds need AQE's exchange reuse
+                        # batched rounds need AQE's exchange reuse
                         spark.conf.set(_aqe_key, _prev_aqe)
                     auto_batch = False
     finally:
@@ -1254,9 +1140,8 @@ def bpe_fit(
     if stats is not None:
         stats["rounds"] = rounds
         stats["n_merges"] = len(merges)
-        stats["prefix_stops"] = prefix_stops
-        stats["ub_stops"] = ub_stops
-        stats["verify_jobs"] = loop_stats.get("verify_jobs", 0)
+        stats["prefix_stops"] = stops["prefix"]
+        stats["ub_stops"] = stops["ub"]
         if batch_merges == "auto":
             stats["auto_probe_sec"] = auto_probe_sec
             stats["auto_batch_merges"] = b_cur
@@ -1444,7 +1329,6 @@ def bpe_stage_fit(
     text_col: str = "text",
     vocab_partitions: int | None = None,
     batch_merges: int | str = 1,
-    batch_verify: str = "lazy",
 ) -> None:
     """Stage a BPE tokenizer fit once so encode runs reuse it — the
     `dsir_stage_fit` pattern applied to the tokenizer: a vocabulary is
@@ -1456,12 +1340,13 @@ def bpe_stage_fit(
     a `_BPE_META.json` sidecar pinning {version, n_merges,
     pretoken_re, n_fitted} so a reader can refuse a mismatched or
     truncated artifact. `n_fitted` may be < n_merges when the corpus
-    ran out of pairs (the fit's documented early stop)."""
+    ran out of pairs (the fit's documented early stop). The fit
+    options pass through to `bpe_fit`."""
     from flink_etl_spark.staged import BPE_META
 
     merges = bpe_fit(
         docs, n_merges, text_col=text_col, vocab_partitions=vocab_partitions,
-        batch_merges=batch_merges, batch_verify=batch_verify,
+        batch_merges=batch_merges,
     )
     merges.write.mode("overwrite").parquet(f"{fit_path}/merges")
     BPE_META.write(

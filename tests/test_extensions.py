@@ -3626,10 +3626,10 @@ def test_bpe_fit_vocab_partitions_can_increase(spark):
 
 def test_bpe_fit_auto_batch_arm_equals_sequential(spark):
     """Default-set case of the equivalence below: the arm
-    `batch_merges="auto"` switches to (B = `_BPE_AUTO_BATCH`, fused
-    verify) returns the sequential merge table, counts included, on the
-    tie / overlapping-merge corpus — the B-invariance the switch relies
-    on to never change results."""
+    `batch_merges="auto"` switches to (B = `_BPE_AUTO_BATCH`) returns
+    the sequential merge table, counts included, on the tie /
+    overlapping-merge corpus — the B-invariance the switch relies on to
+    never change results."""
     from flink_etl_spark.operators import text
 
     texts = ["low lower lowest low low", "aaaa aaa banana bandana",
@@ -3641,7 +3641,7 @@ def test_bpe_fit_auto_batch_arm_equals_sequential(spark):
         (r["rank"], r["left"], r["right"], r["pair_count"])
         for r in text.bpe_fit(
             docs, 12, vocab_partitions=1,
-            batch_merges=text._BPE_AUTO_BATCH, batch_verify="fused",
+            batch_merges=text._BPE_AUTO_BATCH,
         ).orderBy("rank").collect()
     ]
     assert got == _ref_bpe_fit(texts, 12)
@@ -3672,35 +3672,22 @@ def test_bpe_fit_batched_equals_sequential(spark):
         )
         ref = _ref_bpe_fit(texts, 12)
         for B in (2, 8, 64):
-            rounds_by_mode = {}
-            for mode in ("lazy", "fused"):
-                st: dict = {}
-                got = [
-                    (r["rank"], r["left"], r["right"], r["pair_count"])
-                    for r in text.bpe_fit(
-                        docs, 12, vocab_partitions=1, batch_merges=B,
-                        batch_verify=mode, stats=st,
-                    ).orderBy("rank").collect()
-                ]
-                assert got == ref, (texts, B, mode, got, ref)
-                assert st["n_merges"] == len(ref)
-                rounds_by_mode[mode] = st["rounds"]
-                if mode == "fused":
-                    # the fused plan computes the bounds inside the
-                    # argmax action — no separate verify job ever runs
-                    assert st["verify_jobs"] == 0, st
-            # identical bounds -> identical truncation decisions:
-            # fused must not change the round structure, only where
-            # the verify aggregates execute
-            assert rounds_by_mode["fused"] == rounds_by_mode["lazy"]
+            st: dict = {}
+            got = [
+                (r["rank"], r["left"], r["right"], r["pair_count"])
+                for r in text.bpe_fit(
+                    docs, 12, vocab_partitions=1, batch_merges=B, stats=st,
+                ).orderBy("rank").collect()
+            ]
+            assert got == ref, (texts, B, got, ref)
+            assert st["n_merges"] == len(ref)
 
 
 def test_bpe_fit_restores_aqe_conf(spark):
     """The fit loop pins spark.sql.adaptive.enabled off for its
-    classical/lazy rounds (r14 — AQE re-plan jobs are pure overhead
-    on a size-constant vocab loop) and must restore the session's
-    value afterwards in every mode, including the fused path that
-    skips the pin."""
+    classical rounds (r14 — AQE re-plan jobs are pure overhead on a
+    size-constant vocab loop) and must restore the session's value
+    afterwards, also after a batched fit, which skips the pin."""
     from flink_etl_spark.operators import text
 
     docs = spark.createDataFrame(
@@ -3709,13 +3696,9 @@ def test_bpe_fit_restores_aqe_conf(spark):
     key = "spark.sql.adaptive.enabled"
     before = spark.conf.get(key)
     assert before == "true"  # the session default the pin must restore
-    for mode in ("lazy", "fused"):
-        text.bpe_fit(docs, 4, vocab_partitions=1, batch_merges=4,
-                     batch_verify=mode)
-        assert spark.conf.get(key) == before, mode
-    with pytest.raises(ValueError, match="batch_verify"):
-        text.bpe_fit(docs, 4, batch_verify="eager")
-    assert spark.conf.get(key) == before
+    for B in (1, 4):
+        text.bpe_fit(docs, 4, vocab_partitions=1, batch_merges=B)
+        assert spark.conf.get(key) == before, B
 
 
 def test_bpe_fit_auto_batch_latency_rule(spark, monkeypatch):
@@ -4008,35 +3991,71 @@ def test_media_phash_dup_clusters_matches_transitive_closure(spark):
 # r14: ADVICE hardening — collision-free batch truncation, anchor conf
 
 
-def test_bpe_truncate_batch_collision_truncates(spark):
+def test_bpe_truncate_batch_collision_truncates():
     """The batch-exactness proof is collision-free by construction
     (r14): a member whose merged string equals an EXISTING symbol may
     survive only as the batch's LAST element (nothing after it for
-    its unification mass to outrank), and with an unknown vocabulary
-    (known_products=None) batches conservatively degrade to size 1."""
-    from flink_etl_spark.operators.text import (
-        _bpe_truncate_batch,
-        bpe_word_counts,
-    )
+    its unification mass to outrank). The guard is driver-side only:
+    it reads the bounds fetched with the ranking and runs no Spark."""
+    from flink_etl_spark.operators.text import _bpe_truncate_batch
 
-    # corpus with none of the batch patterns: every bound is 0, so
-    # nothing BUT the collision rule can truncate
-    words = bpe_word_counts(
-        spark.createDataFrame([(0, "x y")], ["doc_id", "text"])
-    )
+    # disjoint members whose patterns never occur with a neighbor:
+    # every bound is 0 (NULL, as the left join returns it), so nothing
+    # BUT the collision rule can truncate
     batch = [
-        {"l": "a", "r": "b", "c": 100},
-        {"l": "c", "r": "d", "c": 90},
-        {"l": "e", "r": "f", "c": 80},
+        {"l": "a", "r": "b", "c": 100, "max_grp": None, "max_side": None},
+        {"l": "c", "r": "d", "c": 90, "max_grp": None, "max_side": None},
+        {"l": "e", "r": "f", "c": 80, "max_grp": None, "max_side": None},
     ]
     # no collisions: full batch survives
-    assert _bpe_truncate_batch(words, list(batch), set()) == batch
+    assert _bpe_truncate_batch(batch, set()) == (batch, None)
     # middle member collides: kept as the LAST element
-    assert _bpe_truncate_batch(words, list(batch), {"cd"}) == batch[:2]
+    assert _bpe_truncate_batch(batch, {"cd"}) == (batch[:2], "ub")
     # first member collides: batch degrades to the exact argmax alone
-    assert _bpe_truncate_batch(words, list(batch), {"ab"}) == batch[:1]
-    # unknown vocabulary: conservative size-1 batch
-    assert _bpe_truncate_batch(words, list(batch), None) == batch[:1]
+    assert _bpe_truncate_batch(batch, {"ab"}) == (batch[:1], "ub")
+
+
+def test_bpe_truncate_batch_prefix_and_upper_bound():
+    """The guard's other two cuts, on hand-built rankings: the PREFIX
+    rule stops at the first candidate touching an earlier member's
+    symbols or merged string, and the UPPER-BOUND rule stops at the
+    first member whose count does not STRICTLY exceed
+    max(min(max_grp + slack, max_side)) over earlier members."""
+    from flink_etl_spark.operators.text import _bpe_truncate_batch
+
+    def rows(*spec):
+        return [
+            {"l": l, "r": r, "c": c, "max_grp": g, "max_side": s}
+            for l, r, c, g, s in spec
+        ]
+
+    # shared symbol, merged string reused as a symbol, repeated merged
+    # string: each ends the prefix at the conflicting candidate
+    for batch in (
+        rows(("a", "b", 100, 0, 0), ("b", "c", 90, 0, 0)),
+        rows(("a", "b", 100, 0, 0), ("ab", "c", 90, 0, 0)),
+        rows(("a", "bc", 100, 0, 0), ("ab", "c", 90, 0, 0)),
+    ):
+        assert _bpe_truncate_batch(batch, set()) == (batch[:1], "prefix")
+    # a created pair may reach 95 > 90: member 2 must wait a round
+    batch = rows(("a", "b", 100, 95, 200), ("c", "d", 90, 0, 0))
+    assert _bpe_truncate_batch(batch, set()) == (batch[:1], "ub")
+    # ties lose
+    batch = rows(("a", "b", 100, 90, 200), ("c", "d", 90, 0, 0))
+    assert _bpe_truncate_batch(batch, set()) == (batch[:1], "ub")
+    # the side total caps the group bound: min(95, 50) = 50 < 90
+    batch = rows(("a", "b", 100, 95, 50), ("c", "d", 90, 0, 0),
+                 ("e", "f", 80, 0, 0))
+    assert _bpe_truncate_batch(batch, set()) == (batch, None)
+    # the rename slack of earlier members: member 2's bound is
+    # min(0 + 100, 200) = 100, so member 3 (80) is cut
+    batch = rows(("a", "b", 100, 0, 200), ("c", "d", 90, 0, 200),
+                 ("e", "f", 80, 0, 0))
+    assert _bpe_truncate_batch(batch, set()) == (batch[:2], "ub")
+    # both rules cut: the upper bound, applied last, is reported
+    batch = rows(("a", "b", 100, 95, 200), ("c", "d", 90, 0, 0),
+                 ("d", "e", 80, 0, 0))
+    assert _bpe_truncate_batch(batch, set()) == (batch[:1], "ub")
 
 
 def test_anchor_reliable_checkpoint_conf(spark, tmp_path):

@@ -20,7 +20,11 @@ SF = "/root/testdata/sf0.01"
 
 
 def _executed(df) -> str:
-    # AQE finalizes lazily — force execution so the adaptive plan is final
+    # Runs df (a noop write) and returns df's OWN executed plan. The
+    # write plans and runs under a QueryExecution of its own, so under
+    # AQE this is the initial adaptive plan (isFinalPlan=false) —
+    # Catalyst's choice before any runtime re-optimization, not the
+    # final plan AQE ran (ROADMAP open item)
     df.write.format("noop").mode("overwrite").save()
     return df._jdf.queryExecution().executedPlan().toString()
 

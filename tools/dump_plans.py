@@ -35,7 +35,12 @@ COMMENTARY: dict[str, str] = {
         "within-cell self-join plus the keeper anti-join (Spark would "
         "otherwise run the n*k sweep three times). The only corpus-sized "
         "exchange is the by-cell shuffle for the pair join — pair work "
-        "is bounded by the flat-quantizer optimum the auto knob derives."
+        "is bounded by the flat-quantizer optimum the auto knob derives. "
+        "The operator itself spreads the under-split bench input's "
+        "(id, vec) columns over every core and anchors them "
+        "(sources.tables._spread_anchored), so the seed picks and the "
+        "assignment sweep read Scan ExistingRDD leaves; the one parquet "
+        "scan is the caller's frame on the keeper anti-join side."
     ),
     "cdc_merge_day": (
         "Full-outer merge cannot broadcast; sort-merge join is correct. "
@@ -106,10 +111,15 @@ COMMENTARY: dict[str, str] = {
         "bucketed by cell_id once and reuse across query batches."
     ),
     "text_doc_profile": (
-        "Pure column expressions (higher-order functions) in one "
-        "codegen stage; tokenization happens once in a projected column "
-        "and EVERY per-doc signal (token stats, lang-ID, quality, "
-        "fingerprint) derives from it — one scan for the whole profile."
+        "Pure column expressions over one scan, no Python and no "
+        "exchange; tokenization happens once in a projected column and "
+        "EVERY per-doc signal (token stats, lang-ID, quality, "
+        "fingerprint) derives from it. Only the tokenizing projection "
+        "compiles (the * nodes). The signal projection on top holds the "
+        "higher-order functions (transform, filter, aggregate, "
+        "zip_with), which Spark 4.1 implements as CodegenFallback: that "
+        "keeps the node out of whole-stage codegen (no *), its lambdas "
+        "evaluate interpreted, and they carry most of the stage's CPU."
     ),
     "pipeline_training_prep": (
         "The whole prep pipeline (profile -> quality+lang filter -> "
@@ -122,12 +132,15 @@ COMMENTARY: dict[str, str] = {
         "(doc_profile)."
     ),
     "text_repetition_stats": (
-        "One tokenization scan; row-local stats ride the explode_outer "
-        "as grouping keys (no join back to a second tokenizer "
-        "evaluation). The 2+3-gram counts are ONE groupBy with map-side "
-        "partial counts — the shuffle carries (id, ints, gram), never "
-        "document text — followed by a per-doc conditional aggregate "
-        "on the same keys (AQE reuses the partitioning)."
+        "ZERO shuffles: a document's n-grams fit in its own row, so "
+        "every stat is row-local array math (sort, run-length encode, "
+        "array_max) over one tokenization. The bench input is one "
+        "under-split file, so the operator itself spreads it over every "
+        "core and anchors the stats (sources.tables._spread_anchored): "
+        "the whole computation runs as that eager anchor job while the "
+        "frame is built, and the tree below is only its Scan ExistingRDD "
+        "leaf. A multi-split input plans neither the spread nor the "
+        "anchor and shows the plain row-local projection over its scan."
     ),
     "span_dedup_global": (
         "Narrow first-occurrence dedup: the span digest exchange "
@@ -136,7 +149,12 @@ COMMENTARY: dict[str, str] = {
         "a partial-combining min-STRUCT aggregate, deliberately not a "
         "window, so a boilerplate span repeated billions of times "
         "map-side-combines instead of funneling through one reducer. "
-        "Drop-lists join back broadcast-side; the rebuild is row-local."
+        "Drop-lists join back broadcast-side; the rebuild is row-local. "
+        "The operator itself spreads the under-split bench input and "
+        "anchors the span projection (sources.tables._spread_anchored), "
+        "so the digest census and the rebuild both read one Scan "
+        "ExistingRDD leaf: no parquet scan and no round-robin exchange "
+        "in the tree."
     ),
     "substring_dedup_exact": (
         "Offset-robust Lee-et-al substring dedup: one anchor per token "
@@ -147,7 +165,10 @@ COMMENTARY: dict[str, str] = {
         "min-struct first-occurrence + broadcast drop-list shape as "
         "span_dedup; the exchange is ~1 triple per corpus token, the "
         "honest price of offset exactness (winnow= sampling divides it "
-        "by ~(w+1)/2 with the detection guarantee intact)."
+        "by ~(w+1)/2 with the detection guarantee intact). The operator "
+        "itself spreads the under-split bench input and anchors the "
+        "anchor-key projection (sources.tables._spread_anchored), so "
+        "every branch reads one Scan ExistingRDD leaf."
     ),
     "unigram_lm_scores": (
         "CCNet-style LM scoring: the self-fit tf table is persisted "
@@ -178,7 +199,19 @@ COMMENTARY: dict[str, str] = {
         "form (ivfpq_build_index) turns the cell-equi join into a "
         "partition-pruned read of probed cell_id= directories of "
         "byte codes; this entry benches the build+search refresh "
-        "cost."
+        "cost. The corpus side is spread by the operator itself (its "
+        "(id, vec) columns only, anchored by "
+        "sources.tables._spread_anchored) and is the Scan ExistingRDD "
+        "leaf; the one parquet scan is the query set."
+    ),
+    "media_phash_pairs": (
+        "Perceptual-hash near-dup pairs: the hash projection is "
+        "shuffle-free, and the operator itself spreads the under-split "
+        "bench media over every core and anchors the hashes, so both "
+        "sides of the banded Hamming join read Scan ExistingRDD leaves "
+        "and no payload column reaches the tree. The join broadcasts "
+        "one side's (chunk, hash, id) rows, never payloads; the only "
+        "shuffle is the final pair aggregate."
     ),
     "fingerprint_candidates": (
         "MOSS-style pair census: winnowing fingerprint selection is "
