@@ -50,6 +50,7 @@ from collections.abc import Callable
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from flink_etl_spark.functions.sql import ident, utc_instant
 from flink_etl_spark.sources.tables import load_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -98,8 +99,9 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def _ts_ms(col: str = "ts") -> F.Column:
-    """Epoch millis from an NTZ timestamp (session tz pinned UTC by loader)."""
-    return F.unix_millis(F.col(col).cast("timestamp"))
+    """Epoch millis of an NTZ timestamp read as UTC, whatever the session
+    zone: DuckDB's epoch_ms of the same naive value."""
+    return F.unix_millis(F.expr(utc_instant(ident(col))))
 
 
 def exact_decimal_sum(expr: F.Column, decimals: int) -> F.Column:

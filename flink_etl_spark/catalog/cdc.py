@@ -12,6 +12,7 @@ from flink_etl_spark.catalog import (
     exact_decimal_sum,
     query,
 )
+from flink_etl_spark.functions.sql import utc_instant
 from flink_etl_spark.operators import canal, merge
 
 #: order-independent sum of the 6-decimal-exact `value` column (see
@@ -138,7 +139,7 @@ def cdc_merge_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     _t(spark, sf_dir, "customer").createOrReplaceTempView("_v_customer")
     _t(spark, sf_dir, "events").createOrReplaceTempView("_v_events")
     sql_path = spark.sql(
-        """
+        f"""
         SELECT COALESCE(t2.id, t1.id) AS id,
                COALESCE(t2.acct, t1.acct) AS acct,
                COALESCE(t2.event_time, t1.event_time) AS event_time
@@ -149,9 +150,9 @@ def cdc_merge_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT id, acct, event_time
             FROM (
                 SELECT user_id AS id, value AS acct,
-                       unix_millis(CAST(ts AS TIMESTAMP)) AS event_time,
+                       unix_millis({utc_instant('ts')}) AS event_time,
                        row_number() OVER (PARTITION BY user_id
-                                          ORDER BY unix_millis(CAST(ts AS TIMESTAMP)) DESC,
+                                          ORDER BY unix_millis({utc_instant('ts')}) DESC,
                                                    event_id DESC) AS rn
                 FROM _v_events
             ) temp WHERE rn = 1
@@ -259,7 +260,7 @@ def dt_partition_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned sink's directory layout holds (EventTimeBucketAssigner)."""
     events = _t(spark, sf_dir, "events")
     return (
-        events.withColumn("dt", F.date_format(F.col("ts").cast("timestamp"), "yyyyMMdd"))
+        events.withColumn("dt", F.date_format(F.to_date("ts"), "yyyyMMdd"))
         .groupBy("dt")
         .agg(
             F.count("*").alias("n_events"),

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from flink_etl_spark.catalog import (
     _t,
+    _ts_ms,
     duckdb_exact_decimal_avg as eavg,
     duckdb_exact_decimal_sum as esum,
     exact_decimal_avg,
@@ -329,8 +330,8 @@ def window_lag_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     wrun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    ms = F.unix_millis(F.col("ts").cast("timestamp"))
-    lag_ms = F.unix_millis(F.lag(F.col("ts").cast("timestamp")).over(w))
+    ms = _ts_ms()
+    lag_ms = F.lag(ms).over(w)
     gap = (ms - lag_ms).alias("gap_ms")
     return (
         e.select("user_id", "event_id", "ts", gap)

@@ -12,7 +12,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from flink_etl_spark.catalog import query
-from flink_etl_spark.session import apply_runtime_confs
+from flink_etl_spark.session import pinned_conf
+from flink_etl_spark.sources.tables import read_raw_table
 from flink_etl_spark.streaming.stateful import sessionize_stream
 
 _SINK_SEQ = itertools.count()
@@ -50,21 +51,14 @@ def _drain_to_memory(df: DataFrame, tag: str) -> DataFrame:
     if prev is not None:
         spark.catalog.dropTempView(prev)
     name = f"_{tag}_sink_{next(_SINK_SEQ)}"
-    # Pin a small stateful parallelism for the drain (r14): every
-    # micro-batch spins up one state store PER shuffle partition PER
-    # stateful operator side, and at gate scale (sf0.01, ~60k rows)
-    # that fixed store setup/commit overhead dominates the wall —
-    # measured 20.2 s -> 13.1 s on interval_join_purchase_errors
-    # going 32 -> 8. Results are partition-count independent (the T5
-    # invariant, tested); this is gate-harness sizing, not operator
-    # semantics — production streams keep the session's parallelism.
-    # The conf is snapshotted into the query at START, so restoring
-    # it immediately after does not disturb the lazily-evaluated
-    # batch arms of the same gate.
+    # Pin a small stateful parallelism for the drain (r14): one state
+    # store per shuffle partition per stateful side dominates the wall
+    # at gate scale (interval_join_purchase_errors 20.2 s -> 13.1 s at
+    # 32 -> 8). Results are partition-count independent (T5, tested).
+    # A query snapshots the conf at START and has no per-query form of
+    # it, so the session is restored right after.
     key = "spark.sql.shuffle.partitions"
-    prev_parts = spark.conf.get(key)
-    spark.conf.set(key, str(min(int(prev_parts), 8)))
-    try:
+    with pinned_conf(spark, key, str(min(int(spark.conf.get(key)), 8))):
         q = (
             df.writeStream.format("memory")
             .queryName(name)
@@ -72,8 +66,6 @@ def _drain_to_memory(df: DataFrame, tag: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-    finally:
-        spark.conf.set(key, prev_parts)
     _await_drained(q)
     _LAST_SINK[tag] = name
     return spark.table(name)
@@ -81,20 +73,17 @@ def _drain_to_memory(df: DataFrame, tag: str) -> DataFrame:
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming scan of events.parquet with a normalized event-time
-    column `ts` (TIMESTAMP, µs precision, session-UTC instants).
+    column `ts` (TIMESTAMP, µs precision: the naive values read as UTC
+    instants, whatever the session zone).
 
-    The schema-on-read must match the file's PHYSICAL layout, which has
-    shipped in two flavors across driver testdata generations: INT64
-    TIMESTAMP(NANOS) (surfaces as a raw LONG under nanosAsLong — the
-    same seam sources/tables.py handles for batch) and plain
-    TIMESTAMP(MICROS). A hardcoded `ts bigint, … div 1000` schema reads
-    a µs file as µs-longs and silently produces 1970-era timestamps —
-    every event-time gap compresses 1000×, sessions never close, and
-    watermarks sit decades in the past. Probe the batch schema once and
-    adapt."""
+    The schema-on-read must match the file's PHYSICAL layout: INT64
+    TIMESTAMP(NANOS) (a raw LONG, as `read_raw_table` reads it) or
+    TIMESTAMP(MICROS) across testdata generations. A hardcoded `ts
+    bigint, … div 1000` schema would read a µs file as 1970-era
+    timestamps, so the batch schema is probed once."""
     from pyspark.sql.types import LongType
 
-    batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    batch_schema = read_raw_table(spark, sf_dir, "events").schema
     ts_is_long = isinstance(batch_schema["ts"].dataType, LongType)
     ts_ddl = "bigint" if ts_is_long else "timestamp"
     # glob, not a bare file path: FileStreamSource derives basePath from
@@ -150,7 +139,6 @@ def stream_sessionize_closed(spark: SparkSession, sf_dir: str) -> DataFrame:
     every CLOSED session (the open tail session per user stays in
     state). The oracle rebuilds the same sessions in pure SQL — an
     independent batch formulation of the incremental computation."""
-    apply_runtime_confs(spark)
     ev = _events_stream(spark, sf_dir).select("user_id", "ts", "value")
     sessions = sessionize_stream(ev, gap_minutes=30)
     # ms-long session bounds in the gate output (same determinism rule
@@ -167,12 +155,12 @@ def stream_sessionize_closed(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "stream_hypertable_rollup",
     """
-    SELECT time_bucket(INTERVAL '1 hour', ts) AS bucket_start,
+    SELECT epoch_ms(time_bucket(INTERVAL '1 hour', ts)) AS bucket_start,
            event_type,
            count(*) AS n_events,
            round(sum(value), 6) AS sum_value
     FROM events
-    GROUP BY 1, 2
+    GROUP BY time_bucket(INTERVAL '1 hour', ts), event_type
     -- append-mode rollup emits only FINALIZED buckets: bucket end at or
     -- below the final watermark (max event time - 2h delay)
     HAVING time_bucket(INTERVAL '1 hour', ts) + INTERVAL '1 hour'
@@ -191,7 +179,6 @@ def stream_hypertable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_etl_spark.operators.merge import snapshot_exists
     from flink_etl_spark.streaming.merge_sink import start_continuous_rollup
 
-    apply_runtime_confs(spark)
     ev = _events_stream(spark, sf_dir).select("ts", "event_type", "value")
     # fresh per invocation WITHIN the cached dir (checkpoint state must
     # not leak between sf_dirs / repeated runs)
@@ -206,10 +193,14 @@ def stream_hypertable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the oracle's HAVING returns 0 rows — match it instead of
         # crashing on a missing path
         return spark.createDataFrame(
-            [], "bucket_start timestamp, event_type string, "
+            [], "bucket_start bigint, event_type string, "
             "n_events bigint, sum_value double",
         )
-    return spark.read.parquet(f"{work}/rollup")
+    # epoch millis: a raw TIMESTAMP renders in the session zone
+    return spark.read.parquet(f"{work}/rollup").select(
+        F.unix_millis("bucket_start").alias("bucket_start"),
+        "event_type", "n_events", "sum_value",
+    )
 
 
 @query(
@@ -238,7 +229,6 @@ def stream_watermark_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     recurred beyond the horizon."""
     from flink_etl_spark.streaming.stateful import stream_dedup
 
-    apply_runtime_confs(spark)
     ev = _events_stream(spark, sf_dir).select("user_id", "event_type", "ts")
     deduped = stream_dedup(
         ev, ["user_id", "event_type"], "ts", delay="3650 days"

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from flink_etl_spark.catalog import (
     _t,
+    _ts_ms,
     duckdb_exact_decimal_avg as eavg,
     duckdb_exact_decimal_sum as esum,
     exact_decimal_avg,
@@ -65,15 +66,13 @@ def asof_join_purchase_click(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NANOS-flavor parquet at full ns precision would hash sub-us
     # components the Spark loader truncates; ms longs floor identically
     # from either precision
-    # ts loads as TIMESTAMP_NTZ; the session tz is UTC-pinned
-    # (apply_runtime_confs via load_table), so the NTZ->TIMESTAMP cast
-    # preserves the instant and unix_millis matches DuckDB's
-    # epoch_ms(naive-as-UTC)
+    # ts loads as TIMESTAMP_NTZ; _ts_ms reads it as UTC whatever the
+    # session zone, matching DuckDB's epoch_ms(naive-as-UTC)
     return out.select(
         "purchase_id", "user_id",
-        F.unix_millis(F.col("purchase_ts").cast("timestamp")).alias("purchase_ts"),
+        _ts_ms("purchase_ts").alias("purchase_ts"),
         "click_id",
-        F.unix_millis(F.col("click_ts").cast("timestamp")).alias("click_ts"),
+        _ts_ms("click_ts").alias("click_ts"),
         "click_value",
     )
 
@@ -126,7 +125,6 @@ def interval_join_purchase_errors(spark: SparkSession, sf_dir: str) -> DataFrame
         _drain_to_memory,
         _events_stream,
     )
-    from flink_etl_spark.session import apply_runtime_confs
     from flink_etl_spark.streaming.joins import stream_interval_join
 
     ev = _t(spark, sf_dir, "events")
@@ -149,7 +147,6 @@ def interval_join_purchase_errors(spark: SparkSession, sf_dir: str) -> DataFrame
         F.round(F.coalesce(F.sum("err_value"), F.lit(0.0)), 6).alias("err_value_sum"),
     ).select(F.lit("batch").alias("variant"), "*")
 
-    apply_runtime_confs(spark)
     sev = _events_stream(spark, sf_dir)
     sp = sev.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("purchase_id"),

@@ -26,6 +26,11 @@ The rules:
   `spark.sql.legacy.exponentLiteralAsDecimal.enabled`.
 * The `duckdb_*` oracle twins stay separate, independently written
   references; they never share text with the Spark kernels.
+* A generator (`explode`, `posexplode`) takes an expression, never a
+  bare column: over a bare column InferFiltersFromGenerate infers a
+  `size(x) > 0` filter and pushes it below the projection computing x,
+  which then runs twice. `coalesce(x, array())`, or the last array op
+  moved into the generator, changes no row.
 """
 
 from __future__ import annotations
@@ -104,3 +109,23 @@ def lit(v) -> str:
     if isinstance(v, str):
         return str_lit(v)
     raise TypeError(f"no SQL literal form for {type(v).__name__}")
+
+
+#: NTZ arithmetic reads no session time zone; TIMESTAMP arithmetic does
+EPOCH_NTZ = "TIMESTAMP_NTZ'1970-01-01 00:00:00'"
+
+
+def utc_wall_clock(epoch_sql: str, unit: str = "MILLISECOND") -> str:
+    """The UTC wall clock of an epoch count (`unit`s since 1970-01-01
+    UTC) as a TIMESTAMP_NTZ, whatever the session zone."""
+    return f"timestampadd({unit}, {epoch_sql}, {EPOCH_NTZ})"
+
+
+def utc_instant(ntz_sql: str) -> str:
+    """The instant of a TIMESTAMP_NTZ read as UTC wall clock, whatever
+    the session zone (`CAST(ntz AS TIMESTAMP)`, `timestampdiff` and
+    TIMESTAMP-plus-interval all step through the session zone)."""
+    return (
+        f"timestamp_seconds(CAST(CAST({ntz_sql} - {EPOCH_NTZ} "
+        "AS INTERVAL SECOND) AS DECIMAL(24, 6)))"
+    )

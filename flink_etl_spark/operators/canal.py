@@ -14,7 +14,8 @@ keep typed columns through the whole plan — the CSV encoding
 (`flatten_csv`) exists only for faithful-output mode.
 
 Deviations (documented in SURVEY.md §7):
-* timezone pinned UTC (reference used JVM-default TZ — nondeterministic)
+* dt buckets in UTC whatever the session zone (reference used the
+  JVM-default TZ — nondeterministic)
 * `isDdl` accepted as boolean or string ("false"/"true")
 """
 
@@ -32,6 +33,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from flink_etl_spark.functions.sql import EPOCH_NTZ
 
 #: Canal envelope (HdfsSink.java:63-92). `data` is schemaless in the
 #: reference (fastjson ordered maps); MAP<STRING,STRING> is the dynamic
@@ -127,11 +130,12 @@ def explode_rows(
     Plain `explode` drops null/empty arrays — matching the reference,
     which emits nothing when `data` is missing; the inner null-guard
     (HdfsSink.java:84) maps to the isNotNull filter. `keep_cols` carries
-    extra envelope columns (e.g. `table` for routing) through.
+    extra envelope columns (e.g. `table` for routing) through. The
+    coalesce keeps `from_json` to one run per envelope (functions/sql.py).
     """
     out = df.select(
         *keep_cols, "id", "es", "ts", "type",
-        F.explode(F.col("data")).alias(out_col),
+        F.explode(F.coalesce(F.col("data"), F.array())).alias(out_col),
     )
     return out.filter(F.col(out_col).isNotNull())
 
@@ -252,7 +256,7 @@ def flatten_csv_dynamic(
     return df.select(line.alias("line"))
 
 
-def dt_from_line(line: Column | str, sep: str = ",", fmt: str = "yyyyMMdd") -> Column:
+def dt_from_line(line: Column | str, sep: str = ",") -> Column:
     """Faithful-mode partition derivation: recover `es` by SPLITTING the
     CSV line (field 2) exactly as the reference's bucket assigner does
     (EventTimeBucketAssigner.java:40 `element.split(",")[1]`), including
@@ -270,9 +274,7 @@ def dt_from_line(line: Column | str, sep: str = ",", fmt: str = "yyyyMMdd") -> C
     es = F.try_element_at(
         F.split(c, "\\Q" + sep + "\\E"), F.lit(2)
     ).try_cast("long")
-    return F.coalesce(
-        F.date_format(F.timestamp_millis(es), fmt), F.lit(DT_FALLBACK)
-    )
+    return _utc_dt(es)
 
 
 def audit_ingest(raw: DataFrame, value_col: str = "value") -> DataFrame:
@@ -297,7 +299,7 @@ def audit_ingest(raw: DataFrame, value_col: str = "value") -> DataFrame:
     )
 
 
-def dt_expr(es: Column | str, fmt: str = "yyyyMMdd") -> Column:
+def dt_expr(es: Column | str) -> Column:
     """Event-time epoch-millis -> partition value, with the reference's
     `00000000` fallback on unparseable input
     (EventTimeBucketAssigner.java:21-29,37-43).
@@ -308,10 +310,14 @@ def dt_expr(es: Column | str, fmt: str = "yyyyMMdd") -> Column:
     of bucketing to the sentinel.
     """
     es_col = F.col(es) if isinstance(es, str) else es
-    return F.coalesce(
-        F.date_format(F.timestamp_millis(es_col.try_cast("long")), fmt),
-        F.lit(DT_FALLBACK),
-    )
+    return _utc_dt(es_col.try_cast("long"))
+
+
+def _utc_dt(es: Column) -> Column:
+    """yyyyMMdd of the UTC day of epoch millis `es` (NTZ arithmetic: no
+    session zone moves it), or the sentinel for null."""
+    day = F.to_date(F.timestamp_add("MILLISECOND", es, F.expr(EPOCH_NTZ)))
+    return F.coalesce(F.date_format(day, "yyyyMMdd"), F.lit(DT_FALLBACK))
 
 
 def with_dt(df: DataFrame, es_col: str = "es", out_col: str = "dt") -> DataFrame:

@@ -124,9 +124,9 @@ def shingle_sets(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
     shingles = shingles_sql("_t", k)
     if hash_terms:
         shingles = f"transform({shingles}, s -> xxhash64(s))"
-    sh = toks.selectExpr(ident(id_col), f"{shingles} AS shingles")
-    return sh.select(
-        F.col(id_col), F.explode("shingles").alias("shingle")
+    # explode the expression, not a column (see functions/sql.py)
+    return toks.selectExpr(
+        ident(id_col), f"explode({shingles}) AS shingle"
     ).distinct()
 
 

@@ -320,9 +320,9 @@ def insert_overwrite_partitions(df: DataFrame, table: str) -> None:
     replaces exactly the partitions present in `df`, leaves every other
     partition untouched — Hive's `INSERT OVERWRITE TABLE ... PARTITION
     (dt)` with nonstrict dynamic mode, the idiom the reference's delta
-    table is maintained with (K3, README.md:222,247). Forces
+    table is maintained with (K3, README.md:222,247). Pins the session's
     `partitionOverwriteMode=dynamic` for this write only (static mode
-    would wipe the whole table) and restores the caller's conf.
+    would wipe the table; `insertInto` ignores the per-write option).
 
     `df`'s column order must match the table schema with partition
     columns LAST (`insertInto` is position-based)."""

@@ -579,20 +579,19 @@ def decontaminate(
         exploder = F.explode_outer if outer else F.explode
         toks = df.select(F.col(i), F.expr(tokens_sql(ident(t))).alias("_t"))
         if hash_fn == "xxhash64":
-            ids_df = toks.select(
+            staged = toks.select(
                 F.col(i), F.expr(token_hashes_sql("_t")).alias("_th")
-            ).select(
-                F.col(i),
-                F.array_distinct(F.expr(gram_ids_sql("_th", n))).alias("_ga"),
             )
+            ga = F.expr(gram_ids_sql("_th", n))
         else:
-            ids_df = toks.select(
+            staged = toks.select(
                 F.col(i), F.expr(shingles_sql("_t", n)).alias("_sh")
-            ).select(
-                F.col(i),
-                F.array_distinct(F.expr(fold_gram_ids_sql("_sh"))).alias("_ga"),
             )
-        return ids_df.select(F.col(i), exploder("_ga").alias("_g"))
+            ga = F.expr(fold_gram_ids_sql("_sh"))
+        # explode the expression, not a column (see functions/sql.py)
+        return staged.select(
+            F.col(i), exploder(F.array_distinct(ga)).alias("_g")
+        )
 
     bench = grams(benchmark, bid, btext, outer=False).select(
         F.col(bid).alias("_bench_id"), "_g"
@@ -929,19 +928,20 @@ def _dsir_bucket_sql(hash_terms: bool, n_buckets: int):
 
 
 def _dsir_feats_frame(
-    d: DataFrame, id_col: str, text_col: str, keep_id: bool
+    d: DataFrame, id_col: str, text_col: str, keep_id: bool,
+    rows: bool = False,
 ) -> DataFrame:
     """(id?, _feats): unigrams + bigram shingles, token array staged as
-    its own projection per the interpreted-HOF rule."""
+    its own projection per the interpreted-HOF rule. `rows=True` gives
+    (id?, _fs), one row per feature, exploded from the expression."""
     toks = d.select(
         *([F.col(id_col)] if keep_id else []),
         F.expr(tokens_sql(ident(text_col))).alias("_toks"),
     )
+    feats = F.concat(F.col("_toks"), F.expr(shingles_sql("_toks", 2)))
     return toks.select(
         *([id_col] if keep_id else []),
-        F.concat(
-            F.col("_toks"), F.expr(shingles_sql("_toks", 2))
-        ).alias("_feats"),
+        F.explode(feats).alias("_fs") if rows else feats.alias("_feats"),
     )
 
 
@@ -959,8 +959,7 @@ def _dsir_per_bucket(
 
     def bucket_counts(d: DataFrame, out: str) -> DataFrame:
         return (
-            _dsir_feats_frame(d, "", text_col, False)
-            .select(F.explode("_feats").alias("_fs"))
+            _dsir_feats_frame(d, "", text_col, False, rows=True)
             .select(F.expr(bucket_sql("_fs")).alias("_b"))
             .groupBy("_b")
             .agg(F.count("*").alias(out))
@@ -1427,9 +1426,8 @@ def nb_classifier_scores_multi(
         [(i, c) for i, c in enumerate(classes)], ["_k", "_cls"]
     )
     feats = (
-        _dsir_feats_frame(labeled_docs, label_col, text_col, True)
-        .select(F.col(label_col).alias("_cls"), F.explode("_feats").alias("_fs"))
-        .select("_cls", F.expr(bsql("_fs")).alias("_b"))
+        _dsir_feats_frame(labeled_docs, label_col, text_col, True, rows=True)
+        .select(F.col(label_col).alias("_cls"), F.expr(bsql("_fs")).alias("_b"))
     )
     # the count table (<= K*B rows) feeds BOTH the dense grid and the
     # per-class totals; without the eager localCheckpoint Spark
@@ -1682,8 +1680,7 @@ def staged_fit_drift_check(
         else F.col("_ct") + F.col("_cq")
     )
     bcounts = (
-        _dsir_feats_frame(batch, "", text_col, False)
-        .select(F.explode("_feats").alias("_fs"))
+        _dsir_feats_frame(batch, "", text_col, False, rows=True)
         .select(F.expr(bsql("_fs")).alias("_b"))
         .groupBy("_b")
         .agg(F.count("*").alias("_cb"))
@@ -2097,10 +2094,13 @@ def span_dedup(
             F.concat_ws(" ", kept).alias(out_col),
         )
 
-    span_key = F.sha2(F.col("_s"), 256) if key == "digest" else F.col("_s")
-    narrow = staged.select(
-        F.col(id_col), F.posexplode("_spans").alias("_pos", "_s")
-    ).select(F.col(id_col), "_pos", span_key.alias("_k"))
+    span = F.col("_e._s")
+    span_key = F.sha2(span, 256) if key == "digest" else span
+    # explode an expression, not `posexplode(_spans)` (functions/sql.py)
+    narrow = staged.selectExpr(
+        ident(id_col),
+        "explode(transform(_spans, (s, p) -> struct(p AS _pos, s AS _s))) AS _e",
+    ).select(F.col(id_col), F.col("_e._pos").alias("_pos"), span_key.alias("_k"))
     occ = F.struct(F.col(id_col), F.col("_pos"))
     winners = narrow.groupBy("_k").agg(F.min(occ).alias("_w"))
     dropped = (
@@ -2398,11 +2398,7 @@ def _substring_narrow(
     keeps exactly its rightmost minimum."""
     i = ident(id_col)
     if winnow == 1:
-        # explode over an expression, not `posexplode(_a)`: a generator
-        # over a bare attribute lets InferFiltersFromGenerate (on in any
-        # session not built by `get_spark`) add `size(_a) > 0` and push
-        # it below the projection, recomputing the anchor kernel in the
-        # scan
+        # explode an expression, not `posexplode(_a)` (functions/sql.py)
         return with_anchors.selectExpr(
             i, "explode(transform(_a, (k, p) -> struct(p AS _pos, k AS _k))) AS _s"
         ).selectExpr(i, "_s._pos AS _pos", "_s._k AS _k")
@@ -2637,7 +2633,8 @@ def fingerprint_candidates(
         .filter("size(_ids) >= 2")
         # one row per list member, paired with the members after it:
         # rows stay linear in the list while the n*(n-1)/2 pairs stream
-        .selectExpr("_ids", "posexplode(_ids) AS (_j, doc_a)")
+        # the last member pairs with nobody: positions 0..n-2 only
+        .selectExpr("_ids", "posexplode(slice(_ids, 1, size(_ids) - 1)) AS (_j, doc_a)")
         .selectExpr("doc_a", "explode(slice(_ids, _j + 2, size(_ids) - _j - 1)) AS doc_b")
         .groupBy("doc_a", "doc_b")
         .agg(F.expr("count(1) AS n_shared"))

@@ -124,10 +124,10 @@ def hyperplanes(embs: DataFrame, n_planes: int = 4,
         embs.select(F.col(id_col), F.col(vec_col))
         .orderBy(id_col)
         .limit(n_planes)
-        .agg(F.array_sort(F.collect_list(F.struct(id_col, vec_col))).alias("_a"))
+        .agg(F.collect_list(F.struct(id_col, vec_col)).alias("_a"))
     )
     return packed.select(
-        F.posexplode("_a").alias("_pos", "_s")
+        F.posexplode(F.array_sort("_a")).alias("_pos", "_s")
     ).select(
         F.col("_pos").cast("int").alias("plane_id"),
         F.col(f"_s.{vec_col}").alias("plane"),
@@ -185,10 +185,10 @@ def ivf_centroids(
         embs.select(F.col(id_col), F.col(vec_col))
         .orderBy(id_col)
         .limit(n_cells)
-        .agg(F.array_sort(F.collect_list(F.struct(id_col, vec_col))).alias("_a"))
+        .agg(F.collect_list(F.struct(id_col, vec_col)).alias("_a"))
     )
     cents = packed.select(
-        F.posexplode("_a").alias("_pos", "_s")
+        F.posexplode(F.array_sort("_a")).alias("_pos", "_s")
     ).select(
         F.col("_pos").cast("int").alias("cell_id"),
         F.col(f"_s.{vec_col}").alias("centroid"),
@@ -197,7 +197,10 @@ def ivf_centroids(
     for _ in range(refine_iters):
         assigned = ivf_assign(embs, cents, 1, id_col, vec_col)
         means = (
-            assigned.select("cell_id", F.posexplode(F.col(vec_col)).alias("_d", "_v"))
+            assigned.select(
+                "cell_id",
+                F.posexplode(F.coalesce(F.col(vec_col), F.array())).alias("_d", "_v"),
+            )
             .groupBy("cell_id", "_d")
             .agg(F.avg("_v").alias("_m"))
             .groupBy("cell_id")
@@ -714,15 +717,11 @@ def split_hot_cells(
                 )
                 .orderBy("_h", id_col)
                 .limit(k)
-                .agg(
-                    F.array_sort(
-                        F.collect_list(F.struct(id_col, vec_col))
-                    ).alias("_a")
-                )
+                .agg(F.collect_list(F.struct(id_col, vec_col)).alias("_a"))
             )
             parts.append(
                 packed.select(
-                    F.posexplode("_a").alias("_pos", "_s")
+                    F.posexplode(F.array_sort("_a")).alias("_pos", "_s")
                 ).select(
                     (F.col("_pos").cast("int") + F.lit(next_id)).alias(
                         "cell_id"
@@ -1280,7 +1279,7 @@ def pq_codebooks(
         means = (
             assigned.select(
                 "sub_id", "code",
-                F.posexplode("subvec").alias("_d", "_v"),
+                F.posexplode(F.coalesce("subvec", F.array())).alias("_d", "_v"),
             )
             .groupBy("sub_id", "code", "_d")
             .agg(F.avg("_v").alias("_m"))
@@ -1316,9 +1315,11 @@ def _pq_seeds(nv_frame: DataFrame, n_codes: int, id_col: str) -> DataFrame:
     packed = (
         nv_frame.orderBy(id_col)
         .limit(n_codes)
-        .agg(F.array_sort(F.collect_list(F.struct(id_col, "_nv"))).alias("_a"))
+        .agg(F.collect_list(F.struct(id_col, "_nv")).alias("_a"))
     )
-    return packed.select(F.posexplode("_a").alias("_code", "_s")).select(
+    return packed.select(
+        F.posexplode(F.array_sort("_a")).alias("_code", "_s")
+    ).select(
         F.col("_code").cast("int").alias("code_id"),
         F.col("_s._nv").alias("_nv"),
     )
@@ -1659,20 +1660,15 @@ def _pq_assign_subs(
 
     packed = _pq_packed(codebooks)
     d_sub = _guarded_dsub("_nv", m)
-    staged = (
-        embs.select(F.col(id_col), l2_normalize(vec_col).alias("_nv"))
-        .crossJoin(F.broadcast(packed))
-        .withColumn(
-            "_subs",
-            F.transform(
-                F.sequence(F.lit(0), F.lit(m - 1)),
-                lambda s: F.slice(F.col("_nv"), s * d_sub + 1, d_sub),
-            ),
-        )
+    staged = embs.select(
+        F.col(id_col), l2_normalize(vec_col).alias("_nv")
+    ).crossJoin(F.broadcast(packed))
+    subs = F.transform(
+        F.sequence(F.lit(0), F.lit(m - 1)),
+        lambda s: F.slice(F.col("_nv"), s * d_sub + 1, d_sub),
     )
     exploded = staged.select(
-        F.col(id_col), F.posexplode("_subs").alias("sub_id", "subvec"),
-        "_cb",
+        F.col(id_col), F.posexplode(subs).alias("sub_id", "subvec"), "_cb",
     )
     codes_col = F.element_at(F.col("_cb"), F.col("sub_id") + 1)
     best = F.array_min(

@@ -12,9 +12,11 @@ whole-stage codegen, and evaluates the lambdas interpreted.
 
 from __future__ import annotations
 
+from contextlib import ExitStack
+
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
-from flink_etl_spark.session import anchor
+from flink_etl_spark.session import anchor, pinned_conf
 
 from flink_etl_spark.functions.hashing import (
     MERSENNE_P,
@@ -1048,24 +1050,16 @@ def bpe_fit(
     rounds = 0
     stops = {"prefix": 0, "ub": 0}
     applied_since_anchor = 0
-    # Pin AQE OFF for the classical merge loop (r14, measured):
-    # adaptive execution re-plans after every exchange, turning each
-    # round's ONE logical action into 2-6 scheduler jobs (B=1 at tiny
-    # vocab: 27 jobs/42 stages with AQE vs 13/15 without; loop wall
-    # 13.9 -> 4.4 s) — and a vocabulary-sized loop has nothing for AQE
-    # to adapt: no skew, no partition growth, sizes known after round
-    # 1. The CORPUS-sized word-count aggregate above already ran (the
-    # anchor is eager) under the session's AQE, where adaptivity
-    # belongs. Snapshot/restore mirrors _drain_to_memory's pattern.
-    # EXCEPT batched rounds: their plan references the pair-count
-    # aggregate three times, and AQE's exchange REUSE is what keeps
-    # that one computation — without it the round recomputes the
-    # aggregate per reference (same-session R=1024, B=16: 617.9 s
-    # AQE-off vs 333.1 s AQE-on, while B=1 is band-neutral at this
-    # depth and 3.2x FASTER pinned off at the gate/test shape
-    # vocab_partitions=1).
-    _aqe_key = "spark.sql.adaptive.enabled"
-    _prev_aqe = spark.conf.get(_aqe_key)
+    # Pin AQE OFF for the classical (B=1) merge loop (r14, measured):
+    # re-planning after every exchange turns each round's ONE action
+    # into 2-6 jobs (tiny vocab: 27 jobs vs 13; loop wall 13.9 -> 4.4 s)
+    # and a vocabulary-sized loop has nothing to adapt; the corpus-sized
+    # word count above already ran under the session's AQE. AQE has no
+    # per-plan switch, so the session conf is pinned for the loop.
+    # Batched rounds keep AQE: its exchange reuse computes their
+    # thrice-referenced pair-count aggregate once (R=1024, B=16: 617.9 s
+    # AQE-off vs 333.1 s AQE-on).
+    aqe_off = ExitStack()
     # auto starts classical (B=1): the probe rounds must measure the
     # per-action cost on the arm the decision defaults to
     b_cur: int = 1 if auto_batch else batch_merges
@@ -1073,8 +1067,10 @@ def bpe_fit(
     auto_switch_round: int | None = None
     auto_probe_sec: float | None = None
     if b_cur == 1:
-        spark.conf.set(_aqe_key, "false")
-    try:
+        aqe_off.enter_context(
+            pinned_conf(spark, "spark.sql.adaptive.enabled", "false")
+        )
+    with aqe_off:
         import time as _time
 
         while len(merges) < n_merges:
@@ -1132,10 +1128,8 @@ def bpe_fit(
                         b_cur = _BPE_AUTO_BATCH
                         auto_switch_round = rounds
                         # batched rounds need AQE's exchange reuse
-                        spark.conf.set(_aqe_key, _prev_aqe)
+                        aqe_off.close()
                     auto_batch = False
-    finally:
-        spark.conf.set(_aqe_key, _prev_aqe)
     del anchor_ref
     if stats is not None:
         stats["rounds"] = rounds

@@ -2,11 +2,11 @@
 
 Replaces the reference's environment setup (HdfsSink.java:36-44 —
 execution env, parallelism, checkpointing) with a Spark-first
-configuration: AQE on, timezone pinned UTC (the reference used the JVM
-default TZ in EventTimeBucketAssigner.java:41-42, which is
-nondeterministic across machines — we pin and document the deviation),
-dynamic partition overwrite for INSERT OVERWRITE semantics
-(README.md:222).
+configuration. `get_spark`'s builder is the one place the package
+configures a session; its defaults serve users' own queries. The
+package's plans and writes carry their own semantics: e.g. dt buckets
+in UTC whatever the session zone (the reference used the JVM default
+TZ, EventTimeBucketAssigner.java:41-42; SURVEY.md §7).
 """
 
 from __future__ import annotations
@@ -16,36 +16,18 @@ from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
-# Runtime-settable SQL confs the engine relies on. Applied both at
-# session build time and defensively by `apply_runtime_confs` when we
-# receive a session we didn't build (e.g. the verification driver's).
+# SQL confs `get_spark` builds its session with, for users' own queries
 RUNTIME_CONFS: dict[str, str] = {
     # driver testdata uses pandas-default INT64 TIMESTAMP(NANOS) which
     # Spark refuses by default; read them as raw longs and convert.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
-    # deterministic event-time -> yyyyMMdd bucketing (see module doc)
+    # deterministic timestamp rendering (see module doc)
     "spark.sql.session.timeZone": "UTC",
-    # runtime re-planning: partition coalescing, skew-join splitting
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
     # INSERT OVERWRITE a single dt= partition without nuking the table
     "spark.sql.sources.partitionOverwriteMode": "dynamic",
     # dt partitions are STRINGS ("dt=00000000" sentinel included); type
     # inference would read them back as ints and turn the sentinel into 0
     "spark.sql.sources.partitionColumnTypeInference.enabled": "false",
-    # InferFiltersFromGenerate turns every explode(expensive_expr) into
-    # an extra `size(expensive_expr) > 0 AND isnotnull(...)` filter that
-    # RE-EVALUATES the expression per row (no CSE across Filter/Generate).
-    # This engine's explodes are over computed arrays — from_json'd Canal
-    # envelopes, regex token splits, shingle transforms, band structs —
-    # where the inferred filter costs far more than the empty rows it
-    # prunes: measured 1.45s -> 0.91s (-37%) on 1M-row Canal ingest,
-    # 3.05s -> 2.20s on the canal_ingest_flatten headline query, with
-    # zero result changes (the rule is redundant with explode's own
-    # null/empty-drop semantics).
-    "spark.sql.optimizer.excludedRules":
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
 }
 
 
@@ -87,21 +69,6 @@ def get_spark(
     return builder.getOrCreate()
 
 
-def apply_runtime_confs(spark: SparkSession) -> SparkSession:
-    """Best-effort apply engine confs to an externally-built session.
-
-    Every conf in RUNTIME_CONFS is runtime-settable in Spark 4.x; the
-    try/except guards against future immutability or locked-down
-    sessions — the engine then degrades gracefully instead of failing.
-    """
-    for k, v in RUNTIME_CONFS.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass
-    return spark
-
-
 # Conf key gating lineage anchors between fast executor-local
 # checkpoints and fault-tolerant reliable checkpoints (see `anchor`).
 RELIABLE_CHECKPOINT_CONF = "spark.flinkEtlSpark.reliableCheckpoint"
@@ -136,35 +103,32 @@ def anchor(df, eager: bool = True):
     local anchor, unless the reliable conf is set; under it the leaf
     is computed by the first job and computed AGAIN when Spark saves
     it to the checkpoint directory after that job."""
-    spark = df.sparkSession
-    try:
-        reliable = (
-            str(spark.conf.get(RELIABLE_CHECKPOINT_CONF, "false")).lower()
-            == "true"
-        )
-    except Exception:
-        reliable = False
-    if reliable:
+    conf = df.sparkSession.conf.get(RELIABLE_CHECKPOINT_CONF, "false")
+    if str(conf).lower() == "true":
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
 
 
 @contextmanager
-def dynamic_partition_overwrite(spark: SparkSession):
-    """Pin `partitionOverwriteMode=dynamic` for the enclosed write and
-    restore the caller's conf after.
-
-    The guarantee must not rest on an ambient session conf: under
-    Spark's `static` default, a partitioned `mode("overwrite")` write
-    silently DELETES every partition absent from the frame — a one-day
-    backfill wipes the table. Every partition-overwrite site in the
-    package (ingest sink, compaction, rollup upsert, INSERT OVERWRITE)
-    goes through this one manager so the hazard is handled in exactly
-    one place."""
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key, "static")
-    spark.conf.set(key, "dynamic")
+def pinned_conf(spark: SparkSession, key: str, value: str):
+    """Set one session conf for the enclosed block, then restore the
+    caller's setting (unset if it had none), also on error. Only for
+    confs with no per-plan or per-write form."""
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, value)
     try:
         yield
     finally:
-        spark.conf.set(key, prev)
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+
+
+def dynamic_partition_overwrite(spark: SparkSession):
+    """Pin `partitionOverwriteMode=dynamic` for the enclosed write (under
+    Spark's `static` default a partitioned overwrite DELETES every
+    partition absent from the frame). Only `insertInto` needs the
+    session pin: it ignores the per-write option path writes pass (a
+    one-partition overwrite with the option wiped the other one)."""
+    return pinned_conf(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic")

@@ -37,24 +37,21 @@ def compact_partitions(
     compact_partition` is the per-partition STAGED-SWAP variant of this
     op (crash-recoverable; prefer it for single closed partitions)."""
     from flink_etl_spark.operators.maintenance import refuse_streaming_sink_log
+    from flink_etl_spark.sources.files import read_string_partitioned
 
     refuse_streaming_sink_log(spark, path)
-    df = spark.read.option("basePath", path).format(fmt).load(path)
+    df = read_string_partitioned(spark, path, dt_col, fmt)
     if dt_values is not None:
         df = df.filter(F.col(dt_col).isin(dt_values))
     salt = F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]),
                   F.lit(target_files_per_dt))
-    # ENFORCE dynamic partition overwrite for the duration of the write:
-    # under the Spark default (static) this overwrite would silently
-    # DELETE every partition not selected in dt_values
-    from flink_etl_spark.session import dynamic_partition_overwrite
-
-    with dynamic_partition_overwrite(spark):
-        (
-            df.repartition(F.col(dt_col), salt)
-            .write.mode("overwrite")
-            .partitionBy(dt_col)
-            .option("maxRecordsPerFile", 0)  # size governed by repartition
-            .format(fmt)
-            .save(path)
-        )
+    # dynamic overwrite per write: static would DELETE the unselected dts
+    (
+        df.repartition(F.col(dt_col), salt)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(dt_col)
+        .option("maxRecordsPerFile", 0)  # size governed by repartition
+        .format(fmt)
+        .save(path)
+    )

@@ -9,12 +9,29 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StringType, StructField, StructType
 
 
 def read_partitioned(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
     """Read a dt-partitioned table root; `dt` arrives as a partition
     column and `.filter(col('dt') == day)` prunes directories."""
-    return spark.read.format(fmt).option("basePath", path).load(path)
+    return read_string_partitioned(spark, path, "dt", fmt)
+
+
+def read_string_partitioned(
+    spark: SparkSession, path: str, part_col: str, fmt: str = "parquet"
+) -> DataFrame:
+    """A partitioned table root with `part_col` typed STRING. Under
+    partition type inference (Spark's default) `dt=00000000` would read
+    as the int 0, so the read then declares the type and lists again."""
+    df = spark.read.format(fmt).option("basePath", path).load(path)
+    if dict(df.dtypes).get(part_col, "string") == "string":
+        return df
+    schema = StructType([
+        StructField(part_col, StringType()) if f.name == part_col else f
+        for f in df.schema
+    ])
+    return spark.read.schema(schema).format(fmt).option("basePath", path).load(path)
 
 
 def read_day(spark: SparkSession, path: str, day: str, fmt: str = "parquet") -> DataFrame:

@@ -19,7 +19,8 @@ from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import LongType
 
-from flink_etl_spark.session import anchor, apply_runtime_confs
+from flink_etl_spark.functions.sql import ident, utc_wall_clock
+from flink_etl_spark.session import anchor
 
 CANONICAL_TABLES = (
     "region",
@@ -39,16 +40,25 @@ CANONICAL_TABLES = (
 _NANOS_COLS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
 
 
+def read_raw_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """One canonical table as stored (nano timestamps as raw LONGs). For
+    `_NANOS_COLS` tables this sets `nanosAsLong` on the session, the
+    package's one lasting write to a session it is handed: Spark 4.1's
+    `ParquetOptions` has no per-read form, and the job reads it again."""
+    if name in _NANOS_COLS:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one canonical table, normalizing nano-timestamp columns."""
-    apply_runtime_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_raw_table(spark, sf_dir, name)
     for col in _NANOS_COLS.get(name, ()):
         if col in df.columns and isinstance(df.schema[col].dataType, LongType):
             # integer div: ts is ~1.7e18, double division would lose ns bits
             df = df.withColumn(
                 col,
-                F.expr(f"CAST(timestamp_micros({col} div 1000) AS TIMESTAMP_NTZ)"),
+                F.expr(utc_wall_clock(f"{ident(col)} div 1000", "MICROSECOND")),
             )
     return df
 

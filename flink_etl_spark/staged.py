@@ -417,10 +417,8 @@ def index_so_far(
     from pyspark.errors import AnalysisException
 
     try:
-        # the engine session disables partition-column type inference
-        # (RUNTIME_CONFS: dt= partitions are strings), so batch_id
-        # arrives as a STRING — the explicit bigint cast is load-
-        # bearing: a lexicographic "10" < "9" comparison would corrupt
+        # batch_id is a STRING where partition type inference is off:
+        # the bigint cast is load-bearing, as "10" < "9" would corrupt
         # the pruning from batch 10 on
         return _batch_partitions_below(spark, index_path, batch_id).select(
             key_col

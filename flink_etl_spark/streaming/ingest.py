@@ -92,19 +92,15 @@ def run_ingest_batch(
     """Same pipeline, batch execution (backfill / tests): identical
     transform chain, identical partitioned layout.
 
-    Dynamic partition overwrite is PINNED for the write, not inherited:
-    under Spark's static default a one-day backfill would silently
-    DELETE every other partition at sink.path (same hardening as
-    sources/compact.py — the guarantee must not rest on an ambient
-    session conf, e.g. a session not built by get_spark)."""
-    from flink_etl_spark.session import dynamic_partition_overwrite
-
+    The write passes `partitionOverwriteMode=dynamic` itself: under
+    Spark's static default a one-day backfill would DELETE every other
+    partition at sink.path."""
     out = ingest_pipeline(raw, payload_cols)
-    with dynamic_partition_overwrite(raw.sparkSession):
-        (
-            out.write.mode("overwrite")
-            .format(sink.format)
-            .option("maxRecordsPerFile", str(sink.max_records_per_file))
-            .partitionBy(*sink.partition_by)
-            .save(sink.path)
-        )
+    (
+        out.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .format(sink.format)
+        .option("maxRecordsPerFile", str(sink.max_records_per_file))
+        .partitionBy(*sink.partition_by)
+        .save(sink.path)
+    )

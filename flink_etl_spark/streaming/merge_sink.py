@@ -31,7 +31,9 @@ from collections.abc import Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import TimestampType
 
+from flink_etl_spark.functions.sql import utc_wall_clock
 from flink_etl_spark.operators.merge import (
     cdc_merge,
     dedup_latest,
@@ -254,7 +256,11 @@ def start_continuous_rollup(
         )
     )
     if partition_col is not None:
-        agg = agg.withColumn(partition_col, F.to_date("bucket_start"))
+        start = F.col("bucket_start")
+        if isinstance(agg.schema["bucket_start"].dataType, TimestampType):
+            # the instant's UTC day (to_date reads no zone from an NTZ)
+            start = F.expr(utc_wall_clock("unix_micros(bucket_start)", "MICROSECOND"))
+        agg = agg.withColumn(partition_col, F.to_date(start))
 
     def _upsert(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession

@@ -46,7 +46,7 @@ def test_get_spark_extra_conf_overrides_runtime_confs(spark):
     explicit caller overrides right back to the engine defaults."""
     from flink_etl_spark.session import RUNTIME_CONFS, get_spark
 
-    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    key = "spark.sql.legacy.parquet.nanosAsLong"
     assert RUNTIME_CONFS[key] == "true"
     prev = spark.conf.get(key)
     try:

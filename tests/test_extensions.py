@@ -3632,19 +3632,27 @@ def test_bpe_fit_auto_batch_arm_equals_sequential(spark):
     never change results."""
     from flink_etl_spark.operators import text
 
-    texts = ["low lower lowest low low", "aaaa aaa banana bandana",
-             "the the the them theme", "ab ab abc abcd, abcd!"]
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], ["doc_id", "text"]
-    )
-    got = [
-        (r["rank"], r["left"], r["right"], r["pair_count"])
-        for r in text.bpe_fit(
-            docs, 12, vocab_partitions=1,
-            batch_merges=text._BPE_AUTO_BATCH,
-        ).orderBy("rank").collect()
+    corpora = [
+        ["low lower lowest low low", "aaaa aaa banana bandana",
+         "the the the them theme", "ab ab abc abcd, abcd!"],
+        # the upper-bound cut binds: in round 2 (a,b), (ac,q) and (b,z)
+        # tie at 3; the batch may take (a,b) but not (ac,q), because the
+        # pair (ab,z) that merging (a,b) creates also counts 3 and sorts
+        # before (ac,q), so sequential BPE merges it first
+        ["ac ac ac ac ac ac", "acq acq acq", "abz abz abz"],
     ]
-    assert got == _ref_bpe_fit(texts, 12)
+    for texts in corpora:
+        docs = spark.createDataFrame(
+            [(i, t) for i, t in enumerate(texts)], ["doc_id", "text"]
+        )
+        got = [
+            (r["rank"], r["left"], r["right"], r["pair_count"])
+            for r in text.bpe_fit(
+                docs, 12, vocab_partitions=1,
+                batch_merges=text._BPE_AUTO_BATCH,
+            ).orderBy("rank").collect()
+        ]
+        assert got == _ref_bpe_fit(texts, 12), texts
 
 
 @pytest.mark.slow

@@ -19,14 +19,30 @@ from flink_etl_spark import queries as Q
 SF = "/root/testdata/sf0.01"
 
 
+_GENERATE_RULE = "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
+
+
 def _executed(df) -> str:
-    # Runs df (a noop write) and returns df's OWN executed plan. The
-    # write plans and runs under a QueryExecution of its own, so under
-    # AQE this is the initial adaptive plan (isFinalPlan=false) —
-    # Catalyst's choice before any runtime re-optimization, not the
-    # final plan AQE ran (ROADMAP open item)
-    df.write.format("noop").mode("overwrite").save()
-    return df._jdf.queryExecution().executedPlan().toString()
+    # Runs df's own QueryExecution (the plan a write of df runs) and
+    # returns the plan that ran. Under AQE that is the final adaptive
+    # plan, after runtime re-optimization; a plan without an exchange
+    # is not adaptive, and its root (TakeOrderedAndProject, Project,
+    # WholeStageCodegen, ...) is final as planned.
+    plan = df._jdf.queryExecution().executedPlan()
+    plan.execute().count()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        assert plan.simpleString(100).endswith("isFinalPlan=true")
+        plan = plan.executedPlan()  # the final plan, without the initial one
+    return plan.toString()
+
+
+def _with_rule_excluded(spark, fn):
+    """fn() with InferFiltersFromGenerate excluded, the session restored
+    after."""
+    from flink_etl_spark.session import pinned_conf
+
+    with pinned_conf(spark, "spark.sql.optimizer.excludedRules", _GENERATE_RULE):
+        return fn()
 
 
 def _optimized(df) -> str:
@@ -420,30 +436,23 @@ def test_filtered_output_keeps_heavy_work_above_the_spread(spark, operator, keep
 
 def test_fingerprints_winnow1_plan_ignores_generate_filter_inference(spark):
     """`document_fingerprints(winnow=1)` plans the same whether or not
-    the session excludes InferFiltersFromGenerate (only `get_spark`
-    does): below the Generate there is no Filter and no scan
-    DataFilter, either of which would recompute the whole anchor
-    kernel before the projection computes it again. Rows equal the
-    engine session's."""
+    the session excludes InferFiltersFromGenerate: with the rule on,
+    below the Generate there is no Filter and no scan DataFilter,
+    either of which would recompute the whole anchor kernel before the
+    projection computes it again. Rows equal those planned with the
+    rule excluded."""
     import re
 
     from flink_etl_spark.operators.prep import document_fingerprints
 
-    conf = "spark.sql.optimizer.excludedRules"
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     for key in ("hash64", "digest"):
-        want = sorted(map(tuple, document_fingerprints(
+        want = _with_rule_excluded(spark, lambda: sorted(map(tuple, document_fingerprints(
             docs, min_tokens=13, winnow=1, key=key
-        ).collect()))
-        saved = spark.conf.get(conf, None)
-        spark.conf.unset(conf)
-        try:
-            fps = document_fingerprints(docs, min_tokens=13, winnow=1, key=key)
-            plan = _executed(fps)
-            got = sorted(map(tuple, fps.collect()))
-        finally:
-            if saved is not None:
-                spark.conf.set(conf, saved)
+        ).collect())))
+        fps = document_fingerprints(docs, min_tokens=13, winnow=1, key=key)
+        plan = _executed(fps)
+        got = sorted(map(tuple, fps.collect()))
         below = plan.split(" Generate ", 1)[1].splitlines()[1:]
         assert not [
             line for line in below
@@ -518,12 +527,16 @@ def test_ingest_is_single_codegen_pipeline(spark):
     plan = _executed(ingest_pipeline(raw, ["c"]))
     assert "Exchange" not in plan
     assert "*(" in plan  # whole-stage-codegen stage markers
-    # parse-once must survive optimization: at most TWO from_json sites
-    # (the pushed-down isDdl filter + the envelope projection). Without
-    # the InferFiltersFromGenerate exclusion (session.py RUNTIME_CONFS)
-    # Catalyst adds size()/isnotnull() filters that re-parse the JSON —
-    # four sites, measured 37% slower on 1M-row ingest.
-    assert plan.count("from_json") <= 2
+    # parse-once must survive optimization with InferFiltersFromGenerate
+    # on: at most TWO from_json sites (the pushed-down isDdl filter + the
+    # envelope projection), as many as with the rule excluded. Over a
+    # bare `data` column the rule adds size()/isnotnull() filters that
+    # re-parse the JSON — four sites, measured 37% slower on 1M-row
+    # ingest.
+    excluded = _with_rule_excluded(
+        spark, lambda: _executed(ingest_pipeline(raw, ["c"]))
+    )
+    assert plan.count("from_json") == excluded.count("from_json") <= 2
 
 
 def test_quantize_scale_not_inlined_into_lambda(spark):
@@ -973,7 +986,14 @@ def test_phash_pairs_exchange_carries_hashes_not_payloads(spark):
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     media = make_media_table(docs).select("media_id", "payload")
-    plan = _executed(media_phash_near_dups(media, max_hamming=8))
+    # every payload twice under a second id, so the join yields pairs
+    # and AQE cannot reduce the final plan to an empty relation
+    media = media.unionByName(
+        media.select((F.col("media_id") + 10**9).alias("media_id"), "payload")
+    )
+    pairs = media_phash_near_dups(media, max_hamming=8)
+    plan = _executed(pairs)
+    assert pairs.count() > 0
     assert "SortMergeJoin" not in plan
     for frag in plan.split("Exchange hashpartitioning(")[1:]:
         keys = frag.split(")")[0]

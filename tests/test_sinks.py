@@ -10,9 +10,10 @@ from flink_etl_spark.operators.merge import dedup_latest, overwrite_snapshot
 
 def test_dynamic_partition_overwrite_replaces_only_touched_dt(spark, tmp_path):
     """`INSERT OVERWRITE ... PARTITION(dt=X)` semantics: rewriting one
-    day must leave every other day's partition untouched
-    (spark.sql.sources.partitionOverwriteMode=dynamic, set by the
-    session factory)."""
+    day must leave every other day's partition untouched. The write
+    carries `partitionOverwriteMode=dynamic` as its own option, the
+    form the package's path writes use, so it holds under a `static`
+    session conf."""
     path = str(tmp_path / "t")
     day1 = [(1, "a", "20200323"), (2, "b", "20200323")]
     day2 = [(3, "c", "20200324")]
@@ -21,9 +22,18 @@ def test_dynamic_partition_overwrite_replaces_only_touched_dt(spark, tmp_path):
     ).parquet(path)
 
     # overwrite ONLY dt=20200324 with a corrected row
-    spark.createDataFrame(
-        [(3, "c2", "20200324"), (4, "d", "20200324")], "id long, v string, dt string"
-    ).write.mode("overwrite").partitionBy("dt").parquet(path)
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        spark.createDataFrame(
+            [(3, "c2", "20200324"), (4, "d", "20200324")],
+            "id long, v string, dt string",
+        ).write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+            "dt"
+        ).parquet(path)
+    finally:
+        spark.conf.set(key, prev)
 
     got = sorted(
         map(tuple, spark.read.parquet(path).select("id", "v", "dt").collect())

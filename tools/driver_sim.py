@@ -1,8 +1,11 @@
 """Simulate the external driver's contract against __spark_entry__.py.
 
 Mirrors the driver as closely as its observable behavior allows:
-- vanilla SparkSession (no engine confs) — exercises the
-  apply_runtime_confs rescue seam in sources.tables.load_table;
+- vanilla SparkSession (no engine confs): the package must give the
+  oracles' rows without configuring it, and must leave its confs as
+  they were (a snapshot of `spark.conf.getAll` before and after the
+  gates may differ only in nanosAsLong, which `load_table` sets for
+  nano-timestamp tables);
 - per-query: run the Spark callable at sf0.01 AND the oracle SQL in
   DuckDB over the same parquet, then canonicalize the way the r1 driver
   traceback shows it does (pandas DataFrame -> sort columns by name ->
@@ -23,6 +26,8 @@ import time
 sys.path.insert(0, "/root/repo")
 
 SF_DIR = "/root/testdata/sf0.01"
+#: the one session conf the package may write (sources.tables.read_raw_table)
+ALLOWED_CONF_WRITES = {"spark.sql.legacy.parquet.nanosAsLong"}
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings",
@@ -78,6 +83,7 @@ def main(names: list[str]) -> int:
     print(f"entry: {len(rows)} rows in {time.time() - t0:.1f}s", flush=True)
     assert len(rows) >= 0
 
+    confs_before = dict(spark.conf.getAll)
     qs = E.queries()
     oracles = E.oracle_sql()
     targets = names or list(qs)
@@ -110,7 +116,16 @@ def main(names: list[str]) -> int:
             n_fail += 1
             print(f"  {name}: ERR {type(exc).__name__}: {exc}", flush=True)
     print(f"driver_sim: {n_pass} pass / {n_fail} fail / {n_rows_only} rows-only")
-    return 1 if n_fail else 0
+    confs_after = dict(spark.conf.getAll)
+    changed = sorted(
+        k for k in confs_before.keys() | confs_after.keys()
+        if confs_before.get(k) != confs_after.get(k) and k not in ALLOWED_CONF_WRITES
+    )
+    for k in changed:
+        print(f"  session conf changed: {k}: "
+              f"{confs_before.get(k)!r} -> {confs_after.get(k)!r}")
+    print(f"driver_sim: session confs {'CHANGED' if changed else 'unchanged'}")
+    return 1 if n_fail or changed else 0
 
 
 if __name__ == "__main__":

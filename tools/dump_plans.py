@@ -50,10 +50,13 @@ COMMENTARY: dict[str, str] = {
         "can reuse the hash-by-id partitioning between window and join."
     ),
     "canal_ingest_flatten": (
-        "Single whole-stage-codegen pipeline: scan -> from_json -> "
-        "filter -> explode -> project, zero exchanges. Ingest is "
-        "embarrassingly parallel; at 100 TB the only knob is input "
-        "split size (maxPartitionBytes)."
+        "Single pipeline: scan -> DDL pre-filter -> from_json -> "
+        "filter -> explode -> project, zero exchanges. The explode runs "
+        "over coalesce(data, array()), not the bare column, so "
+        "InferFiltersFromGenerate infers no size() filter that would "
+        "parse every envelope a second time. Ingest is embarrassingly "
+        "parallel; at 100 TB the only knob is input split size "
+        "(maxPartitionBytes)."
     ),
     "agg_pricing_summary": (
         "Partial HashAggregate before the exchange (map-side combine): "
@@ -105,8 +108,11 @@ COMMENTARY: dict[str, str] = {
     ),
     "ann_ivf_topk": (
         "Vectors + norms ride through cell assignment, so scoring never "
-        "joins back to the corpus: one scan per side plus two cheap "
-        "top-8 centroid derivations. Per-query work is "
+        "joins back to the corpus: one scan per side, neither spread, "
+        "each assigned against a broadcast centroid table derived from "
+        "a small literal seed frame (LocalTableScan -> Generate -> "
+        "aggregate). The only corpus-sized exchanges are the candidate "
+        "aggregate and the per-query top-k. Per-query work is "
         "|corpus|/cells * nprobe; at scale, write the assigned corpus "
         "bucketed by cell_id once and reuse across query batches."
     ),
@@ -122,14 +128,14 @@ COMMENTARY: dict[str, str] = {
         "evaluate interpreted, and they carry most of the stage's CPU."
     ),
     "pipeline_training_prep": (
-        "The whole prep pipeline (profile -> quality+lang filter -> "
-        "exact dedup -> keeper join) is TWO scans and one groupBy "
-        "shuffle; the deduped survivor set broadcasts back onto the "
-        "profile. The dedup exchange is keyed on a map-side "
-        "sha2(text, 256) digest — 64-byte shuffle keys, text pruned "
-        "before the exchange (plan-asserted in tests/test_plans.py). "
-        "Every text signal comes off a single tokenization "
-        "(doc_profile)."
+        "The whole prep pipeline (profile -> exact dedup with the "
+        "quality+lang predicate riding the dedup aggregate -> keepers) "
+        "is ONE scan and one groupBy shuffle. The dedup exchange is "
+        "keyed on a map-side sha2(text, 256) digest — 64-byte shuffle "
+        "keys, text pruned before the exchange (plan-asserted in "
+        "tests/test_plans.py) — and the one Filter sits above the "
+        "aggregate, so no row is tokenized twice. Every text signal "
+        "comes off a single tokenization (doc_profile)."
     ),
     "text_repetition_stats": (
         "ZERO shuffles: a document's n-grams fit in its own row, so "
@@ -215,15 +221,15 @@ COMMENTARY: dict[str, str] = {
     ),
     "fingerprint_candidates": (
         "MOSS-style pair census: winnowing fingerprint selection is "
-        "entirely row-local (sliding window-min over rolling-hash "
-        "structs — no exchange sees text), the distinct and the "
-        "inverted self-join are keyed on the packed 8-byte fingerprint "
-        "hash, and the max_df hot-set cap is computed once and joined "
-        "back as a BROADCAST anti-join so boilerplate fingerprints "
-        "never enter the pair space. The exchanges carry (hash64, "
-        "doc_id) pairs — the same narrow-key discipline as "
-        "substring_dedup; pair volume is bounded by max_df^2 per "
-        "fingerprint."
+        "row-local (the Project chain is its staged sparse-table "
+        "levels over rolling-hash structs) on the under-split scan, "
+        "spread over every core by the round-robin exchange above it. "
+        "One exchange keyed on the 8-byte fingerprint builds the "
+        "posting lists; the max_df cut drops hot lists (window rank + "
+        "filter) before any pair exists, pairs stream out of each list "
+        "(the two Generates) and one aggregate counts shared "
+        "fingerprints per pair. No exchange sees text; pair volume is "
+        "bounded by max_df^2 per fingerprint."
     ),
     "decontaminate_ngrams": (
         "The benchmark side (eval suites: MBs) is distinct-ed and "
