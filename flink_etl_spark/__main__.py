@@ -166,30 +166,12 @@ def cmd_ann_build(args: argparse.Namespace) -> int:
     spark = _spark("flink-etl-spark-ann-build")
     embs = spark.read.parquet(args.path)
     n_cells = "auto" if args.n_cells == "auto" else int(args.n_cells)
-    if args.kind == "ivfpq":
-        S.ivfpq_build_index(
-            embs, args.index, n_cells=n_cells, m=args.m,
-            n_codes=args.n_codes, id_col=args.id_col, vec_col=args.vec_col,
-        )
-    else:
-        S.pq_build_index(
-            embs, args.index, m=args.m, n_codes=args.n_codes,
-            id_col=args.id_col, vec_col=args.vec_col,
-        )
-    print(f"built {args.kind} index at {args.index}")
+    S.ivfpq_build_index(
+        embs, args.index, n_cells=n_cells, m=args.m,
+        n_codes=args.n_codes, id_col=args.id_col, vec_col=args.vec_col,
+    )
+    print(f"built index at {args.index}")
     return 0
-
-
-def _index_kind(spark, index_path: str) -> str:
-    """CLI shell over `similarity.ann_index_kind`: sidecar-derived kind,
-    raising SystemExit (clean exit code, no traceback wall) on a
-    mixed/corrupted dir (both sidecars) or a non-index dir (neither)."""
-    from flink_etl_spark.operators.similarity import ann_index_kind
-
-    try:
-        return ann_index_kind(spark, index_path)
-    except ValueError as e:
-        raise SystemExit(str(e)) from None
 
 
 def cmd_ann_append(args: argparse.Namespace) -> int:
@@ -197,14 +179,9 @@ def cmd_ann_append(args: argparse.Namespace) -> int:
 
     spark = _spark("flink-etl-spark-ann-append")
     batch = spark.read.parquet(args.path)
-    if _index_kind(spark, args.index) == "ivfpq":
-        n = S.ivfpq_append_index(
-            spark, batch, args.index, id_col=args.id_col, vec_col=args.vec_col
-        )
-    else:
-        n = S.pq_append_index(
-            spark, batch, args.index, id_col=args.id_col, vec_col=args.vec_col
-        )
+    n = S.ivfpq_append_index(
+        spark, batch, args.index, id_col=args.id_col, vec_col=args.vec_col
+    )
     print(f"appended {n} vector(s) to {args.index}")
     return 0
 
@@ -213,7 +190,6 @@ def cmd_ann_compact(args: argparse.Namespace) -> int:
     from flink_etl_spark.streaming.ann_sink import compact_ann_index
 
     spark = _spark("flink-etl-spark-ann-compact")
-    _index_kind(spark, args.index)  # clean SystemExit on a non-index dir
     n = compact_ann_index(spark, args.index, target_files=args.target_files)
     print(f"compacted {n} index director(ies) under {args.index}")
     return 0
@@ -264,15 +240,10 @@ def cmd_ann_drift(args: argparse.Namespace) -> int:
     from flink_etl_spark.operators import similarity as S
 
     spark = _spark("flink-etl-spark-ann-drift")
-    batch = spark.read.parquet(args.path)
-    if _index_kind(spark, args.index) == "ivfpq":
-        out = S.ann_drift_check(
-            spark, args.index, batch,
-            id_col=args.id_col, vec_col=args.vec_col,
-        )
-    else:
-        out = S.pq_drift_check(spark, args.index, batch,
-                               vec_col=args.vec_col)
+    out = S.ann_drift_check(
+        spark, args.index, spark.read.parquet(args.path),
+        id_col=args.id_col, vec_col=args.vec_col,
+    )
     print(json.dumps(out))
     # exit 2 on a rebuild recommendation, 3 when the monitor is OFF
     # (missing/zero/negative baseline — "un-checkable" is not
@@ -381,17 +352,10 @@ def cmd_ann_search(args: argparse.Namespace) -> int:
     from flink_etl_spark.operators import similarity as S
 
     spark = _spark("flink-etl-spark-ann-search")
-    queries = spark.read.parquet(args.queries)
-    if _index_kind(spark, args.index) == "ivfpq":
-        out = S.ivfpq_search_index(
-            spark, args.index, queries, k=args.k, nprobe=args.nprobe,
-            id_col=args.id_col, vec_col=args.vec_col,
-        )
-    else:
-        out = S.pq_search_index(
-            spark, args.index, queries, k=args.k,
-            id_col=args.id_col, vec_col=args.vec_col,
-        )
+    out = S.ivfpq_search_index(
+        spark, args.index, spark.read.parquet(args.queries), k=args.k,
+        nprobe=args.nprobe, id_col=args.id_col, vec_col=args.vec_col,
+    )
     out.write.mode("overwrite").parquet(args.out)
     print(f"wrote top-{args.k} to {args.out}")
     return 0
@@ -482,23 +446,23 @@ def build_parser() -> argparse.ArgumentParser:
 
     anb = sub.add_parser(
         "ann-build",
-        help="build a staged ANN index (ivfpq: cell-partitioned byte "
-             "codes + sidecar; pq: flat codes) from an embedding parquet",
+        help="build a staged IVF-PQ index (cell-partitioned byte codes + "
+             "sidecar; --n-cells 1 is the flat index) from an embedding "
+             "parquet",
     )
     anb.add_argument("--path", required=True, help="embedding parquet dir")
-    anb.add_argument("--kind", choices=("ivfpq", "pq"), default="ivfpq")
     anb.add_argument("--m", type=int, default=8, help="PQ subspaces (bytes/vector)")
     anb.add_argument("--n-codes", type=int, default=32)
     anb.add_argument("--n-cells", default="auto",
-                     help="ivfpq coarse cells (int or 'auto' ~ sqrt(n))")
+                     help="coarse cells (int or 'auto' ~ sqrt(n); 1 = "
+                          "flat, every search scans all codes)")
     _ann_common(anb)
     anb.set_defaults(fn=cmd_ann_build)
 
     ana = sub.add_parser(
         "ann-append",
         help="append a new embedding batch to a staged index with its "
-             "FROZEN quantizers (replay-convergent; kind derived from "
-             "the index's meta sidecar)",
+             "FROZEN quantizers (replay-convergent)",
     )
     ana.add_argument("--path", required=True, help="batch parquet dir")
     _ann_common(ana)
@@ -551,12 +515,11 @@ def build_parser() -> argparse.ArgumentParser:
     andr = sub.add_parser(
         "ann-drift",
         help="quantizer-drift check of a batch against a staged index's "
-             "build-time baseline (kind derived from the sidecar: ivfpq "
-             "compares mean centroid similarity, flat pq compares mean "
-             "ADC reconstruction error); prints JSON and exits 2 when a "
-             "rebuild is recommended, 3 when the index has no usable "
-             "baseline (monitor off — not the same as healthy), 0 only "
-             "when checked and healthy",
+             "build-time baseline (mean centroid similarity, or mean ADC "
+             "reconstruction error for a one-cell index); prints JSON "
+             "and exits 2 when a rebuild is recommended, 3 when the "
+             "index has no usable baseline (monitor off — not the same "
+             "as healthy), 0 only when checked and healthy",
     )
     andr.add_argument("--path", required=True, help="batch parquet dir")
     _ann_common(andr)
@@ -658,12 +621,13 @@ def build_parser() -> argparse.ArgumentParser:
     ans = sub.add_parser(
         "ann-search",
         help="top-k search of a staged index (parameters derived from "
-             "the meta sidecar; ivfpq reads only probed cell partitions)",
+             "the meta sidecar; reads only probed cell partitions)",
     )
     ans.add_argument("--queries", required=True, help="query parquet dir")
     ans.add_argument("--out", required=True, help="result parquet dir")
     ans.add_argument("--k", type=int, default=5)
-    ans.add_argument("--nprobe", type=int, default=2, help="ivfpq probe count")
+    ans.add_argument("--nprobe", type=int, default=2,
+                     help="cells probed per query")
     _ann_common(ans)
     ans.set_defaults(fn=cmd_ann_search)
     return p

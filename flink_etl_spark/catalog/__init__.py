@@ -118,22 +118,19 @@ def exact_decimal_sum(expr: F.Column, decimals: int) -> F.Column:
     both hazards; the single division produces the same IEEE double in
     any engine.
 
-    Overflow is LOUD on every path, never a silent wrap: under ANSI
-    mode (the Spark 4 session default) an overflowing long sum raises
-    ARITHMETIC_OVERFLOW itself — the guard aggregates are SKIPPED there
-    (they cost ~0.2 s across Q1's six measures at sf0.1, the r4->r5
-    bench-step A/B in docs/STATUS.md, and can never fire before the sum
-    raises); under non-ANSI (where the sum would wrap silently) the
-    count * max|scaled| < 2^62 guard is sound — wrap is impossible
-    inside the bound, and past it the result becomes NULL, a loud
-    gate/consumer mismatch. The long accumulator + guard measured 2x
-    faster than a DECIMAL(38,0) accumulator (two extra long aggregates
-    in the same pass vs decimal128 arithmetic per row). The ANSI branch
-    is resolved at plan-build time from the active session."""
+    Overflow is LOUD on every path, never a silent wrap: the result is
+    NULL unless count * max|scaled| < 2^62, inside which no long sum
+    can wrap — a loud gate/consumer mismatch, and under ANSI mode the
+    overflowing cast or sum may raise first. The guard is the same
+    plan whatever the session's ANSI setting, so a frame built under
+    one setting and run under the other keeps it: ANSI off, the
+    element cast SATURATES (1e36 reads as 2^63 - 1, a plausible
+    number to a bare sum or try_sum) and only the max|scaled| factor
+    catches it. The long accumulator + guard measured 2x faster than a
+    DECIMAL(38,0) accumulator (two extra long aggregates in the same
+    pass vs decimal128 arithmetic per row)."""
     scale = 10 ** decimals
     scaled, no_wrap = _scaled_guard(expr, scale)
-    if no_wrap is None:
-        return F.sum(scaled) / F.lit(float(scale))
     return F.when(no_wrap, F.sum(scaled) / F.lit(float(scale)))
 
 
@@ -147,50 +144,29 @@ def duckdb_exact_decimal_sum(sql: str, decimals: int) -> str:
     return f"(sum(CAST(round(({sql}) * {scale}) AS BIGINT)) / {scale}.0)"
 
 
-def _scaled_guard(expr: F.Column, scale: int) -> tuple[F.Column, F.Column | None]:
+def _scaled_guard(expr: F.Column, scale: int) -> tuple[F.Column, F.Column]:
     """Shared by exact_decimal_sum/_avg: the scaled-integer element and
-    the non-ANSI wrap guard — or guard None when the active session runs
-    ANSI mode, where sum(long) raises ARITHMETIC_OVERFLOW before any
-    guard could evaluate, making the two extra aggregate buffers per
-    measure pure overhead. Guard product in double — count * max could
-    itself wrap in long arithmetic; the conservative fp compare is
-    exact enough at the 2^62 half-range bound."""
+    the wrap guard. Guard product in double — count * max could itself
+    wrap in long arithmetic, and abs of a saturated Long.MIN_VALUE
+    wraps negative; the conservative fp compare is exact enough at the
+    2^62 half-range bound."""
     scaled = F.round(expr * scale).cast("long")
-    if _ansi_enabled():
-        return scaled, None
     no_wrap = (
-        F.count(expr).cast("double") * F.max(F.abs(scaled)).cast("double")
+        F.count(expr).cast("double") * F.max(F.abs(scaled.cast("double")))
         < F.lit(float(2 ** 62))
     )
     return scaled, no_wrap
 
 
-def _ansi_enabled() -> bool:
-    """Plan-build-time read of spark.sql.ansi.enabled on the active
-    session (Spark 4 defaults it true). Unresolvable -> False, keeping
-    the guard: the only cost of a wrong False is the two redundant
-    aggregate buffers, while a wrong True under a genuinely non-ANSI
-    session would reopen the silent-wrap hole."""
-    try:
-        s = SparkSession.getActiveSession()
-        if s is None:
-            return False
-        return str(s.conf.get("spark.sql.ansi.enabled", "true")).lower() == "true"
-    except Exception:
-        return False
-
-
 def exact_decimal_avg(expr: F.Column, decimals: int) -> F.Column:
     """Order-independent mean of d-decimal-exact doubles: exact sum,
     ONE division by non_null_count*scale (avg() ignores NULLs — so
-    does this; see `exact_decimal_sum` for the overflow guard and the
-    ANSI-mode guard skip)."""
+    does this; see `exact_decimal_sum` for the overflow guard)."""
     scale = 10 ** decimals
     scaled, no_wrap = _scaled_guard(expr, scale)
-    body = F.sum(scaled) / (F.count(expr) * F.lit(float(scale)))
-    if no_wrap is None:
-        return body
-    return F.when(no_wrap, body)
+    return F.when(
+        no_wrap, F.sum(scaled) / (F.count(expr) * F.lit(float(scale)))
+    )
 
 
 def duckdb_exact_decimal_avg(sql: str, decimals: int) -> str:

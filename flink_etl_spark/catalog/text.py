@@ -83,9 +83,9 @@ def text_doc_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
       with keep/flag verdict;
     * order-sensitive rolling polynomial fingerprint.
 
-    The individual operators remain available as composable units
-    (token_stats/lang_scores/quality_scores/fingerprints, each
-    unit-tested); chaining them would tokenize N times — at corpus
+    The per-signal operators remain available as composable units
+    (lang_scores/quality_scores/fingerprints, each unit-tested);
+    chaining them would tokenize N times — at corpus
     scale tokenization IS the cost, so the profile computes all
     signals in one whole-stage-codegen projection."""
     return T.doc_profile(_t(spark, sf_dir, "documents")).drop("text")

@@ -5,18 +5,15 @@ Spark SQL and ANSI/DuckDB SQL — no reliance on either engine's built-in
 hash() (Spark murmur3 != DuckDB's hash), so oracle checks can replicate
 the exact values.
 
-Production note (100 TB): the shingle/token dictionary built by
-`vocab_ids` is a distinct + window over the vocabulary. For unbounded
-vocabularies swap it for `xxhash64(shingle)` — the LSH math is
-unchanged, only oracle-portability is lost. The affine-permutation
+Production note (100 TB): the char fold keeps sketches
+oracle-portable; `xxhash64(shingle)` is the faster swap — the LSH math
+is unchanged, only oracle-portability is lost. The affine-permutation
 MinHash itself is the standard (a*x + b) mod p construction from
 Broder '97 (public literature).
 """
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, Window
 
 #: Mersenne prime 2^31-1 — fits in 64-bit products with 31-bit ids
 MERSENNE_P = 2_147_483_647
@@ -157,9 +154,20 @@ def gram_ids_sql(token_hashes: str, k: int, mult: int = 131,
 def fold_gram_ids_sql(grams_col: str, mult: int = 131,
                       p: int = MERSENNE_P) -> str:
     """SQL text mapping an array<string> of gram strings to their
-    char-fold term ids — the oracle-portable arm (`char_fold_hash`
-    applied inside a transform lambda; DuckDB replicates the fold
-    value-exactly via `duckdb_char_fold_hash`)."""
+    char-fold term ids — the oracle-portable arm: a left-to-right
+    polynomial fold over character code points, acc = (acc*mult +
+    code) % p, seed 0, which DuckDB replicates value-exactly via
+    `duckdb_char_fold_hash`.
+
+    Fully parallel (no dictionary, no global sort) and replicable in
+    any engine with a list fold, so minhash/simhash stay
+    oracle-checkable at unbounded vocabulary. Collision rate ~ n^2/2p
+    (birthday) — immaterial for sketching. Characters come from
+    `split(s, '')` (one pass) rather than `substring(s, i, 1)` per
+    index, which seeks from the string head each call (variable-width
+    UTF8) and makes the indexed form quadratic per string; the split
+    form measured ~13% faster on the sf0.1 shingle corpus with
+    identical values."""
     return (
         f"transform({grams_col}, s -> aggregate(transform(split(s, ''), "
         f"c -> CAST(ascii(c) AS BIGINT)), CAST(0 AS BIGINT), "
@@ -167,87 +175,12 @@ def fold_gram_ids_sql(grams_col: str, mult: int = 131,
     )
 
 
-def char_fold_hash(col: str, mult: int = 131, p: int = MERSENNE_P) -> Column:
-    """Portable string hash: left-to-right polynomial fold over character
-    code points, acc = (acc*mult + code) % p, seed 0.
-
-    Fully parallel (no dictionary, no global sort — unlike a dense_rank
-    vocabulary) and replicable in any engine with a list fold, so
-    minhash/simhash stay oracle-checkable at unbounded vocabulary.
-    Collision rate ~ n^2/2p (birthday) — immaterial for sketching, and
-    identical in every engine that replicates the fold. Non-ASCII chars
-    hash by code point (consistent across engines).
-
-    Takes a column NAME (the expression is built as SQL text); to hash
-    inside a lambda, inline the same fold over the lambda variable as
-    dedup.minhash_profile does.
-
-    Implementation note: characters come from `split(col, '')` (one
-    pass) rather than `substring(col, i, 1)` per index — substring
-    seeks from the string head each call (variable-width UTF8), making
-    the indexed form quadratic per string; the split form measured
-    ~13% faster on the sf0.1 shingle corpus with identical values."""
-    return F.expr(
-        f"aggregate(transform(split({col}, ''), "
-        f"c -> CAST(ascii(c) AS BIGINT)), "
-        f"CAST(0 AS BIGINT), (acc, c) -> (acc * {mult} + c) % {p})"
-    )
-
-
 def duckdb_char_fold_hash(col: str, mult: int = 131, p: int = MERSENNE_P) -> str:
-    """Oracle twin of `char_fold_hash` (DuckDB list_reduce seeds with the
-    first element, so prepend the 0 seed)."""
+    """Oracle twin of the Spark char fold (`fold_gram_ids_sql`; DuckDB
+    list_reduce seeds with the first element, so prepend the 0 seed)."""
     return (
         f"list_reduce(list_prepend(CAST(0 AS BIGINT), "
         f"list_transform(range(1, length({col}) + 1), "
         f"i -> CAST(ascii(substr({col}, i, 1)) AS BIGINT))), "
         f"(acc, c) -> (acc * {mult} + c) % {p})"
     )
-
-
-def vocab_ids(terms: DataFrame, term_col: str = "term") -> DataFrame:
-    """Assign dense 1-based integer ids to distinct terms by
-    lexicographic rank — WITHOUT a global single-partition window.
-
-    Two-pass scale shape: bucket terms by first-character code point
-    (order-preserving across buckets), rank within each bucket with a
-    partitioned window, then add each bucket's global offset (the
-    cumulative count of all preceding buckets — a tiny per-bucket agg,
-    broadcast back). The vocabulary never converges on one task; the
-    only single-partition work is the window over the ~100-row bucket
-    count table. Kept for callers that need *dense* ids (matrix-style
-    exports); the sketching operators use `char_fold_hash` instead.
-    """
-    d = terms.select(term_col).distinct().withColumn(
-        "_bkt", F.coalesce(F.ascii(F.substring(F.col(term_col), 1, 1)), F.lit(-1))
-    )
-    counts = d.groupBy("_bkt").agg(F.count("*").alias("_n"))
-    # running offsets without a window: pack the ~100 bucket counts into
-    # one sorted array, prefix-sum via transform+aggregate (O(B^2) on B
-    # buckets — trivial), posexplode back to rows
-    offsets = (
-        counts.agg(F.array_sort(F.collect_list(F.struct("_bkt", "_n"))).alias("_a"))
-        .select(
-            F.explode(
-                F.expr(
-                    "transform(_a, (x, i) -> struct(x._bkt AS _bkt, "
-                    "aggregate(slice(_a, 1, i), CAST(0 AS BIGINT), "
-                    "(acc, y) -> acc + y._n) AS _off))"
-                )
-            ).alias("_s")
-        )
-        .select(F.col("_s._bkt").alias("_bkt"), F.col("_s._off").alias("_off"))
-    )
-    w_rank = Window.partitionBy("_bkt").orderBy(F.col(term_col))
-    return (
-        d.join(F.broadcast(offsets), "_bkt")
-        .select(
-            term_col,
-            (F.row_number().over(w_rank) + F.col("_off")).cast("long").alias("term_id"),
-        )
-    )
-
-
-def affine_hash(x: Column, a: int, b: int, p: int = MERSENNE_P) -> Column:
-    """(a*x + b) mod p — the permutation family for MinHash."""
-    return (x.cast("long") * F.lit(a) + F.lit(b)) % F.lit(p)

@@ -34,12 +34,6 @@ def norm(a: Column | str) -> Column:
     return F.sqrt(dot(a, a))
 
 
-def cosine(a: Column | str, b: Column | str) -> Column:
-    """Cosine similarity in double precision; caller rounds at the edge.
-    NULL (not NaN) when either vector has zero norm — see `safe_cosine`."""
-    return safe_cosine(dot(a, b), norm(a), norm(b))
-
-
 def safe_cosine(dot_col: Column, na: Column, nb: Column) -> Column:
     """dot/(na*nb) with a zero-norm guard: the result is NULL, never
     NaN, when either norm is zero. The guard is load-bearing for every

@@ -15,7 +15,7 @@ Scale design (100 TB):
 * every strategy is shuffle-on-key + aggregate — no driver-side state
 * the Jaccard inverted-index join is quadratic per posting list; LSH is
   the scale path: candidates per doc ~ band collisions, not corpus size
-* `vocab_ids` (dictionary) keeps oracles exact; swap for xxhash64 at
+* the char-fold term ids keep oracles exact; swap for xxhash64 at
   unbounded vocab (functions/hashing.py docstring)
 """
 
@@ -33,7 +33,6 @@ from flink_etl_spark.functions.hashing import (
     MERSENNE_P,
     MINHASH_COEFFS,
     SIMHASH_COEFFS,
-    char_fold_hash,
     shingles_sql,
     tokens_sql,
 )
@@ -203,34 +202,6 @@ def jaccard_pairs(
     return _jaccard_of(shared, sizes, threshold)
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    n_hashes: int = 16,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-) -> DataFrame:
-    """MinHash sketch, wide format: one row per doc with columns
-    m0..m{n-1}, sig[i] = min over shingles of (a_i*sid + b_i) % P.
-
-    All n mins are computed as aggregates of ONE groupBy over the
-    postings — partial (map-side) aggregation shrinks the shuffle to one
-    row per (doc, partition) instead of exploding postings n_hashes
-    times. `sid` is the portable char-fold hash of the shingle — fully
-    parallel, no dictionary, reproducible by the oracle."""
-    sh = shingle_sets(docs, id_col, text_col, k)
-    with_ids = sh.select(
-        F.col(id_col), char_fold_hash("shingle").alias("term_id")
-    )
-    mins = [
-        F.min(
-            (F.col("term_id").cast("long") * F.lit(a) + F.lit(b)) % F.lit(MERSENNE_P)
-        ).alias(f"m{i}")
-        for i, (a, b) in enumerate(MINHASH_COEFFS[:n_hashes])
-    ]
-    return with_ids.groupBy(id_col).agg(*mins)
-
-
 def minhash_profile(
     docs: DataFrame,
     n_hashes: int = 16,
@@ -307,7 +278,7 @@ def minhash_profile(
             i, f"array_distinct({shingles_sql('_t', k)}) AS shset"
         )
         # split-based char fold, not substring-per-index — see
-        # functions/hashing.char_fold_hash (identical values, ~13% faster)
+        # functions/hashing.fold_gram_ids_sql (identical values, ~13% faster)
         tids_df = shset_df.selectExpr(
             i, "shset", f"{fold_gram_ids_sql('shset')} AS _tids"
         )
@@ -582,7 +553,7 @@ def simhash_signatures(
     if hash_fn == "xxhash64":
         hash_sql = f"transform(_t, s -> pmod(xxhash64(s), {MERSENNE_P}))"
     else:
-        # split-based char fold — see functions/hashing.char_fold_hash
+        # split-based char fold — see functions/hashing.fold_gram_ids_sql
         hash_sql = (
             "transform(_t, s -> aggregate(transform(split(s, ''), "
             "c -> CAST(ascii(c) AS BIGINT)), CAST(0 AS BIGINT), "

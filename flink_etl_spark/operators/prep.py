@@ -221,8 +221,8 @@ def split_buckets(
     # key yields a NULL bucket here (falling through every split CASE
     # to the last label) but a real bucket in the oracle
     keyed = F.concat(F.coalesce(key.cast("string"), F.lit("")), F.lit(salt))
-    # char_fold_hash takes a column NAME (SQL text); the fold here must
-    # apply to an arbitrary expression, so build the same fold inline
+    # fold_gram_ids_sql is SQL text over a column NAME; the fold here
+    # must apply to an arbitrary expression, so build the same fold inline
     from flink_etl_spark.functions.hashing import MERSENNE_P
 
     folded = F.aggregate(
@@ -1609,9 +1609,9 @@ def staged_fit_drift_check(
     bigram_warn_above: float = 0.5,
 ) -> dict:
     """TEXT-distribution drift monitor over a staged fit — the text
-    family's counterpart of the ANN `ann_drift_check`/`pq_drift_check`
-    loop: a DSIR fit freezes the raw-corpus distribution q and an NB
-    fit freezes the labeled class mixture, and both score garbage
+    family's counterpart of the ANN `ann_drift_check` loop: a DSIR fit
+    freezes the raw-corpus distribution q and an NB fit freezes the
+    labeled class mixture, and both score garbage
     silently once the live corpus stops resembling what they were fit
     on. This check compares an incoming batch's hashed-bucket feature
     distribution against the staged fit's (DSIR: the RAW side — what

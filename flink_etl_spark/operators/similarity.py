@@ -17,15 +17,19 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
-from flink_etl_spark.functions.vectors import cosine, dot, norm, safe_cosine
+from flink_etl_spark.functions.vectors import (
+    dot,
+    l2_normalize,
+    norm,
+    safe_cosine,
+)
 from flink_etl_spark.sources.tables import _plan_size_bytes, _spread_anchored
 from flink_etl_spark.staged import (
     IVFPQ_META,
-    PQ_META,
-    TARGET_FILE_BYTES,
     _materialize_with_retry,
     append_unstaged,
     require_new_path,
+    snapshot_exists,
 )
 
 
@@ -1253,8 +1257,6 @@ def pq_codebooks(
             f"n_codes must be in [2, 128] (codes are tinyint — one "
             f"BYTE per subspace per vector), got {n_codes}"
         )
-    from flink_etl_spark.functions.vectors import l2_normalize
-
     nv_frame = embs.select(F.col(id_col), l2_normalize(vec_col).alias("_nv"))
     seeds = _pq_seeds(nv_frame, n_codes, id_col)
     subs = F.sequence(F.lit(0), F.lit(m - 1))
@@ -1656,8 +1658,6 @@ def _pq_assign_subs(
     """(id, sub_id, subvec, code) — refinement's working form; the
     argmin is a row-local array_min over (rounded dist, code_id)
     structs, the same deterministic tie-break as `ivf_assign`."""
-    from flink_etl_spark.functions.vectors import l2_normalize
-
     packed = _pq_packed(codebooks)
     d_sub = _guarded_dsub("_nv", m)
     staged = embs.select(
@@ -1694,22 +1694,29 @@ def pq_recon_error(
     """Mean PQ reconstruction error of a frame against codebooks: for
     each (l2-normalized) vector, the sum over subspaces of the squared
     L2 distance to its NEAREST codeword — the ADC distance of the
-    vector to its own codes. This is the flat-PQ analogue of
-    `mean_centroid_sim`: a production-monitorable quantizer-fit signal
-    needing NO ground truth and no centroids (flat PQ has none) —
-    frozen codebooks reconstruct a drifted batch worse, so the error
-    RISES monotonically as the distribution leaves the build-time
-    corpus (decay curve: `drift_probe --flat` [retired; in git
-    history], table in docs/SCALING.md). Zero shuffle: the packed codebook broadcasts as
-    one row, the per-subspace min-distance is a row-local array_min,
-    and one avg aggregates the batch. Returns 0.0 for an empty frame
-    (and legitimately ~0.0 when every vector was a codebook seed)."""
-    from flink_etl_spark.functions.vectors import l2_normalize
+    vector to its own codes. A production-monitorable quantizer-fit
+    signal needing NO ground truth — frozen codebooks reconstruct a
+    drifted batch worse, so the error RISES monotonically as the
+    distribution leaves the build-time corpus (table in
+    docs/SCALING.md "Flat-PQ drift"). Zero shuffle: the packed codebook
+    broadcasts as one row, the per-subspace min-distance is a row-local
+    array_min, and one avg aggregates the batch. Returns 0.0 for an
+    empty frame (and legitimately ~0.0 when every vector was a codebook
+    seed)."""
+    return _mean_recon_err(
+        embs.select(l2_normalize(vec_col).alias("_nv")), codebooks, m
+    )
 
+
+def _mean_recon_err(nv: DataFrame, codebooks: DataFrame, m: int) -> float:
+    """`pq_recon_error` over the `_nv` vectors of `nv` as they stand —
+    the one-cell IVF-PQ index passes its residuals, which its residual
+    codebooks reconstruct exactly as flat codebooks reconstruct the
+    normalized vectors (a single centroid shifts both sides alike)."""
     packed = _pq_packed(codebooks)
     d_sub = _guarded_dsub("_nv", m)
     staged = (
-        embs.select(l2_normalize(vec_col).alias("_nv"))
+        nv.select("_nv")
         .crossJoin(F.broadcast(packed))
         .withColumn(
             "_subs",
@@ -1738,86 +1745,6 @@ def pq_recon_error(
     return round(row["e"], 6) if row and row["e"] is not None else 0.0
 
 
-def pq_drift_check(
-    spark,
-    index_path: str,
-    batch: DataFrame,
-    vec_col: str = "embedding",
-    rebuild_above: float = 2.0,
-    meta: dict | None = None,
-    codebooks: DataFrame | None = None,
-) -> dict:
-    """Quantizer-drift check for a batch about to be appended to a
-    staged FLAT-PQ index — the centroid-less counterpart of
-    `ann_drift_check` (flat PQ has no coarse centroids, so the
-    similarity-based monitor cannot apply; README documents the gap
-    this closes): encodes the batch against the index's frozen
-    codebooks and compares its mean reconstruction error
-    (`pq_recon_error`) with the BUILD-TIME baseline recorded in
-    `_PQ_META.json`. Returns ``{"batch_err", "baseline_err", "ratio",
-    "rebuild_recommended"}`` and warns when the ratio EXCEEDS
-    ``rebuild_above`` (errors rise under drift — the inverse sense of
-    the IVF-PQ similarity ratio). The default 2.0 comes from the
-    measured curve (`drift_probe --flat` [retired; in git history]):
-    recall is flat until the error roughly doubles and sags beyond it.
-
-    A baseline that is missing (pre-r10 index), zero (every build
-    vector was a seed — nothing to reconstruct imperfectly), or
-    negative (corrupt sidecar) is UN-CHECKABLE: warns monitor-off and
-    returns ratio 1.0, never a rebuild flag off bad math (the
-    `ann_drift_check` baseline guard, mirrored).
-
-    ``meta`` / ``codebooks`` inject the frozen inputs for cadence
-    callers — same contract as `ann_drift_check` (read once at
-    attach; a rebuild is a new path + re-attach, so never stale)."""
-    if meta is None:
-        meta = PQ_META.require(spark, index_path)
-    guarded = _dim_guarded(batch, vec_col, int(meta["dim"]), "drift check")
-    cbs = (
-        codebooks
-        if codebooks is not None
-        else spark.read.parquet(f"{index_path}/codebooks")
-    )
-    batch_err = pq_recon_error(guarded, cbs, int(meta["m"]), vec_col)
-    baseline = meta.get("mean_recon_err")
-    checkable = baseline is not None and baseline > 0
-    if baseline is not None and baseline <= 0:
-        import warnings
-
-        warnings.warn(
-            f"PQ index at {index_path}: recorded baseline mean_recon_err "
-            f"{baseline} is <= 0 — the drift ratio is undefined there; "
-            "rebuild the index over a corpus larger than n_codes to "
-            "record a usable baseline. Returning ratio 1.0 with the "
-            "monitor OFF",
-            UserWarning,
-            stacklevel=2,
-        )
-    ratio = round(batch_err / baseline, 4) if checkable else 1.0
-    out = {
-        "batch_err": batch_err,
-        "baseline_err": baseline,
-        "ratio": ratio,
-        # False = monitor OFF (missing/zero/negative baseline), so a
-        # scheduler can tell "healthy" from "un-checkable" (ADVICE r10)
-        "checkable": checkable,
-        "rebuild_recommended": checkable and ratio > rebuild_above,
-    }
-    if out["rebuild_recommended"]:
-        import warnings
-
-        warnings.warn(
-            f"PQ index at {index_path}: appended-batch mean reconstruction "
-            f"error {batch_err} is {ratio:.1f}x the build-time baseline "
-            f"{baseline} (> {rebuild_above:.1f}x) — the codebooks have "
-            "drifted; rebuild the index (pq_build_index to a new path, "
-            "refine_iters>=1) and cut searches over",
-            UserWarning,
-            stacklevel=2,
-        )
-    return out
-
-
 def pq_encode(
     embs: DataFrame,
     codebooks: DataFrame,
@@ -1837,8 +1764,6 @@ def pq_encode(
     test, 13x at dim 256 / m=16 / n_codes=128 — see the deployment
     rule on `_pq_codes_on` for when it wins (corpus encodes) and
     when the expression default does (tiny interactive jobs)."""
-    from flink_etl_spark.functions.vectors import l2_normalize
-
     return _pq_codes_on(
         embs.select(F.col(id_col), l2_normalize(vec_col).alias("_nv")),
         codebooks, m, [id_col], engine=engine,
@@ -1902,8 +1827,6 @@ def pq_topk(
                 ).cast("array<tinyint>")
             ),
         )
-    from flink_etl_spark.functions.vectors import l2_normalize
-
     packed = _pq_packed(codebooks)
     d_sub = _guarded_dsub("_nv", m)
     q = (
@@ -2012,114 +1935,6 @@ def _rank_and_rerank(
     )
 
 
-def pq_build_index(
-    embs: DataFrame,
-    index_path: str,
-    m: int = 8,
-    n_codes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    refine_iters: int = 0,
-    baseline_sample: float = 0.05,
-) -> None:
-    """Stage a FLAT PQ index: `codebooks/` + `codes/` parquet (m
-    one-byte codes per vector) plus a `_PQ_META.json` sidecar pinning
-    {version, m, n_codes, dim} — the first-class form of the
-    "encode once, stage (id, codes), scan THAT" recipe DEPLOYMENT.md
-    prescribes (flat = every query batch ADC-scans all codes; use
-    `ivfpq_build_index` when you also want cell pruning). Search
-    derives its parameters from the sidecar, closing the same
-    silent-mis-rank foot-gun the IVF-PQ sidecar closes.
-
-    ``baseline_sample`` (r11, ADVICE) bounds the drift-baseline pass:
-    the `mean_recon_err` the sidecar records used to be a SECOND full
-    pass over the build corpus (per-row m*n_codes distance evals,
-    roughly doubling build cost at 100 TB); a mean over a
-    deterministic hash sample (the `census_sample` pattern from
-    `split_hot_cells`) is an equally valid drift baseline. Guarded
-    against small corpora: if the sample holds fewer than 1024
-    vectors the full corpus is used (the sampled mean would carry
-    more sampling error than the drift it monitors; the fallback is
-    recorded as `baseline_sample_effective` in the sidecar).
-    `pq_rebuild_index` reuses the sidecar's requested value."""
-    if not (0 < baseline_sample <= 1):
-        raise ValueError(
-            f"baseline_sample must be in (0, 1], got {baseline_sample}"
-        )
-    spark = embs.sparkSession
-    dim_row = embs.select(F.size(F.col(vec_col)).alias("d")).first()
-    if dim_row is None:
-        raise ValueError("pq_build_index: empty corpus")
-    # guard the BUILD corpus too, not just queries/appends: a mixed-dim
-    # corpus whose other rows still divide by m would encode garbage
-    # codes silently (zip_with pads with nulls)
-    embs = _dim_guarded(embs, vec_col, dim_row["d"], "PQ build: corpus")
-    cbs = pq_codebooks(
-        embs, m=m, n_codes=n_codes, id_col=id_col, vec_col=vec_col,
-        refine_iters=refine_iters,
-    )
-    codes = pq_encode(embs, cbs, m=m, id_col=id_col, vec_col=vec_col)
-    cbs.write.mode("overwrite").parquet(f"{index_path}/codebooks")
-    codes.write.mode("overwrite").parquet(f"{index_path}/codes")
-    base, eff = embs, baseline_sample
-    if baseline_sample < 1.0:
-        thresh = max(1, int(round(baseline_sample * 1_000_000)))
-        base = embs.filter(
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(1_000_000))
-            < F.lit(thresh)
-        )
-        # bounded early-stop probe, never a full count
-        if base.limit(1024).count() < 1024:
-            base, eff = embs, 1.0
-    PQ_META.write(spark, index_path, {
-        "m": m, "n_codes": n_codes, "dim": dim_row["d"],
-        # drift-monitor baseline: the build corpus's own mean ADC
-        # reconstruction error under the just-derived codebooks, read
-        # back from the STAGED parquet so the baseline measures exactly
-        # what searches will use (pq_drift_check compares appended
-        # batches against it)
-        "mean_recon_err": pq_recon_error(
-            base, spark.read.parquet(f"{index_path}/codebooks"), m, vec_col
-        ),
-        "baseline_sample": baseline_sample,
-        "baseline_sample_effective": eff,
-    })
-
-
-def pq_append_index(
-    spark,
-    new_embs: DataFrame,
-    index_path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> int:
-    """Append a new batch to a staged flat PQ index with the FROZEN
-    staged codebooks (codes stay comparable across batches). Replay
-    convergence: already-present ids are anti-joined out first — the
-    staged side is an id-column-pruned scan of the codes parquet
-    (m bytes + id per vector, a small fraction of corpus bytes).
-    Returns the number of vectors appended. Ids must be globally
-    unique across the corpus and every batch."""
-    meta = PQ_META.require(spark, index_path)
-    m, dim = int(meta["m"]), int(meta["dim"])
-    guarded = _dim_guarded(new_embs, vec_col, dim, "PQ append: batch")
-    cbs = spark.read.parquet(f"{index_path}/codebooks")
-    codes = pq_encode(guarded, cbs, m=m, id_col=id_col, vec_col=vec_col)
-    staged_ids = spark.read.parquet(f"{index_path}/codes").select(id_col)
-
-    def write(fresh: DataFrame, n: int) -> None:
-        # bound the append's file count by the batch's BYTES (m
-        # one-byte codes + an 8-byte id per row at ~128 MB/file), not
-        # by the join's task count — otherwise every append drops
-        # ~shuffle-partition-count small files into codes/
-        rows_per_file = max(1, TARGET_FILE_BYTES // (m + 8))
-        fresh.repartition(-(-n // rows_per_file)).write.mode(
-            "append"
-        ).parquet(f"{index_path}/codes")
-
-    return append_unstaged(codes, staged_ids, id_col, write)
-
-
 def _allowed_semi(codes: DataFrame, allowed: DataFrame | None,
                   id_col: str) -> DataFrame:
     """Filtered search: restrict the NEIGHBOR side to an allow-list of
@@ -2135,110 +1950,6 @@ def _allowed_semi(codes: DataFrame, allowed: DataFrame | None,
     )
 
 
-def pq_rebuild_index(
-    spark,
-    old_path: str,
-    new_path: str,
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    refine_iters: int = 2,
-) -> None:
-    """Periodic rebuild of a staged FLAT-PQ index — the response to a
-    `pq_drift_check` alert (its reconstruction-error ratio passing
-    `rebuild_above`), symmetric to `ivfpq_rebuild_index`: m and
-    n_codes default from the OLD sidecar, the result is byte-identical
-    to `pq_build_index(corpus, new_path, <same params>)` (pinned by
-    test), and the new sidecar records a FRESH `mean_recon_err`
-    baseline so the monitor re-arms. `refine_iters` defaults to 2 for
-    the same measured reason as the IVF-PQ rebuild: seed codebooks are
-    the smallest-id rows, so a drift-accreted mode with large ids
-    never seeds — only Lloyd refinement moves codewords toward it;
-    passing 0 warns. Always a NEW path (cut searches over, then delete
-    the old dir — an in-place rebuild would race readers and break the
-    append replay contract mid-write)."""
-    meta = PQ_META.require(
-        spark, old_path,
-        absent="not a PQ index; use pq_build_index for a first build",
-        advice="parameters cannot be trusted; pass them to pq_build_index "
-        "explicitly",
-        reads="build writes",
-    )
-    require_new_path(old_path, new_path)
-    if refine_iters == 0:
-        import warnings
-
-        warnings.warn(
-            "pq_rebuild_index(refine_iters=0): a rebuild without Lloyd "
-            "refinement cannot move codewords toward a drift-accreted "
-            "mode (seeds are the smallest ids — the same measured "
-            "finding as the IVF-PQ rebuild, docs/SCALING.md); keep "
-            "the default unless this is a layout-only rebuild",
-            UserWarning,
-            stacklevel=2,
-        )
-    pq_build_index(
-        corpus, new_path,
-        m=int(meta["m"]), n_codes=int(meta["n_codes"]),
-        id_col=id_col, vec_col=vec_col, refine_iters=refine_iters,
-        baseline_sample=float(meta.get("baseline_sample", 0.05)),
-    )
-
-
-def pq_search_index(
-    spark,
-    index_path: str,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    rerank: int = 1,
-    corpus: DataFrame | None = None,
-    allowed: DataFrame | None = None,
-    retry_missing_files: int = 0,
-    _on_built=None,
-) -> DataFrame:
-    """Search a staged flat PQ index (`pq_build_index`): ADC over the
-    staged byte codes, parameters DERIVED from the `_PQ_META.json`
-    sidecar, query batch dimension-guarded. Scores identically to
-    `pq_topk` with the same codebooks/codes by construction; `rerank`
-    needs `corpus` (the index holds codes, not floats). `allowed` (a
-    frame carrying `id_col`) restricts neighbors filter-then-rank —
-    top-k among the allowed set.
-
-    ``retry_missing_files=N`` (r11) absorbs the compaction window's
-    loud read race without hand-rolled caller retries: a search
-    overlapping `compact_ann_index`'s additive swap can list an
-    original file the swap then deletes, failing with
-    FAILED_READ_FILE; with N > 0 the result is materialized eagerly
-    (bounded: n_queries x k rows) and the plan rebuilt from a fresh
-    listing up to N times on exactly that failure — the file set is
-    stable once the swap completes, so N=1 suffices. Other errors
-    never retry. Default 0 keeps the plan lazy."""
-    if rerank < 1:
-        raise ValueError(f"rerank must be >= 1, got {rerank}")
-    meta = PQ_META.require(spark, index_path)
-    m = int(meta["m"])
-    guarded = _dim_guarded(queries, vec_col, int(meta["dim"]), "PQ: query")
-
-    def build() -> DataFrame:
-        cbs = spark.read.parquet(f"{index_path}/codebooks")
-        codes = _allowed_semi(
-            spark.read.parquet(f"{index_path}/codes"), allowed, id_col
-        )
-        return pq_topk(
-            corpus, guarded, k=k, m=m, n_codes=int(meta["n_codes"]),
-            id_col=id_col, vec_col=vec_col, codebooks=cbs, codes=codes,
-            rerank=rerank,
-        )
-
-    if retry_missing_files > 0:
-        return _materialize_with_retry(
-            build, retry_missing_files, _on_built=_on_built
-        )
-    return build()
-
-
 # ---------------------------------------------------------------------------
 # IVF-PQ — the composed billion-scale layout (Jégou et al. 2011 §VI,
 # the FAISS IVFPQ scheme): a coarse quantizer routes each vector to a
@@ -2251,6 +1962,34 @@ def pq_search_index(
 # corpus serves an ANN query from a few partition-pruned scans of
 # byte codes.
 # ---------------------------------------------------------------------------
+
+
+def _norm_cents(cents: DataFrame) -> DataFrame:
+    """(cell_id, _cnv): the normalized centroids residuals are taken
+    against."""
+    return cents.select("cell_id", l2_normalize("centroid").alias("_cnv"))
+
+
+def _residual_nv(vec_col: str) -> F.Column:
+    """`_nv`, a vector's residual: the normalized vector minus the
+    normalized centroid `_cnv` it was joined to."""
+    return F.zip_with(
+        l2_normalize(vec_col), F.col("_cnv"), lambda x, y: x - y
+    ).alias("_nv")
+
+
+def _residuals(
+    embs: DataFrame, cents: DataFrame, cents_n: DataFrame,
+    id_col: str, vec_col: str,
+) -> DataFrame:
+    """(id, cell_id, _nv): each vector's nearest cell and its residual
+    there — what the residual codebooks encode."""
+    asgn = ivf_assign(embs, cents, 1, id_col, vec_col)
+    return asgn.join(F.broadcast(cents_n), "cell_id").select(
+        F.col(id_col),
+        F.col("cell_id"),
+        _residual_nv(vec_col),
+    )
 
 
 def _ivfpq_parts(
@@ -2281,7 +2020,6 @@ def _ivfpq_parts(
     pin. Refined/overridden quantizers, and heads over the
     `_LOCAL_SEED_MAX_VALUES` ceiling, keep the anchored corpus
     derivation (`cents=` passes the hot-cell-split table)."""
-    from flink_etl_spark.functions.vectors import l2_normalize
     from flink_etl_spark.session import anchor
 
     spark = embs.sparkSession
@@ -2312,17 +2050,8 @@ def _ivfpq_parts(
         cents = anchor(
             ivf_centroids(embs, n_cells, id_col, vec_col, cell_refine_iters)
         )
-    cents_n = cents.select(
-        "cell_id", l2_normalize("centroid").alias("_cnv")
-    )
-    asgn = ivf_assign(embs, cents, 1, id_col, vec_col)
-    res = asgn.join(F.broadcast(cents_n), "cell_id").select(
-        F.col(id_col),
-        F.col("cell_id"),
-        F.zip_with(
-            l2_normalize(vec_col), F.col("_cnv"), lambda x, y: x - y
-        ).alias("_nv"),
-    )
+    cents_n = _norm_cents(cents)
+    res = _residuals(embs, cents, cents_n, id_col, vec_col)
     fused = seeds is not None
     if seeds is None:
         seeds = _pq_seeds(res.select(id_col, "_nv"), n_codes, id_col)
@@ -2366,8 +2095,6 @@ def _ivfpq_score(
 ) -> DataFrame:
     """Probe nprobe cells per query, ADC against the probed cells'
     codes with PER-CELL query residual distance tables."""
-    from flink_etl_spark.functions.vectors import l2_normalize
-
     qasgn = ivf_assign(queries, cents, nprobe, id_col, vec_col)
     d_sub = _guarded_dsub("_nv", m)
     packed = _pq_packed(cbs)
@@ -2376,9 +2103,7 @@ def _ivfpq_score(
         .select(
             F.col(id_col).alias("query_id"),
             F.col("cell_id").alias("q_cell_id"),
-            F.zip_with(
-                l2_normalize(vec_col), F.col("_cnv"), lambda x, y: x - y
-            ).alias("_nv"),
+            _residual_nv(vec_col),
         )
         .crossJoin(F.broadcast(packed))
         .withColumn(
@@ -2457,28 +2182,23 @@ def ivfpq_topk(
     )
 
 
-def ann_index_kind(spark, index_path: str) -> str:
-    """Resolve a staged ANN index's kind ("ivfpq" | "pq") from its own
-    meta sidecar — an IVF-PQ dir carries _IVFPQ_META.json, a flat-PQ
-    dir _PQ_META.json. A dir with BOTH is mixed/corrupted and a dir
-    with NEITHER is not a staged index; both raise rather than letting
-    a caller silently pick a branch (the CLI and the maintenance ops
-    share this resolution)."""
-    has_ivfpq = IVFPQ_META.read(spark, index_path) is not None
-    has_pq = PQ_META.read(spark, index_path) is not None
-    ivfpq, pq = IVFPQ_META.name, PQ_META.name
-    if has_ivfpq and has_pq:
-        raise ValueError(
-            f"{index_path} carries BOTH {ivfpq} and {pq} — a mixed or "
-            "corrupted index dir; rebuild it (or delete the stale "
-            "sidecar) first"
-        )
-    if not has_ivfpq and not has_pq:
-        raise ValueError(
-            f"{index_path} has neither {ivfpq} nor {pq} — not a staged "
-            "ANN index; build one first"
-        )
-    return "ivfpq" if has_ivfpq else "pq"
+def _index_meta(spark, index_path: str, **tails) -> dict:
+    """`IVFPQ_META.require` for every reader of a staged ANN index
+    (`tails` as there). A flat PQ index staged by earlier releases
+    carries its own older sidecar instead and is refused by name: it
+    must be rebuilt as the one-cell index."""
+    try:
+        return IVFPQ_META.require(spark, index_path, **tails)
+    except ValueError:
+        legacy = f"{index_path}/_PQ_META.json"
+        if snapshot_exists(spark, legacy):
+            raise ValueError(
+                f"{legacy}: a flat PQ index staged by an earlier release, "
+                "which this release no longer reads; rebuild it with "
+                "ivfpq_build_index(corpus, <new path>, n_cells=1) — the "
+                "one-cell index is the flat index — and cut searches over"
+            ) from None
+        raise
 
 
 def _dim_guarded(df: DataFrame, vec_col: str, dim: int, what: str) -> DataFrame:
@@ -2498,6 +2218,30 @@ def _dim_guarded(df: DataFrame, vec_col: str, dim: int, what: str) -> DataFrame:
             ).cast(vec_type)
         ),
     )
+
+
+#: the one-cell drift baseline averages over a deterministic hash sample
+#: of 5% of the build corpus (50k per million ids), or over the whole
+#: corpus when that sample holds fewer than 1024 vectors — a smaller
+#: sample's mean carries more sampling error than the drift it watches
+_RECON_SAMPLE_PER_MILLION = 50_000
+_RECON_SAMPLE_FLOOR = 1024
+#: a one-cell batch whose reconstruction error exceeds twice the build
+#: baseline recommends a rebuild: recall is flat until the error roughly
+#: doubles and sags beyond it (docs/SCALING.md "Flat-PQ drift")
+_RECON_REBUILD_ABOVE = 2.0
+
+
+def _recon_sample(embs: DataFrame, id_col: str) -> DataFrame:
+    """The build corpus's drift-baseline sample (module constants above);
+    the floor check is a bounded early-stop probe, never a full count."""
+    base = embs.filter(
+        F.pmod(F.xxhash64(F.col(id_col)), F.lit(1_000_000))
+        < F.lit(_RECON_SAMPLE_PER_MILLION)
+    )
+    if base.limit(_RECON_SAMPLE_FLOOR).count() < _RECON_SAMPLE_FLOOR:
+        return embs
+    return base
 
 
 def ivfpq_build_index(
@@ -2551,7 +2295,18 @@ def ivfpq_build_index(
     `split_hot_cells`; the splitting scans otherwise cost up to
     max_rounds FULL corpus passes before the build starts). Measured
     on a half-in-one-cluster corpus in `skew_probe` [retired; in git history]
-    (docs/SCALING.md)."""
+    (docs/SCALING.md).
+
+    ONE CELL (`n_cells=1`, as resolved) is the flat PQ index: every
+    query batch ADC-scans all codes. A single centroid shifts corpus,
+    queries and codewords alike, so codes and scores equal flat PQ's
+    (`pq_encode` / `pq_topk` over the same corpus) and the build skips
+    what only several cells need: centroid refinement and the census.
+    `max_cell_frac=` still splits the lone cell, and a split index is
+    a multi-cell one. Its drift baseline is `mean_recon_err`
+    (the mean reconstruction error `ann_drift_check` compares batches
+    against) in place of `mean_centroid_sim`, which a lone centroid
+    cannot move."""
     from flink_etl_spark.operators.knobs import ivf_auto_cells, resolve_knob
 
     spark = embs.sparkSession
@@ -2559,8 +2314,11 @@ def ivfpq_build_index(
     dim_row = embs.select(F.size(F.col(vec_col)).alias("d")).first()
     if dim_row is None:
         raise ValueError("ivfpq_build_index: empty corpus")
-    # same build-corpus dimension guard as pq_build_index
+    # guard the BUILD corpus too, not just queries/appends: a mixed-dim
+    # corpus whose other rows still divide by m would encode garbage
+    # codes silently (zip_with pads with nulls)
     embs = _dim_guarded(embs, vec_col, dim_row["d"], "IVF-PQ build: corpus")
+    one_cell = n_cells == 1
     cents = None
     if max_cell_frac is not None:
         cents = split_hot_cells(
@@ -2569,8 +2327,17 @@ def ivfpq_build_index(
             max_cell_frac, id_col, vec_col,
             census_sample=census_sample,
         )
-    cents, _, cbs, codes = _ivfpq_parts(
-        embs, n_cells, m, n_codes, id_col, vec_col, cell_refine_iters,
+        if one_cell:
+            from flink_etl_spark.session import anchor
+
+            # a split turns the lone cell into several
+            cents = anchor(cents)
+            one_cell = cents.count() == 1
+    cents, cents_n, cbs, codes = _ivfpq_parts(
+        embs, n_cells, m, n_codes, id_col, vec_col,
+        # one cell: codes and scores do not depend on its centroid, so
+        # no Lloyd pass can change them
+        0 if one_cell else cell_refine_iters,
         cents=cents,
     )
     cents.write.mode("overwrite").parquet(f"{index_path}/centroids")
@@ -2578,6 +2345,23 @@ def ivfpq_build_index(
     codes.write.mode("overwrite").partitionBy("cell_id").parquet(
         f"{index_path}/cells"
     )
+    meta = {"n_cells": n_cells, "m": m, "n_codes": n_codes,
+            "dim": dim_row["d"]}
+    if one_cell:
+        # nothing to census; the drift baseline is the build corpus's
+        # mean residual reconstruction error under the codebooks just
+        # staged, over a bounded sample
+        IVFPQ_META.write(spark, index_path, {
+            **meta, "max_cell_frac_observed": 1.0,
+            "mean_recon_err": _mean_recon_err(
+                _residuals(
+                    _recon_sample(embs, id_col), cents, cents_n,
+                    id_col, vec_col,
+                ),
+                cbs, m,
+            ),
+        })
+        return
     # census the WRITTEN layout (ids only — the codes column is pruned):
     # the number every capacity plan needs, and the skew warning
     sizes = (
@@ -2587,20 +2371,18 @@ def ivfpq_build_index(
     total = sum(r["n"] for r in sizes)
     observed = round(max(r["n"] for r in sizes) / total, 4) if total else 0.0
     staged_cents = spark.read.parquet(f"{index_path}/centroids")
-    resolved_cells = (
-        staged_cents.count() if max_cell_frac is not None else n_cells
-    )
+    if max_cell_frac is not None:
+        meta["n_cells"] = staged_cents.count()
     # baseline drift signal (one broadcast assignment scan): the mean
     # cosine of the BUILD corpus to its assigned centroids, recorded so
     # ann_drift_check can compare every appended batch against it
     # without ground truth (drift_probe [retired; in git history] derived
     # the rebuild rule from its decay curve)
-    baseline_sim = mean_centroid_sim(embs, staged_cents, id_col, vec_col)
     IVFPQ_META.write(spark, index_path, {
-        "n_cells": resolved_cells, "m": m, "n_codes": n_codes,
-        "dim": dim_row["d"],
-        "max_cell_frac_observed": observed,
-        "mean_centroid_sim": baseline_sim,
+        **meta, "max_cell_frac_observed": observed,
+        "mean_centroid_sim": mean_centroid_sim(
+            embs, staged_cents, id_col, vec_col
+        ),
     })
     if observed > warn_cell_frac:
         import warnings
@@ -2646,26 +2428,16 @@ def ivfpq_append_index(
     replayed batch appends nothing. Duplicate (id, codes) rows would
     otherwise break search's pair-uniqueness argument and surface the
     same neighbor twice in a top-k."""
-    meta = IVFPQ_META.require(
+    meta = _index_meta(
         spark, index_path,
         absent="not an IVF-PQ index staged by ivfpq_build_index; build "
         "before appending",
     )
-    from flink_etl_spark.functions.vectors import l2_normalize
-
     m, dim = int(meta["m"]), int(meta["dim"])
     guarded = _dim_guarded(new_embs, vec_col, dim, "IVF-PQ append: batch")
     cents = spark.read.parquet(f"{index_path}/centroids")
     cbs = spark.read.parquet(f"{index_path}/codebooks")
-    cents_n = cents.select("cell_id", l2_normalize("centroid").alias("_cnv"))
-    asgn = ivf_assign(guarded, cents, 1, id_col, vec_col)
-    res = asgn.join(F.broadcast(cents_n), "cell_id").select(
-        F.col(id_col),
-        F.col("cell_id"),
-        F.zip_with(
-            l2_normalize(vec_col), F.col("_cnv"), lambda x, y: x - y
-        ).alias("_nv"),
-    )
+    res = _residuals(guarded, cents, _norm_cents(cents), id_col, vec_col)
     # size-aware engine pick (r15): the append batch is whatever the
     # caller hands in — the lifecycle gates append hundreds of rows
     # (KBs, where the arrow fixed costs dominate) while a production
@@ -2742,74 +2514,106 @@ def ann_drift_check(
     rebuild_below: float = 0.95,
     meta: dict | None = None,
     centroids: DataFrame | None = None,
+    codebooks: DataFrame | None = None,
 ) -> dict:
     """Quantizer-drift check for a batch about to be appended to a
-    staged IVF-PQ index: assigns the batch with the index's frozen
-    centroids and compares its mean centroid similarity against the
-    BUILD-TIME baseline recorded in the sidecar.
+    staged IVF-PQ index: compares a fit signal of the batch under the
+    index's FROZEN quantizers against the BUILD-TIME baseline the
+    sidecar records. No ground truth, nothing scanned over the index.
 
-    ``meta`` / ``centroids`` (r11, ADVICE) inject the frozen inputs so
-    a caller checking on a cadence (the continuous sink's
-    `drift_check_every`) reads the sidecar and centroid parquet ONCE
-    instead of per check — both are frozen between rebuilds, and a
-    rebuild targets a new path with a re-attach, so the cache can
-    never go stale while the caller holds it. Returns
-    ``{"batch_sim", "baseline_sim", "ratio", "rebuild_recommended"}``
-    and warns when the ratio falls below ``rebuild_below`` (default
-    0.95 — the ~5% drop where the measured curve shows recall sagging
-    and the appended slice concentrating into stale cells). The
-    recommended fix is `ivfpq_rebuild_index(..., cell_refine_iters>=2)`
-    — a bare rebuild does NOT rescue a late-arriving mode (docstring
-    there; curve in docs/SCALING.md "Quantizer drift").
+    * Several cells: the batch's mean centroid similarity
+      (`mean_centroid_sim`, one broadcast assignment). Returns
+      ``{"batch_sim", "baseline_sim", "ratio", "checkable",
+      "rebuild_recommended"}`` and warns when the ratio falls below
+      ``rebuild_below`` (default 0.95 — the ~5% drop where the measured
+      curve shows recall sagging and the appended slice concentrating
+      into stale cells). The fix is `ivfpq_rebuild_index(...,
+      cell_refine_iters>=2)` — a bare rebuild does NOT rescue a
+      late-arriving mode (docs/SCALING.md "Quantizer drift").
+    * One cell (the flat index): a lone centroid cannot drift, so the
+      signal is the batch's mean residual reconstruction error under
+      the frozen codebooks (the `pq_recon_error` kernel; errors RISE
+      under drift). Returns ``{"batch_err", "baseline_err", "ratio",
+      "checkable", "rebuild_recommended"}`` and warns when the ratio
+      exceeds 2.0 (docs/SCALING.md "Flat-PQ drift"); the fix is a plain
+      `ivfpq_rebuild_index` to a new path.
 
-    Cost: one broadcast assignment over the batch — run it per daily
-    batch, or sampled inside a streaming sink. Indexes built before
-    the baseline field existed return ratio 1.0 with a baseline of
-    None (re-record by rebuilding)."""
+    ``meta`` / ``centroids`` / ``codebooks`` inject the frozen inputs
+    so a caller checking on a cadence (the continuous sink's
+    `drift_check_every`) reads the sidecar and parquet ONCE instead of
+    per check — all are frozen between rebuilds, and a rebuild targets
+    a new path with a re-attach, so the cache can never go stale while
+    the caller holds it.
+
+    A baseline that is missing (an index built before the field
+    existed), zero, or negative (a negative cosine would INVERT the
+    ratio) is UN-CHECKABLE: ratio 1.0 and ``checkable`` False, with a
+    monitor-off warning for the zero/negative case — never a rebuild
+    flag off bad math."""
+    import warnings
+
     if meta is None:
-        meta = IVFPQ_META.require(spark, index_path)
+        meta = _index_meta(spark, index_path)
     guarded = _dim_guarded(batch, vec_col, int(meta["dim"]), "drift check")
     cents = (
         centroids
         if centroids is not None
         else spark.read.parquet(f"{index_path}/centroids")
     )
-    batch_sim = mean_centroid_sim(guarded, cents, id_col, vec_col)
-    baseline = meta.get("mean_centroid_sim")
-    # a baseline <= 0 is un-checkable, not "missing": 0.0 would divide
-    # away, and a NEGATIVE baseline (legal for cosine) would INVERT
-    # the ratio — a worse (more negative) batch_sim reading as higher.
-    # Treat both as monitor-off and say so, rather than silently never
-    # warning.
+    one_cell = int(meta["n_cells"]) == 1
+    if one_cell:
+        cbs = (
+            codebooks
+            if codebooks is not None
+            else spark.read.parquet(f"{index_path}/codebooks")
+        )
+        value = _mean_recon_err(
+            _residuals(guarded, cents, _norm_cents(cents), id_col, vec_col),
+            cbs, int(meta["m"]),
+        )
+        field, keys = "mean_recon_err", ("batch_err", "baseline_err")
+    else:
+        value = mean_centroid_sim(guarded, cents, id_col, vec_col)
+        field, keys = "mean_centroid_sim", ("batch_sim", "baseline_sim")
+    baseline = meta.get(field)
     checkable = baseline is not None and baseline > 0
     if baseline is not None and baseline <= 0:
-        import warnings
-
         warnings.warn(
-            f"IVF-PQ index at {index_path}: recorded baseline "
-            f"mean_centroid_sim {baseline} is <= 0 — the drift ratio is "
-            "undefined there (a negative baseline inverts the "
-            "comparison); rebuild the index to record a usable "
-            "baseline. Returning ratio 1.0 with the monitor OFF",
+            f"IVF-PQ index at {index_path}: recorded baseline {field} "
+            f"{baseline} is <= 0 — the drift ratio is undefined there (a "
+            "negative baseline inverts the comparison); rebuild the index "
+            "to record a usable baseline. Returning ratio 1.0 with the "
+            "monitor OFF",
             UserWarning,
             stacklevel=2,
         )
-    ratio = round(batch_sim / baseline, 4) if checkable else 1.0
+    ratio = round(value / baseline, 4) if checkable else 1.0
+    drifted = (
+        ratio > _RECON_REBUILD_ABOVE if one_cell else ratio < rebuild_below
+    )
     out = {
-        "batch_sim": batch_sim,
-        "baseline_sim": baseline,
+        keys[0]: value,
+        keys[1]: baseline,
         "ratio": ratio,
         # False = monitor OFF (missing/zero/negative baseline), so a
         # scheduler can tell "healthy" from "un-checkable" (ADVICE r10)
         "checkable": checkable,
-        "rebuild_recommended": checkable and ratio < rebuild_below,
+        "rebuild_recommended": checkable and drifted,
     }
-    if out["rebuild_recommended"]:
-        import warnings
-
+    if out["rebuild_recommended"] and one_cell:
+        warnings.warn(
+            f"IVF-PQ index at {index_path}: appended-batch mean "
+            f"reconstruction error {value} is {ratio:.1f}x the build-time "
+            f"baseline {baseline} (> {_RECON_REBUILD_ABOVE:.1f}x) — the "
+            "codebooks have drifted; rebuild the index "
+            "(ivfpq_rebuild_index to a new path) and cut searches over",
+            UserWarning,
+            stacklevel=2,
+        )
+    elif out["rebuild_recommended"]:
         warnings.warn(
             f"IVF-PQ index at {index_path}: appended-batch mean centroid "
-            f"similarity {batch_sim} is {ratio:.0%} of the build-time "
+            f"similarity {value} is {ratio:.0%} of the build-time "
             f"baseline {baseline} (< {rebuild_below:.0%}) — the quantizer "
             "has drifted; schedule ivfpq_rebuild_index(..., "
             "cell_refine_iters>=2) to a new path",
@@ -2876,8 +2680,9 @@ def ivfpq_rebuild_index(
     — pinned by test. Overrides: `n_cells` (int or "auto" to re-size
     to the rebuilt corpus), `cell_refine_iters`, `max_cell_frac`
     (hot-cell splitting; a drift-accreted dense mode is exactly the
-    skew case)."""
-    meta = IVFPQ_META.require(
+    skew case). A one-cell index rebuilds plainly: new codebooks over
+    the new corpus, no refinement to ask for."""
+    meta = _index_meta(
         spark, old_path,
         absent="not an IVF-PQ index; use ivfpq_build_index for a first "
         "build",
@@ -2886,7 +2691,9 @@ def ivfpq_rebuild_index(
         reads="build writes",
     )
     require_new_path(old_path, new_path)
-    if cell_refine_iters == 0:
+    if n_cells is None:
+        n_cells = meta["n_cells"]
+    if cell_refine_iters == 0 and n_cells != 1:
         import warnings
 
         warnings.warn(
@@ -2900,8 +2707,7 @@ def ivfpq_rebuild_index(
         )
     ivfpq_build_index(
         corpus, new_path,
-        n_cells=meta["n_cells"] if n_cells is None else n_cells,
-        m=int(meta["m"]), n_codes=int(meta["n_codes"]),
+        n_cells=n_cells, m=int(meta["m"]), n_codes=int(meta["n_codes"]),
         id_col=id_col, vec_col=vec_col,
         cell_refine_iters=cell_refine_iters,
         max_cell_frac=max_cell_frac, warn_cell_frac=warn_cell_frac,
@@ -2940,16 +2746,21 @@ def ivfpq_search_index(
     expression-side against the staged `dim` — a wrong-dimension
     query batch raises instead of zip-padding nulls into the ADC.
 
-    ``retry_missing_files=N`` (r11) absorbs the compaction window's
-    loud read race: see `pq_search_index` — same contract (eager
-    bounded materialization, fresh-listing re-plan on FAILED_READ_FILE
-    only, N=1 suffices because the file set is stable after the swap
-    completes)."""
-    from flink_etl_spark.functions.vectors import l2_normalize  # noqa: F401
+    A one-cell index (the flat index) searches every code whatever
+    `nprobe` says.
 
+    ``retry_missing_files=N`` (r11) absorbs the compaction window's
+    loud read race without hand-rolled caller retries: a search
+    overlapping `compact_ann_index`'s additive swap can list an
+    original file the swap then deletes, failing with
+    FAILED_READ_FILE; with N > 0 the result is materialized eagerly
+    (bounded: n_queries x k rows) and the plan rebuilt from a fresh
+    listing up to N times on exactly that failure — the file set is
+    stable once the swap completes, so N=1 suffices. Other errors
+    never retry. Default 0 keeps the plan lazy."""
     if rerank < 1:
         raise ValueError(f"rerank must be >= 1, got {rerank}")
-    meta = IVFPQ_META.require(
+    meta = _index_meta(
         spark, index_path,
         absent="not an IVF-PQ index staged by ivfpq_build_index (or a "
         "pre-sidecar build); rebuild the index",
@@ -2973,12 +2784,9 @@ def ivfpq_search_index(
             ),
             allowed, id_col,
         )
-        cents_n = cents.select(
-            "cell_id", l2_normalize("centroid").alias("_cnv")
-        )
         return _ivfpq_score(
-            codes, cents, cents_n, cbs, guarded, k, nprobe, m, id_col,
-            vec_col, rerank, corpus,
+            codes, cents, _norm_cents(cents), cbs, guarded, k, nprobe, m,
+            id_col, vec_col, rerank, corpus,
         )
 
     if retry_missing_files > 0:

@@ -113,18 +113,6 @@ def _tokenized(docs: DataFrame, *cols: str, text_col: str) -> DataFrame:
     )
 
 
-def token_stats(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Token counting + vocabulary-richness stats per document."""
-    return _tokenized(docs, id_col, text_col=text_col).selectExpr(
-        ident(id_col),
-        "size(_t) AS n_tokens",
-        "size(array_distinct(_t)) AS n_distinct",
-        f"{micro_floor_ratio('size(array_distinct(_t))', 'size(_t)')} AS distinct_ratio",
-        f"{micro_floor_ratio('aggregate(_t, 0, (acc, t) -> acc + length(t))', 'size(_t)')}"
-        " AS avg_token_len",
-    )
-
-
 def _lang_guess() -> str:
     """greatest-of-structs argmax over the per-language stopword hits
     of the staged `_t` (ties break on the LARGEST language code)."""
@@ -920,31 +908,12 @@ def _bpe_truncate_batch(rows: list, products: set) -> tuple[list, str | None]:
     return out, ("ub" if len(out) < len(accepted) else cut)
 
 
-#: `bpe_fit(batch_merges="auto")` probe: the first N classical rounds
-#: are timed (each is exactly ONE driver action, so the round wall IS
-#: the per-action cost), and the loop switches to batch_merges=16 for
-#: the remainder when the median exceeds the measured B=16 break-even
-#: — L* ~ 0.65 s/action from the interleaved R=1024 crossover table
-#: (docs/SCALING.md "Batched BPE"; `bpe_probe fit --latency`
-#: [retired; in git history] validated the arithmetic end to end at
-#: R=256/300 ms). 0.7 s is the documented
-#: "extreme driver-to-cluster latency" line, ABOVE the 200-500 ms
-#: stage-cycle band of a busy cluster — so local/normal clusters
-#: stay on the classical B=1 loop and only WAN-notebook/queued-
-#: scheduler deployments self-select batching. The merge table is
-#: byte-identical for any B by construction, so the switch can never
-#: change results — only round structure.
-_BPE_AUTO_PROBE_ROUNDS = 4
-_BPE_AUTO_LATENCY_SEC = 0.7
-_BPE_AUTO_BATCH = 16
-
-
 def bpe_fit(
     docs: DataFrame,
     n_merges: int,
     text_col: str = "text",
     vocab_partitions: int | None = None,
-    batch_merges: int | str = 1,
+    batch_merges: int = 1,
     stats: dict | None = None,
 ) -> DataFrame:
     """Distributed BPE tokenizer vocabulary training (Sennrich,
@@ -992,19 +961,8 @@ def bpe_fit(
     the bound scan costs more compute than the actions it saves
     unless one action costs more than the measured B=16 break-even,
     ~0.65 s — above the documented 200-500 ms stage-cycle band. Use
-    batch_merges=16 (or "auto") only for extreme driver-to-cluster
-    latency (WAN notebook drivers, schedulers queued at >= 0.7
-    s/action).
-
-    ``batch_merges="auto"`` implements that rule as a measured in-loop
-    decision: the first `_BPE_AUTO_PROBE_ROUNDS` rounds run classical
-    (each exactly one driver action, so the round wall IS the
-    per-action cost); if their median exceeds `_BPE_AUTO_LATENCY_SEC`
-    the remainder runs batch_merges=16, otherwise the loop stays
-    classical. Output is byte-identical either way, so the probe can
-    only change round structure, never the merge table. The decision
-    lands in ``stats``: {"auto_probe_sec", "auto_batch_merges",
-    "auto_switch_round" (None = stayed classical)}.
+    batch_merges=16 only for extreme driver-to-cluster latency (WAN
+    notebook drivers, schedulers queued at >= 0.7 s/action).
 
     The fit loop pins AQE off for classical rounds (measured 3.2x at
     the vocab_partitions=1 gate/test shape: 13.9 -> 4.4 s); batched
@@ -1024,13 +982,9 @@ def bpe_fit(
             f"n_merges must be in [1, 50000], got {n_merges} (merge "
             "tables beyond vocabulary scale are a misconfiguration)"
         )
-    auto_batch = batch_merges == "auto"
-    if not auto_batch and not (
-        isinstance(batch_merges, int) and 1 <= batch_merges <= 1024
-    ):
+    if not (isinstance(batch_merges, int) and 1 <= batch_merges <= 1024):
         raise ValueError(
-            f"batch_merges must be 'auto' or in [1, 1024], got "
-            f"{batch_merges!r}"
+            f"batch_merges must be an int in [1, 1024], got {batch_merges!r}"
         )
     spark = docs.sparkSession
     words = bpe_word_counts(docs, text_col)
@@ -1060,24 +1014,15 @@ def bpe_fit(
     # thrice-referenced pair-count aggregate once (R=1024, B=16: 617.9 s
     # AQE-off vs 333.1 s AQE-on).
     aqe_off = ExitStack()
-    # auto starts classical (B=1): the probe rounds must measure the
-    # per-action cost on the arm the decision defaults to
-    b_cur: int = 1 if auto_batch else batch_merges
-    probe_walls: list[float] = []
-    auto_switch_round: int | None = None
-    auto_probe_sec: float | None = None
-    if b_cur == 1:
+    if batch_merges == 1:
         aqe_off.enter_context(
             pinned_conf(spark, "spark.sql.adaptive.enabled", "false")
         )
     with aqe_off:
-        import time as _time
-
         while len(merges) < n_merges:
             rounds += 1
-            _t0 = _time.monotonic() if auto_batch else None
             pair_counts = _bpe_pair_counts(words)
-            want = min(b_cur, n_merges - len(merges))
+            want = min(batch_merges, n_merges - len(merges))
             if want > 1:
                 top = _bpe_topk_with_bounds(words, pair_counts, want)
             else:
@@ -1116,30 +1061,12 @@ def bpe_fit(
                 words = anchor(words)
                 anchor_ref = words
                 applied_since_anchor = 0
-            if _t0 is not None:
-                probe_walls.append(_time.monotonic() - _t0)
-                if len(probe_walls) >= _BPE_AUTO_PROBE_ROUNDS:
-                    # decide ONCE: median probe wall vs the measured
-                    # B=16 break-even (module constants above)
-                    auto_probe_sec = sorted(probe_walls)[
-                        len(probe_walls) // 2
-                    ]
-                    if auto_probe_sec >= _BPE_AUTO_LATENCY_SEC:
-                        b_cur = _BPE_AUTO_BATCH
-                        auto_switch_round = rounds
-                        # batched rounds need AQE's exchange reuse
-                        aqe_off.close()
-                    auto_batch = False
     del anchor_ref
     if stats is not None:
         stats["rounds"] = rounds
         stats["n_merges"] = len(merges)
         stats["prefix_stops"] = stops["prefix"]
         stats["ub_stops"] = stops["ub"]
-        if batch_merges == "auto":
-            stats["auto_probe_sec"] = auto_probe_sec
-            stats["auto_batch_merges"] = b_cur
-            stats["auto_switch_round"] = auto_switch_round
     return spark.createDataFrame(
         merges, "rank bigint, left string, right string, pair_count bigint"
     )
@@ -1322,7 +1249,7 @@ def bpe_stage_fit(
     n_merges: int,
     text_col: str = "text",
     vocab_partitions: int | None = None,
-    batch_merges: int | str = 1,
+    batch_merges: int = 1,
 ) -> None:
     """Stage a BPE tokenizer fit once so encode runs reuse it — the
     `dsir_stage_fit` pattern applied to the tokenizer: a vocabulary is

@@ -7,7 +7,6 @@ on these for free; the helpers here only encode the layout conventions
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
 
@@ -32,11 +31,6 @@ def read_string_partitioned(
         for f in df.schema
     ])
     return spark.read.schema(schema).format(fmt).option("basePath", path).load(path)
-
-
-def read_day(spark: SparkSession, path: str, day: str, fmt: str = "parquet") -> DataFrame:
-    """One day's partition (README.md:245-248's `WHERE dt='20200324'`)."""
-    return read_partitioned(spark, path, fmt).filter(F.col("dt") == F.lit(day))
 
 
 def read_jsonl(spark: SparkSession, path: str) -> DataFrame:

@@ -1,14 +1,12 @@
 """Kafka source builders (S1, SURVEY.md §2.1).
 
 Thin config-to-options mapping; the streaming entry point lives in
-streaming/ingest.py. Batch mode reads a bounded offset range — useful
-for replay/backfill jobs (`startingOffsets=earliest` mirrors
-HdfsSink.java:54).
+streaming/ingest.py.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     BinaryType,
     IntegerType,
@@ -18,8 +16,6 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
-
-from flink_etl_spark.config import KafkaSourceConfig
 
 #: The EXACT schema `spark.read(.readStream).format("kafka").load()`
 #: produces (public Structured-Streaming Kafka integration contract).
@@ -48,16 +44,3 @@ def decode_kafka_frames(frames: DataFrame) -> DataFrame:
     AND the recorded-frame contract tests so both run the identical
     code path."""
     return frames.selectExpr("CAST(value AS STRING) AS value")
-
-
-def read_batch(spark: SparkSession, cfg: KafkaSourceConfig) -> DataFrame:
-    """Bounded Kafka read (earliest..latest) as raw strings."""
-    reader = spark.read.format("kafka")
-    for k, v in cfg.reader_options().items():
-        if k != "startingOffsets":
-            reader = reader.option(k, v)
-    return decode_kafka_frames(
-        reader.option("startingOffsets", "earliest")
-        .option("endingOffsets", "latest")
-        .load()
-    )

@@ -260,11 +260,6 @@ class Sidecar:
         return True
 
 
-PQ_META = Sidecar(
-    "_PQ_META.json", 1, "PQ index",
-    absent="not a PQ index staged by pq_build_index",
-    advice="rebuild the index",
-)
 IVFPQ_META = Sidecar(
     "_IVFPQ_META.json", 1, "IVF-PQ index",
     absent="not an IVF-PQ index", advice="rebuild the index",

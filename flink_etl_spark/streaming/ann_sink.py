@@ -1,19 +1,19 @@
 """Continuous ANN index maintenance: append each micro-batch of
-embeddings to a staged PQ / IVF-PQ index INSIDE the stream — the ANN
+embeddings to a staged IVF-PQ index INSIDE the stream — the ANN
 face of the foreachBatch maintenance pattern
 (`streaming/dedup_sink.py` for substring dedup, `streaming/merge_sink`
 for CDC): a training-data pipeline that embeds documents continuously
 keeps its similarity index current without a nightly rebuild.
 
-The index MUST be built offline first (`pq_build_index` /
-`ivfpq_build_index` over a bootstrap corpus): the quantizers are
+The index MUST be built offline first (`ivfpq_build_index` over a
+bootstrap corpus; `n_cells=1` is the flat index): the quantizers are
 frozen at build time — that is what keeps staged and appended codes
 score-comparable — and the seed recipes need a corpus to derive from.
 The sink only ever appends.
 
 Replay safety rides on the append operators' convergence contract:
 foreachBatch redelivers the latest batch after a crash, and
-`pq_append_index` / `ivfpq_append_index` anti-join already-present ids
+`ivfpq_append_index` anti-joins already-present ids
 before writing, so a replayed batch appends nothing (ids must be
 globally unique across the corpus and every batch — the same contract
 as `semdedup_incremental`).
@@ -45,14 +45,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from flink_etl_spark.operators.similarity import (
-    ann_index_kind,
+    _index_meta,
+    ann_drift_check,
     ivfpq_append_index,
-    pq_append_index,
 )
 from flink_etl_spark.staged import (
     COMPACT_PLAN,
-    IVFPQ_META,
-    PQ_META,
     _data_file_names,
     _hadoop_fs,
     _staging_path,
@@ -65,10 +63,8 @@ from flink_etl_spark.staged import (
 
 def _ann_data_dirs(spark: SparkSession, index_path: str) -> list[str]:
     """The append-accreting data directories of a staged ANN index:
-    every `cells/cell_id=N/` for IVF-PQ, the flat `codes/` for PQ.
-    Driver-side FS listing, never a data scan."""
-    if ann_index_kind(spark, index_path) == "pq":
-        return [f"{index_path}/codes"]
+    every `cells/cell_id=N/`. Driver-side FS listing, never a data
+    scan."""
     cells = f"{index_path}/cells"
     return [f"{cells}/{n}" for n in subdir_names(spark, cells, "cell_id=")]
 
@@ -176,10 +172,8 @@ def recover_ann_index(spark: SparkSession, index_path: str) -> int:
     deletes); plan-less staging remnants and pre-r10 delete+rename
     crashes (whose window DID silently hide the mid-swap directory)
     heal through `recover_snapshot`. Returns the number of directories
-    recovered."""
-    kind = ann_index_kind(spark, index_path)
-    if kind == "pq":
-        return _recover_dir(spark, f"{index_path}/codes")
+    recovered; raises on a directory that is not a staged index."""
+    _index_meta(spark, index_path)
     staged = subdir_names(spark, f"{index_path}/cells/_staging", "cell_id=")
     return sum(_recover_dir(spark, f"{index_path}/cells/{n}") for n in staged)
 
@@ -209,14 +203,13 @@ def compact_ann_index(
     metadata scale-killer class `compact_dedup_index` closes for the
     continuous-dedup index: at a batch per minute a quarter's run is
     ~130k file sets per hot cell, and every probe of that cell pays
-    one task + one footer read per file). Works on both staged
-    layouts (IVF-PQ `cells/cell_id=N/`, flat-PQ `codes/`). Returns the
-    number of directories rewritten.
+    one task + one footer read per file). Returns the number of
+    directories rewritten.
 
-    APPEND/REPLAY CONTRACT (why this is safe): `pq_append_index` /
-    `ivfpq_append_index` anti-join the staged ids before writing, so
-    their replay convergence needs exactly one property from this op —
-    the staged (id, codes) ROW SET is preserved byte-for-byte. That is
+    APPEND/REPLAY CONTRACT (why this is safe): `ivfpq_append_index`
+    anti-joins the staged ids before writing, so its replay
+    convergence needs exactly one property from this op — the staged
+    (id, codes) ROW SET is preserved byte-for-byte. That is
     not assumed but ASSERTED: each directory's replacement is written
     to the invisible `_staging/` sibling first, its (count,
     xor-of-row-hashes) signature is compared against the original, and
@@ -317,7 +310,6 @@ def start_continuous_ann_index(
     embs: DataFrame,
     index_path: str,
     checkpoint_location: str,
-    kind: str = "ivfpq",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     available_now: bool = False,
@@ -325,13 +317,11 @@ def start_continuous_ann_index(
     drift_check_every: int | None = None,
 ) -> StreamingQuery:
     """Attach continuous index append as a foreachBatch sink on a
-    streaming embedding DataFrame. ``kind`` selects the staged layout:
-    ``"ivfpq"`` (cell-partitioned byte codes — the 100 TB default) or
-    ``"pq"`` (flat codes). The index at `index_path` must already
-    exist with a matching meta sidecar; validated once at start so a
-    misconfigured stream fails at attach time, not at first batch
-    (attach also heals any crashed compaction swap via
-    `recover_ann_index`).
+    streaming embedding DataFrame. The IVF-PQ index at `index_path`
+    must already exist (any cell count; one cell is the flat index);
+    it is validated once at start so a misconfigured stream fails at
+    attach time, not at first batch (attach also heals any crashed
+    compaction swap via `recover_ann_index`).
 
     ``compact_every=N`` runs `compact_ann_index` INSIDE the sink every
     N-th batch, bounding each cell partition's file count with no
@@ -348,20 +338,16 @@ def start_continuous_ann_index(
     ones; the worst case is a loud FAILED_READ_FILE retry, per
     `compact_ann_index`'s reader contract.
 
-    ``drift_check_every=N`` runs the kind-appropriate quantizer-drift
-    check (`ann_drift_check` for ivfpq, `pq_drift_check` for flat pq)
-    on every N-th micro-batch BEFORE appending it — the operational
-    loop closed: the sink is where batches flow, so the monitor rides
-    it, warning (UserWarning in driver logs) with
-    rebuild_recommended when the batch reads drifted against the
-    build-time sidecar baseline. Cost: one broadcast
-    assignment/encode pass over the sampled batch, nothing over the
-    index. The sink never ACTS on the flag (a rebuild targets a new
-    path and needs a cutover the stream cannot do mid-flight) — wire
-    the warning into alerting, then run `ivfpq_rebuild_index` /
-    `pq_rebuild_index` and re-attach."""
-    if kind not in ("ivfpq", "pq"):
-        raise ValueError(f"kind must be 'ivfpq' or 'pq', got {kind!r}")
+    ``drift_check_every=N`` runs `ann_drift_check` on every N-th
+    micro-batch BEFORE appending it — the operational loop closed: the
+    sink is where batches flow, so the monitor rides it, warning
+    (UserWarning in driver logs) with rebuild_recommended when the
+    batch reads drifted against the build-time sidecar baseline. Cost:
+    one broadcast assignment/encode pass over the sampled batch,
+    nothing over the index. The sink never ACTS on the flag (a rebuild
+    targets a new path and needs a cutover the stream cannot do
+    mid-flight) — wire the warning into alerting, then run
+    `ivfpq_rebuild_index` and re-attach."""
     check_compact_every(compact_every)
     if drift_check_every is not None and drift_check_every < 1:
         raise ValueError(
@@ -371,18 +357,11 @@ def start_continuous_ann_index(
     spark = embs.sparkSession
     # fail fast: a missing/incompatible index raises HERE, not inside
     # the first micro-batch (where it would poison the checkpoint)
-    if kind == "ivfpq":
-        meta = IVFPQ_META.read(spark, index_path)
-        if meta is None:
-            raise ValueError(
-                f"no IVF-PQ index at {index_path} — run ivfpq_build_index "
-                "over a bootstrap corpus before attaching the stream"
-            )
-        IVFPQ_META.check_version(meta, index_path)
-        append = ivfpq_append_index
-    else:
-        meta = PQ_META.require(spark, index_path)  # raises when absent/drifted
-        append = pq_append_index
+    meta = _index_meta(
+        spark, index_path,
+        absent="no IVF-PQ index to attach to; run ivfpq_build_index over "
+        "a bootstrap corpus before attaching the stream",
+    )
     # a crash inside a prior compaction's delete+rename window leaves
     # one directory missing with its staged replacement next to it —
     # promote it before the first append scans the index
@@ -390,44 +369,32 @@ def start_continuous_ann_index(
 
     # cache the drift check's frozen inputs ONCE at attach (ADVICE
     # r10: for small drift_check_every the sidecar + centroids/
-    # codebooks parquet were re-read every N-th batch). Both are
+    # codebooks parquet were re-read every N-th batch). They are
     # frozen for the sink's lifetime: appends never touch them,
     # inline compaction rewrites codes only, and a rebuild targets a
     # NEW path with a re-attach. The rows are bounded by design
-    # (n_cells centroids / m*n_codes codewords), so a driver-side
-    # copy re-localized per check is cheap and session-correct inside
-    # foreachBatch (the batch session can be a clone of the attach
-    # session).
-    drift_rows = drift_schema = None
+    # (n_cells centroids, m*n_codes codewords — the one-cell check
+    # reads both), so a driver-side copy re-localized per check is
+    # cheap and session-correct inside foreachBatch (the batch session
+    # can be a clone of the attach session).
+    frozen = {}
     if drift_check_every:
-        ref = spark.read.parquet(
-            f"{index_path}/{'centroids' if kind == 'ivfpq' else 'codebooks'}"
-        )
-        drift_schema = ref.schema
-        drift_rows = ref.collect()
+        parts = ["centroids"] + (["codebooks"] if meta["n_cells"] == 1 else [])
+        for part in parts:  # named as ann_drift_check's parameters
+            ref = spark.read.parquet(f"{index_path}/{part}")
+            frozen[part] = (ref.collect(), ref.schema)
 
     def step(batch: DataFrame, batch_id: int) -> None:
         if drift_check_every and batch_id % drift_check_every == 0:
-            from flink_etl_spark.operators.similarity import (
-                ann_drift_check,
-                pq_drift_check,
+            local = {
+                part: batch.sparkSession.createDataFrame(rows, schema)
+                for part, (rows, schema) in frozen.items()
+            }
+            ann_drift_check(
+                batch.sparkSession, index_path, batch,
+                id_col=id_col, vec_col=vec_col, meta=meta, **local,
             )
-
-            ref = batch.sparkSession.createDataFrame(
-                drift_rows, drift_schema
-            )
-            if kind == "ivfpq":
-                ann_drift_check(
-                    batch.sparkSession, index_path, batch,
-                    id_col=id_col, vec_col=vec_col,
-                    meta=meta, centroids=ref,
-                )
-            else:
-                pq_drift_check(
-                    batch.sparkSession, index_path, batch, vec_col=vec_col,
-                    meta=meta, codebooks=ref,
-                )
-        append(
+        ivfpq_append_index(
             batch.sparkSession, batch, index_path,
             id_col=id_col, vec_col=vec_col,
         )

@@ -220,7 +220,7 @@ def test_cli_ann_round_trip(spark, tmp_path):
     idx = str(tmp_path / "idx")
     assert main([
         "ann-build", "--path", str(boot), "--index", idx,
-        "--kind", "ivfpq", "--m", "8", "--n-codes", "8", "--n-cells", "2",
+        "--m", "8", "--n-codes", "8", "--n-cells", "2",
     ]) == 0
     for _ in range(2):  # the replayed append converges
         assert main(["ann-append", "--path", str(batch), "--index", idx]) == 0
@@ -257,8 +257,7 @@ def test_cli_ann_lifecycle(spark, tmp_path):
 
     assert main([
         "ann-build", "--path", str(boot), "--index", idx,
-        "--kind", "ivfpq", "--m", "8", "--n-codes", "16",
-        "--n-cells", "4",
+        "--m", "8", "--n-codes", "16", "--n-cells", "4",
     ]) == 0
     assert main(["ann-append", "--path", str(batch), "--index", idx]) == 0
     # replayed append converges (prints 0 appended, exit 0)
@@ -276,11 +275,11 @@ def test_cli_ann_lifecycle(spark, tmp_path):
     ).collect()))
     assert got == want
 
-    # flat-PQ kind round-trips too
+    # the one-cell (flat) index round-trips too
     idx2 = str(tmp_path / "idx2")
     assert main([
-        "ann-build", "--path", str(boot), "--index", idx2, "--kind", "pq",
-        "--m", "8", "--n-codes", "16",
+        "ann-build", "--path", str(boot), "--index", idx2,
+        "--m", "8", "--n-codes", "16", "--n-cells", "1",
     ]) == 0
     assert main(["ann-append", "--path", str(batch), "--index", idx2]) == 0
     out2 = tmp_path / "res2"
@@ -291,33 +290,34 @@ def test_cli_ann_lifecycle(spark, tmp_path):
     assert spark.read.parquet(str(out2)).count() > 0
 
 def test_cli_ann_kind_ambiguity_raises(spark, tmp_path):
-    """A dir carrying BOTH meta sidecars (mixed/corrupted) or NEITHER
-    (not an index) raises instead of silently picking a branch —
-    the r8 advisory fix."""
+    """A flat PQ index staged by an earlier release (a dir holding only
+    `_PQ_META.json`) is refused by every ANN command with one message
+    naming the rebuild, and a dir with no sidecar at all is not an
+    index — neither is silently read as something else."""
     import pytest
 
-    from flink_etl_spark.operators.similarity import ivfpq_build_index
     from flink_etl_spark.sources.tables import load_table
     from flink_etl_spark.staged import _write_json_sidecar
 
     embs = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    idx = str(tmp_path / "mixed")
-    ivfpq_build_index(
-        embs.filter("vec_id < 100"), idx, n_cells=2, m=8, n_codes=8
-    )
-    # corrupt: drop a stale flat-PQ sidecar alongside the IVF-PQ one
+    legacy = str(tmp_path / "legacy")
     _write_json_sidecar(
-        spark, f"{idx}/_PQ_META.json",
+        spark, f"{legacy}/_PQ_META.json",
         {"version": 1, "m": 8, "n_codes": 8, "dim": 64},
     )
     batch = tmp_path / "b"
     embs.filter("vec_id >= 100 AND vec_id < 110").write.parquet(str(batch))
-    with pytest.raises(SystemExit, match="BOTH"):
-        main(["ann-append", "--path", str(batch), "--index", idx])
-    with pytest.raises(SystemExit, match="BOTH"):
-        main(["ann-search", "--queries", str(batch), "--index", idx,
-              "--out", str(tmp_path / "r")])
-    with pytest.raises(SystemExit, match="neither"):
+    rebuild = r"_PQ_META\.json: a flat PQ index .* n_cells=1"
+    for argv in (
+        ["ann-append", "--path", str(batch), "--index", legacy],
+        ["ann-search", "--queries", str(batch), "--index", legacy,
+         "--out", str(tmp_path / "r")],
+        ["ann-drift", "--path", str(batch), "--index", legacy],
+        ["ann-compact", "--index", legacy],
+    ):
+        with pytest.raises(ValueError, match=rebuild):
+            main(argv)
+    with pytest.raises(ValueError, match="no _IVFPQ_META"):
         main(["ann-append", "--path", str(batch),
               "--index", str(tmp_path / "not_an_index")])
 
@@ -353,8 +353,8 @@ def test_cli_ann_compact_bounds_files(spark, tmp_path):
 
 @pytest.mark.slow
 def test_cli_ann_drift_dispatches_and_exit_codes(spark, tmp_path):
-    """ann-drift: dispatches on the sidecar kind (ivfpq -> centroid
-    similarity, flat pq -> reconstruction error), prints JSON, exits 0
+    """ann-drift: dispatches on the sidecar's cell count (several ->
+    centroid similarity, one -> reconstruction error), prints JSON, exits 0
     on a healthy batch and 2 on a rebuild recommendation (the
     scheduler branch)."""
     import json
@@ -386,16 +386,13 @@ def test_cli_ann_drift_dispatches_and_exit_codes(spark, tmp_path):
         [cluster_row(2000 + i, shift=-3.0) for i in range(100)], schema
     ).write.parquet(str(drifted))
 
-    for kind, build in (
-        ("ivfpq", lambda p: similarity.ivfpq_build_index(
-            base, p, n_cells=8, m=8, n_codes=16)),
-        ("pq", lambda p: similarity.pq_build_index(
-            base, p, m=8, n_codes=16)),
-    ):
+    for kind, n_cells in (("ivfpq", 8), ("pq", 1)):
         idx = str(tmp_path / f"idx_{kind}")
         with warnings.catch_warnings():
             warnings.simplefilter("ignore")
-            build(idx)
+            similarity.ivfpq_build_index(
+                base, idx, n_cells=n_cells, m=8, n_codes=16
+            )
             assert main(
                 ["ann-drift", "--path", str(same), "--index", idx]
             ) == 0

@@ -975,31 +975,50 @@ def test_cogroup_asof_rejects_overlap_and_survives_null_ts(spark):
 
 
 def test_exact_decimal_guard_skipped_under_ansi_kept_otherwise(spark):
-    """Under ANSI (the session default) the wrap guard's two extra
-    aggregate buffers are plan-build-time skipped — sum(long) raises
-    ARITHMETIC_OVERFLOW before any guard could matter; with ANSI off
-    the guard aggregates come back and the overflow path yields NULL,
-    never a silent wrap."""
-    from flink_etl_spark.catalog import exact_decimal_sum
+    """The wrap guard is one plan whatever the session's ANSI setting:
+    the optimized plan carries both guard aggregates under either
+    setting, and every overflow — a wrapping sum, and a single element
+    the cast saturates (ANSI off reads 1e36 as 2^63 - 1) — yields NULL
+    or raises, never a number, also when the frame was built under the
+    other setting."""
+    import re
 
-    df = spark.createDataFrame([(1.0,)], "v double")
+    from flink_etl_spark.catalog import exact_decimal_avg, exact_decimal_sum
 
-    def plan_of(frame):
-        return frame._jdf.queryExecution().optimizedPlan().toString()
+    def plan_of(frame):  # expression ids differ between frames
+        plan = frame._jdf.queryExecution().optimizedPlan().toString()
+        return re.sub(r"#\d+L?", "#", plan)
 
-    ansi_plan = plan_of(df.agg(exact_decimal_sum(F.col("v"), 2).alias("s")))
-    assert "max(" not in ansi_plan and "count(" not in ansi_plan
+    def null_or_raise(frame):
+        try:
+            row = frame.first()
+        except Exception as e:  # noqa: BLE001 — ANSI overflow paths
+            assert "OVERFLOW" in str(e), str(e)[:300]
+        else:
+            assert row["s"] is None and row["a"] is None
 
-    saved = spark.conf.get("spark.sql.ansi.enabled")
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    try:
-        guarded_plan = plan_of(
-            df.agg(exact_decimal_sum(F.col("v"), 2).alias("s"))
+    def measures(rows):
+        df = spark.createDataFrame([(v,) for v in rows], "v double")
+        return df.agg(
+            exact_decimal_sum(F.col("v"), 6).alias("s"),
+            exact_decimal_avg(F.col("v"), 6).alias("a"),
         )
-        assert "max(" in guarded_plan
-        big = spark.createDataFrame([(8.0e12,), (8.0e12,)], "v double")
-        out = big.agg(exact_decimal_sum(F.col("v"), 6).alias("s")).first()
-        assert out["s"] is None
+
+    wrap, saturated, negative = [8.0e12, 8.0e12], [1.0e30], [-1.0e30]
+    saved = spark.conf.get("spark.sql.ansi.enabled")
+    plans, built = {}, {}
+    try:
+        for ansi in ("true", "false"):
+            spark.conf.set("spark.sql.ansi.enabled", ansi)
+            plans[ansi] = plan_of(measures([1.0]))
+            built[ansi] = [measures(r) for r in (wrap, saturated, negative)]
+        assert plans["true"] == plans["false"]
+        assert "max(" in plans["true"] and "count(" in plans["true"]
+        for ansi in ("true", "false"):
+            spark.conf.set("spark.sql.ansi.enabled", ansi)
+            for frames in built.values():  # built under each setting
+                for frame in frames:
+                    null_or_raise(frame)
     finally:
         spark.conf.set("spark.sql.ansi.enabled", saved)
 
@@ -1668,15 +1687,17 @@ def test_pq_validation_and_divisibility_guard(spark):
 
 
 def test_pq_staged_index_equals_inmemory_and_guards(spark, tmp_path):
-    """pq_build_index/pq_search_index: the staged flat-PQ search is
-    row-identical to pq_topk with in-job codebooks/codes; parameters
-    derive from the _PQ_META.json sidecar; append uses the frozen
-    codebooks, converges on replay, and build(A)+append(B) equals
-    build(A ∪ B); meta-less dirs and wrong-dim batches raise."""
+    """The one-cell IVF-PQ index is the staged flat PQ index: its
+    search is row-identical to pq_topk with in-job codebooks/codes
+    (with and without rerank, whatever nprobe says); append uses the
+    frozen quantizers, converges on replay, and build(A)+append(B)
+    equals build(A ∪ B); meta-less dirs, flat-PQ dirs staged by earlier
+    releases and wrong-dim batches raise."""
     import pytest
     from pyspark.errors import SparkRuntimeException
 
     from flink_etl_spark.sources.tables import load_table
+    from flink_etl_spark.staged import _write_json_sidecar
 
     embs = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     qs = embs.filter("vec_id < 8")
@@ -1685,9 +1706,9 @@ def test_pq_staged_index_equals_inmemory_and_guards(spark, tmp_path):
     ).collect()))
 
     idx = str(tmp_path / "pq")
-    similarity.pq_build_index(embs, idx, m=8, n_codes=16)
-    staged = sorted(map(tuple, similarity.pq_search_index(
-        spark, idx, qs, k=5
+    similarity.ivfpq_build_index(embs, idx, n_cells=1, m=8, n_codes=16)
+    staged = sorted(map(tuple, similarity.ivfpq_search_index(
+        spark, idx, qs, k=5, nprobe=3
     ).collect()))
     assert staged == mem
 
@@ -1695,32 +1716,85 @@ def test_pq_staged_index_equals_inmemory_and_guards(spark, tmp_path):
     rr_mem = sorted(map(tuple, similarity.pq_topk(
         embs, qs, k=5, m=8, n_codes=16, rerank=4
     ).collect()))
-    rr_staged = sorted(map(tuple, similarity.pq_search_index(
+    rr_staged = sorted(map(tuple, similarity.ivfpq_search_index(
         spark, idx, qs, k=5, rerank=4, corpus=embs
     ).collect()))
     assert rr_staged == rr_mem
 
-    # frozen-codebook append: build(A)+append(B) == build(A ∪ B)
+    # frozen-quantizer append: build(A)+append(B) == build(A ∪ B)
     a, b = embs.filter("vec_id < 250"), embs.filter("vec_id >= 250")
     inc = str(tmp_path / "pq_inc")
-    similarity.pq_build_index(a, inc, m=8, n_codes=16)
-    assert similarity.pq_append_index(spark, b, inc) == b.count()
-    assert similarity.pq_append_index(spark, b, inc) == 0  # replay
+    similarity.ivfpq_build_index(a, inc, n_cells=1, m=8, n_codes=16)
+    assert similarity.ivfpq_append_index(spark, b, inc) == b.count()
+    assert similarity.ivfpq_append_index(spark, b, inc) == 0  # replay
     read = lambda p: sorted(
         map(lambda r: (r[0], list(r[1])),
-            spark.read.parquet(f"{p}/codes").collect())
+            spark.read.parquet(f"{p}/cells").select("vec_id", "codes")
+            .collect())
     )
     assert read(inc) == read(idx)
 
-    with pytest.raises(ValueError, match="no _PQ_META"):
-        similarity.pq_search_index(spark, str(tmp_path / "nope"), qs)
+    with pytest.raises(ValueError, match="no _IVFPQ_META"):
+        similarity.ivfpq_search_index(spark, str(tmp_path / "nope"), qs)
+    legacy = str(tmp_path / "legacy")
+    _write_json_sidecar(spark, f"{legacy}/_PQ_META.json", {"version": 1})
+    with pytest.raises(ValueError, match="n_cells=1"):
+        similarity.ivfpq_search_index(spark, legacy, qs)
     with pytest.raises(ValueError, match="rerank"):
-        similarity.pq_search_index(spark, idx, qs, rerank=0)
+        similarity.ivfpq_search_index(spark, idx, qs, rerank=0)
     wrong = spark.createDataFrame([(0, [1.0] * 8)], ["vec_id", "embedding"])
     with pytest.raises(SparkRuntimeException, match="vector dimension"):
-        similarity.pq_search_index(spark, idx, wrong).collect()
+        similarity.ivfpq_search_index(spark, idx, wrong).collect()
     with pytest.raises(SparkRuntimeException, match="vector dimension"):
-        similarity.pq_append_index(spark, wrong, idx)
+        similarity.ivfpq_append_index(spark, wrong, idx)
+
+
+@pytest.mark.parametrize("m", [4, 8])
+def test_one_cell_index_equals_pq_topk(spark, tmp_path, m):
+    """Independent reference for the one-cell index: its staged search
+    returns the one-shot flat `pq_topk`'s rows and scores for
+    rerank in {1, 10} (a lone centroid shifts corpus, queries and
+    codewords alike, so the residual ADC equals the flat ADC)."""
+    from flink_etl_spark.sources.tables import load_table
+
+    embs = load_table(spark, SF_SMOKE, "embeddings")
+    qs = embs.filter("vec_id < 8")
+    idx = str(tmp_path / "one")
+    similarity.ivfpq_build_index(embs, idx, n_cells=1, m=m, n_codes=16)
+    for rerank in (1, 10):
+        ref = sorted(map(tuple, similarity.pq_topk(
+            embs, qs, k=5, m=m, n_codes=16, rerank=rerank
+        ).collect()))
+        got = sorted(map(tuple, similarity.ivfpq_search_index(
+            spark, idx, qs, k=5, nprobe=1, rerank=rerank, corpus=embs
+        ).collect()))
+        assert got == ref and len(got) == 8 * 5
+
+
+def test_one_cell_build_with_max_cell_frac_splits(spark, tmp_path):
+    """`max_cell_frac=` still splits the lone cell of an `n_cells=1`
+    build: a split index is a multi-cell one (cosine baseline); a cap
+    the lone cell meets leaves the one-cell index (recon baseline)."""
+    from flink_etl_spark.sources.tables import load_table
+    from flink_etl_spark.staged import IVFPQ_META
+
+    embs = load_table(spark, SF_SMOKE, "embeddings")
+    split = str(tmp_path / "split")
+    similarity.ivfpq_build_index(
+        embs, split, n_cells=1, m=4, n_codes=8,
+        max_cell_frac=0.5, warn_cell_frac=1.0,
+    )
+    meta = IVFPQ_META.read(spark, split)
+    assert meta["n_cells"] >= 2 and "mean_recon_err" not in meta
+    assert meta["n_cells"] == spark.read.parquet(f"{split}/centroids").count()
+    assert "mean_centroid_sim" in meta
+    kept = str(tmp_path / "kept")
+    similarity.ivfpq_build_index(
+        embs, kept, n_cells=1, m=4, n_codes=8, max_cell_frac=1.0
+    )
+    meta = IVFPQ_META.read(spark, kept)
+    assert meta["n_cells"] == 1 and meta["mean_recon_err"] > 0
+    assert "mean_centroid_sim" not in meta
 
 
 # ---------------------------------------------------------------------------
@@ -1847,7 +1921,9 @@ def test_build_corpus_dim_guard_raises_on_mixed_dims(spark, tmp_path):
             mixed, str(tmp_path / "i1"), n_cells=2, m=4, n_codes=8
         )
     with pytest.raises(SparkRuntimeException, match="corpus vector dimension"):
-        similarity.pq_build_index(mixed, str(tmp_path / "i2"), m=4, n_codes=8)
+        similarity.ivfpq_build_index(
+            mixed, str(tmp_path / "i2"), n_cells=1, m=4, n_codes=8
+        )
 
 
 @pytest.mark.slow
@@ -2029,11 +2105,11 @@ def test_staged_search_allowed_filter(spark, tmp_path):
     assert got2 == reference(big2)
 
     idx3 = str(tmp_path / "pq")
-    similarity.pq_build_index(embs, idx3, m=8, n_codes=16)
-    got3 = sorted(map(tuple, similarity.pq_search_index(
+    similarity.ivfpq_build_index(embs, idx3, n_cells=1, m=8, n_codes=16)
+    got3 = sorted(map(tuple, similarity.ivfpq_search_index(
         spark, idx3, qs, k=5, allowed=allowed
     ).collect()))
-    big3 = similarity.pq_search_index(spark, idx3, qs, k=10**6).collect()
+    big3 = similarity.ivfpq_search_index(spark, idx3, qs, k=10**6).collect()
     assert got3 == reference(big3)
 
 
@@ -2516,21 +2592,21 @@ def test_ann_drift_check_flags_drifted_batches(spark, tmp_path):
     _write_json_sidecar(spark, f"{idx}/_IVFPQ_META.json", meta)
 
 def test_pq_drift_check_reconstruction_error_signal(spark, tmp_path):
-    """Flat-PQ drift monitor (r10): pq_build_index records the build
-    corpus's mean ADC reconstruction error in the sidecar; a
-    same-distribution batch checks in near ratio 1, a drifted batch's
-    error rises past the threshold and warns; baseline <= 0 and
-    legacy (absent) baselines are monitor-off, never a flag off bad
-    math."""
+    """One-cell drift monitor: the one-cell build records the build
+    corpus's mean ADC reconstruction error in the sidecar, and
+    ann_drift_check compares batches against it — a same-distribution
+    batch checks in near ratio 1, a drifted batch's error rises past
+    2x and warns; baseline <= 0 and legacy (absent) baselines are
+    monitor-off, never a flag off bad math."""
     import random
 
     import pytest
 
     from flink_etl_spark.operators.similarity import (
-        pq_drift_check,
+        ann_drift_check,
         pq_recon_error,
     )
-    from flink_etl_spark.staged import PQ_META, _write_json_sidecar
+    from flink_etl_spark.staged import IVFPQ_META, _write_json_sidecar
 
     rng = random.Random(11)
     dim = 16
@@ -2546,14 +2622,18 @@ def test_pq_drift_check_reconstruction_error_signal(spark, tmp_path):
         [cluster_row(i) for i in range(400)], schema
     )
     idx = str(tmp_path / "pq")
-    similarity.pq_build_index(base, idx, m=8, n_codes=16)
-    meta = PQ_META.require(spark, idx)
-    assert meta["mean_recon_err"] > 0
+    similarity.ivfpq_build_index(base, idx, n_cells=1, m=8, n_codes=16)
+    meta = IVFPQ_META.require(spark, idx)
+    assert meta["mean_recon_err"] > 0 and "mean_centroid_sim" not in meta
 
     same = spark.createDataFrame(
         [cluster_row(1000 + i) for i in range(100)], schema
     )
-    ok = pq_drift_check(spark, idx, same)
+    ok = ann_drift_check(spark, idx, same)
+    assert set(ok) == {
+        "batch_err", "baseline_err", "ratio", "checkable",
+        "rebuild_recommended",
+    }
     assert ok["checkable"]
     assert not ok["rebuild_recommended"]
     assert 0.5 < ok["ratio"] < 2.0
@@ -2562,12 +2642,13 @@ def test_pq_drift_check_reconstruction_error_signal(spark, tmp_path):
         [cluster_row(2000 + i, shift=-3.0) for i in range(100)], schema
     )
     with pytest.warns(UserWarning, match="codebooks have drifted"):
-        bad = pq_drift_check(spark, idx, drifted)
+        bad = ann_drift_check(spark, idx, drifted)
     assert bad["rebuild_recommended"]
     assert bad["ratio"] > ok["ratio"]
 
-    # the raw signal is monotone in the drift magnitude
-    cbs = spark.read.parquet(f"{idx}/codebooks")
+    # the raw signal is monotone in the drift magnitude (flat codebooks
+    # of the same corpus: the kernel the one-cell check shares)
+    cbs = similarity.pq_codebooks(base, m=8, n_codes=16)
     errs = [
         pq_recon_error(
             spark.createDataFrame(
@@ -2582,39 +2663,39 @@ def test_pq_drift_check_reconstruction_error_signal(spark, tmp_path):
 
     # un-checkable baselines: zero/negative warn monitor-off; a legacy
     # sidecar without the field is silent ratio 1.0
+    sidecar = f"{idx}/_IVFPQ_META.json"
     for bad_baseline in (0.0, -1.0):
         _write_json_sidecar(
-            spark, f"{idx}/_PQ_META.json",
-            {**meta, "mean_recon_err": bad_baseline},
+            spark, sidecar, {**meta, "mean_recon_err": bad_baseline}
         )
         with pytest.warns(UserWarning, match="monitor OFF"):
-            res = pq_drift_check(spark, idx, drifted)
+            res = ann_drift_check(spark, idx, drifted)
         assert res["ratio"] == 1.0 and not res["rebuild_recommended"]
         assert not res["checkable"]
     legacy = {k: v for k, v in meta.items() if k != "mean_recon_err"}
-    _write_json_sidecar(spark, f"{idx}/_PQ_META.json", legacy)
-    res = pq_drift_check(spark, idx, drifted)
+    _write_json_sidecar(spark, sidecar, legacy)
+    res = ann_drift_check(spark, idx, drifted)
     assert res["ratio"] == 1.0 and not res["rebuild_recommended"]
     assert not res["checkable"]
-    _write_json_sidecar(spark, f"{idx}/_PQ_META.json", meta)
+    _write_json_sidecar(spark, sidecar, meta)
 
 @pytest.mark.slow
 def test_pq_build_baseline_sample_bounds_the_second_pass(spark, tmp_path):
-    """ADVICE r11: the drift baseline used to be a second FULL pass
-    over the build corpus. Now it runs over a deterministic hash
-    sample (default 5%): on a corpus large enough the sidecar records
-    the sampled rate, the sampled mean tracks the exact mean, and
-    pq_rebuild_index reuses the requested rate; on a small corpus the
-    1024-vector floor falls back to the full pass (recorded as
-    effective 1.0)."""
+    """The one-cell drift baseline is not a second FULL pass over the
+    build corpus: it runs over a fixed deterministic 5% hash sample.
+    On a corpus large enough the sampled mean tracks the exact mean;
+    on a small one the 1024-vector floor falls back to the full pass,
+    which equals the flat reconstruction error exactly."""
     import random
 
+    import pytest
+
     from flink_etl_spark.operators.similarity import (
-        pq_build_index,
-        pq_rebuild_index,
+        ivfpq_build_index,
+        pq_codebooks,
         pq_recon_error,
     )
-    from flink_etl_spark.staged import PQ_META
+    from flink_etl_spark.staged import IVFPQ_META
 
     rng = random.Random(7)
     dim = 8
@@ -2625,37 +2706,22 @@ def test_pq_build_baseline_sample_bounds_the_second_pass(spark, tmp_path):
         schema,
     )
     idx = str(tmp_path / "big")
-    pq_build_index(big, idx, m=4, n_codes=16)
-    meta = PQ_META.require(spark, idx)
-    assert meta["baseline_sample"] == 0.05
-    assert meta["baseline_sample_effective"] == 0.05  # 25k * 5% >= 1024
-    exact = pq_recon_error(
-        big, spark.read.parquet(f"{idx}/codebooks"), 4
-    )
+    ivfpq_build_index(big, idx, n_cells=1, m=4, n_codes=16)
+    sampled = IVFPQ_META.require(spark, idx)["mean_recon_err"]
+    exact = pq_recon_error(big, pq_codebooks(big, m=4, n_codes=16), 4)
     assert exact > 0
-    # the sampled mean is a valid baseline: within 10% of exact here
-    assert abs(meta["mean_recon_err"] - exact) / exact < 0.10
-
-    # rebuild reuses the requested rate from the sidecar
-    new = str(tmp_path / "rebuilt")
-    pq_rebuild_index(spark, idx, new, big)
-    assert PQ_META.require(spark, new)["baseline_sample"] == 0.05
+    # 25k * 5% >= 1024: the sampled mean, within 10% of exact here
+    assert sampled != exact
+    assert abs(sampled - exact) / exact < 0.10
 
     # small corpus: the sample would hold < 1024 vectors -> full pass
     small = big.filter("vec_id < 500")
     idx2 = str(tmp_path / "small")
-    pq_build_index(small, idx2, m=4, n_codes=16)
-    meta2 = PQ_META.require(spark, idx2)
-    assert meta2["baseline_sample"] == 0.05
-    assert meta2["baseline_sample_effective"] == 1.0
-    assert meta2["mean_recon_err"] == pq_recon_error(
-        small, spark.read.parquet(f"{idx2}/codebooks"), 4
+    ivfpq_build_index(small, idx2, n_cells=1, m=4, n_codes=16)
+    assert IVFPQ_META.require(spark, idx2)["mean_recon_err"] == pytest.approx(
+        pq_recon_error(small, pq_codebooks(small, m=4, n_codes=16), 4),
+        abs=1e-6,
     )
-
-    import pytest
-
-    with pytest.raises(ValueError, match="baseline_sample"):
-        pq_build_index(small, idx2, m=4, n_codes=16, baseline_sample=0)
 
 
 def test_split_hot_cells_warns_on_empty_sampled_census(spark):
@@ -3625,11 +3691,10 @@ def test_bpe_fit_vocab_partitions_can_increase(spark):
 
 
 def test_bpe_fit_auto_batch_arm_equals_sequential(spark):
-    """Default-set case of the equivalence below: the arm
-    `batch_merges="auto"` switches to (B = `_BPE_AUTO_BATCH`) returns
-    the sequential merge table, counts included, on the tie /
-    overlapping-merge corpus — the B-invariance the switch relies on to
-    never change results."""
+    """Default-set case of the equivalence below: the batch size the
+    deployment rule names for high-latency drivers (B=16) returns the
+    sequential merge table, counts included, on the tie /
+    overlapping-merge corpus."""
     from flink_etl_spark.operators import text
 
     corpora = [
@@ -3648,8 +3713,7 @@ def test_bpe_fit_auto_batch_arm_equals_sequential(spark):
         got = [
             (r["rank"], r["left"], r["right"], r["pair_count"])
             for r in text.bpe_fit(
-                docs, 12, vocab_partitions=1,
-                batch_merges=text._BPE_AUTO_BATCH,
+                docs, 12, vocab_partitions=1, batch_merges=16,
             ).orderBy("rank").collect()
         ]
         assert got == _ref_bpe_fit(texts, 12), texts
@@ -3709,53 +3773,16 @@ def test_bpe_fit_restores_aqe_conf(spark):
         assert spark.conf.get(key) == before, B
 
 
-def test_bpe_fit_auto_batch_latency_rule(spark, monkeypatch):
-    """r15: batch_merges="auto" times the first probe rounds (each
-    one driver action) and switches to the fused B=16 arm only past
-    the measured ~0.65 s/action break-even. Local rounds are far
-    cheaper, so auto must stay classical here; forcing the threshold
-    to 0 must engage the switch at exactly the probe boundary — and
-    the merge table must be byte-identical in both regimes (the
-    B-invariance property), with the session AQE conf restored."""
+def test_bpe_fit_auto_batch_latency_rule(spark):
+    """batch_merges takes an integer batch size only: the retired
+    latency-probing "auto" value and other non-integers raise before
+    any Spark work."""
     from flink_etl_spark.operators import text
 
-    texts = ["low lower lowest low low", "aaaa aaa banana bandana",
-             "the the the them theme", "ab ab abc abcd, abcd!"]
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], ["doc_id", "text"]
-    )
-
-    def fit(stats, **kw):
-        return [
-            (r["rank"], r["left"], r["right"], r["pair_count"])
-            for r in text.bpe_fit(
-                docs, 12, vocab_partitions=1, stats=stats, **kw
-            ).orderBy("rank").collect()
-        ]
-
-    ref_st: dict = {}
-    ref = fit(ref_st, batch_merges=1)
-
-    # pin the threshold on BOTH arms: the decision must follow the
-    # measured probe against the constant, not this box's load
-    monkeypatch.setattr(text, "_BPE_AUTO_LATENCY_SEC", 1e9)
-    st: dict = {}
-    assert fit(st, batch_merges="auto") == ref
-    assert st["auto_batch_merges"] == 1
-    assert st["auto_switch_round"] is None
-    assert st["auto_probe_sec"] is not None
-    assert st["rounds"] == ref_st["rounds"]  # stayed classical
-
-    monkeypatch.setattr(text, "_BPE_AUTO_LATENCY_SEC", 0.0)
-    st2: dict = {}
-    assert fit(st2, batch_merges="auto") == ref
-    assert st2["auto_batch_merges"] == text._BPE_AUTO_BATCH
-    assert st2["auto_switch_round"] == text._BPE_AUTO_PROBE_ROUNDS
-    assert st2["rounds"] <= ref_st["rounds"]
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-
-    with pytest.raises(ValueError, match="batch_merges"):
-        text.bpe_fit(docs, 4, batch_merges="bogus")
+    docs = spark.createDataFrame([(0, "ab ab cd")], ["doc_id", "text"])
+    for bad in ("auto", "bogus", 0, 1025, 2.0):
+        with pytest.raises(ValueError, match="batch_merges"):
+            text.bpe_fit(docs, 4, batch_merges=bad)
 
 
 def test_bpe_fit_batched_reduces_rounds(spark):

@@ -14,14 +14,6 @@ from flink_etl_spark import staged as S
 #: (kind, parameters as its writer passes them, the sidecar's exact bytes)
 PAYLOADS = [
     (
-        S.PQ_META,
-        {"m": 8, "n_codes": 16, "dim": 64, "mean_recon_err": 0.25,
-         "baseline_sample": 0.05, "baseline_sample_effective": 1.0},
-        '{"version": 1, "m": 8, "n_codes": 16, "dim": 64, '
-        '"mean_recon_err": 0.25, "baseline_sample": 0.05, '
-        '"baseline_sample_effective": 1.0}',
-    ),
-    (
         S.IVFPQ_META,
         {"n_cells": 4, "m": 8, "n_codes": 16, "dim": 64,
          "max_cell_frac_observed": 0.29, "mean_centroid_sim": 0.8123},
@@ -83,10 +75,10 @@ def _raises(msg: str, fn, *args, **kwargs) -> None:
 
 
 def test_sidecars_round_trip_earlier_payloads(spark, tmp_path):
-    """Nine kinds: the file an earlier build staged reads back as its
+    """Eight kinds: the file an earlier build staged reads back as its
     payload (require and the parameter check accept it), and the
     writer produces those exact bytes again."""
-    assert len({kind.name for kind, _, _ in PAYLOADS}) == 9
+    assert len({kind.name for kind, _, _ in PAYLOADS}) == 8
     for kind, params, raw in PAYLOADS:
         old, new = tmp_path / f"old{kind.name}", tmp_path / f"new{kind.name}"
         _put(old, kind.name, raw)
@@ -119,44 +111,32 @@ def test_staged_guards_raise_their_messages(spark, tmp_path):
         _put(d, kind.name, json.dumps({"version": kind.version + 1}))
         return str(d)
 
-    # flat PQ
-    pq = bumped(S.PQ_META, "pq")
+    # a flat PQ index staged by earlier releases: every ANN reader
+    # names the one-cell rebuild, none reads it as something else
+    legacy = tmp_path / "legacy_pq"
+    _put(legacy, "_PQ_META.json",
+         '{"version": 1, "m": 8, "n_codes": 16, "dim": 64, '
+         '"mean_recon_err": 0.25, "baseline_sample": 0.05, '
+         '"baseline_sample_effective": 1.0}')
+    legacy = str(legacy)
     for fn, args in (
-        (similarity.pq_search_index, (spark, None, embs)),
-        (similarity.pq_append_index, (spark, embs, None)),
+        (similarity.ivfpq_search_index, (spark, legacy, embs)),
+        (similarity.ivfpq_append_index, (spark, embs, legacy)),
+        (similarity.ann_drift_check, (spark, legacy, embs)),
+        (similarity.ivfpq_rebuild_index,
+         (spark, legacy, str(tmp_path / "n"), embs)),
+        (start_continuous_ann_index, (embs, legacy, str(tmp_path / "ck0"))),
     ):
-        args = list(args)
-        slot = args.index(None)
-        args[slot] = nope
         _raises(
-            f"no _PQ_META.json at {nope} — not a PQ index staged by "
-            "pq_build_index", fn, *args,
+            f"{legacy}/_PQ_META.json: a flat PQ index staged by an earlier "
+            "release, which this release no longer reads; rebuild it with "
+            "ivfpq_build_index(corpus, <new path>, n_cells=1) — the "
+            "one-cell index is the flat index — and cut searches over",
+            fn, *args,
         )
-        args[slot] = pq
-        _raises(
-            f"PQ index at {pq} has format version 2, this build reads 1 — "
-            "rebuild the index", fn, *args,
-        )
-    _raises(
-        f"no _PQ_META.json at {nope} — not a PQ index; use pq_build_index "
-        "for a first build",
-        similarity.pq_rebuild_index, spark, nope, str(tmp_path / "n"), embs,
-    )
-    _raises(
-        f"PQ index at {pq} has format version 2, this build writes 1 — "
-        "parameters cannot be trusted; pass them to pq_build_index "
-        "explicitly",
-        similarity.pq_rebuild_index, spark, pq, str(tmp_path / "n"), embs,
-    )
     in_place = (
         "rebuild must target a NEW path (searches keep reading the old "
         "index until cutover; an in-place rebuild races them)"
-    )
-    good_pq = tmp_path / "good_pq"
-    _put(good_pq, S.PQ_META.name, PAYLOADS[0][2])
-    _raises(
-        in_place, similarity.pq_rebuild_index, spark, str(good_pq),
-        f"{good_pq}/", embs,
     )
 
     # IVF-PQ
@@ -207,22 +187,10 @@ def test_staged_guards_raise_their_messages(spark, tmp_path):
         embs,
     )
     good_ivf = tmp_path / "good_ivf"
-    _put(good_ivf, S.IVFPQ_META.name, PAYLOADS[1][2])
+    _put(good_ivf, S.IVFPQ_META.name, PAYLOADS[0][2])
     _raises(
         in_place, similarity.ivfpq_rebuild_index, spark, str(good_ivf),
         str(good_ivf), embs,
-    )
-    _put(good_ivf, S.PQ_META.name, PAYLOADS[0][2])
-    _raises(
-        f"{good_ivf} carries BOTH _IVFPQ_META.json and _PQ_META.json — a "
-        "mixed or corrupted index dir; rebuild it (or delete the stale "
-        "sidecar) first",
-        similarity.ann_index_kind, spark, str(good_ivf),
-    )
-    _raises(
-        f"{nope} has neither _IVFPQ_META.json nor _PQ_META.json — not a "
-        "staged ANN index; build one first",
-        similarity.ann_index_kind, spark, nope,
     )
 
     # staged fits
@@ -255,7 +223,7 @@ def test_staged_guards_raise_their_messages(spark, tmp_path):
 
     # parameter-pinned indexes: a mismatched caller (or format) raises
     prof = tmp_path / "prof"
-    _put(prof, S.PROFILE_META.name, PAYLOADS[5][2])
+    _put(prof, S.PROFILE_META.name, PAYLOADS[4][2])
     _raises(
         f"staged minhash profile at {prof} is incompatible with this call "
         "(k: staged=3 caller=2); band keys from mismatched profiles never "
@@ -264,7 +232,7 @@ def test_staged_guards_raise_their_messages(spark, tmp_path):
         "parameters",
         dedup.minhash_near_dups_incremental, docs, str(prof), k=2,
     )
-    v1 = PAYLOADS[5][2].replace('"version": 2', '"version": 1')
+    v1 = PAYLOADS[4][2].replace('"version": 2', '"version": 1')
     _put(prof, S.PROFILE_META.name, v1)
     _raises(
         f"staged minhash profile at {prof} is incompatible with this call "
@@ -275,7 +243,7 @@ def test_staged_guards_raise_their_messages(spark, tmp_path):
         dedup.minhash_near_dups_incremental, docs, str(prof),
     )
     sub = tmp_path / "sub"
-    _put(sub, S.SUBSTR_META.name, PAYLOADS[6][2])
+    _put(sub, S.SUBSTR_META.name, PAYLOADS[5][2])
     _raises(
         f"staged substring index at {sub} is incompatible with this call "
         "(min_tokens: staged=50 caller=13, winnow: staged=1 caller=2); "
@@ -286,7 +254,7 @@ def test_staged_guards_raise_their_messages(spark, tmp_path):
         winnow=2,
     )
     media = tmp_path / "media"
-    _put(media, S.MEDIA_META.name, PAYLOADS[7][2])
+    _put(media, S.MEDIA_META.name, PAYLOADS[6][2])
     batch = spark.createDataFrame(
         [(1, bytearray(b"x"))], "media_id long, payload binary"
     )

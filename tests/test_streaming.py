@@ -516,14 +516,15 @@ def test_continuous_ann_index_append_matches_batch_build(spark, tmp_path):
     micro-batch into a pre-built IVF-PQ index converges to the SAME
     searchable index as a one-shot build over the full corpus (the
     bootstrap half holds the seed vectors); a restarted stream with a
-    redelivered batch appends nothing; a missing index or bad kind
-    fails at attach time."""
+    redelivered batch appends nothing; a missing index or a flat-PQ
+    dir staged by an earlier release fails at attach time."""
     import os
 
     import pytest
 
     from flink_etl_spark.operators import similarity
     from flink_etl_spark.sources.tables import load_table
+    from flink_etl_spark.staged import _write_json_sidecar
     from flink_etl_spark.streaming.ann_sink import start_continuous_ann_index
 
     embs = load_table(spark, "/root/testdata/sf0.001", "embeddings")
@@ -552,8 +553,7 @@ def test_continuous_ann_index_append_matches_batch_build(spark, tmp_path):
             .parquet(str(src))
         )
         q = start_continuous_ann_index(
-            stream, idx, str(tmp_path / "ck"), kind="ivfpq",
-            available_now=True,
+            stream, idx, str(tmp_path / "ck"), available_now=True,
         )
         q.awaitTermination(120)
 
@@ -591,16 +591,17 @@ def test_continuous_ann_index_append_matches_batch_build(spark, tmp_path):
         start_continuous_ann_index(
             dead, str(tmp_path / "nope"), str(tmp_path / "ck2")
         )
-    with pytest.raises(ValueError, match="kind must be"):
-        start_continuous_ann_index(
-            dead, idx, str(tmp_path / "ck3"), kind="hnsw"
-        )
+    legacy = str(tmp_path / "legacy")
+    _write_json_sidecar(spark, f"{legacy}/_PQ_META.json", {"version": 1})
+    with pytest.raises(ValueError, match="n_cells=1"):
+        start_continuous_ann_index(dead, legacy, str(tmp_path / "ck3"))
 
 
 @pytest.mark.slow
 def test_continuous_ann_index_pq_kind(spark, tmp_path):
-    """The sink's kind='pq' branch: a streamed flat-PQ index converges
-    to the one-shot build (bootstrap half holds the seed vectors)."""
+    """The sink over a one-cell (flat) index: the streamed index
+    converges to the one-shot build (bootstrap half holds the seed
+    vectors)."""
     import os
 
     from flink_etl_spark.operators import similarity
@@ -609,8 +610,8 @@ def test_continuous_ann_index_pq_kind(spark, tmp_path):
 
     embs = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     idx = str(tmp_path / "pq_idx")
-    similarity.pq_build_index(
-        embs.filter("vec_id < 250"), idx, m=8, n_codes=16
+    similarity.ivfpq_build_index(
+        embs.filter("vec_id < 250"), idx, n_cells=1, m=8, n_codes=16
     )
     src = tmp_path / "src"
     src.mkdir()
@@ -626,15 +627,15 @@ def test_continuous_ann_index_pq_kind(spark, tmp_path):
         .parquet(str(src))
     )
     q = start_continuous_ann_index(
-        stream, idx, str(tmp_path / "ck"), kind="pq", available_now=True
+        stream, idx, str(tmp_path / "ck"), available_now=True
     )
     q.awaitTermination(120)
 
     full = str(tmp_path / "pq_full")
-    similarity.pq_build_index(embs, full, m=8, n_codes=16)
+    similarity.ivfpq_build_index(embs, full, n_cells=1, m=8, n_codes=16)
     read = lambda p: sorted(
-        map(lambda r: (r[0], list(r[1])),
-            spark.read.parquet(f"{p}/codes").collect())
+        map(lambda r: (r[0], list(r[1]), r[2]),
+            spark.read.parquet(f"{p}/cells").collect())
     )
     assert read(idx) == read(full)
 
@@ -691,38 +692,46 @@ def test_compact_ann_index_bounds_files_preserves_rows_and_replay(
 
 
 def test_compact_ann_index_pq_kind_and_validation(spark, tmp_path):
-    """Flat-PQ codes/ dir compacts the same way; bad target_files and
-    non-index dirs raise."""
+    """A one-cell (flat) index's single cell dir compacts the same
+    way; bad target_files, non-index dirs and flat-PQ dirs staged by
+    earlier releases raise."""
     import pytest
 
     from flink_etl_spark.operators import similarity
     from flink_etl_spark.operators.maintenance import partition_file_count
     from flink_etl_spark.sources.tables import load_table
+    from flink_etl_spark.staged import _write_json_sidecar
     from flink_etl_spark.streaming.ann_sink import compact_ann_index
 
     embs = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     idx = str(tmp_path / "pq")
-    similarity.pq_build_index(embs.filter("vec_id < 200"), idx, m=8,
-                              n_codes=16)
+    similarity.ivfpq_build_index(
+        embs.filter("vec_id < 200"), idx, n_cells=1, m=8, n_codes=16
+    )
     for lo in (200, 300, 400):
-        similarity.pq_append_index(
+        similarity.ivfpq_append_index(
             spark, embs.filter(f"vec_id >= {lo} and vec_id < {lo + 100}"),
             idx,
         )
+    cell = f"{idx}/cells/cell_id=0"
     rows = lambda: sorted(
         map(lambda r: (r[0], list(r[1])),
-            spark.read.parquet(f"{idx}/codes").collect())
+            spark.read.parquet(cell).collect())
     )
     before = rows()
-    assert partition_file_count(spark, f"{idx}/codes") > 1
+    assert partition_file_count(spark, cell) > 1
     assert compact_ann_index(spark, idx, target_files=1) == 1
-    assert partition_file_count(spark, f"{idx}/codes") == 1
+    assert partition_file_count(spark, cell) == 1
     assert rows() == before
 
     with pytest.raises(ValueError, match="target_files"):
         compact_ann_index(spark, idx, target_files=0)
-    with pytest.raises(ValueError, match="neither"):
+    with pytest.raises(ValueError, match="no _IVFPQ_META"):
         compact_ann_index(spark, str(tmp_path / "nope"))
+    legacy = str(tmp_path / "legacy")
+    _write_json_sidecar(spark, f"{legacy}/_PQ_META.json", {"version": 1})
+    with pytest.raises(ValueError, match="n_cells=1"):
+        compact_ann_index(spark, legacy)
 
 
 def test_compact_ann_index_signature_mismatch_refuses_swap(
@@ -740,14 +749,15 @@ def test_compact_ann_index_signature_mismatch_refuses_swap(
 
     embs = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     idx = str(tmp_path / "idx")
-    similarity.pq_build_index(embs.filter("vec_id < 200"), idx, m=8,
-                              n_codes=16)
-    similarity.pq_append_index(
+    similarity.ivfpq_build_index(
+        embs.filter("vec_id < 200"), idx, n_cells=1, m=8, n_codes=16
+    )
+    similarity.ivfpq_append_index(
         spark, embs.filter("vec_id >= 200 and vec_id < 300"), idx
     )
     before = sorted(
         map(lambda r: (r[0], list(r[1])),
-            spark.read.parquet(f"{idx}/codes").collect())
+            spark.read.parquet(f"{idx}/cells").collect())
     )
 
     real_stage = merge.stage_snapshot
@@ -761,7 +771,7 @@ def test_compact_ann_index_signature_mismatch_refuses_swap(
     monkeypatch.undo()
     after = sorted(
         map(lambda r: (r[0], list(r[1])),
-            spark.read.parquet(f"{idx}/codes").collect())
+            spark.read.parquet(f"{idx}/cells").collect())
     )
     assert after == before
     # and the staged junk is gone: a later compaction works cleanly
@@ -891,12 +901,12 @@ def test_ann_search_is_correct_during_additive_compaction_swap(
     assert search() == quiesced
 
     pq = str(tmp_path / "pq")
-    similarity.pq_build_index(embs, pq, m=8, n_codes=16)
-    psearch = lambda **kw: sorted(map(tuple, similarity.pq_search_index(
+    similarity.ivfpq_build_index(embs, pq, n_cells=1, m=8, n_codes=16)
+    psearch = lambda **kw: sorted(map(tuple, similarity.ivfpq_search_index(
         spark, pq, qs, k=5, **kw).collect()))
     pquiesced = psearch()
     pquiesced_rr = psearch(rerank=2, corpus=embs)
-    _mid_swap(spark, f"{pq}/codes")
+    _mid_swap(spark, f"{pq}/cells/cell_id=0")
     assert psearch() == pquiesced
     assert psearch(rerank=2, corpus=embs) == pquiesced_rr
     assert recover_ann_index(spark, pq) == 1
@@ -1064,21 +1074,22 @@ def test_search_retry_absorbs_compaction_delete_window(spark, tmp_path):
     assert attempts == [0]  # single attempt, no re-plan
     assert again == quiesced
 
-    # --- flat PQ, and the loud default: retry OFF must still raise
+    # --- one cell, and the loud default: retry OFF must still raise
     pq = str(tmp_path / "pq")
-    similarity.pq_build_index(embs, pq, m=8, n_codes=16)
-    pquiesced = sorted(map(tuple, similarity.pq_search_index(
+    similarity.ivfpq_build_index(embs, pq, n_cells=1, m=8, n_codes=16)
+    pquiesced = sorted(map(tuple, similarity.ivfpq_search_index(
         spark, pq, qs, k=5).collect()))
-    pplan = _mid_swap(spark, f"{pq}/codes")
-    stale = similarity.pq_search_index(spark, pq, qs, k=5)  # lazy listing
+    pcell = f"{pq}/cells/cell_id=0"
+    pplan = _mid_swap(spark, pcell)
+    stale = similarity.ivfpq_search_index(spark, pq, qs, k=5)  # lazy listing
     attempts.clear()
 
     def pq_kill(attempt):
         attempts.append(attempt)
         if attempt == 0:
-            _delete_originals(spark, f"{pq}/codes", pplan)
+            _delete_originals(spark, pcell, pplan)
 
-    pgot = sorted(map(tuple, similarity.pq_search_index(
+    pgot = sorted(map(tuple, similarity.ivfpq_search_index(
         spark, pq, qs, k=5, retry_missing_files=1, _on_built=pq_kill,
     ).collect()))
     assert attempts == [0, 1]
@@ -1128,8 +1139,8 @@ def test_continuous_ann_sink_compact_every_cadence(spark, tmp_path):
         .parquet(str(src))
     )
     q = start_continuous_ann_index(
-        stream, idx, str(tmp_path / "ck"), kind="ivfpq",
-        available_now=True, compact_every=2,
+        stream, idx, str(tmp_path / "ck"), available_now=True,
+        compact_every=2,
     )
     q.awaitTermination(180)
 
@@ -1157,10 +1168,11 @@ def test_continuous_ann_sink_compact_every_cadence(spark, tmp_path):
 
 @pytest.mark.slow
 def test_pq_rebuild_index_and_sink_drift_cadence(spark, tmp_path):
-    """pq_rebuild_index: params default from the old sidecar, result
-    byte-identical to a fresh build, sidecar baseline re-armed,
-    in-place/sidecar-less raise, refine=0 warns. And the continuous
-    sink's drift_check_every= runs the kind-appropriate check inside
+    """Rebuild of a one-cell (flat) index: params default from the old
+    sidecar, result byte-identical to a fresh one-cell build, sidecar
+    baseline re-armed, no refinement warning (a lone centroid has
+    nothing to refine), in-place/sidecar-less raise. And the
+    continuous sink's drift_check_every= runs the one-cell check inside
     foreachBatch: a drifted stream raises the drift UserWarning from
     the micro-batch thread."""
     import random
@@ -1169,8 +1181,8 @@ def test_pq_rebuild_index_and_sink_drift_cadence(spark, tmp_path):
     import pytest
 
     from flink_etl_spark.operators import similarity
-    from flink_etl_spark.operators.similarity import pq_rebuild_index
-    from flink_etl_spark.staged import _read_json_sidecar
+    from flink_etl_spark.operators.similarity import ivfpq_rebuild_index
+    from flink_etl_spark.staged import IVFPQ_META
     from flink_etl_spark.streaming.ann_sink import (
         start_continuous_ann_index,
     )
@@ -1192,36 +1204,33 @@ def test_pq_rebuild_index_and_sink_drift_cadence(spark, tmp_path):
     union = base.unionByName(spark.createDataFrame(union_rows, schema))
 
     old = str(tmp_path / "old")
-    similarity.pq_build_index(base, old, m=8, n_codes=16)
-    similarity.pq_append_index(
+    similarity.ivfpq_build_index(base, old, n_cells=1, m=8, n_codes=16)
+    similarity.ivfpq_append_index(
         spark, spark.createDataFrame(union_rows, schema), old
     )
 
     new = str(tmp_path / "new")
-    pq_rebuild_index(spark, old, new, union)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        ivfpq_rebuild_index(spark, old, new, union)
     fresh = str(tmp_path / "fresh")
-    similarity.pq_build_index(union, fresh, m=8, n_codes=16,
-                              refine_iters=2)
+    similarity.ivfpq_build_index(union, fresh, n_cells=1, m=8, n_codes=16)
     codes = lambda p: sorted(
         (r[0], bytes(r[1]))
-        for r in spark.read.parquet(f"{p}/codes").collect()
+        for r in spark.read.parquet(f"{p}/cells").collect()
     )
     assert codes(new) == codes(fresh)
     # the rebuilt sidecar re-arms the drift baseline on the NEW corpus
-    assert _read_json_sidecar(spark, f"{new}/_PQ_META.json")[
-        "mean_recon_err"
-    ] == _read_json_sidecar(spark, f"{fresh}/_PQ_META.json")[
-        "mean_recon_err"
-    ]
+    rebuilt = IVFPQ_META.require(spark, new)
+    assert rebuilt["n_cells"] == 1
+    assert rebuilt["mean_recon_err"] == IVFPQ_META.require(
+        spark, fresh
+    )["mean_recon_err"]
 
-    with pytest.warns(UserWarning, match="without Lloyd refinement"):
-        pq_rebuild_index(
-            spark, old, str(tmp_path / "norefine"), union, refine_iters=0
-        )
     with pytest.raises(ValueError, match="NEW path"):
-        pq_rebuild_index(spark, old, old + "/", union)
-    with pytest.raises(ValueError, match="no _PQ_META"):
-        pq_rebuild_index(
+        ivfpq_rebuild_index(spark, old, old + "/", union)
+    with pytest.raises(ValueError, match="no _IVFPQ_META"):
+        ivfpq_rebuild_index(
             spark, str(tmp_path / "nope"), str(tmp_path / "x"), union
         )
 
@@ -1242,17 +1251,17 @@ def test_pq_rebuild_index_and_sink_drift_cadence(spark, tmp_path):
         warnings.simplefilter("always")
         stream = spark.readStream.schema(schema).parquet(str(src))
         q = start_continuous_ann_index(
-            stream, old, str(tmp_path / "ck"), kind="pq",
+            stream, old, str(tmp_path / "ck"),
             available_now=True, drift_check_every=1,
         )
         q.awaitTermination(180)
     msgs = [str(w.message) for w in caught]
-    assert any("drifted" in m for m in msgs), msgs
+    assert any("codebooks have drifted" in m for m in msgs), msgs
 
     with pytest.raises(ValueError, match="drift_check_every"):
         start_continuous_ann_index(
             spark.readStream.schema(schema).parquet(str(src)),
-            old, str(tmp_path / "ck2"), kind="pq", drift_check_every=0,
+            old, str(tmp_path / "ck2"), drift_check_every=0,
         )
 
 @pytest.mark.slow

@@ -252,7 +252,7 @@ def main() -> None:
               .parquet(src)
           )
           return start_continuous_ann_index(
-              stream, idx3, ck, kind="ivfpq",
+              stream, idx3, ck,
               available_now=available_now, compact_every=COMPACT_EVERY,
           )
 
